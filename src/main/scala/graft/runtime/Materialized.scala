@@ -33,7 +33,9 @@ import org.apache.spark.storage.StorageLevel
   * refreshes) is [[graft.operators.SinkOps]]' writers driven by
   * [[graft.queries.ModelRegistry]]'s topological order. Entries are
   * keyed per (session, dir) so concurrent sessions (tests) never
-  * share plans across stopped contexts.
+  * share plans across stopped contexts, and entries of a session
+  * whose SparkContext has stopped are dropped whenever the memo is
+  * next touched, so a stopped session is not kept reachable.
   */
 object Materialized {
 
@@ -44,6 +46,7 @@ object Materialized {
     * MEMORY_AND_DISK and re-persisted if an external clearCache
     * dropped it. */
   def apply(s: SparkSession, dir: String, name: String)(build: => DataFrame): DataFrame = {
+    memo.keySet.removeIf(_._1.sparkContext.isStopped)
     val df = memo.computeIfAbsent((s, dir, name), _ => build)
     // Re-arm after an external clearCache (idempotent when cached).
     if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -56,5 +59,12 @@ object Materialized {
   def invalidate(s: SparkSession): Unit = {
     val it = memo.keySet.iterator
     while (it.hasNext) if (it.next()._1 eq s) it.remove()
+  }
+
+  /** Sessions that currently hold memo entries. */
+  private[graft] def sessions: Set[SparkSession] = {
+    val out = Set.newBuilder[SparkSession]
+    memo.keySet.forEach(k => out += k._1)
+    out.result()
   }
 }

@@ -1,8 +1,14 @@
 package graft.runtime
 
+import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentLinkedQueue,
+  Executors, LinkedBlockingQueue}
+
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions
+import org.apache.spark.sql.execution.SQLExecution
 
 import graft.operators.SinkOps
 
@@ -34,11 +40,32 @@ import graft.operators.SinkOps
   *    Delta MERGE is the drop-in swap), full write on first run. dbt
   *    `materialized: incremental` (the reference's snapshots).
   *
+  * Threads (dbt `threads`; the reference refreshes with 4/6/8,
+  * `dbt_project/profiles.yml:13,26,39`): a model is built as soon as
+  * every dependency is materialized, and independent models
+  * materialize at the same time.
+  *  - Builds are serial on the caller's thread: each `build` runs
+  *    there, one at a time, so builders keep their thread confinement
+  *    (the [[Materialized]] memo, `Tables.events`' conf set, callers'
+  *    build hooks).
+  *  - Materializations (View persist, Table write + re-read,
+  *    Incremental merge + swap) run on a driver pool of
+  *    `min(models, defaultParallelism)` threads, created and joined
+  *    inside [[ModelRegistry.run]]. Each carries the caller's
+  *    thread-locals as they were when its model was built (job group,
+  *    active session, local properties), so its jobs are attributed
+  *    to that model in listeners and the Spark UI.
+  *  - A build that scopes session conf (e.g. `LoopWidth.withWidth`)
+  *    may be seen by a concurrent materialization's planning; that can
+  *    change shuffle widths, never results.
+  *
   * Scale: the topological pass is driver-side metadata only; every
   * materialization is a distributed write/read. At 100 TB the Table/
   * Incremental tiers are the difference between each downstream mart
   * re-scanning raw facts and scanning a grain-reduced parquet model —
-  * exactly the contract warehouse users expect from dbt.
+  * exactly the contract warehouse users expect from dbt. The pool
+  * overlaps driver-side job scheduling and small stages; the task
+  * slots stay shared through Spark's scheduler.
   */
 object ModelRegistry {
 
@@ -63,8 +90,15 @@ object ModelRegistry {
       materialization: Materialization,
       build: Map[String, DataFrame] => DataFrame)
 
+  /** Attached (suppressed) to the exception [[ModelRegistry.run]]
+    * rethrows: names the model that failed and whether its `build` or
+    * its materialization threw. */
+  final class ModelFailure(val model: String, val phase: String)
+    extends RuntimeException(s"model '$model' failed during $phase", null, false, false)
+
   /** Result of a run: each model's materialized frame plus the order
-    * in which models were built (for tests/observability). */
+    * in which models were built — a topological order (for
+    * tests/observability). */
   final case class RunResult(frames: Map[String, DataFrame], order: Seq[String])
 }
 
@@ -109,45 +143,103 @@ final class ModelRegistry {
     order.toSeq
   }
 
-  /** Execute the DAG: build each model once in topological order,
-    * materialize per tier under `warehouseDir`, pass materialized
-    * frames downstream. Incremental models merge into their existing
-    * table when one exists (`<warehouseDir>/<name>`), else do the
-    * initial full write. */
+  /** Execute the DAG: build each model once, as soon as its deps are
+    * materialized (ties in [[topoOrder]] order), materialize per tier
+    * under `warehouseDir` on the run's pool, pass materialized frames
+    * downstream. Incremental models merge into their existing table
+    * when one exists (`<warehouseDir>/<name>`), else do the initial
+    * full write.
+    *
+    * If a build or materialization throws, no further model is built,
+    * in-flight materializations finish, the pool's threads are joined,
+    * and the model's own exception is rethrown — not wrapped, so its
+    * type and message are the failure's — carrying a suppressed
+    * [[ModelRegistry.ModelFailure]] that names the model. */
   def run(spark: SparkSession, warehouseDir: String): RunResult = {
-    val done = mutable.Map.empty[String, DataFrame]
     val order = topoOrder
-    order.foreach { name =>
-      val m = models(name)
-      val built = m.build(m.deps.map(d => d -> done(d)).toMap)
-      val path = s"$warehouseDir/$name"
-      val materialized = m.materialization match {
-        case Materialization.View =>
-          val df = built.persist()
-          df.createOrReplaceTempView(name)
-          df
-        case Materialization.Table =>
-          built.write.mode("overwrite").parquet(path)
-          spark.read.parquet(path)
-        case Materialization.Incremental(keys, precedence) =>
-          val tgt = new java.io.File(path)
-          val merged =
-            if (tgt.isDirectory)
-              SinkOps.mergeUpsert(spark.read.parquet(path), built, keys, precedence)
-            else built
-          // write via a scratch dir: the merge READS the live table,
-          // and parquet overwrite deletes the target before the plan
-          // runs (self-referential overwrite would read nothing)
-          val tmp = s"$warehouseDir/.${name}__staging"
-          merged.write.mode("overwrite").parquet(tmp)
-          spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
-          val hPath = new org.apache.hadoop.fs.Path(tmp)
-          hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(hPath, true)
-          spark.read.parquet(path)
+    val session = ClassicConversions.castToImpl(spark)
+    val workers = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(order.size, spark.sparkContext.defaultParallelism)),
+      (r: Runnable) => {
+        val t = new Thread(r, s"model-registry-${workers.size}")
+        t.setDaemon(true)
+        workers.add(t)
+        t
+      })
+    val done = mutable.Map.empty[String, DataFrame]
+    val built = mutable.ArrayBuffer.empty[String]
+    val inFlight = mutable.Map.empty[String, CompletableFuture[DataFrame]]
+    val finished = new LinkedBlockingQueue[String]()
+    var failure: Option[Throwable] = None
+
+    // the model's own exception, not wrapped, with a note naming the model
+    def fail(name: String, phase: String, e: Throwable): Unit =
+      if (failure.isEmpty) {
+        e.addSuppressed(new ModelFailure(name, phase))
+        failure = Some(e)
       }
-      done(name) = materialized
+    def harvest(name: String): Unit =
+      try done(name) = inFlight.remove(name).get.join()
+      catch { case e: CompletionException => fail(name, "materialization", e.getCause) }
+
+    try {
+      while (failure.isEmpty && (inFlight.nonEmpty || built.size < order.size)) {
+        order.find(n => !built.contains(n) && models(n).deps.forall(done.contains)) match {
+          case Some(name) =>
+            val m = models(name)
+            built += name
+            try {
+              val df = m.build(m.deps.map(d => d -> done(d)).toMap)
+              val f = SQLExecution.withThreadLocalCaptured(session, pool)(
+                materialize(spark, m, df, warehouseDir))
+              inFlight(name) = f
+              f.whenComplete((_, _) => finished.put(name))
+            } catch { case NonFatal(e) => fail(name, "build", e) }
+          case None => harvest(finished.take())
+        }
+        Iterator.continually(finished.poll()).takeWhile(_ != null).foreach(harvest)
+      }
+    } finally {
+      pool.shutdown()
+      workers.forEach(_.join())
     }
-    RunResult(done.toMap, order)
+    failure.foreach(e => throw e)
+    RunResult(done.toMap, built.toSeq)
+  }
+
+  /** Materialize one built model per its tier; runs on the pool. */
+  private def materialize(spark: SparkSession, m: ModelDef, built: DataFrame,
+      warehouseDir: String): DataFrame = {
+    val name = m.name
+    val path = s"$warehouseDir/$name"
+    m.materialization match {
+      case Materialization.View =>
+        val df = built.persist()
+        df.createOrReplaceTempView(name)
+        df
+      case Materialization.Table =>
+        built.write.mode("overwrite").parquet(path)
+        spark.read.parquet(path)
+      case Materialization.Incremental(keys, precedence) =>
+        val tgt = new java.io.File(path)
+        val merged =
+          if (tgt.isDirectory)
+            SinkOps.mergeUpsert(spark.read.parquet(path), built, keys, precedence)
+          else built
+        // write via a scratch dir: the merge READS the live table,
+        // and parquet overwrite deletes the target before the plan
+        // runs (self-referential overwrite would read nothing)
+        val tmp = s"$warehouseDir/.${name}__staging"
+        val hPath = new org.apache.hadoop.fs.Path(tmp)
+        val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        try merged.write.mode("overwrite").parquet(tmp)
+        catch { case e: Throwable => fs.delete(hPath, true); throw e }
+        // once the swap starts, the scratch dir may hold the only
+        // complete copy, so a failed swap leaves it in place
+        spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
+        fs.delete(hPath, true)
+        spark.read.parquet(path)
+    }
   }
 }

@@ -1,21 +1,55 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.{SparkThrowable, TaskContext}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import org.scalatest.BeforeAndAfterAll
 
-import graft.runtime.{GraftSession, ModelRegistry}
+import graft.runtime.{GraftSession, Materialized, ModelRegistry}
 import graft.runtime.ModelRegistry.{Materialization, ModelDef}
 
+object ModelRegistrySpecs {
+  /** Identity that takes `ms` per row, so a model's write job lasts long
+    * enough to observe overlap. */
+  def slow(ms: Long): UserDefinedFunction = udf { (x: Long) => Thread.sleep(ms); x }
+
+  /** The job group of the task computing the row. */
+  val jobGroup: UserDefinedFunction =
+    udf(() => TaskContext.get().getLocalProperty("spark.jobGroup.id")).asNondeterministic()
+
+  /** Start/end time and job group of every job, from the listener bus. */
+  final class JobLog extends SparkListener {
+    val starts = new ConcurrentHashMap[Int, (String, Long)]()
+    val ends = new ConcurrentHashMap[Int, Long]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      starts.put(e.jobId, (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull, e.time))
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.put(e.jobId, e.time)
+    /** group -> (start, end) of each of its jobs. */
+    def byGroup: Map[String, Seq[(Long, Long)]] =
+      starts.asScala.toSeq.map { case (id, (g, s)) => g -> (s, ends.get(id)) }
+        .groupBy(_._1).map { case (g, js) => g -> js.map(_._2) }
+  }
+}
+
 /** Specs for the dbt-style model DAG executor (SURVEY §3.1): one
-  * build per model, topological order, per-tier materialization, and
-  * incremental MERGE semantics across runs.
+  * build per model, topological order, per-tier materialization,
+  * incremental MERGE semantics across runs, and the thread contract
+  * (independent models materialize concurrently under the job group of
+  * their build; a failure stops the run cleanly).
   */
-class ModelRegistrySpecs extends AnyFunSuite with BeforeAndAfterAll {
+class ModelRegistrySpecs extends AnyFunSuite with BeforeAndAfterAll with Eventually {
+  import ModelRegistrySpecs._
 
   lazy val spark: SparkSession = GraftSession.get(Some("local[2]"), 4)
   import spark.implicits._
@@ -181,5 +215,134 @@ class ModelRegistrySpecs extends AnyFunSuite with BeforeAndAfterAll {
         .register(ModelDef("mr_dup", Nil, Materialization.View, _ => spark.range(1).toDF()))
         .register(ModelDef("mr_dup", Nil, Materialization.View, _ => spark.range(1).toDF()))
     }.getMessage.contains("duplicate"))
+  }
+
+  /** Two slow independent Table models and their fan-in; each build
+    * sets its own job group and each model records, per row, the job
+    * group its write ran under. */
+  private def overlapDefs(): Seq[ModelDef] = {
+    def tagged(name: String)(df: => DataFrame): DataFrame = {
+      spark.sparkContext.setJobGroup(s"mr/$name", name)
+      df.withColumn(s"grp_$name", jobGroup())
+    }
+    def src(name: String): ModelDef = ModelDef(name, Nil, Materialization.Table, _ =>
+      tagged(name)(spark.range(0, 4, 1, 1).select(slow(150)(col("id")).as("k"))))
+    Seq(src("mr_par_a"), src("mr_par_b"),
+      ModelDef("mr_par_join", Seq("mr_par_a", "mr_par_b"), Materialization.Table, d =>
+        tagged("mr_par_join")(d("mr_par_a").join(d("mr_par_b"), "k"))))
+  }
+
+  private def registryOf(defs: Seq[ModelDef]): ModelRegistry =
+    defs.foldLeft(new ModelRegistry())(_.register(_))
+
+  /** Runs `body` with a job log attached; returns both once every job
+    * the body started has been reported ended. */
+  private def logged[T](body: => T): (T, JobLog) = {
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    try {
+      val out = body
+      eventually(timeout(30.seconds), interval(50.millis)) {
+        assert(log.starts.keySet.asScala == log.ends.keySet.asScala)
+      }
+      (out, log)
+    } finally {
+      spark.sparkContext.removeSparkListener(log)
+      spark.sparkContext.clearJobGroup()
+    }
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect().toSeq.map(_.toString).sorted
+
+  test("independent models materialize concurrently; dependents wait for their parents") {
+    val defs = overlapDefs()
+    val (res, log) = logged(registryOf(defs).run(spark, wh()))
+    val jobs = log.byGroup
+    val (a, b, join) = (jobs("mr/mr_par_a"), jobs("mr/mr_par_b"), jobs("mr/mr_par_join"))
+    assert(a.exists { case (s1, e1) => b.exists { case (s2, e2) => s1 < e2 && s2 < e1 } },
+      s"no job of mr_par_a overlaps one of mr_par_b: $a vs $b")
+    assert(join.map(_._1).min >= (a ++ b).map(_._2).max,
+      s"mr_par_join started before its parents finished: $join vs ${a ++ b}")
+    assert(res.order.toSet == defs.map(_.name).toSet && res.order.last == "mr_par_join")
+    // a sequential run: each build evaluated in turn over its deps' rows
+    val seq = scala.collection.mutable.Map.empty[String, DataFrame]
+    defs.foreach { m =>
+      val df = m.build(m.deps.map(d => d -> seq(d)).toMap)
+      seq(m.name) = spark.createDataFrame(df.collectAsList(), df.schema)
+    }
+    spark.sparkContext.clearJobGroup()
+    defs.foreach(m => assert(rows(res.frames(m.name)) == rows(seq(m.name)), m.name))
+    spark.catalog.clearCache()
+  }
+
+  test("each model's materialization jobs carry the job group set when it was built") {
+    val defs = overlapDefs()
+    val (res, log) = logged(registryOf(defs).run(spark, wh()))
+    val groups = defs.map(m => s"mr/${m.name}").toSet
+    assert(log.byGroup.keySet == groups, s"jobs outside the models' groups: ${log.byGroup.keySet}")
+    defs.foreach { m =>
+      val seen = res.frames(m.name).select(s"grp_${m.name}").distinct().collect().map(_.getString(0))
+      assert(seen.toSeq == Seq(s"mr/${m.name}"), s"${m.name} was written under $seen")
+    }
+    spark.catalog.clearCache()
+  }
+
+  test("a failing model: its own exception, dependents never built, siblings awaited, no debris") {
+    val tiers = Seq(Materialization.Table, Materialization.Incremental(Seq("k"), Seq(col("k"))))
+    tiers.foreach { tier =>
+      val dir = wh()
+      val depBuilt = new AtomicBoolean(false)
+      val reg = new ModelRegistry()
+        .register(ModelDef("mr_bad", Nil, tier, _ => spark.range(0, 4, 1, 1).select(col("id").as("k"),
+          when(col("id") === 3, raise_error(lit("boom at row 3"))).otherwise(col("id")).as("v"))))
+        .register(ModelDef("mr_ok", Nil, Materialization.Table, _ =>
+          spark.range(0, 4, 1, 1).select(slow(150)(col("id")).as("k"))))
+        .register(ModelDef("mr_after", Seq("mr_bad", "mr_ok"), Materialization.Table, d => {
+          depBuilt.set(true)
+          d("mr_bad").join(d("mr_ok"), "k")
+        }))
+      // the model's own exception, not a future's wrapper, naming the model
+      val e = intercept[RuntimeException](reg.run(spark, dir))
+      assert(e.isInstanceOf[SparkThrowable] &&
+        e.asInstanceOf[SparkThrowable].getCondition == "USER_RAISED_EXCEPTION", e)
+      assert(e.getMessage.contains("boom at row 3"), e.getMessage)
+      val note = e.getSuppressed.collect { case f: ModelRegistry.ModelFailure => f }.toSeq
+      assert(note.map(n => (n.model, n.phase)) == Seq(("mr_bad", "materialization")), note)
+      assert(note.head.getMessage.contains("mr_bad"))
+      assert(!depBuilt.get(), s"$tier: a dependent of the failed model was built")
+      // the in-flight sibling's write completed before run returned
+      assert(new java.io.File(s"$dir/mr_ok/_SUCCESS").isFile, s"$tier: sibling write not awaited")
+      assert(new java.io.File(dir).list().forall(!_.startsWith(".")), s"$tier: staging debris left")
+      val live = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("model-registry-"))
+      assert(live.isEmpty, s"$tier: pool threads outlived run: $live")
+    }
+    // a build that throws: the same instance comes back, phase "build"
+    val boom = new IllegalStateException("no input")
+    val e = intercept[IllegalStateException](new ModelRegistry()
+      .register(ModelDef("mr_nobuild", Nil, Materialization.View, _ => throw boom))
+      .register(ModelDef("mr_nobuild_dep", Seq("mr_nobuild"), Materialization.View, d => d("mr_nobuild")))
+      .run(spark, wh()))
+    assert(e eq boom)
+    assert(e.getSuppressed.toSeq.collect { case f: ModelRegistry.ModelFailure => (f.model, f.phase) } ==
+      Seq(("mr_nobuild", "build")))
+  }
+
+  test("Materialized drops entries of stopped sessions") {
+    // last in the suite: it stops the suite's session
+    val old = spark
+    Materialized(old, "mr_memo_dir", "mr_memo")(old.range(3).toDF())
+    assert(Materialized.sessions.exists(_ eq old))
+    old.stop()
+    val fresh = GraftSession.get(Some("local[2]"), 4)
+    try {
+      assert(fresh ne old)
+      Materialized(fresh, "mr_memo_dir", "mr_memo")(fresh.range(3).toDF())
+      assert(!Materialized.sessions.exists(_ eq old), "memo still holds the stopped session")
+      assert(Materialized.sessions.exists(_ eq fresh))
+    } finally {
+      Materialized.invalidate(fresh)
+      fresh.stop()
+    }
   }
 }
