@@ -1,6 +1,9 @@
 package graft
 
+import graft.runtime.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /** Benchmark main: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
@@ -26,24 +29,7 @@ object Bench {
     // spill-friendly instead of GC-fatal inside one fixed-heap JVM —
     // on a real cluster this is the same knob tuned per job.
     val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The fleet's ~85 bounded global-window sites (WindowOps.scala
-    // header; boundedness spec-gated in GlobalWindowSpecs) each emit an
-    // identical WindowExec single-partition WARN — thousands of lines
-    // that bury real warnings in the driver's tail capture (VERDICT r8
-    // #8). Silence that one category; everything else stays at WARN.
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    catch { case scala.util.control.NonFatal(_) => () }
+    val spark = GraftSession.get(Some(s"local[$cpus]"), shufflePartitions.toInt)
 
     // warmup: JVM + codegen + parquet footers (not reported). Three
     // passes with different shapes — a star join, a window/lookback
@@ -198,44 +184,10 @@ object Bench {
       if (!record) ""
       else try java.nio.file.Files.readString(java.nio.file.Paths.get(fullName))
       catch { case scala.util.control.NonFatal(_) => "" }
-    // Flat-object parse bounded to the NAMED object's own closing
-    // brace — an unbounded scan once matched the trailing "runs"
-    // object, whose sample COUNTS (3) poisoned the minima.
-    def priorObj(key: String): Map[String, Double] = {
-      val mObj = priorTxt.indexOf("\"" + key + "\":")
-      val mEnd = if (mObj < 0) -1 else priorTxt.indexOf('}', mObj)
-      if (mObj < 0 || mEnd < 0) Map.empty
-      else {
-        val pat = java.util.regex.Pattern.compile("\"([A-Za-z0-9_]+)\":(-?[0-9.]+)")
-        val m = pat.matcher(priorTxt.substring(mObj + key.length + 3, mEnd + 1))
-        val b = Map.newBuilder[String, Double]
-        while (m.find()) b += m.group(1) -> m.group(2).toDouble
-        b.result()
-      }
-    }
-    def priorScalar(key: String): Option[Double] = {
-      val m = java.util.regex.Pattern
-        .compile("\"" + key + "\":(-?[0-9.]+)").matcher(priorTxt)
-      if (m.find()) Some(m.group(1).toDouble) else None
-    }
-    val priorCode = {
-      val m = java.util.regex.Pattern
-        .compile("\"code\":\"([0-9a-f]*)\"").matcher(priorTxt)
-      if (m.find()) m.group(1) else ""
-    }
-    // Minima merge only within the same (code fingerprint, cpus) scope
-    // (VERDICT r10 #5): a prior record missing the cpus field predates
-    // the scoping and never merges.
-    val priorCpus = {
-      val m = java.util.regex.Pattern
-        .compile("\"cpus\":\"?([0-9]+)\"?").matcher(priorTxt)
-      if (m.find()) m.group(1) else ""
-    }
-    val mergePrior = codeFp.nonEmpty && priorCode == codeFp && priorCpus == cpus
-    if (record && priorTxt.nonEmpty && !mergePrior)
+    val mergeable = if (record) priorMinima(priorTxt, codeFp, cpus) else None
+    if (record && priorTxt.nonEmpty && mergeable.isEmpty)
       System.err.println(s"[bench] $fullName min map reset (main-source fingerprint changed)")
-    val priorMin: Map[String, Double] =
-      if (mergePrior) priorObj("min") else Map.empty
+    val PriorMinima(priorMin, priorDagMin, priorBuildMin) = mergeable.getOrElse(PriorMinima.empty)
     // A failed SAMPLE's elapsed time is how long it took to DIE, not a
     // cost — it never tightens a minimum (curMin is MaxValue unless at
     // least one sample succeeded; ADVICE r9 #3: a query that succeeded
@@ -283,8 +235,6 @@ object Bench {
     // the build cost was a single contended sample until now. Failed
     // consumers (-1 sentinel) never enter the min merge.
     val dagMinJson = dagLane.map { case (build, ts) =>
-      val priorDagMin = if (mergePrior) priorObj("dag_min") else Map.empty[String, Double]
-      val priorBuildMin = if (mergePrior) priorScalar("dag_build_min") else None
       val buildMin = math.min(build, priorBuildMin.getOrElse(Double.MaxValue))
       val tsMin = ts.map { case (n, v) =>
         val prior = priorDagMin.get(n).filter(_ >= 0)
@@ -346,5 +296,35 @@ object Bench {
     val minTotal = if (record) s""","min_total":${fmt(minMap.map(_._2).sum)}""" else ""
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"top_slowest":${top.size},"median_of_3":${rerun.size},"detail":"$fullName"$minTotal$failedJson,"queries":${qmap(top)}$dagJsonCompact,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** Minima carried over from a prior bench record. */
+  final case class PriorMinima(
+      min: Map[String, Double], dagMin: Map[String, Double], dagBuildMin: Option[Double])
+  object PriorMinima { val empty: PriorMinima = PriorMinima(Map.empty, Map.empty, None) }
+
+  /** The minima of the prior record `priorTxt`, or None when they must
+    * not merge into this run's: the record is missing or unreadable, or
+    * it was taken at another main-source fingerprint `codeFp` or core
+    * count `cpus` (VERDICT r10 #5; a record without a `cpus` field
+    * predates that scoping and never merges). */
+  def priorMinima(priorTxt: String, codeFp: String, cpus: String): Option[PriorMinima] = {
+    def num(v: JValue): Option[Double] = v match {
+      case JDouble(d) => Some(d)
+      case JInt(i) => Some(i.toDouble)
+      case _ => None
+    }
+    def obj(v: JValue): Map[String, Double] = v match {
+      case JObject(fields) => fields.flatMap { case (k, x) => num(x).map(k -> _) }.toMap
+      case _ => Map.empty
+    }
+    def sameCpus(v: JValue): Boolean = v match {
+      case JInt(n) => n.toString == cpus
+      case _ => false
+    }
+    JsonMethods.parseOpt(priorTxt).collect {
+      case rec: JObject if codeFp.nonEmpty && rec \ "code" == JString(codeFp) && sameCpus(rec \ "cpus") =>
+        PriorMinima(obj(rec \ "min"), obj(rec \ "dag_min"), num(rec \ "dag_build_min"))
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.runtime.GraftSession
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-factor upsampler: replicates an existing driver corpus K×
@@ -89,13 +90,7 @@ object GenScale {
     val out = args.lift(1).getOrElse("testdata_gen/sf1")
     val k   = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(Some(s"local[$cpus]"), cpus.toInt)
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
 

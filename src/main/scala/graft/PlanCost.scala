@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.runtime.GraftSession
 
 /** Decompose each query's wall time into driver-side cost (building
   * the DataFrame + analysis/optimization/physical planning, i.e.
@@ -18,15 +18,7 @@ object PlanCost {
     val only = args.headOption.map(_.split(",").toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.get(Some(s"local[$cpus]"), cpus.toInt)
     // same warmup as Bench so JIT noise doesn't land on the first rows
     Seq("q_join_star_region_revenue", "q_window_lag_returns",
         "q_fred_series_latest_aggregates_snapshot").foreach { q =>

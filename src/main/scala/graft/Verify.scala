@@ -1,27 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.runtime.GraftSession
 import java.nio.file.{Files, Paths}
+import org.json4s.JsonAST.{JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, render}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Bounded global-window sites flood stderr with one identical
-    // WindowExec WARN each (boundedness gated in GlobalWindowSpecs;
-    // see WindowOps.scala header). Keep the log readable.
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    catch { case scala.util.control.NonFatal(_) => () }
+    val spark = GraftSession.get(Some(s"local[$cpus]"), cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // Local-dev subset filter (comma-separated names); driver never sets it.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -36,24 +24,17 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // A dead context makes every later query fail the same way;
+        // the dump is incomplete, so abort loudly instead of exiting 0.
+        if (spark.sparkContext.isStopped) {
+          System.err.println("[verify] SparkContext is stopped — aborting")
+          sys.exit(2)
+        }
       }
       finally spark.catalog.clearCache() // per-query caches must not leak
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val json = JObject(SparkEntry.oracleSql.toList.map { case (k, v) => k -> JString(v) })
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), compact(render(json)))
     spark.stop()
   }
 }

@@ -119,7 +119,7 @@ object FuzzyJoinOps {
     * big exchange.
     *
     * Why this exists (VERDICT r9 #1, the sf1→sf10 adjudication): the
-    * ErProbe measurements show the operator's algorithmic quantities
+    * measurements show the operator's algorithmic quantities
     * are exactly linear — 38.90 candidate occurrences and 0.709
     * verified pairs per record, max fingerprint multiplicity 8/10/12,
     * at sf0.1/sf1/sf10 alike — but [[symspellSelfJoin]]'s wall grew

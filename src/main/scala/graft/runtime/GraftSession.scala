@@ -2,28 +2,23 @@ package graft.runtime
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
+/** The one session factory of the graft engine: every entry point
+  * (`Verify`, `Bench`, `PlanCost`, `PlanDump`, `GenScale`) and every
+  * spec builds its session here.
   *
-  * Local-mode defaults are tuned for the test harness (local[32],
-  * 128 GiB single JVM) but every setting is cluster-safe: AQE handles
-  * runtime re-planning (skew joins, partition coalescing) on a real
-  * 1000-executor deployment, and shuffle partitions are only pinned
-  * when the caller runs local mode.
+  * This is the configuration the DuckDB oracle checks: Spark's
+  * defaults (ANSI mode and AQE included), UTC session time, the native
+  * vector expressions, and an explicit shuffle width. The reference's
+  * BigQuery `SAFE_*` calls are mapped to explicit `try_*` functions,
+  * so no query needs ANSI mode turned off.
   */
 object GraftSession {
 
   /** Build (or reuse) a SparkSession with graft defaults applied. */
   def get(master: Option[String] = None, shufflePartitions: Int = 32): SparkSession = {
-    val b = SparkSession
-      .builder()
+    val b = SparkSession.builder()
       .appName("graft")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Exact ANSI-ish arithmetic disabled: reference (BigQuery) uses
-      // SAFE_* everywhere; we map those explicitly via try_* functions.
-      .config("spark.sql.ansi.enabled", "false")
       // native vec_dot/vec_cosine expressions (SimilarityOps falls
       // back to the composable form when absent, but library sessions
       // should get the codegen path)
@@ -38,9 +33,14 @@ object GraftSession {
     master.foreach(b.master)
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // The fleet's bounded global-window sites (WindowOps.scala header;
+    // boundedness spec-gated in GlobalWindowSpecs) each emit an
+    // identical WindowExec single-partition WARN, thousands of lines
+    // that bury real warnings. Silence that one category only.
+    try org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+    catch { case scala.util.control.NonFatal(_) => () }
     spark
   }
-
-  /** Local test session (used by ScalaTest suites). */
-  lazy val local: SparkSession = get(Some("local[4]"), shufflePartitions = 4)
 }

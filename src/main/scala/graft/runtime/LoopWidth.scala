@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * at session width W every round launches W tasks per stage across
   * 3–4 stages, so a small graph spends its wall-clock on task launch
   * and stage bookkeeping, not compute. Measured at sf0.1 local[32]
-  * (Profile, min of 3): q_pagerank_trade 7.6 s at 32 loop partitions
+  * (min of 3): q_pagerank_trade 7.6 s at 32 loop partitions
   * vs 4.5 s at 4–8; q_bfs_hops_trade 4.8 → 3.0; LPA 5.3 → 2.8 — and
   * the SAME penalty at local[8] with 32 partitions (8.2 s pagerank),
   * proving the cost is per-task scheduling × rounds, not thread
@@ -24,8 +24,8 @@ import org.apache.spark.sql.SparkSession
 object LoopWidth {
 
   /** Loop rows per task. The measured plateau at sf0.1 spans 4–16
-    * partitions for the 1.17 M-row trade-graph edge frame (Profile
-    * A/B: pagerank 4.5 s at 4–8 parts vs 7.6 s at 32; bfs 3.0–3.3 vs
+    * partitions for the 1.17 M-row trade-graph edge frame (A/B:
+    * pagerank 4.5 s at 4–8 parts vs 7.6 s at 32; bfs 3.0–3.3 vs
     * 4.8; LPA 2.8–3.1 vs 5.3); 128 Ki rows/task lands mid-plateau and
     * keeps per-task compute (μs/row joins and aggregations) well above
     * the ~ms task fixed cost. */
@@ -36,10 +36,7 @@ object LoopWidth {
   def derive(spark: SparkSession, rows: Long): Int = {
     val session = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val byData  = math.ceil(rows.toDouble / RowsPerTask).toLong
-    val w = math.max(2L, math.min(session.toLong, byData)).toInt
-    if (sys.env.contains("SPARK_GRAFT_LOOPWIDTH_DEBUG"))
-      System.err.println(s"[loopwidth] rows=$rows session=$session -> width=$w")
-    w
+    math.max(2L, math.min(session.toLong, byData)).toInt
   }
 
   /** Run `body` with spark.sql.shuffle.partitions set to `w`,

@@ -1,23 +1,18 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.CurationOps
+import graft.runtime.GraftSession
 
 /** Corpus-curation operators: benchmark decontamination semantics,
   * temperature-mix rate math (incl. upsampling), and packing-manifest
   * contiguity invariants. */
 class CurationSpecs extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .appName("curation-specs")
-    .getOrCreate()
+  private lazy val spark = GraftSession.get(Some("local[4]"), 4)
 
   override def afterAll(): Unit = spark.stop()
 

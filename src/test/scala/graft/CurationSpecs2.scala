@@ -1,23 +1,18 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{CurationOps, SimilarityOps, TextOps}
 import graft.queries.Registry
+import graft.runtime.GraftSession
 
 /** Round-5 continuation: repetition signals, per-key caps, int8
   * embedding quantization, cluster-canonical corpus dedup. */
 class CurationSpecs2 extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .appName("curation2-specs")
-    .getOrCreate()
+  private lazy val spark = GraftSession.get(Some("local[4]"), 4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -67,10 +67,6 @@ object GlobalWindowAudit {
     require(args.length == 2, "usage: GlobalWindowAudit <dirA> <dirB>")
     val spark = graft.runtime.GraftSession.get(Some(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]"),
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    catch { case scala.util.control.NonFatal(_) => () }
     val Seq(a, b) = args.toSeq
     val ca = audit(spark, a)
     val cb = audit(spark, b)

@@ -1,22 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.GraphOps
+import graft.runtime.GraftSession
 
 /** Scaled-integer PageRank: hand-checked fixpoints, mass bounds,
   * determinism under repartitioning. */
 class GraphSpecs extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .appName("graph-specs")
-    .getOrCreate()
+  private lazy val spark = GraftSession.get(Some("local[4]"), 4)
 
   override def afterAll(): Unit = spark.stop()
 

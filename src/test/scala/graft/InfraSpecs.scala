@@ -1,9 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -11,8 +14,8 @@ import graft.operators.MultimodalOps
 import graft.runtime.{GraftSession, SqlGuard}
 import graft.streaming.StreamingIngest
 
-/** Specs for the SQL guard, streaming ingest, and multimodal batch
-  * plumbing — the surfaces without a DuckDB oracle.
+/** Specs for the session factory, the SQL guard, streaming ingest,
+  * and multimodal batch plumbing — the surfaces without a DuckDB oracle.
   */
 class InfraSpecs extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -20,6 +23,23 @@ class InfraSpecs extends AnyFunSuite with BeforeAndAfterAll {
   import spark.implicits._
 
   override def afterAll(): Unit = spark.stop()
+
+  test("GraftSession.get: Spark's ANSI default, UTC, vec_* resolvable, the requested width") {
+    assert(spark.conf.get(SQLConf.ANSI_ENABLED.key) == SQLConf.ANSI_ENABLED.defaultValueString)
+    assert(spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key) == "UTC")
+    assert(spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key) == "4")
+    assert(spark.sql("SELECT vec_cosine(array(1F, 0F), array(2F, 0F))").head().getDouble(0) == 1.0)
+  }
+
+  test("no file under src/ but GraftSession.scala builds a session") {
+    val builder = """SparkSession\s*\.\s*builder""".r
+    val walk = Files.walk(Paths.get("src"))
+    val copies = try walk.iterator().asScala.filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString != "GraftSession.scala" &&
+        builder.findFirstIn(Files.readString(p)).isDefined).toList
+      finally walk.close()
+    assert(copies.isEmpty, s"sessions built outside GraftSession.get: ${copies.mkString(", ")}")
+  }
 
   test("SqlGuard allows SELECT and CTE queries") {
     Seq((1, "a"), (2, "b")).toDF("id", "v").createOrReplaceTempView("guard_t")

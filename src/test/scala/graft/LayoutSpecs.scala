@@ -1,23 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.LayoutOps
+import graft.runtime.GraftSession
 
 /** Z-order layout: Morton interleave correctness vs an independent JVM
   * fold, exact fixed-point ranks, and the clustering property the
   * layout exists for (per-bucket spans ≪ global span on BOTH dims). */
 class LayoutSpecs extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .appName("layout-specs")
-    .getOrCreate()
+  private lazy val spark = GraftSession.get(Some("local[4]"), 4)
 
   override def afterAll(): Unit = spark.stop()
 

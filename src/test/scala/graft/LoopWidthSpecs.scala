@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.runtime.LoopWidth
+import graft.runtime.{GraftSession, LoopWidth}
 
 /** Focused spec for the round-11 loop-width optimization: iterative
   * operators (PageRank / BFS / LPA / CC) derive their loop-internal
@@ -12,12 +11,7 @@ import graft.runtime.LoopWidth
   * unchanged. */
 class LoopWidthSpecs extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", 32)
-    .config("spark.ui.enabled", "false")
-    .appName("loopwidth-specs")
-    .getOrCreate()
+  private lazy val spark = GraftSession.get(Some("local[2]"), 32)
 
   test("derive: small loops narrow, big loops capped at session width") {
     assert(LoopWidth.derive(spark, 1000L) == 2)                  // floor 2

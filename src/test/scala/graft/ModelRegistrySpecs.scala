@@ -336,7 +336,7 @@ class ModelRegistrySpecs extends AnyFunSuite with BeforeAndAfterAll with Eventua
     old.stop()
     val fresh = GraftSession.get(Some("local[2]"), 4)
     try {
-      assert(fresh ne old)
+      assert((fresh ne old) && !fresh.sparkContext.isStopped)
       Materialized(fresh, "mr_memo_dir", "mr_memo")(fresh.range(3).toDF())
       assert(!Materialized.sessions.exists(_ eq old), "memo still holds the stopped session")
       assert(Materialized.sessions.exists(_ eq fresh))

@@ -3,22 +3,17 @@ package graft
 import java.sql.Date
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{AlertOps, FedLexicon}
+import graft.runtime.GraftSession
 
 /** Round-5 additions: the alert breach/resolve state machine and the
   * Fed sentiment lexicon scorer. */
 class Round5Specs extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .appName("round5-specs")
-    .getOrCreate()
+  private lazy val spark = GraftSession.get(Some("local[4]"), 4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{CurationOps, DedupOps, SimilarityOps}
+import graft.runtime.GraftSession
 
 /** Round-7 phase-4 operators: exact substring-span dedup, epoch-shard
   * manifest, SemDeDup pruning decisions. Hand-derived fixtures plus
@@ -13,12 +13,7 @@ import graft.operators.{CurationOps, DedupOps, SimilarityOps}
   */
 class Round7Specs2 extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .appName("round7-phase4-specs")
-    .getOrCreate()
+  private lazy val spark = GraftSession.get(Some("local[4]"), 4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -1,23 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SketchOps
+import graft.runtime.GraftSession
 
 /** KMV distinct sketch + priority sampling: hash portability, the
   * exact union-merge property, estimator accuracy, determinism under
   * repartitioning. */
 class SketchSpecs extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .appName("sketch-specs")
-    .getOrCreate()
+  private lazy val spark = GraftSession.get(Some("local[4]"), 4)
 
   override def afterAll(): Unit = spark.stop()
 
