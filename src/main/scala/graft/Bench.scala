@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.SharedMarts
 import graft.runtime.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
@@ -82,10 +83,7 @@ object Bench {
             // (observed: an executor OOM at the sf10 leg shut the context
             // down mid-suite and 17 queries "ran" in 30 ms). Nothing
             // measured after this point means anything — abort loudly.
-            if (spark.sparkContext.isStopped) {
-              System.err.println(s"[bench] SparkContext is stopped — aborting; NO record written")
-              sys.exit(2)
-            }
+            abortIfStopped(spark)
             false
         }
       val dt = (System.nanoTime() - t0) / 1e9
@@ -131,11 +129,6 @@ object Bench {
           (name, med, samples.count(_._2), curMin)
         }
       }
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def qmap(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val rerun = results.filter(_._3 > 1)
 
     // Per-query min across THIS run's samples merged with the prior
     // committed record's min map at the same SF (VERDICT r7 #4):
@@ -202,46 +195,45 @@ object Bench {
     // production read pattern. clearCache between timings cannot
     // evict a durable Table, so these numbers are honest scan costs.
     // Runs only on full sweeps (it shares the JVM-warm state).
-    val dagLane: Option[(Double, Seq[(String, Double)])] =
+    // dag_build + per-consumer minima get the same cross-run (code-
+    // scoped) min discipline as the query board (VERDICT r8 #3) —
+    // the build cost was a single contended sample until now. Failed
+    // consumers (-1 sentinel) never enter the min merge.
+    val dag: Option[DagLane] =
       if (!record) None
       else try {
         val wh = java.nio.file.Files.createTempDirectory("graft-dagbench-").toString
         spark.catalog.clearCache(); System.gc()
         val tb0 = System.nanoTime()
-        val frames = graft.queries.DagBenchModels.registry(spark, sfDir).run(spark, wh).frames
+        val frames = SharedMarts.registry(spark, sfDir).run(spark, wh).frames
         val buildSec = (System.nanoTime() - tb0) / 1e9
-        val consumers = graft.queries.DagBenchModels.consumers(spark, sfDir, frames)
-        val timings = consumers.map { case (name, f) =>
+        val timings = SharedMarts.consumers(spark, sfDir).map { c =>
           spark.catalog.clearCache(); System.gc()
           val t0 = System.nanoTime()
           // A broken consumer must NOT masquerade as a fast valid
           // timing (ADVICE r8): record the sentinel -1, log the cause.
-          val ok = try { f().count(); true } catch {
+          val ok = try { SharedMarts.read(c, frames).count(); true } catch {
             case e: Throwable =>
-              System.err.println(s"[bench] dag consumer $name FAILED: ${e.getMessage}")
+              System.err.println(s"[bench] dag consumer ${c.name} FAILED: ${e.getMessage}")
+              abortIfStopped(spark)
               false
           }
-          name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+          c.name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
         }
         spark.catalog.clearCache()
-        Some((buildSec, timings))
+        Some(DagLane(buildSec, math.min(buildSec, priorBuildMin.getOrElse(Double.MaxValue)),
+          timings, timings.map { case (n, v) =>
+            val prior = priorDagMin.get(n).filter(_ >= 0)
+            n -> (if (v >= 0) math.min(v, prior.getOrElse(Double.MaxValue)) else prior.getOrElse(-1.0))
+          }))
       } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] dag lane failed: ${e.getMessage}")
+          abortIfStopped(spark)
           None
       }
-    // dag_build + per-consumer minima get the same cross-run (code-
-    // scoped) min discipline as the query board (VERDICT r8 #3) —
-    // the build cost was a single contended sample until now. Failed
-    // consumers (-1 sentinel) never enter the min merge.
-    val dagMinJson = dagLane.map { case (build, ts) =>
-      val buildMin = math.min(build, priorBuildMin.getOrElse(Double.MaxValue))
-      val tsMin = ts.map { case (n, v) =>
-        val prior = priorDagMin.get(n).filter(_ >= 0)
-        n -> (if (v >= 0) math.min(v, prior.getOrElse(Double.MaxValue)) else prior.getOrElse(-1.0))
-      }
-      (buildMin, tsMin)
-    }
+    val outcome = Outcome(codeFp, cpus, suite, failed.toSeq, results.map(r => (r._1, r._2)),
+      minMap, results.filter(_._3 > 1).map(r => (r._1, r._3)), dag, sfDir)
 
     // Full detail → file (not stdout: would blow the driver's tail
     // capture). Partial runs (SPARK_GRAFT_ONLY dev subsets) must NOT
@@ -249,53 +241,74 @@ object Bench {
     // must full runs at a NON-CANONICAL scale factor (a full sf0.001
     // smoke once overwrote the sf0.1 record): the canonical name is
     // reserved for sf0.1; other SFs write a suffixed record.
-    val dagJson = dagLane.map { case (b, ts) =>
-      val (bMin, tsMin) = dagMinJson.get
-      s""","dag_build":${fmt(b)},"dag_build_min":${fmt(bMin)},"dag":${qmap(ts)},"dag_min":${qmap(tsMin)}"""
-    }.getOrElse("")
-    // Compact (stdout) variant without the dag_min duplicate — the
-    // printed line must stay well under the driver's ~2000-char tail
-    // capture (VERDICT r10 #2: BENCH_r09's line outgrew it and cost a
-    // round of round-over-round comparability; full maps live in the
-    // record file).
-    val dagJsonCompact = dagLane.map { case (b, ts) =>
-      val bMin = dagMinJson.get._1
-      s""","dag_build":${fmt(b)},"dag_build_min":${fmt(bMin)},"dag":${qmap(ts)}"""
-    }.getOrElse("")
-    val suiteJson = suite.map(su => s""","suite":"$su"""").getOrElse("")
-    val failedJson =
-      if (failed.isEmpty) ""
-      else s""","failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"code":"$codeFp","cpus":$cpus$suiteJson$failedJson,"queries":${qmap(results.map(r => (r._1, r._2)))},"min":${qmap(minMap)},"runs":${rerun.map(r => "\"" + r._1 + "\":" + r._3).mkString("{", ",", "}")}$dagJson,"sf":"$sfDir"}"""
     if (record) {
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(fullName), full + "\n")
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(fullName), recordJson(outcome) + "\n")
       catch { case scala.util.control.NonFatal(e) => System.err.println(s"[bench] $fullName write failed: ${e.getMessage}") }
     } else System.err.println(s"[bench] subset run (${results.size} queries): BENCH_FULL.json left untouched")
-
-    // Compact line for the driver: total + the slowest queries, largest
-    // first, as many as fit a conservative line budget.
-    val byCost = results.map(r => (r._1, r._2)).sortBy(-_._2)
-    // Both caps bound the printed line (VERDICT r10 #2): at most 15
-    // slowest queries AND a 700-char map budget, so the whole line
-    // stays < ~1500 chars even with the dag section.
-    val budget = 700
-    val top = {
-      val b = Seq.newBuilder[(String, Double)]
-      var used = 2
-      var i = 0
-      while (i < byCost.length && i < 15 && used + byCost(i)._1.length + 12 < budget) {
-        b += byCost(i)
-        used += byCost(i)._1.length + 12
-        i += 1
-      }
-      b.result()
-    }
-    // min_total = Σ per-query minima across the round's full runs —
-    // the storm-resistant comparable (a single run's total conflates
-    // plan cost with whatever the host was doing that quarter hour)
-    val minTotal = if (record) s""","min_total":${fmt(minMap.map(_._2).sum)}""" else ""
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"top_slowest":${top.size},"median_of_3":${rerun.size},"detail":"$fullName"$minTotal$failedJson,"queries":${qmap(top)}$dagJsonCompact,"sf":"$sfDir"}""")
+    println(summaryLine(outcome, fullName, withMinTotal = record))
     spark.stop()
+  }
+
+  /** A dead SparkContext turns every later measurement into a no-op:
+    * exit 2 and write no record. */
+  private def abortIfStopped(spark: SparkSession): Unit =
+    if (spark.sparkContext.isStopped) {
+      System.err.println("[bench] SparkContext is stopped — aborting; NO record written")
+      sys.exit(2)
+    }
+
+  /** The DAG lane: mart build time and per-consumer read times, with
+    * their cross-run minima (-1 marks a failed consumer). */
+  final case class DagLane(
+      build: Double, buildMin: Double, times: Seq[(String, Double)], mins: Seq[(String, Double)])
+
+  /** One run's numbers: per-query times, their cross-run minima, and
+    * the number of samples of each re-sampled query. */
+  final case class Outcome(
+      code: String, cpus: String, suite: Option[String], failed: Seq[String],
+      queries: Seq[(String, Double)], min: Seq[(String, Double)], runs: Seq[(String, Int)],
+      dag: Option[DagLane], sf: String)
+
+  private def secs(v: Double): JValue = JDecimal(BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP))
+  private def secsMap(kv: Seq[(String, Double)]): JValue = JObject(kv.map { case (k, v) => k -> secs(v) }.toList)
+
+  private def head(o: Outcome): List[JField] =
+    List("metric" -> JString("total"), "value" -> secs(o.queries.map(_._2).sum),
+      "unit" -> JString("sec"), "n" -> JInt(o.queries.size))
+
+  private def failedField(o: Outcome): List[JField] =
+    if (o.failed.isEmpty) Nil else List("failed" -> JArray(o.failed.map(JString(_)).toList))
+
+  /** The full record written to `BENCH_FULL*.json`. */
+  def recordJson(o: Outcome): String = JsonMethods.compact(JObject(
+    head(o) ++ List("code" -> JString(o.code), "cpus" -> JInt(o.cpus.toInt)) ++
+      o.suite.map(s => "suite" -> JString(s)) ++ failedField(o) ++
+      List("queries" -> secsMap(o.queries), "min" -> secsMap(o.min),
+        "runs" -> JObject(o.runs.map { case (k, n) => k -> JInt(n) }.toList)) ++
+      o.dag.toList.flatMap(d => List("dag_build" -> secs(d.build), "dag_build_min" -> secs(d.buildMin),
+        "dag" -> secsMap(d.times), "dag_min" -> secsMap(d.mins))) ++
+      List("sf" -> JString(o.sf))))
+
+  /** The stdout contract line: the total plus the slowest queries,
+    * largest first — at most 15 and within a 700-char map budget, so
+    * the line stays under ~1500 chars with the dag section (VERDICT
+    * r10 #2: BENCH_r09's line outgrew the ~2000-char stdout tail that
+    * is kept). The dag minima live only in the record. `min_total`,
+    * Σ per-query minima across the round's full runs, is the
+    * storm-resistant comparable; it is printed for recorded runs. */
+  def summaryLine(o: Outcome, detail: String, withMinTotal: Boolean): String = {
+    val slowest = o.queries.sortBy(-_._2).take(15)
+    // map chars used once each entry is in: its name plus ~12 for quotes and a timing
+    val used = slowest.scanLeft(2)(_ + _._1.length + 12).tail
+    val top = slowest.zip(used).takeWhile(_._2 < 700).map(_._1)
+    JsonMethods.compact(JObject(
+      head(o) ++ List("top_slowest" -> JInt(top.size), "median_of_3" -> JInt(o.runs.size),
+        "detail" -> JString(detail)) ++
+        (if (withMinTotal) List("min_total" -> secs(o.min.map(_._2).sum)) else Nil) ++
+        failedField(o) ++ List("queries" -> secsMap(top)) ++
+        o.dag.toList.flatMap(d => List("dag_build" -> secs(d.build),
+          "dag_build_min" -> secs(d.buildMin), "dag" -> secsMap(d.times))) ++
+        List("sf" -> JString(o.sf))))
   }
 
   /** Minima carried over from a prior bench record. */

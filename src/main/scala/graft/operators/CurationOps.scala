@@ -51,8 +51,9 @@ object CurationOps {
     // each side's filter through and re-inlines the tokenize+shingle
     // lambda chain into both consumers (interpreted HOFs, O(tokens²)
     // re-expansion — measured 8.7 s -> 0.5 s at sf0.1 when cached).
-    // Cache ownership follows DedupOps: the returned plan references
-    // the cached frame; Verify/Bench/CacheScope release it per query.
+    // The code that reads a frame twice persists it (QueryDef's caching
+    // rule): the returned plan references the cached frame, and
+    // Verify/Bench release it with their per-query clearCache.
     val base = docs
       .select(col(idCol).as("__id"), isBench.as("__bench"),
         DedupOps.tokens(col(textCol)).as("__t"))

@@ -77,17 +77,12 @@ object AgentQueries {
   // agent_technical_signal_history (ref, 56 LoC)
   // ------------------------------------------------------------------
 
-  private def signalHistory(s: SparkSession, dir: String): DataFrame =
-    // persisted: both grain branches aggregate the same instance frame
-    // — without the cache the whole signal-instance pipeline (bars →
-    // indicators → events → forward joins) runs twice
-    signalHistoryFrom(MiscModelQueries.signalInstances(s, dir).persist())
-
-  /** signal_history from an already-derived instance frame — the
-    * DAG-lane read path (materialized `mart_signal_instances`, where
-    * the two grain branches each scan the durable table at parquet
-    * cost, no persist needed). */
-  private[queries] def signalHistoryFrom(inst: DataFrame): DataFrame = {
+  /** signal_history over the `mart_signal_instances` frame (declared
+    * in [[SharedMarts]]). Persisted: both grain branches aggregate it;
+    * built inline, the whole signal-instance pipeline (bars →
+    * indicators → events → forward joins) would otherwise run twice. */
+  private[queries] def signalHistoryFrom(instances: DataFrame): DataFrame = {
+    val inst = instances.persist()
     def branch(grain: String, symExpr: Column): DataFrame =
       inst
         .groupBy(
@@ -203,7 +198,7 @@ object AgentQueries {
   // ------------------------------------------------------------------
 
   private def signalSetups(s: SparkSession, dir: String): DataFrame =
-    TechnicalSignalQueries.currentSetups(s, dir)
+    Registry.byName("q_technical_current_setups").query(s, dir)
       .select(
         col("symbol"), col("d").as("as_of_date"),
         col("signal_name"), col("indicator_name"), col("signal_side"),
@@ -471,7 +466,7 @@ object AgentQueries {
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q_agent_market_performance", marketPerformance, Some(marketPerformanceSql)),
-    QueryDef("q_agent_technical_signal_history", signalHistory, Some(signalHistorySql)),
+    SharedMarts.query("q_agent_technical_signal_history", Some(signalHistorySql)),
     QueryDef("q_agent_technical_signal_setups", signalSetups, Some(signalSetupsSql)),
     QueryDef("q_agent_financial_conditions_index", agentFci, Some(agentFciSql)),
     QueryDef("q_agent_reddit_posts_daily", agentRedditPostsDaily,

@@ -712,25 +712,21 @@ object AnalysisQueries2 {
   private val LeadingEconSnapCutoff = "1998-07-01"
 
   /** The snapshot's input staging, projected to the consumed columns
-    * — also the Table-tier model the DAG-mode bench materializes
-    * ([[DagBenchModels]]). */
+    * — the `stg_base_historical_thin` mart of [[SharedMarts]]. */
   private[queries] def baseHistoricalThin(s: SparkSession, dir: String): DataFrame =
     baseHistorical(s, dir)
       .select("symbol", "date", "series_name", "category", "value",
         "pct_change_3mo", "pct_change_6mo", "pct_change_9mo")
 
-  private def leadingEconSnapshot(s: SparkSession, dir: String): DataFrame =
-    // referenced twice (spine derivation + moments frame) — persist so
-    // the base_historical pipeline runs once. Projected to the consumed
-    // columns FIRST: the cache would otherwise force the RANGE-window
-    // family (high/low/std_diff_1yr), which this model never reads —
-    // ColumnPruning drops those window expressions from the cached plan
-    leadingEconSnapshotFrom(baseHistoricalThin(s, dir).persist())
-
-  /** Snapshot consumer over an already-materialized thin staging
-    * (DAG mode hands in a parquet-backed mart; re-scanning it twice
-    * is the production read pattern, so no persist here). */
-  private[queries] def leadingEconSnapshotFrom(bhaDf: DataFrame): DataFrame = {
+  /** The snapshot over the thin staging frame. Referenced twice
+    * (spine derivation + moments frame), so persisted: built inline,
+    * the base_historical pipeline runs once. The staging is projected to
+    * the consumed columns FIRST: the cache would otherwise force the
+    * RANGE-window family (high/low/std_diff_1yr), which this model
+    * never reads — ColumnPruning drops those window expressions from
+    * the cached plan. */
+  private[queries] def leadingEconSnapshotFrom(bha: DataFrame): DataFrame = {
+    val bhaDf = bha.persist()
     val spine = bhaDf
       .filter(col("date") >= to_date(lit(LeadingEconSnapCutoff)))
       .select(trunc(col("date"), "month").as("snapshot_date"))
@@ -820,7 +816,7 @@ object AnalysisQueries2 {
     def oAvg(sumC: String, nC: String) =
       s"CASE WHEN $nC > 0 THEN ${oDivRound(s"CAST($sumC * 1000000 AS HUGEINT)", nC, 2)} END"
     // Prefix aggregates as cumulative co-moment sums — the same O(rows)
-    // shape as the Spark side (see leadingEconSnapshot scaladoc), with
+    // shape as the Spark side (see leadingEconSnapshotFrom scaladoc), with
     // identical DECIMAL(18,6) accumulation and the same double formula.
     // Products use DECIMAL(19,6) operands: 19+19 = 38 total width keeps
     // DuckDB inside INT128 multiplication (18+18 stays in the INT64
@@ -901,11 +897,10 @@ object AnalysisQueries2 {
     QueryDef("q_indicator_market_response", indicatorMarketResponse,
       Some(indicatorMarketResponseSql)),
     QueryDef("q_leading_econ_return_indicator", leadingEcon, Some(leadingEconSql)),
-    QueryDef("q_leading_econ_return_indicator_snapshot", leadingEconSnapshot,
-      Some(leadingEconSnapshotSql)),
+    SharedMarts.query("q_leading_econ_return_indicator_snapshot", Some(leadingEconSnapshotSql)),
     // agent_leading_econ_return_indicator_snapshot.sql is a bare
     // SELECT * over the backtesting model — same plan, agent name
-    QueryDef("q_agent_leading_econ_return_indicator_snapshot", leadingEconSnapshot,
+    SharedMarts.query("q_agent_leading_econ_return_indicator_snapshot",
       Some(leadingEconSnapshotSql))
   )
 }

@@ -373,19 +373,11 @@ object CrossAssetQueries2 {
   // cross_asset_divergences (ref, 61 LoC) — the fan-in
   // ------------------------------------------------------------------
 
-  def divergences(s: SparkSession, dir: String, asOf: Option[String]): DataFrame =
-    divergencesFrom(s, dir, asOf,
-      creditSignals(s, dir, asOf),
-      riskConfirmationSignals(s, dir, asOf),
-      commoditySignals(s, dir, asOf),
-      breadthSignals(s, dir, asOf),
-      confirmationSignals(s, dir, asOf))
-
-  /** The fan-in over its five branch signals taken as FRAMES — the
-    * isolated query builds them inline (above, sharing stagings via
-    * the session-tier `Materialized` memo); the DAG-mode bench lane
-    * ([[DagBenchModels]]) hands in Table-tier materializations so
-    * this consumer is five date-keyed joins over mart scans. */
+  /** The fan-in over its five branch signals taken as FRAMES
+    * (declared in [[SharedMarts]]): the isolated query builds them
+    * inline, sharing stagings via the session-tier `Materialized`
+    * memo; the DAG lane hands in Table-tier materializations so this
+    * consumer is five date-keyed joins over mart scans. */
   private[queries] def divergencesFrom(
       s: SparkSession,
       dir: String,
@@ -467,7 +459,6 @@ object CrossAssetQueries2 {
       (s, d) => creditSignals(s, d, None), Some(creditSql(None))),
     QueryDef("q_cross_asset_commodity_signals",
       (s, d) => commoditySignals(s, d, None), Some(commoditySql(None))),
-    QueryDef("q_cross_asset_divergences",
-      (s, d) => divergences(s, d, None), Some(divergencesSql(None)))
+    SharedMarts.query("q_cross_asset_divergences", Some(divergencesSql(None)))
   )
 }

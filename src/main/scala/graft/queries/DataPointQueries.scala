@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -44,24 +44,14 @@ object DataPointQueries {
   private val WeekStart = "1998-08-01"
   private val WeekEnd   = "1998-08-07"
 
-  private def byName(defs: Seq[QueryDef], name: String): QueryDef =
-    defs.find(_.name == name).getOrElse(sys.error(s"missing base query $name"))
-
   private val findingCols = Seq("data_point", "metric_category", "current_value",
     "change_period", "change_pct", "z_score", "significance_score", "finding_type")
 
-  private def interestingDataPoints(s: SparkSession, dir: String): DataFrame =
-    interestingFrom(
-      FredQueries.fredMonthlyCalc(s, dir),
-      byName(AnalysisQueries2.defs, "q_leading_econ_return_indicator").query(s, dir),
-      byName(AgentQueries.defs, "q_agent_market_performance").query(s, dir),
-      byName(CommodityQueries.defs, "q_agent_commodity_performance").query(s, dir))
-
-  /** The detector suite over its four INPUT marts, taken as frames —
-    * the isolated QueryDef builds them inline (above); the DAG-mode
-    * bench lane ([[DagBenchModels]]) hands in Table-tier
-    * materializations so this consumer runs at scan cost, which is
-    * how the reference's weekly asset reads them in production. */
+  /** The detector suite over its four INPUT marts, taken as frames
+    * (declared in [[SharedMarts]]): the isolated query builds them
+    * inline; the DAG lane hands in Table-tier materializations so this
+    * consumer runs at scan cost, which is how the reference's weekly
+    * asset reads them in production. */
   private[queries] def interestingFrom(
       fredMonthly: DataFrame,
       leadingEcon: DataFrame,
@@ -207,7 +197,7 @@ object DataPointQueries {
     // arbitrarily far back in calendar time). In production the marts
     // are ModelRegistry Table-tier materializations and this query is
     // the cheap scan-side of each detector — MEASURED since r8 by the
-    // bench's DAG lane (DagBenchModels + BENCH_FULL.json `dag`):
+    // bench's DAG lane (SharedMarts + BENCH_FULL.json `dag`):
     // ~1.2 s at sf0.1 over the materialized marts vs ~20 s isolated,
     // equivalence spec-gated bit-for-bit. The isolated number is the
     // price of the driver's cleared-cache isolation, not a plan
@@ -348,6 +338,6 @@ object DataPointQueries {
   }
 
   val defs: Seq[QueryDef] = Seq(
-    QueryDef("q_interesting_data_points", interestingDataPoints, Some(interestingSql))
+    SharedMarts.query("q_interesting_data_points", Some(interestingSql))
   )
 }

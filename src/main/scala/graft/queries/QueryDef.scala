@@ -14,9 +14,12 @@ import org.apache.spark.sql.types.DecimalType
   *  - counts / integer outputs cast to BIGINT;
   *  - every ranking/dedup fully tie-broken by a unique key.
   *
-  * Caching contract: a query may `.persist()` internal fan-out frames
-  * (a grain-reduced aggregate consumed by several joins) and does NOT
-  * unpersist them — the frames are still referenced by the returned
+  * Caching contract — one rule: the code that reads a frame twice
+  * persists it (a grain-reduced aggregate consumed by several joins; a
+  * mart a [[SharedMarts]] reader scans twice). Code that only builds a
+  * frame or hands it on never persists it, so an inline build and a
+  * materialized mart are cached by the same reader. Persisted frames
+  * are NOT unpersisted — they are still referenced by the returned
   * plan, so eager unpersist would force recomputation. Callers that
   * run many registry queries in one session (Verify, Bench do this)
   * must call `spark.catalog.clearCache()` after consuming each result;

@@ -165,10 +165,8 @@ object SemanticLayerQueries {
         concat(lit("supp_"), col("l_suppkey") % 23), "'supp_' || CAST(l_suppkey % 23 AS VARCHAR)"))
   }
 
-  /** asset_daily_returns from an already-derived analysis-returns
-    * layer frame — the DAG-lane read path (materialized
-    * `mart_analysis_returns_layer`); the isolated query hands it
-    * [[layerAr]] directly. */
+  /** asset_daily_returns over the `mart_analysis_returns_layer` frame
+    * (declared in [[SharedMarts]]; inline it is [[layerAr]]). */
   private[queries] def assetDailyReturnsFrom(ar: DataFrame): DataFrame = {
     val stocks = ar.filter(col("symbol").startsWith("SP_"))
       .select(assetCols("stock", "stock_symbol"): _*)
@@ -198,9 +196,8 @@ object SemanticLayerQueries {
 
   val defs: Seq[QueryDef] = Seq(
     // asset_daily_returns.sql: the cross-class union + QUALIFY dedup.
-    QueryDef(
+    SharedMarts.query(
       "q_asset_daily_returns",
-      (s, dir) => assetDailyReturnsFrom(layerAr(s, dir)),
       Some(s"""
         WITH stocks AS (SELECT ${assetColsSql("stock", "stock_symbol")} FROM ($sp500Sql)),
         sector_etfs AS (SELECT ${assetColsSql("sector_etf", "sector_etf_symbol")} FROM ($usSectorSql)),

@@ -423,17 +423,14 @@ object TechnicalSignalQueries {
   // technical_current_setups — latest bar per symbol, 14-day staleness
   // ------------------------------------------------------------------
 
-  def currentSetups(s: SparkSession, dir: String): DataFrame =
-    // persisted: referenced by the latest-bar derivation AND the final
-    // join — the indicator/event pipeline must not run twice
-    currentSetupsFrom(s, dir, signalEvents(s, dir).persist())
-
-  /** current_setups from an already-derived signal-events frame — the
-    * DAG-lane read path (materialized `mart_signal_events`; both
-    * references scan the durable table). Only the one-row max-date
-    * spine still derives from `(s, dir)`. */
+  /** current_setups over the `mart_signal_events` frame (declared in
+    * [[SharedMarts]]). Persisted: the latest-bar derivation AND the
+    * final join read it; built inline, the indicator/event pipeline
+    * would otherwise run twice. Only the one-row max-date spine still
+    * derives from `(s, dir)`. */
   private[queries] def currentSetupsFrom(
-      s: SparkSession, dir: String, events: DataFrame): DataFrame = {
+      s: SparkSession, dir: String, eventsIn: DataFrame): DataFrame = {
+    val events = eventsIn.persist()
     val maxD = Tables(s, dir).lineitem.agg(max(to_date(col("l_shipdate"))).as("__maxd"))
     val latest = events.groupBy(col("symbol").as("lb_sym")).agg(max(col("d")).as("latest_date"))
       .crossJoin(broadcast(maxD))
@@ -463,6 +460,6 @@ object TechnicalSignalQueries {
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q_technical_signal_events", signalEvents, Some(eventsSql)),
-    QueryDef("q_technical_current_setups", currentSetups, Some(currentSetupsSql))
+    SharedMarts.query("q_technical_current_setups", Some(currentSetupsSql))
   )
 }

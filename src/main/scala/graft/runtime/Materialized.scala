@@ -31,7 +31,7 @@ import org.apache.spark.storage.StorageLevel
   * Scale: on a real cluster this memo is the session-local tier; the
   * durable tier (parquet/Delta writes per model, incremental
   * refreshes) is [[graft.operators.SinkOps]]' writers driven by
-  * [[graft.queries.ModelRegistry]]'s topological order. Entries are
+  * [[ModelRegistry]]'s topological order. Entries are
   * keyed per (session, dir) so concurrent sessions (tests) never
   * share plans across stopped contexts, and entries of a session
   * whose SparkContext has stopped are dropped whenever the memo is
@@ -51,14 +51,6 @@ object Materialized {
     // Re-arm after an external clearCache (idempotent when cached).
     if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK)
     df
-  }
-
-  /** Drop every memoized plan for a session (tests stopping their
-    * SparkSession should call this so stale plans cannot leak into a
-    * fresh context). */
-  def invalidate(s: SparkSession): Unit = {
-    val it = memo.keySet.iterator
-    while (it.hasNext) if (it.next()._1 eq s) it.remove()
   }
 
   /** Sessions that currently hold memo entries. */

@@ -175,29 +175,6 @@ class InfraSpecs extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode").equalsIgnoreCase("static"))
   }
 
-  test("CacheScope.evaluate releases a registry query's internal caches") {
-    import graft.queries.Registry
-    import graft.runtime.CacheScope
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      "spec precondition: no caches before the scope")
-    // a query whose plan persists an internal frame (signalInstances)
-    val q = Registry.byName("q_agent_technical_signal_history").query
-    val n = CacheScope.evaluate(spark, "/root/testdata/sf0.001")(q)(_.count())
-    assert(n > 0)
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      "scope exit must unpersist every RDD cached during the query")
-  }
-
-  test("CacheScope.withCaches leaves pre-existing caches alone") {
-    import graft.runtime.CacheScope
-    val pre = Seq(1, 2, 3).toDF("x").persist()
-    pre.count()
-    CacheScope.withCaches(spark) { spark.range(3).count() } // caches nothing
-    assert(spark.sparkContext.getPersistentRDDs.size == 1,
-      "a scope must not clobber caches it did not create")
-    pre.unpersist(blocking = true)
-  }
-
   test("repartitionByRange + sortWithinPartitions yields disjoint per-file key ranges") {
     // The 1-D write-layout half of parquet min/max file pruning (the
     // multi-dim half is LayoutOps' z-order): range-partitioned sorted

@@ -16,6 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 import org.scalatest.BeforeAndAfterAll
 
+import graft.queries.{Registry, SharedMarts}
 import graft.runtime.{GraftSession, Materialized, ModelRegistry}
 import graft.runtime.ModelRegistry.{Materialization, ModelDef}
 
@@ -146,25 +147,25 @@ class ModelRegistrySpecs extends AnyFunSuite with BeforeAndAfterAll with Eventua
   }
 
   test("DAG-mode consumers equal the isolated queries bit-for-bit (bench dag lane, VERDICT r7 #1)") {
-    // The bench's DAG lane must be a pure read-path change: every
-    // consumer over the Table-tier materializations returns exactly
-    // the rows the isolated (inline re-derivation) QueryDef returns.
+    // Driven by the declarations, so a mart or consumer declared later
+    // is covered too: each materialized mart equals its inline build,
+    // and each consumer over the materialized marts returns exactly
+    // the rows its (inline re-derivation) registry QueryDef returns.
     val sf = "/root/testdata/sf0.001"
-    val dir = wh()
-    val frames = graft.queries.DagBenchModels.registry(spark, sf).run(spark, dir).frames
-    assert(frames.keySet == graft.queries.DagBenchModels.modelNames.toSet)
-    val isolated = graft.queries.Registry.byName
-    graft.queries.DagBenchModels.consumers(spark, sf, frames).foreach { case (name, dagFn) =>
-      // driver-side stringize+sort: engine sort order on tied rows is
-      // not stable, so compare canonicalized multisets
-      def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-        val cols = df.columns.sorted.map(col(_))
-        df.select(cols: _*).collect().toSeq.map(_.toString).sorted
-      }
-      val a = rows(dagFn())
-      val b = rows(isolated(name).query(spark, sf))
-      assert(a.nonEmpty, s"$name: empty DAG-mode result")
-      assert(a == b, s"$name: DAG-mode result differs from isolated query")
+    val reg = SharedMarts.registry(spark, sf)
+    val frames = reg.run(spark, wh()).frames
+    assert(frames.keySet == reg.names.toSet)
+    reg.names.foreach { name =>
+      val a = rows(frames(name))
+      assert(a.nonEmpty, s"$name: empty mart")
+      assert(a == rows(SharedMarts.inline(spark, sf)(name)), s"$name: mart differs from its inline build")
+      spark.catalog.clearCache()
+    }
+    SharedMarts.consumers(spark, sf).foreach { c =>
+      val a = rows(SharedMarts.read(c, frames))
+      assert(a.nonEmpty, s"${c.name}: empty DAG-lane result")
+      assert(a == rows(Registry.byName(c.name).query(spark, sf)),
+        s"${c.name}: DAG-lane result differs from the registry query")
       spark.catalog.clearCache()
     }
   }
@@ -340,9 +341,6 @@ class ModelRegistrySpecs extends AnyFunSuite with BeforeAndAfterAll with Eventua
       Materialized(fresh, "mr_memo_dir", "mr_memo")(fresh.range(3).toDF())
       assert(!Materialized.sessions.exists(_ eq old), "memo still holds the stopped session")
       assert(Materialized.sessions.exists(_ eq fresh))
-    } finally {
-      Materialized.invalidate(fresh)
-      fresh.stop()
-    }
+    } finally fresh.stop()
   }
 }
