@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.runtime.Loop
+
 /** Training-data deduplication operators over a documents table.
   *
   * Cache ownership: the shingle/signature frames marked `.cache()`
@@ -521,22 +523,16 @@ object DedupOps {
     * round — so convergence is O(log diameter), not O(diameter)
     * (a 2000-node near-critical random graph converges in ~8 rounds
     * where plain propagation needs >40; Round5Specs covers both).
-    * Each round is two joins + one groupBy, all partitioned by node
-    * id so the shuffle partitioning is reused, and the driver only
-    * orchestrates round count + an isEmpty convergence probe — no
-    * graph data ever reaches the driver.
+    * Each round is two joins + one groupBy ([[ccRound]]) against the
+    * edge list cached by `dst`, the round's join key, so the |E| side
+    * never re-exchanges; the driver only orchestrates round count + an
+    * isEmpty convergence probe — no graph data ever reaches the driver.
+    * The loop (edge cache, width, per-round checkpoints and their
+    * release) runs on [[Loop]].
     *
     * Returns (node, lbl) for nodes that appear in `pairs`; singleton
     * documents never enter the edge list — callers coalesce their own
     * id.
-    *
-    * Lineage is truncated each round with an EAGER `localCheckpoint`:
-    * without it the logical plan compounds per round and Catalyst
-    * analysis cost explodes long before the data does (measured: a
-    * 10-round loop un-truncated spins minutes in the analyzer).
-    * localCheckpoint stores blocks on executors — right for local
-    * mode and static clusters; a dynamic-allocation cluster would
-    * swap in reliable `checkpoint` with a checkpoint dir.
     */
   def connectedComponents(
       pairs: DataFrame,
@@ -561,47 +557,42 @@ object DedupOps {
     // shuffle — an explicit pre-checkpoint of the half-edge list was
     // measured cost-neutral-to-negative here (r8) and is deliberately
     // NOT done.
-    val edges = pairs
-      .select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint(true)
+    val (edges, width) = Loop.keyed(
+      pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+        .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+        .distinct(),
+      "dst")
+    val seed = Loop.checkpoint(edges.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node")))
     var converged = false
-    var rounds    = 0
-    // Loop shuffle width from |E| (LoopWidth, guide §2): every round
-    // is two joins + a groupBy over ≤|E| rows, so small pair lists run
-    // narrow rounds; at scale the derived width hits the session cap
-    // and nothing changes. The count is cheap — `edges` is an eagerly
-    // materialized checkpoint.
-    val spark = pairs.sparkSession
-    val loopW = graft.runtime.LoopWidth.derive(spark, edges.count())
-    graft.runtime.LoopWidth.withWidth(spark, loopW) {
-    while (!converged && rounds < maxIter) {
-      val viaNeighbors = edges
-        .join(labels.select(col("node").as("dst"), col("lbl")), Seq("dst"))
-        .select(col("src").as("node"), col("lbl"))
-      val stepped = labels.unionByName(viaNeighbors)
-        .groupBy(col("node")).agg(min(col("lbl")).as("lbl"))
-      // pointer jump: every label is itself a node, so node→lbl→lbl'
-      // shortcuts one level of indirection (lbl' <= lbl by
-      // construction — min() is monotone down the chain)
-      val next = stepped
-        .join(stepped.select(col("node").as("lbl"), col("lbl").as("jump")), Seq("lbl"), "left")
-        .select(col("node"), coalesce(col("jump"), col("lbl")).as("lbl"))
-        .localCheckpoint(true)
-      converged = labels.as("o")
+    val (labels, rounds) = Loop.rounds(seed, width, maxIter)(ccRound(edges, _), (prev, next) => {
+      converged = prev.as("o")
         .join(next.as("n"), Seq("node"))
         .filter(col("o.lbl") =!= col("n.lbl"))
         .isEmpty
-      labels = next
-      rounds += 1
-    }
-    }
+      converged
+    })
+    edges.unpersist(blocking = false)
     require(converged, s"connectedComponents: no fixpoint after $maxIter rounds")
     (labels, rounds)
+  }
+
+  /** One min-label round with pointer jumping over `edges` cached
+    * pre-partitioned by `dst` ([[connectedComponentsWithRounds]]
+    * guarantees it; PlanSpecs gates it): the edge side of the
+    * neighbor-label join never re-exchanges. */
+  private[graft] def ccRound(edges: DataFrame, labels: DataFrame): DataFrame = {
+    val viaNeighbors = edges
+      .join(labels.select(col("node").as("dst"), col("lbl")), Seq("dst"))
+      .select(col("src").as("node"), col("lbl"))
+    val stepped = labels.unionByName(viaNeighbors)
+      .groupBy(col("node")).agg(min(col("lbl")).as("lbl"))
+    // pointer jump: every label is itself a node, so node→lbl→lbl'
+    // shortcuts one level of indirection (lbl' <= lbl by
+    // construction — min() is monotone down the chain)
+    stepped
+      .join(stepped.select(col("node").as("lbl"), col("lbl").as("jump")), Seq("lbl"), "left")
+      .select(col("node"), coalesce(col("jump"), col("lbl")).as("lbl"))
   }
 
   /** Exact duplicate-substring spans (the suffix-array dedup of Lee et

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.runtime.Loop
 
 /** Iterative graph analytics beyond the pair/cluster layer
   * ([[DedupOps.connectedComponents]]): PageRank in SCALED-INTEGER
@@ -21,16 +24,9 @@ import org.apache.spark.sql.functions._
   * The edge list is degree-annotated once and hash-partitioned by
   * `src` up front; each round's contribution join is hinted
   * shuffle-hash (the rank side is |V| ≪ |E|), so the big edge side
-  * neither re-exchanges nor re-sorts. Each round's ranks are
-  * `localCheckpoint`ed, not just cached: an iterative DataFrame's
-  * logical plan otherwise grows one round deeper every iteration and
-  * re-analysis/AQE re-optimization of the accumulated plan comes to
-  * dominate wall-clock (measured: per-round cost climbing 0.5→7 s by
-  * round 8 with plain cache; flat ~0.5 s with checkpoint). On a
-  * multi-executor cluster where executor loss must be survivable,
-  * swap `localCheckpoint` for reliable `checkpoint` against a
-  * checkpoint dir — same truncation, durable blocks. Only N (node
-  * count) lives on the driver.
+  * neither re-exchanges nor re-sorts. The loops (edge cache, width,
+  * per-round checkpoints and their release) run on [[Loop]]. Only N
+  * (node count) lives on the driver.
   */
 object GraphOps {
 
@@ -54,90 +50,47 @@ object GraphOps {
       completeInbound: Boolean = false): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampNum > 0 && dampNum < dampDen, s"damping $dampNum/$dampDen out of (0,1)")
-    val spark = edges.sparkSession
     val e = edges.select(col("src"), col("dst")).distinct()
-    // Degree-annotated edges, partitioned by src ONCE: every round's
-    // contribution join then lines up against node-keyed ranks with
-    // no exchange on the (large) edge side. Degree via a count window
-    // over the src-partitioned frame — one exchange where the
-    // groupBy-then-join shape paid two plus a join.
-    val e2w = e.repartition(col("src"))
-      .withColumn("__deg",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-      .cache()
-    val nodesw = e2w.select(col("src").as("node")).distinct().cache()
-    val n = nodesw.count() // the one driver-side scalar (materializes both caches)
+    // Degree-annotated edges keyed by src: every round's contribution
+    // join then lines up against node-keyed ranks with no exchange on
+    // the (large) edge side. Degree via a count window over the
+    // src-partitioned frame — one exchange where the groupBy-then-join
+    // shape paid two plus a join (the planner drops keyed's own src
+    // re-key above it as redundant).
+    val (e2, p) = Loop.keyed(
+      e.repartition(col("src")).withColumn("__deg", count(lit(1)).over(Window.partitionBy(col("src")))),
+      "src")
+    val nodes = e2.select(col("src").as("node")).distinct().repartition(p, col("node")).cache()
+    val n = nodes.count() // the one driver-side scalar
     require(n > 0, "empty graph")
-    // Loop shuffle width derives from |E| (LoopWidth, guide §2): when
-    // the derived width is below the session width, re-key the two
-    // cached loop frames once (a narrow reshuffle of already-cached
-    // rows — only ever paid when the data is small) so every round's
-    // join/agg/checkpoint runs that many tasks instead of session-width
-    // counts. At scale the derived width hits the session cap and this
-    // branch is a no-op.
-    val m = e2w.count() // cheap: cached
-    val p = graft.runtime.LoopWidth.derive(spark, m)
-    val sessionW = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val narrowed = p < sessionW
-    val (e2, nodes) =
-      if (narrowed) {
-        val a = e2w.repartition(p, col("src")).cache()
-        val b = nodesw.repartition(p, col("node")).cache()
-        b.count(); a.count() // materialize narrow caches, then drop the wide ones
-        e2w.unpersist(blocking = false); nodesw.unpersist(blocking = false)
-        (a, b)
-      } else (e2w, nodesw)
     val basePart = (Unit12 * (dampDen - dampNum) / dampDen) / n // exact long
-    val ranks = graft.runtime.LoopWidth.withWidth(spark, p) {
-      var rk = nodes.withColumn("rank_u12", lit(Unit12 / n))
-        .localCheckpoint(true) // eager: plan truncated to a flat scan
-      for (_ <- 1 to iterations) {
-        val contribs = e2
-          .join(rk.withColumnRenamed("node", "src").hint("shuffle_hash"), Seq("src"))
-          .select(col("dst").as("node"), expr("rank_u12 div __deg").as("__c"))
-          .groupBy(col("node"))
-          .agg(sum(col("__c")).as("__in"))
-        // `completeInbound` (callers whose edge list is symmetrized —
-        // then every node is some neighbor's dst, so contribs already
-        // carries every node): skip the per-round re-anchoring join
-        // against `nodes` that exists only to resurrect zero-inbound
-        // nodes. 8 iterations → 8 joins saved.
-        val updated =
-          if (completeInbound)
-            contribs.select(col("node"),
-              (lit(basePart) + expr(s"(__in * $dampNum) div $dampDen")).as("rank_u12"))
-          else
-            nodes
-              .join(contribs.hint("shuffle_hash"), Seq("node"), "left")
-              .select(col("node"),
-                (lit(basePart) +
-                  expr(s"(coalesce(__in, 0L) * $dampNum) div $dampDen"))
-                  .as("rank_u12"))
-        val next = updated.localCheckpoint(true)
-        // The superseded round's checkpoint blocks are dead the moment
-        // `next` is (eagerly) materialized — drop them now instead of
-        // letting executor storage grow by one |V| block set per
-        // iteration until ContextCleaner GC (ADVICE r6).
-        dropCheckpoint(rk)
-        rk = next
-      }
-      rk
+    val seed = Loop.checkpoint(nodes.withColumn("rank_u12", lit(Unit12 / n)))
+    val (ranks, _) = Loop.rounds(seed, p, iterations) { rk =>
+      val contribs = e2
+        .join(rk.withColumnRenamed("node", "src").hint("shuffle_hash"), Seq("src"))
+        .select(col("dst").as("node"), expr("rank_u12 div __deg").as("__c"))
+        .groupBy(col("node"))
+        .agg(sum(col("__c")).as("__in"))
+      // `completeInbound` (callers whose edge list is symmetrized —
+      // then every node is some neighbor's dst, so contribs already
+      // carries every node): skip the per-round re-anchoring join
+      // against `nodes` that exists only to resurrect zero-inbound
+      // nodes. 8 iterations → 8 joins saved.
+      if (completeInbound)
+        contribs.select(col("node"),
+          (lit(basePart) + expr(s"(__in * $dampNum) div $dampDen")).as("rank_u12"))
+      else
+        nodes
+          .join(contribs.hint("shuffle_hash"), Seq("node"), "left")
+          .select(col("node"),
+            (lit(basePart) +
+              expr(s"(coalesce(__in, 0L) * $dampNum) div $dampDen"))
+              .as("rank_u12"))
     }
     e2.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     ranks
   }
-
-  /** Release a localCheckpoint'ed DataFrame's storage. The blocks
-    * belong to the internal RDD captured in the checkpoint's
-    * LogicalRDD node (Dataset.unpersist only consults the SQL cache
-    * manager, which knows nothing of them). Callers must be done with
-    * the frame: the lineage is truncated, so nothing can recompute. */
-  private def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _ => () // not a checkpoint scan; nothing to release
-    }
 
   /** Exact triangle counting by degree-ordered orientation (the
     * Schank/Wagner forward algorithm, the standard distributed form —
@@ -204,8 +157,8 @@ object GraphOps {
     * (node, label) pairs — and a |distinct-labels|-wide regroup for
     * the argmax. The argmax is `max(struct(cnt, -label))`: exact
     * integers, no window sort. Labels must be positive longs (the
-    * negation is the tie-break). Rounds are localCheckpoint'ed and
-    * superseded checkpoints dropped, exactly as PageRank.
+    * negation is the tie-break). Rounds run on [[Loop]], exactly as
+    * PageRank.
     *
     * Returns (node, community, community_size). */
   def labelPropagation(
@@ -218,31 +171,12 @@ object GraphOps {
       .select(least(col(aCol), col(bCol)).as("a"), greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    val spark = pairs.sparkSession
-    val edgesw = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
-      .repartition(col("dst"))
-      .persist()
-    // The eager seed checkpoint executes THROUGH the edge cache, so
-    // the cache is materialized (and its partitioning visible to the
-    // planner) before any round is planned — same reason as the
-    // explicit count() in [[boundedBfs]].
-    var labels = edgesw.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node").cast("long"))
-      .localCheckpoint(true)
-    // Loop width from |E| (LoopWidth, guide §2): re-key the cached
-    // edge frame once when the derived width is below the session
-    // width (a narrow reshuffle, only paid when the data is small);
-    // every round then runs p-task stages instead of session-width.
-    val p = graft.runtime.LoopWidth.derive(spark, edgesw.count())
-    val sessionW = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val edges =
-      if (p < sessionW) {
-        val a = edgesw.repartition(p, col("dst")).persist()
-        a.count()
-        edgesw.unpersist(blocking = false)
-        a
-      } else edgesw
+    val (edges, p) = Loop.keyed(
+      und.select(col("a").as("src"), col("b").as("dst"))
+        .unionAll(und.select(col("b").as("src"), col("a").as("dst"))),
+      "dst")
+    val seed = Loop.checkpoint(edges.select(col("src").as("node")).distinct()
+      .withColumn("label", col("node").cast("long")))
     // Node ids must CAST to longs — a non-numeric id (e.g. the
     // 'c:1'-style string ids elsewhere in this file) casts to NULL,
     // which the label join then silently drops, corrupting every round
@@ -251,17 +185,11 @@ object GraphOps {
     // value is fine: negation is order-reversing over the whole long
     // range, so the max(struct(cnt, -label)) tie-break picks the
     // minimum label for 0/negative ids too.
-    val badIds = labels.filter(col("label").isNull).limit(1).count()
+    val badIds = seed.filter(col("label").isNull).limit(1).count()
     require(badIds == 0,
       "labelPropagation: node ids must cast to longs; found NULL after cast — " +
         "map string ids to longs (e.g. dense rank or xxhash64) first")
-    graft.runtime.LoopWidth.withWidth(spark, p) {
-      for (_ <- 1 to iterations) {
-        val next = lpaRound(edges, labels).localCheckpoint(true)
-        dropCheckpoint(labels)
-        labels = next
-      }
-    }
+    val (labels, _) = Loop.rounds(seed, p, iterations)(lpaRound(edges, _))
     edges.unpersist(blocking = false)
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("community_size"))
     labels.join(sizes.hint("shuffle_hash"), Seq("label"))
@@ -294,44 +222,16 @@ object GraphOps {
     * Scale, per hop: one join of the (≤|V|)-row distance frame
     * against the src-partitioned edge cache (edge side never
     * re-exchanges; the distance side is the small mover,
-    * shuffle-hash hinted) and one |V|-keyed min regroup. Rounds are
-    * localCheckpoint'ed with superseded checkpoints dropped. The
-    * frame re-aggregates already-settled nodes each round — the
-    * frontier-only variant saves that |V| pass but needs an anti
-    * join per round; at |V| ≪ |E| the full re-min is cheaper. */
+    * shuffle-hash hinted) and one |V|-keyed min regroup. Rounds run
+    * on [[Loop]]. The frame re-aggregates already-settled nodes each
+    * round — the frontier-only variant saves that |V| pass but needs
+    * an anti join per round; at |V| ≪ |E| the full re-min is cheaper. */
   def boundedBfs(edges: DataFrame, source: String, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val spark = edges.sparkSession
-    val ew = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src"))
-      .persist()
-    // Materialize the cache BEFORE planning round 1: an AQE-planned
-    // cache that has not run yet reports unknown output partitioning,
-    // so the first round's join would re-exchange the |E| side
-    // (later rounds, planned after execution fills the cache, line
-    // up anyway — PlanSpecs gates the aligned shape).
-    val m = ew.count()
-    // Loop width from |E| (LoopWidth, guide §2) — the narrow re-key of
-    // the cached edge frame is only paid when the data is small.
-    val p = graft.runtime.LoopWidth.derive(spark, m)
-    val sessionW = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val e =
-      if (p < sessionW) {
-        val a = ew.repartition(p, col("src")).persist()
-        a.count()
-        ew.unpersist(blocking = false)
-        a
-      } else ew
-    var dist = spark.range(1)
-      .select(lit(source).as("node"), lit(0L).as("hops"))
-      .localCheckpoint(true)
-    graft.runtime.LoopWidth.withWidth(spark, p) {
-      for (_ <- 1 to maxHops) {
-        val next = bfsRound(e, dist).localCheckpoint(true)
-        dropCheckpoint(dist)
-        dist = next
-      }
-    }
+    val (e, p) = Loop.keyed(edges.select(col("src"), col("dst")).distinct(), "src")
+    val seed = Loop.checkpoint(edges.sparkSession.range(1)
+      .select(lit(source).as("node"), lit(0L).as("hops")))
+    val (dist, _) = Loop.rounds(seed, p, maxHops)(bfsRound(e, _))
     e.unpersist(blocking = false)
     dist
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.models.MarketAnalysisReturn
-import graft.queries.QueryDef.{oDivRound, oSnap, rdiv, rsnap}
+import graft.queries.QueryDef.{nullif, oDivRound, oSnap, rdiv, rsnap}
 import graft.queries.FredSignalQueries.{idxOf, stgFred, stgFredSql}
 import graft.runtime.Tables
 
@@ -36,10 +36,6 @@ import graft.runtime.Tables
   * (symbol, series) — no window, no join amplification.
   */
 object AnalysisQueries {
-
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
-  private def nullif(c: Column): Column = when(c =!= 0, c)
 
   // ------------------------------------------------------------------
   // economic_regime_classification (ref, 239 LoC)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.queries.QueryDef.{oDivRound, oSnap, rdiv, rsnap}
+import graft.queries.QueryDef.{maxDate, maxDateSql, oDivRound, oSnap, rdiv, rsnap}
 import graft.runtime.Tables
 
 /** The dispersion pair (refs dbt_project/models/analysis/dispersion/
@@ -32,8 +32,6 @@ import graft.runtime.Tables
   */
 object AnalysisQueries3 {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** (gics_sector, etf_symbol, sector_display_name) — ref literal. */
   val SectorMapping: Seq[(String, String, String)] = Seq(
     ("Information Technology", "XLK", "Technology"),
@@ -55,7 +53,7 @@ object AnalysisQueries3 {
 
   /** Per-stock daily prices: (symbol, date, adj_close). */
   private def stockPrices(s: SparkSession, dir: String): DataFrame =
-    T(s, dir).lineitem
+    Tables(s, dir).lineitem
       .groupBy(concat(lit("S"), col("l_suppkey") % 100).as("symbol"),
         to_date(col("l_shipdate")).as("date"))
       .agg(QueryDef.rdiv(
@@ -78,7 +76,7 @@ object AnalysisQueries3 {
       .foldLeft(lit(null).cast("string")) { case (acc, (g, i)) =>
         when((col("s_suppkey") % 11) === i, lit(g)).otherwise(acc)
       }
-    T(s, dir).supplier
+    Tables(s, dir).supplier
       .filter(col("s_suppkey") < 100)
       .select(concat(lit("S"), col("s_suppkey") % 100).as("c_symbol"),
         sectorCol.as("gics_sector"))
@@ -106,11 +104,6 @@ object AnalysisQueries3 {
       ) AS t(gics_sector, etf_symbol, sector_display_name)
     )"""
   }
-
-  private val maxDateSql = "(SELECT MAX(CAST(l_shipdate AS DATE)) FROM lineitem)"
-
-  private def maxDate(s: SparkSession, dir: String): DataFrame =
-    T(s, dir).lineitem.agg(max(to_date(col("l_shipdate"))).as("__maxd"))
 
   // ------------------------------------------------------------------
   // sector_dispersion_analysis (ref, 179 LoC)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.models.MarketAnalysisReturn
-import graft.queries.QueryDef.{oDivRound, oSnap, rdiv, rsnap}
+import graft.queries.QueryDef.{nullif, oDivRound, oSnap, rdiv, rsnap}
 import graft.queries.FredSignalQueries.{idxOf, stgFred, stgFredSql}
 import graft.runtime.Tables
 
@@ -37,10 +37,6 @@ import graft.runtime.Tables
   * scores tie; the reference's ordering is nondeterministic there).
   */
 object AnalysisQueries4 {
-
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
-  private def nullif(c: Column): Column = when(c =!= 0, c)
 
   val EtfSymbols: Seq[String] = Seq("XLK", "XLC", "XLY", "XLF", "XLI", "XLU",
     "XLP", "XLRE", "XLB", "XLE", "XLV")
@@ -630,7 +626,7 @@ object AnalysisQueries4 {
       .foldLeft(lit(null).cast("string")) { case (acc, (g, i)) =>
         when(col("s_suppkey") % 11 === i, lit(g)).otherwise(acc)
       }
-    val companies = T(s, dir).supplier
+    val companies = Tables(s, dir).supplier
       .filter(col("s_suppkey").isNotNull)
       .select(concat(lit("T"), col("s_suppkey")).as("ticker"),
         col("s_name").as("company_name"),

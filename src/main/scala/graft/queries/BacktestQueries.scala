@@ -14,8 +14,6 @@ import graft.queries.QueryDef.{dsum, r4}
   */
 object BacktestQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   val defs: Seq[QueryDef] = Seq(
     // Point-in-time snapshot fan-out: month-end spine x trailing-90d
     // per-symbol stats as-of each snapshot date
@@ -66,7 +64,7 @@ object BacktestQueries {
     QueryDef(
       "q_sampling_strategies",
       (s, dir) => {
-        val o = T(s, dir).orders
+        val o = Tables(s, dir).orders
           .select(col("o_orderkey"), r4(col("o_totalprice")).as("o_totalprice"))
         val top = o.orderBy(col("o_totalprice").desc, col("o_orderkey").asc).limit(100)
           .withColumn("sample_kind", lit("top"))
@@ -160,7 +158,7 @@ object BacktestQueries {
     QueryDef(
       "q_cross_source_stories",
       (s, dir) => {
-        val d = T(s, dir).documents
+        val d = Tables(s, dir).documents
         d.groupBy(md5(concat_ws(" ", array_sort(array_distinct(
             filter(split(lower(col("text")), "\\s+"), t => length(t) > 0)
           )))).as("story_key"))

@@ -24,8 +24,6 @@ object BpeQueries {
     * stops at pair-freq < 2, the subword-nmt min_frequency default). */
   private val NumMerges = 60
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   // Training is deterministic, so memoizing the merge table per sf
   // dir cannot change results — it stops the three BPE QueryDefs from
   // each re-running the collect + 60-merge training loop (ADVICE r7).
@@ -34,7 +32,7 @@ object BpeQueries {
 
   private def trained(s: SparkSession, dir: String): Seq[BpeOps.BpeMerge] =
     mergeMemo.computeIfAbsent(
-      dir, _ => BpeOps.train(T(s, dir).documents, "text", NumMerges, minCount = 2L))
+      dir, _ => BpeOps.train(Tables(s, dir).documents, "text", NumMerges, minCount = 2L))
 
   val defs: Seq[QueryDef] = Seq(
     // The merge table itself: rank order IS the tokenizer.
@@ -59,7 +57,7 @@ object BpeQueries {
       (s, dir) => {
         val merges = trained(s, dir)
         BpeOps
-          .tokenize(T(s, dir).documents, "text", merges)
+          .tokenize(Tables(s, dir).documents, "text", merges)
           .groupBy(col("source"))
           .agg(
             count(lit(1)).as("n_docs"),
@@ -82,7 +80,7 @@ object BpeQueries {
       (s, dir) => {
         val merges = trained(s, dir)
         graft.operators.CurationOps.sequencePackingManifest(
-          BpeOps.tokenize(T(s, dir).documents, "text", merges),
+          BpeOps.tokenize(Tables(s, dir).documents, "text", merges),
           "doc_id", "source", col("n_tokens"), seqLen = 512)
       },
       TextMlGolden.bpePackedSequences

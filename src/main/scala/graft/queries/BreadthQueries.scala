@@ -30,10 +30,8 @@ import graft.runtime.Tables
   */
 object BreadthQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   private def series(s: SparkSession, dir: String): DataFrame =
-    T(s, dir).lineitem
+    Tables(s, dir).lineitem
       .groupBy((col("l_suppkey") % 32).cast("long").as("asset"),
         to_date(col("l_shipdate")).as("d"))
       .agg(r4(dsum(col("l_extendedprice"))).as("v"))

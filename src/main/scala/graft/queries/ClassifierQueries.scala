@@ -28,13 +28,11 @@ object ClassifierQueries {
   private val Lr           = 2.0
   private val Iters        = 20
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   private def featurized(s: SparkSession, dir: String): DataFrame = {
     // the corpus ships as one row group -> one partition; the
     // UDF-heavy featurize pass would run single-threaded without this
     // (training is spec-proven invariant to partitioning)
-    val docs = T(s, dir).documents.repartition(s.sparkContext.defaultParallelism)
+    val docs = Tables(s, dir).documents.repartition(s.sparkContext.defaultParallelism)
     TextClassifierOps.featurize(docs, "text", Keywords, ThresholdPct, Dims)
   }
 

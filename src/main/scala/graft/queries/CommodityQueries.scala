@@ -36,8 +36,6 @@ import graft.runtime.Tables
   */
 object CommodityQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   private val mdKey =
     "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|' || " +
       "CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
@@ -57,7 +55,7 @@ object CommodityQueries {
   def staging(s: SparkSession, dir: String, bucket: Column, unit: String): DataFrame = {
     val key = md5(concat_ws("|",
       col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
-    T(s, dir).lineitem
+    Tables(s, dir).lineitem
       .groupBy(bucket.as("commodity_name"), to_date(col("l_shipdate")).as("date"))
       .agg(max_by(col("l_extendedprice"), key).as("price"))
       .withColumn("commodity_unit", lit(unit))
@@ -87,7 +85,7 @@ object CommodityQueries {
     val fams = array(Universes.map { case (_, bucket, _, unit, _) =>
       struct(bucket(s).as("commodity_name"), lit(unit).as("commodity_unit"))
     }: _*)
-    T(s, dir).lineitem
+    Tables(s, dir).lineitem
       .select(col("l_extendedprice"), to_date(col("l_shipdate")).as("date"),
         key.as("__k"), explode(fams).as("fam"))
       .groupBy(col("fam.commodity_name").as("commodity_name"), col("date"),

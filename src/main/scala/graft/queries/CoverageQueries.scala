@@ -13,8 +13,6 @@ import graft.queries.QueryDef.r4
 /** Semantic-layer data-coverage checks and the IVF ANN scale path. */
 object CoverageQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   val defs: Seq[QueryDef] = Seq(
     // STRUCT-literal source-spec table x freshness checks
     // (semantic_layer/current_data_coverage.sql:4-12 — inline
@@ -23,7 +21,7 @@ object CoverageQueries {
       "q_data_coverage",
       (s, dir) => {
         import s.implicits._
-        val t = T(s, dir)
+        val t = Tables(s, dir)
         val spec = Seq(
           ("orders", "o_orderdate", 30),
           ("lineitem", "l_shipdate", 30),
@@ -83,7 +81,7 @@ object CoverageQueries {
       "q_ann_ivf_topk",
       (s, dir) => {
         val nprobe = 2
-        val e = T(s, dir).embeddings
+        val e = Tables(s, dir).embeddings
         val toVec = udf((a: Seq[Float]) => Vectors.dense(a.map(_.toDouble).toArray))
         val withVec = e.withColumn("features", toVec(col("embedding")))
         val km      = new KMeans().setK(8).setSeed(42L).setMaxIter(10).setFeaturesCol("features").setPredictionCol("cell")
@@ -122,7 +120,7 @@ object CoverageQueries {
     QueryDef(
       "q_ann_pq_topk",
       (s, dir) => {
-        val e  = T(s, dir).embeddings
+        val e  = Tables(s, dir).embeddings
         val cb = graft.operators.PqOps.pqTrain(e, "vec_id", "embedding", m = 8, ks = 16)
         val qvec = e.filter(col("vec_id") === 0)
           .select(col("embedding")).head().getSeq[Float](0).toArray.map(_.toDouble)

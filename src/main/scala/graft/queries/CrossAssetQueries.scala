@@ -34,8 +34,6 @@ import graft.runtime.{Materialized, Tables}
   */
 object CrossAssetQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   val Symbols: Seq[String] = Seq("SPY", "IWM", "RSP", "DIA", "IYT", "SOXX",
     "IWD", "IWF", "XLP", "XLY", "FXA", "HYG", "GOVT")
 
@@ -53,7 +51,7 @@ object CrossAssetQueries {
       val sym = Symbols.zipWithIndex.foldLeft(lit(null).cast("string")) {
         case (acc, (c, i)) => when(idxCol === i, lit(c)).otherwise(acc)
       }
-      T(s, dir).lineitem
+      Tables(s, dir).lineitem
         .groupBy(sym.as("symbol"), to_date(col("l_shipdate")).as("date"))
         .agg(QueryDef.rdiv(
           sum(col("l_extendedprice").cast(DecimalType(18, 6))), count(lit(1)), 4)
@@ -82,7 +80,7 @@ object CrossAssetQueries {
       case Some(d) => s.range(1).select(lit(d).cast("date").as("__asof"))
       case None =>
         Materialized(s, dir, "asof_max_shipdate") {
-          T(s, dir).lineitem.agg(max(to_date(col("l_shipdate"))).as("__asof"))
+          Tables(s, dir).lineitem.agg(max(to_date(col("l_shipdate"))).as("__asof"))
         }
     }
 

@@ -32,13 +32,11 @@ import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
   */
 object CrossAssetQueries2 {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** Commodity staging: (commodity_name, date, price) — exact-decimal
     * rounded mean (these values ship raw; see stgPrices). */
   def stgCommodities(s: SparkSession, dir: String): DataFrame =
     Materialized(s, dir, "stg_cross_asset_commodities") {
-      T(s, dir).lineitem
+      Tables(s, dir).lineitem
         .groupBy(
           when(col("l_orderkey") % 2 === 0, "gold").otherwise("copper").as("commodity_name"),
           to_date(col("l_shipdate")).as("date"))
@@ -60,7 +58,7 @@ object CrossAssetQueries2 {
   /** Treasury staging: (date, bc_10year) — exact-decimal rounded mean. */
   def stgTreasury(s: SparkSession, dir: String): DataFrame =
     Materialized(s, dir, "stg_cross_asset_treasury") {
-      T(s, dir).orders
+      Tables(s, dir).orders
         .groupBy(to_date(col("o_orderdate")).as("date"))
         .agg(QueryDef.rdiv(
           sum(col("o_totalprice").cast(DecimalType(18, 6))), count(lit(1)), 4)

@@ -15,8 +15,6 @@ import graft.runtime.Tables
   */
 object CurationQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** doc_id, source, tokens, est-BPE tokens — shared CTE base. */
   private val tokSql =
     """toks AS (
@@ -40,7 +38,7 @@ object CurationQueries {
     QueryDef(
       "q_benchmark_contamination",
       (s, dir) =>
-        CurationOps.contaminationPairs(T(s, dir).documents, "doc_id", "text",
+        CurationOps.contaminationPairs(Tables(s, dir).documents, "doc_id", "text",
           isBench = col("source") === "src0", shingleN = 3,
           minShared = 2, minBenchFrac = 0.2),
       Some(s"""
@@ -77,7 +75,7 @@ object CurationQueries {
     QueryDef(
       "q_training_mix_sampling",
       (s, dir) =>
-        CurationOps.temperatureMixSampling(T(s, dir).documents, "doc_id", "source",
+        CurationOps.temperatureMixSampling(Tables(s, dir).documents, "doc_id", "source",
           estBpe, budgetNum = 1, budgetDen = 2),
       Some(s"""
         WITH $tokSql,
@@ -110,7 +108,7 @@ object CurationQueries {
     QueryDef(
       "q_sequence_packing",
       (s, dir) =>
-        CurationOps.sequencePackingManifest(T(s, dir).documents, "doc_id", "source",
+        CurationOps.sequencePackingManifest(Tables(s, dir).documents, "doc_id", "source",
           estBpe, seqLen = 512),
       Some(s"""
         WITH $tokSql,
@@ -142,7 +140,7 @@ object CurationQueries {
         val n      = estBpe
         val bucket = ladder.reverse.tail
           .foldLeft(lit(4096L)) { (acc, b) => when(n <= b, lit(b)).otherwise(acc) }
-        T(s, dir).documents
+        Tables(s, dir).documents
           .select(col("doc_id"), n.as("tok"), bucket.as("bucket_len"))
           .filter(col("tok") > 0 && col("tok") <= 4096)
           .groupBy(col("bucket_len"))
@@ -193,7 +191,7 @@ object CurationQueries {
         import graft.operators.SketchOps
         val pct = pmod(SketchOps.hash32(col("doc_id")), lit(100L))
         val split = when(pct < 80, "train").when(pct < 90, "val").otherwise("test")
-        val d = T(s, dir).documents
+        val d = Tables(s, dir).documents
           .select(col("doc_id"), col("source"), split.as("split"),
             TextOps.tokenCount(col("text")).as("tok"))
         val withTotals = d.groupBy(col("source"), col("split"))
@@ -252,7 +250,7 @@ object CurationQueries {
       "q_curation_funnel",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val docs = T(s, dir).documents
+        val docs = Tables(s, dir).documents
         val t   = TextOps.tokens(col("text"))
         val n   = size(t).cast("long")
         val awl = TextOps.avgTokenLen(col("text"))
@@ -386,7 +384,7 @@ object CurationQueries {
     QueryDef(
       "q_charlm_perplexity",
       (s, dir) => {
-        val docs = T(s, dir).documents.select(col("doc_id"), col("text"))
+        val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
         // persisted: the exploded bigram table feeds BOTH the model
         // build (cb/cp aggregations) and the scoring join — without it
         // the transform+explode pass over every document runs twice
@@ -456,7 +454,7 @@ object CurationQueries {
     QueryDef(
       "q_corpus_shard_manifest",
       (s, dir) =>
-        CurationOps.epochShardManifest(T(s, dir).documents, "doc_id", estBpe,
+        CurationOps.epochShardManifest(Tables(s, dir).documents, "doc_id", estBpe,
           numShards = 8),
       Some(s"""
         WITH $tokSql,

@@ -39,8 +39,6 @@ import graft.runtime.Tables
   */
 object DataQualityQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   private val mdKey =
     "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|' || " +
       "CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
@@ -74,7 +72,7 @@ object DataQualityQueries {
     import QueryDef.r4
     val key = md5(concat_ws("|",
       col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
-    val raw = T(s, dir).lineitem
+    val raw = Tables(s, dir).lineitem
       .groupBy(bucket.as("symbol"), to_date(col("l_shipdate")).as("date"))
       .agg(
         r4(min_by(col("l_extendedprice"), key)).as("open"),
@@ -335,7 +333,7 @@ object DataQualityQueries {
         commoditySources.map { case (src, bucket, _) =>
           val key = md5(concat_ws("|",
             col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
-          val raw = T(s, dir).lineitem
+          val raw = Tables(s, dir).lineitem
             .groupBy(bucket(s).as("commodity_name"), to_date(col("l_shipdate")).as("date"))
             .agg(r4(max_by(col("l_extendedprice"), key)).as("price0"))
           val w = Window.partitionBy(col("commodity_name")).orderBy(col("date"))
@@ -473,7 +471,7 @@ object DataQualityQueries {
           }
           val chi2 = rsnap(
             sum(term.cast(DecimalType(18, 6))).over(wy).cast("double"), 4)
-          val counts = T(s, dir).lineitem
+          val counts = Tables(s, dir).lineitem
             .filter(col("l_extendedprice") > 0)
             .select(
               year(to_date(col("l_shipdate"))).cast("long").as("yr"),

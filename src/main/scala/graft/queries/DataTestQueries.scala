@@ -36,8 +36,6 @@ import graft.runtime.Tables
   */
 object DataTestQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   // ---------------------------------------------------------------
   // Generic tests (macros/test_*.sql) as reusable functions.
   // ---------------------------------------------------------------
@@ -97,7 +95,7 @@ object DataTestQueries {
     val key  = concat_ws("|", col("l_orderkey"), col("l_linenumber"))
     val open = col("l_extendedprice")
     val cls  = col("l_extendedprice") * (lit(1.0) + col("l_discount"))
-    T(s, dir).lineitem.select(
+    Tables(s, dir).lineitem.select(
       concat(lit("RAW_"), col("l_suppkey") % 100).as("symbol"),
       to_date(col("l_shipdate")).as("date"),
       open.as("open"),

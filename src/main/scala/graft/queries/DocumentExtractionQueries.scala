@@ -28,14 +28,12 @@ import graft.runtime.Tables
   */
 object DocumentExtractionQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** Envelope registry fixture from `documents`: every doc under its
     * symbol-layout path, plus a deterministic ~1/8 re-listed under the
     * legacy `10-K/` path with IDENTICAL content (the un-deleted
     * originals the GCS migration leaves behind, ref :64-66). */
   def envelopeRegistry(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir).documents
+    val docs = Tables(s, dir).documents
     val sym  = concat(lit("SYM"), col("doc_id") % 50)
     val base = docs.select(
       col("doc_id"),

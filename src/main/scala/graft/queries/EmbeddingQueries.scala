@@ -17,8 +17,6 @@ import graft.runtime.Tables
   */
 object EmbeddingQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   val defs: Seq[QueryDef] = Seq(
     // Mean-pooling: element-wise mean of every label-group's vectors
     // (the chunk→document pooling step; label stands in for doc id).
@@ -31,7 +29,7 @@ object EmbeddingQueries {
     QueryDef(
       "q_embedding_mean_pool",
       (s, dir) => {
-        val e = T(s, dir).embeddings
+        val e = Tables(s, dir).embeddings
         e.select(col("label").cast("long").as("label"),
             posexplode(SimilarityOps.toDouble(col("embedding"))))
           .groupBy(col("label"), col("pos").cast("long").as("dim"))
@@ -62,7 +60,7 @@ object EmbeddingQueries {
     QueryDef(
       "q_hard_negatives",
       (s, dir) => {
-        val e = T(s, dir).embeddings
+        val e = Tables(s, dir).embeddings
         val probes = e.filter(col("vec_id") < 5)
           .select(col("vec_id").as("probe_id"), col("label").as("probe_label"),
             SimilarityOps.toDouble(col("embedding")).as("qvec"))
@@ -119,7 +117,7 @@ object EmbeddingQueries {
       (s, dir) => {
         val planes = SimilarityOps.hyperplanes(64, 4)
         SimilarityOps.semanticDedupDecisions(
-          T(s, dir).embeddings, "vec_id", "embedding", planes, minSim = 0.25)
+          Tables(s, dir).embeddings, "vec_id", "embedding", planes, minSim = 0.25)
       },
       Some {
         val planes = SimilarityOps.hyperplanes(64, 4)

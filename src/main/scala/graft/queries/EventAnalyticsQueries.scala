@@ -18,12 +18,10 @@ import graft.runtime.Tables
   */
 object EventAnalyticsQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   private val DayUs = 86400000000L
 
   private def ev(s: SparkSession, dir: String): DataFrame =
-    T(s, dir).events.select(
+    Tables(s, dir).events.select(
       col("user_id"),
       expr("unix_micros(ts)").as("us"),
       col("event_type"))
@@ -176,7 +174,7 @@ object EventAnalyticsQueries {
       (s, dir) => {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-        val counts = T(s, dir).events
+        val counts = Tables(s, dir).events
           .select(col("user_id"), expr("unix_micros(ts)").as("us"),
             col("event_id"), col("event_type"))
           .withColumn("prev_type", lag(col("event_type"), 1).over(w))

@@ -30,11 +30,9 @@ import graft.runtime.Tables
   */
 object FomcStagingQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** One meeting per order month: meeting_date = month start + 14d. */
   private def meetings(s: SparkSession, dir: String): DataFrame =
-    T(s, dir).orders
+    Tables(s, dir).orders
       .groupBy(trunc(to_date(col("o_orderdate")), "month").as("m"))
       .agg(count(lit(1)).as("n_orders"))
       .select(date_add(col("m"), 14).as("meeting_date"), col("n_orders"))
@@ -574,7 +572,7 @@ object FomcStagingQueries {
     QueryDef(
       "q_stg_economic_calendar",
       (s, dir) => {
-        val e = T(s, dir).events
+        val e = Tables(s, dir).events
         val impact = when(col("event_id") % 4 === 0, "High")
           .when(col("event_id") % 4 === 1, "Medium")
           .when(col("event_id") % 4 === 2, "Low")

@@ -36,8 +36,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object FredQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** round(x, 2) with a DECIMAL(18,6) snap first. Values derived from
     * round-4 inputs (diffs, /2 midpoints) land EXACTLY on .xx5: rounding
     * the raw double there is engine-dependent (DuckDB rounds the binary
@@ -66,7 +64,7 @@ object FredQueries {
   def fredSeries(s: SparkSession, dir: String,
                  minDate: Option[String] = None,
                  seriesKeyed: Boolean = true): DataFrame = {
-    val li0 = T(s, dir).lineitem
+    val li0 = Tables(s, dir).lineitem
     val li = minDate.fold(li0)(d => li0.filter(to_date(col("l_shipdate")) >= to_date(lit(d))))
     // ONE fact scan for all three families: each lineitem row fans out
     // to its flag_/supp_/part_ series keys via explode, so the staging

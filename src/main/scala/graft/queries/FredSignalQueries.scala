@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions._
-import graft.queries.QueryDef.{dsum, r4, rsnap, oSnap}
+import graft.queries.QueryDef.{dsum, maxDate, maxDateSql, mMax, mMaxSql, nullif, oSnap, r4, rsnap}
 import graft.runtime.Tables
 
 /** The signals-schema named models driven by `stg_fred_series` (SURVEY
@@ -37,8 +37,6 @@ import graft.runtime.Tables
   * (hundreds of rows however big the fact table is).
   */
 object FredSignalQueries {
-
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
 
   /** Canonical synthetic-series index: code -> l_partkey % 97 residue. */
   val Codes: Seq[String] = Seq(
@@ -89,7 +87,7 @@ object FredSignalQueries {
         .when(idxCol.isin(quarterlyIdxs.map(Int.box): _*),
           date_trunc("quarter", d0).cast("date"))
         .otherwise(d0)
-    T(s, dir).lineitem
+    Tables(s, dir).lineitem
       .filter(idxCol.isin(idxs.map(Int.box): _*))
       .groupBy(codeExpr.as("series_code"), (col("l_partkey") % 97).as("sidx"),
         dateExpr.as("date"))
@@ -137,23 +135,6 @@ object FredSignalQueries {
     )"""
   }
 
-  /** Corpus max ship date: the deterministic CURRENT_DATE stand-in. */
-  private def maxDate(s: SparkSession, dir: String): DataFrame =
-    T(s, dir).lineitem.agg(max(to_date(col("l_shipdate"))).as("__maxd"))
-
-  private val maxDateSql = "(SELECT MAX(CAST(l_shipdate AS DATE)) FROM lineitem)"
-
-  /** Monthly MAX(literal) per series (the reference's workhorse CTE). */
-  private def mMax(stg: DataFrame, code: String, alias: String, mcol: String): DataFrame =
-    stg.filter(col("series_code") === code && col("literal").isNotNull)
-      .groupBy(date_trunc("month", col("date")).cast("date").as(mcol))
-      .agg(max(col("literal")).as(alias))
-
-  private def mMaxSql(code: String, alias: String): String =
-    s"""SELECT CAST(DATE_TRUNC('month', date) AS DATE) AS month_date,
-        MAX(literal) AS $alias
-        FROM stg WHERE series_code = '$code' AND literal IS NOT NULL GROUP BY 1"""
-
   /** Monthly AVG(literal) per series — decimal-exact mean. */
   private def mAvg(stg: DataFrame, code: String, alias: String, mcol: String): DataFrame =
     stg.filter(col("series_code") === code && col("literal").isNotNull)
@@ -164,9 +145,6 @@ object FredSignalQueries {
     s"""SELECT CAST(DATE_TRUNC('month', date) AS DATE) AS month_date,
         CAST(SUM(CAST(literal AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS $alias
         FROM stg WHERE series_code = '$code' AND literal IS NOT NULL GROUP BY 1"""
-
-  /** round(ratio-derived, n) with the DECIMAL snap — FredQueries pair. */
-  private def rs(c: Column, n: Int): Column = rsnap(c, n)
 
   // ------------------------------------------------------------------
   // liquidity_signals (ref signals/liquidity_signals.sql, 231 LoC)
@@ -239,19 +217,19 @@ object FredSignalQueries {
       .select(
         col("date"), col("m2_level"), col("m1_level"), col("busloans"),
         col("total_consumer_credit"),
-        rs(grw(col("m2_level"), col("m2_12m_ago"), 100), 2).as("m2_yoy_growth"),
-        rs(grw(col("m2_level"), col("m2_3m_ago"), 400), 2).as("m2_3m_annualized"),
-        rs(grw(col("m1_level"), col("m1_12m_ago"), 100), 2).as("m1_yoy_growth"),
-        rs(grw(col("busloans"), col("busloans_12m_ago"), 100), 2).as("busloans_yoy_growth"),
-        rs(grw(col("total_consumer_credit"), col("credit_12m_ago"), 100), 2)
+        rsnap(grw(col("m2_level"), col("m2_12m_ago"), 100), 2).as("m2_yoy_growth"),
+        rsnap(grw(col("m2_level"), col("m2_3m_ago"), 400), 2).as("m2_3m_annualized"),
+        rsnap(grw(col("m1_level"), col("m1_12m_ago"), 100), 2).as("m1_yoy_growth"),
+        rsnap(grw(col("busloans"), col("busloans_12m_ago"), 100), 2).as("busloans_yoy_growth"),
+        rsnap(grw(col("total_consumer_credit"), col("credit_12m_ago"), 100), 2)
           .as("consumer_credit_yoy_growth"),
         col("money_velocity"),
-        rs(col("velocity_yoy_change"), 2).as("velocity_yoy_change"),
+        rsnap(col("velocity_yoy_change"), 2).as("velocity_yoy_change"),
         col("walcl_avg"),
-        rs(grw(col("walcl_avg"), col("walcl_3m_ago"), 100), 2).as("walcl_3m_pct_change"),
-        rs(grw(col("walcl_avg"), col("walcl_12m_ago"), 100), 2).as("walcl_12m_pct_change"),
+        rsnap(grw(col("walcl_avg"), col("walcl_3m_ago"), 100), 2).as("walcl_3m_pct_change"),
+        rsnap(grw(col("walcl_avg"), col("walcl_12m_ago"), 100), 2).as("walcl_12m_pct_change"),
         col("rrp_avg"),
-        rs(grw(col("rrp_avg"), col("rrp_3m_ago"), 100), 2).as("rrp_3m_pct_change"),
+        rsnap(grw(col("rrp_avg"), col("rrp_3m_ago"), 100), 2).as("rrp_3m_pct_change"),
         statusM2.as("m2_growth_status"),
         when(col("busloans_12m_ago").isNotNull &&
           grw(col("busloans"), col("busloans_12m_ago"), 100) < -2, "high")
@@ -273,8 +251,6 @@ object FredSignalQueries {
             grw(col("walcl_avg"), col("walcl_3m_ago"), 100) < -1, "low")
           .otherwise("normal").as("fed_balance_sheet_status"))
   }
-
-  private def nullif(c: Column): Column = when(c =!= 0, c)
 
   private val liquiditySql: String = {
     def grw(c: String, ago: String, mult: Int) = s"(($c / NULLIF($ago, 0)) - 1) * $mult"
@@ -390,8 +366,8 @@ object FredSignalQueries {
       .withColumn("cpi_12m_ago", lag(col("cpi_level"), 12).over(wc))
       .filter(col("cpi_3m_ago").isNotNull && col("cpi_12m_ago").isNotNull)
       .select(col("c_d"), col("cpi_level"),
-        rs((col("cpi_level") / nullif(col("cpi_3m_ago")) - 1) * 400, 2).as("cpi_3m_annualized"),
-        rs((col("cpi_level") / nullif(col("cpi_12m_ago")) - 1) * 100, 2).as("cpi_12m_yoy"))
+        rsnap((col("cpi_level") / nullif(col("cpi_3m_ago")) - 1) * 400, 2).as("cpi_3m_annualized"),
+        rsnap((col("cpi_level") / nullif(col("cpi_12m_ago")) - 1) * 100, 2).as("cpi_12m_yoy"))
 
     val wp = Window.orderBy(col("p_d"))
     val pce = stg.filter(col("series_code") === "PCEPILFE" && col("literal").isNotNull)
@@ -399,7 +375,7 @@ object FredSignalQueries {
       .withColumn("pce_12m_ago", lag(col("pce_level"), 12).over(wp))
       .filter(col("pce_12m_ago").isNotNull)
       .select(col("p_d"), col("pce_level"),
-        rs((col("pce_level") / nullif(col("pce_12m_ago")) - 1) * 100, 2).as("core_pce_yoy"))
+        rsnap((col("pce_level") / nullif(col("pce_12m_ago")) - 1) * 100, 2).as("core_pce_yoy"))
 
     val b5 = stg.filter(col("series_code") === "T5YIE" && col("literal").isNotNull)
       .select(col("date").as("b5_d"), col("literal").as("be_5y"))
@@ -538,7 +514,7 @@ object FredSignalQueries {
       .select(
         coalesce(col("jo_m"), col("ue_m"), col("ur_m"), col("cm_m")).as("date"),
         col("job_openings"), col("unemployed_count"),
-        rs(col("job_openings") / nullif(col("unemployed_count")), 3).as("jo_unemployed_ratio"),
+        rsnap(col("job_openings") / nullif(col("unemployed_count")), 3).as("jo_unemployed_ratio"),
         col("unrate"), col("avg_monthly_claims"), col("emratio"), col("quits_rate"),
         col("sahm_rule"))
 
@@ -558,7 +534,7 @@ object FredSignalQueries {
         col("jo_unemployed_ratio"), col("unrate"), col("avg_monthly_claims"),
         col("emratio"), col("quits_rate"),
         rsnap(col("jo_unemployed_ratio") - col("jo_ratio_3m_ago"), 3).as("jo_ratio_3m_change"),
-        rs(claimsChg * 100, 2).as("claims_3m_pct_change"),
+        rsnap(claimsChg * 100, 2).as("claims_3m_pct_change"),
         rsnap(col("unrate") - col("unrate_3m_ago"), 2).as("unrate_3m_change"),
         rsnap(col("quits_rate") - col("quits_rate_3m_ago"), 2).as("quits_rate_3m_change"),
         rsnap(col("sahm_rule"), 2).as("sahm_approx"),
@@ -789,7 +765,7 @@ object FredSignalQueries {
       .withColumn("cpi_12m_ago", lag(col("cpi_level"), 12).over(wc))
       .filter(col("cpi_12m_ago").isNotNull)
       .select(col("c_d"),
-        rs((col("cpi_level") / nullif(col("cpi_12m_ago")) - 1) * 100, 2).as("cpi_yoy_pct"))
+        rsnap((col("cpi_level") / nullif(col("cpi_12m_ago")) - 1) * 100, 2).as("cpi_yoy_pct"))
 
     val t10 = daily("T10Y2Y", "t_d", "t_v")
       .select(col("t_d"), rsnap(col("t_v"), 3).as("t10y2y_spread"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions._
-import graft.queries.QueryDef.{dsum, r4, rsnap, oSnap}
+import graft.queries.QueryDef.{dsum, maxDate, maxDateSql, mMax, mMaxSql, nullif, oSnap, r4, rsnap}
 import graft.runtime.Tables
 import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
 
@@ -23,27 +23,6 @@ import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
   * sort instead of a x1800 row-amplifying self-join.
   */
 object FredSignalQueries2 {
-
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
-  private def maxDate(s: SparkSession, dir: String): DataFrame =
-    T(s, dir).lineitem.agg(max(to_date(col("l_shipdate"))).as("__maxd"))
-
-  private val maxDateSql = "(SELECT MAX(CAST(l_shipdate AS DATE)) FROM lineitem)"
-
-  private def nullif(c: Column): Column = when(c =!= 0, c)
-
-  private def mMax(stg: DataFrame, code: String, alias: String, mcol: String): DataFrame =
-    stg.filter(col("series_code") === code && col("literal").isNotNull)
-      .groupBy(date_trunc("month", col("date")).cast("date").as(mcol))
-      .agg(max(col("literal")).as(alias))
-
-  private def mMaxSql(code: String, alias: String): String =
-    s"""SELECT CAST(DATE_TRUNC('month', date) AS DATE) AS month_date,
-        MAX(literal) AS $alias
-        FROM stg WHERE series_code = '$code' AND literal IS NOT NULL GROUP BY 1"""
-
-  private def rs(c: Column, n: Int): Column = rsnap(c, n)
 
   // ------------------------------------------------------------------
   // housing_signals (ref signals/housing_signals.sql, 154 LoC)
@@ -73,7 +52,7 @@ object FredSignalQueries2 {
     val wt = combined
       .withColumn("starts_12m_ago", lag(col("starts"), 12).over(wd))
       .withColumn("starts_3m_ago", lag(col("starts"), 3).over(wd))
-      .withColumn("permits_starts_ratio", rs(col("permits") / nullif(col("starts")), 3))
+      .withColumn("permits_starts_ratio", rsnap(col("permits") / nullif(col("starts")), 3))
       .withColumn("mortgage_3m_ago", lag(col("avg_mortgage_rate"), 3).over(wd))
       .withColumn("mortgage_12m_ago", lag(col("avg_mortgage_rate"), 12).over(wd))
       .withColumn("supply_3m_ago", lag(col("months_of_supply"), 3).over(wd))
@@ -86,8 +65,8 @@ object FredSignalQueries2 {
       .select(
         col("date"), col("starts"), col("permits"), col("avg_mortgage_rate"),
         col("months_of_supply"), col("permits_starts_ratio"),
-        rs(yoyPct, 2).as("starts_yoy_pct"),
-        rs((col("starts") - col("starts_3m_ago")) / nullif(col("starts_3m_ago")) * 100, 2)
+        rsnap(yoyPct, 2).as("starts_yoy_pct"),
+        rsnap((col("starts") - col("starts_3m_ago")) / nullif(col("starts_3m_ago")) * 100, 2)
           .as("starts_3m_pct"),
         rsnap(col("avg_mortgage_rate") - col("mortgage_3m_ago"), 2).as("mortgage_3m_change"),
         rsnap(col("avg_mortgage_rate") - col("mortgage_12m_ago"), 2).as("mortgage_12m_change"),
@@ -338,16 +317,16 @@ object FredSignalQueries2 {
     def yoy(c: Column, ago: Column): Column = lit(100.0) * (c - ago) / nullif(ago)
     def z(c: Column, a: Column, sd: Column): Column = (c - a) / nullif(sd)
     val wy = ws
-      .withColumn("ipman_yoy_pct", rs(yoy(col("ipman"), col("ipman_12m_ago")), 2))
-      .withColumn("new_orders_yoy_pct", rs(yoy(col("new_orders"), col("new_orders_12m_ago")), 2))
-      .withColumn("prices_yoy_pct", rs(yoy(col("prices"), col("prices_12m_ago")), 2))
-      .withColumn("inventories_yoy_pct", rs(yoy(col("inventories"), col("inventories_12m_ago")), 2))
+      .withColumn("ipman_yoy_pct", rsnap(yoy(col("ipman"), col("ipman_12m_ago")), 2))
+      .withColumn("new_orders_yoy_pct", rsnap(yoy(col("new_orders"), col("new_orders_12m_ago")), 2))
+      .withColumn("prices_yoy_pct", rsnap(yoy(col("prices"), col("prices_12m_ago")), 2))
+      .withColumn("inventories_yoy_pct", rsnap(yoy(col("inventories"), col("inventories_12m_ago")), 2))
       .withColumn("umcsent_zscore",
-        rs(z(col("umcsent"), col("umcsent_24m_avg"), col("umcsent_24m_std")), 2))
+        rsnap(z(col("umcsent"), col("umcsent_24m_avg"), col("umcsent_24m_std")), 2))
       .withColumn("confidence_zscore",
-        rs(z(col("confidence"), col("confidence_24m_avg"), col("confidence_24m_std")), 2))
+        rsnap(z(col("confidence"), col("confidence_24m_avg"), col("confidence_24m_std")), 2))
       .withColumn("confidence_sentiment_divergence",
-        rs(z(col("confidence"), col("confidence_24m_avg"), col("confidence_24m_std"))
+        rsnap(z(col("confidence"), col("confidence_24m_avg"), col("confidence_24m_std"))
           - z(col("umcsent"), col("umcsent_24m_avg"), col("umcsent_24m_std")), 2))
 
     wy.crossJoin(broadcast(maxDate(s, dir)))
@@ -359,8 +338,8 @@ object FredSignalQueries2 {
         col("umcsent_zscore"), col("confidence_zscore"), col("confidence_sentiment_divergence"),
         col("ipman_yoy_pct"), col("new_orders_yoy_pct"), col("prices_yoy_pct"),
         col("inventories_yoy_pct"),
-        rs(yoy(col("ipman"), col("ipman_3m_ago")), 2).as("ipman_3m_change_pct"),
-        rs(yoy(col("ipman"), col("ipman_6m_ago")), 2).as("ipman_6m_change_pct"),
+        rsnap(yoy(col("ipman"), col("ipman_3m_ago")), 2).as("ipman_3m_change_pct"),
+        rsnap(yoy(col("ipman"), col("ipman_6m_ago")), 2).as("ipman_6m_change_pct"),
         when(abs(col("confidence_sentiment_divergence")) > 1.5, "high")
           .when(abs(col("confidence_sentiment_divergence")) > 1.0, "medium")
           .otherwise("normal").as("divergence_status"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions._
-import graft.queries.QueryDef.{dsum, oDivRound, r4, rdiv, rsnap, oSnap}
+import graft.queries.QueryDef.{dsum, maxDate, maxDateSql, mMax, mMaxSql, nullif, oDivRound, oSnap, r4, rdiv, rsnap}
 import graft.runtime.Tables
 import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
 
@@ -24,27 +24,6 @@ import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
   * sides here NULLIF the denominator so those rows emit NULL instead.
   */
 object FredSignalQueries3 {
-
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
-  private def maxDate(s: SparkSession, dir: String): DataFrame =
-    T(s, dir).lineitem.agg(max(to_date(col("l_shipdate"))).as("__maxd"))
-
-  private val maxDateSql = "(SELECT MAX(CAST(l_shipdate AS DATE)) FROM lineitem)"
-
-  private def nullif(c: Column): Column = when(c =!= 0, c)
-
-  private def mMax(stg: DataFrame, code: String, alias: String, mcol: String): DataFrame =
-    stg.filter(col("series_code") === code && col("literal").isNotNull)
-      .groupBy(date_trunc("month", col("date")).cast("date").as(mcol))
-      .agg(max(col("literal")).as(alias))
-
-  private def mMaxSql(code: String, alias: String): String =
-    s"""SELECT CAST(DATE_TRUNC('month', date) AS DATE) AS month_date,
-        MAX(literal) AS $alias
-        FROM stg WHERE series_code = '$code' AND literal IS NOT NULL GROUP BY 1"""
-
-  private def rs(c: Column, n: Int): Column = rsnap(c, n)
 
   // ------------------------------------------------------------------
   // financial_conditions_signals (ref, 297 LoC)
@@ -97,7 +76,7 @@ object FredSignalQueries3 {
       .select(
         coalesce(col("ll_m"), col("ls_m")).as("lc_d"),
         col("lending_standards_large"), col("lending_standards_small"),
-        rs((coalesce(col("lending_standards_large"), lit(0)) +
+        rsnap((coalesce(col("lending_standards_large"), lit(0)) +
           coalesce(col("lending_standards_small"), lit(0))) / 2.0, 2)
           .as("lending_standards_avg"),
         lag(col("lending_standards_large"), 1).over(wl).as("lending_large_prev"),
@@ -115,15 +94,15 @@ object FredSignalQueries3 {
         col("nfci_value"), col("nfci_risk"), col("nfci_credit"), col("nfci_leverage"),
         col("nfci_nonfinancial_leverage"), col("anfci_value"), col("stl_fsi_value"),
         col("kc_fsi_value"), col("nfci_4w_ago"), col("nfci_13w_ago"), col("nfci_13w_avg"),
-        rs(col("nfci_value") - col("nfci_4w_ago"), 4).as("nfci_4w_change"),
-        rs(col("nfci_value") - col("nfci_13w_ago"), 4).as("nfci_13w_change"),
+        rsnap(col("nfci_value") - col("nfci_4w_ago"), 4).as("nfci_4w_change"),
+        rsnap(col("nfci_value") - col("nfci_13w_ago"), 4).as("nfci_13w_change"),
         col("lending_standards_large"), col("lending_standards_small"),
         col("lending_standards_avg"), col("cc_delinquency_rate"),
         when(col("lending_large_prev").isNotNull,
-          rs(col("lending_standards_large") - col("lending_large_prev"), 2))
+          rsnap(col("lending_standards_large") - col("lending_large_prev"), 2))
           .as("lending_large_change"),
         when(col("lending_small_prev").isNotNull,
-          rs(col("lending_standards_small") - col("lending_small_prev"), 2))
+          rsnap(col("lending_standards_small") - col("lending_small_prev"), 2))
           .as("lending_small_change"))
 
     def i(c: Column): Column = when(c, 1).otherwise(0)
@@ -307,10 +286,10 @@ object FredSignalQueries3 {
       raw
         .withColumn("__l1", lag(col(vcol), 1).over(w))
         .withColumn("__l2", lag(col(vcol), 2).over(w))
-        .withColumn(s"${pfx}_mom_pct", rs((col(vcol) / nullif(col("__l1")) - 1) * 100, 4))
-        .withColumn(s"${pfx}_mom_pct_prev", rs((col("__l1") / nullif(col("__l2")) - 1) * 100, 4))
+        .withColumn(s"${pfx}_mom_pct", rsnap((col(vcol) / nullif(col("__l1")) - 1) * 100, 4))
+        .withColumn(s"${pfx}_mom_pct_prev", rsnap((col("__l1") / nullif(col("__l2")) - 1) * 100, 4))
         .withColumn(s"${pfx}_acceleration",
-          rs(col(s"${pfx}_mom_pct") -
+          rsnap(col(s"${pfx}_mom_pct") -
             coalesce(col(s"${pfx}_mom_pct_prev"), col(s"${pfx}_mom_pct")), 4))
         .drop("__l1", "__l2")
     }
@@ -333,10 +312,10 @@ object FredSignalQueries3 {
       .select(col("date").as("g_d"), col("value").as("gdp"))
       .withColumn("__l1", lag(col("gdp"), 1).over(wg))
       .withColumn("__l2", lag(col("gdp"), 2).over(wg))
-      .withColumn("gdp_qoq_pct", rs((col("gdp") / nullif(col("__l1")) - 1) * 100, 4))
-      .withColumn("gdp_qoq_pct_prev", rs((col("__l1") / nullif(col("__l2")) - 1) * 100, 4))
+      .withColumn("gdp_qoq_pct", rsnap((col("gdp") / nullif(col("__l1")) - 1) * 100, 4))
+      .withColumn("gdp_qoq_pct_prev", rsnap((col("__l1") / nullif(col("__l2")) - 1) * 100, 4))
       .withColumn("gdp_acceleration",
-        rs(col("gdp_qoq_pct") - coalesce(col("gdp_qoq_pct_prev"), col("gdp_qoq_pct")), 4))
+        rsnap(col("gdp_qoq_pct") - coalesce(col("gdp_qoq_pct_prev"), col("gdp_qoq_pct")), 4))
 
     val combined = payCons
       .join(cpi, col("p_m") === col("c_m"), "left")
@@ -364,16 +343,16 @@ object FredSignalQueries3 {
       .filter(col("date") >= add_months(col("__maxd"), -36))
       .select(
         col("date"), col("payems"),
-        rs(col("payems_mom_pct"), 2).as("payems_mom_pct"),
-        rs(col("payems_acceleration"), 4).as("payems_acceleration"),
+        rsnap(col("payems_mom_pct"), 2).as("payems_mom_pct"),
+        rsnap(col("payems_acceleration"), 4).as("payems_acceleration"),
         col("payems_consecutive_negative"),
-        rs(col("payems_accel_zscore"), 2).as("payems_accel_zscore"),
-        rs(col("cpi_mom_pct"), 2).as("cpi_mom_pct"),
-        rs(col("cpi_acceleration"), 4).as("cpi_acceleration"),
-        rs(col("cpi_accel_zscore"), 2).as("cpi_accel_zscore"),
-        rs(col("gdp_qoq_pct"), 2).as("gdp_qoq_pct"),
-        rs(col("gdp_acceleration"), 4).as("gdp_acceleration"),
-        rs((coalesce(col("payems_accel_zscore"), lit(0)) +
+        rsnap(col("payems_accel_zscore"), 2).as("payems_accel_zscore"),
+        rsnap(col("cpi_mom_pct"), 2).as("cpi_mom_pct"),
+        rsnap(col("cpi_acceleration"), 4).as("cpi_acceleration"),
+        rsnap(col("cpi_accel_zscore"), 2).as("cpi_accel_zscore"),
+        rsnap(col("gdp_qoq_pct"), 2).as("gdp_qoq_pct"),
+        rsnap(col("gdp_acceleration"), 4).as("gdp_acceleration"),
+        rsnap((coalesce(col("payems_accel_zscore"), lit(0)) +
           coalesce(col("cpi_accel_zscore"), lit(0))) / nullif(nz), 2)
           .as("composite_accel_zscore"),
         when(col("payems_consecutive_negative") >= 3, "high")
@@ -522,9 +501,9 @@ object FredSignalQueries3 {
       .join(bbb, col("h_d") === col("b_d"), "left")
       .join(aaa, col("h_d") === col("a_d"), "left")
       .select(col("h_d"), col("hy_oas"), col("bbb_oas"), col("aaa_oas"),
-        rs(col("bbb_oas") - col("aaa_oas"), 4).as("bbb_aaa_spread"),
-        rs(col("hy_oas") - lag(col("hy_oas"), 20).over(wh), 4).as("hy_oas_20d_change"),
-        rs(col("hy_oas") - lag(col("hy_oas"), 60).over(wh), 4).as("hy_oas_60d_change"),
+        rsnap(col("bbb_oas") - col("aaa_oas"), 4).as("bbb_aaa_spread"),
+        rsnap(col("hy_oas") - lag(col("hy_oas"), 20).over(wh), 4).as("hy_oas_20d_change"),
+        rsnap(col("hy_oas") - lag(col("hy_oas"), 60).over(wh), 4).as("hy_oas_60d_change"),
         sum(col("hy_oas").cast(DecimalType(18, 6))).over(f20).as("s20_dec"),
         count(col("hy_oas")).over(f20).as("n20"),
         sum(col("hy_oas").cast(DecimalType(18, 6))).over(f60).as("s60_dec"),
@@ -559,13 +538,13 @@ object FredSignalQueries3 {
     val z = (col("hy_oas_20d_change") - col("chg_1y_avg")) / col("chg_1y_std")
     wp.select(
       col("h_d").as("date"),
-      rs(col("hy_oas"), 4).as("hy_oas"),
-      rs(col("bbb_oas"), 4).as("bbb_oas"),
-      rs(col("aaa_oas"), 4).as("aaa_oas"),
+      rsnap(col("hy_oas"), 4).as("hy_oas"),
+      rsnap(col("bbb_oas"), 4).as("bbb_oas"),
+      rsnap(col("aaa_oas"), 4).as("aaa_oas"),
       col("bbb_aaa_spread"), col("hy_oas_20d_change"), col("hy_oas_60d_change"),
       rdiv(col("s20_dec"), col("n20"), 4).as("hy_oas_20d_avg"),
       rdiv(col("s60_dec"), col("n60"), 4).as("hy_oas_60d_avg"),
-      when(col("chg_1y_std") > 0, rs(z, 4)).as("hy_oas_20d_change_zscore"),
+      when(col("chg_1y_std") > 0, rsnap(z, 4)).as("hy_oas_20d_change_zscore"),
       rdiv(pctCount(60, le = true).cast(DecimalType(18, 0)), pctCount(60, le = false), 4)
         .as("hy_oas_percentile_5y"),
       rdiv(pctCount(120, le = true).cast(DecimalType(18, 0)), pctCount(120, le = false), 4)

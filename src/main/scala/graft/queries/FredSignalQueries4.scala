@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.models.MarketAnalysisReturn
-import graft.queries.QueryDef.{dsum, oDivRound, oSnap, r4, rdiv, rsnap}
+import graft.queries.QueryDef.{dsum, maxDate, maxDateSql, nullif, oDivRound, oSnap, r4, rdiv, rsnap}
 import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
 import graft.runtime.Tables
 
@@ -32,15 +32,6 @@ import graft.runtime.Tables
   *    sides; VRPs are computed from the rounded estimates.
   */
 object FredSignalQueries4 {
-
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
-  private def nullif(c: Column): Column = when(c =!= 0, c)
-
-  private def maxDate(s: SparkSession, dir: String): DataFrame =
-    T(s, dir).lineitem.agg(max(to_date(col("l_shipdate"))).as("__maxd"))
-
-  private val maxDateSql = "(SELECT MAX(CAST(l_shipdate AS DATE)) FROM lineitem)"
 
   // ------------------------------------------------------------------
   // net_liquidity_signals (ref, 124 LoC)
@@ -212,7 +203,7 @@ object FredSignalQueries4 {
         max(when(col("rn_bot") === 1, col("symbol"))).as("bottom_sector"))
 
     // 200-day SMA flags from a dedicated 4-symbol daily price staging
-    val prices = T(s, dir).lineitem
+    val prices = Tables(s, dir).lineitem
       .groupBy(
         TaaSymbols.zipWithIndex.foldLeft(lit(null).cast("string")) {
           case (acc, (sym, i)) => when(col("l_partkey") % 4 === i, lit(sym)).otherwise(acc)
@@ -583,7 +574,7 @@ object FredSignalQueries4 {
     // SPY/QQQ OHLC staging (bars-style; adj_* = the aggregates directly)
     val key = md5(concat_ws("|",
       col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
-    val px = T(s, dir).lineitem
+    val px = Tables(s, dir).lineitem
       .groupBy(
         when(col("l_suppkey") % 2 === 0, "SPY").otherwise("QQQ").as("symbol"),
         to_date(col("l_shipdate")).as("date"))

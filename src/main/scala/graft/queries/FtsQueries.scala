@@ -12,8 +12,6 @@ import graft.runtime.Tables
   */
 object FtsQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   private val queryTerms = Seq("spark", "join", "merge", "hash", "window")
   private val K1         = 1.2
   private val B          = 0.75
@@ -22,7 +20,7 @@ object FtsQueries {
     QueryDef(
       "q_fts_search",
       (s, dir) => {
-        val d        = T(s, dir).documents
+        val d        = Tables(s, dir).documents
         val postings = FtsOps.postingsIndex(d, "doc_id", "text")
         val lengths  = FtsOps.docLengths(d, "doc_id", "text")
         FtsOps.bm25Search(postings, lengths, "doc_id", queryTerms, K1, B)
@@ -79,7 +77,7 @@ object FtsQueries {
     QueryDef(
       "q_fts_posting_stats",
       (s, dir) => {
-        val d = T(s, dir).documents
+        val d = Tables(s, dir).documents
         FtsOps.postingStats(
           FtsOps.postingsIndex(d, "doc_id", "text"), "doc_id", topK = 3, minDf = 2L)
       },

@@ -22,11 +22,9 @@ import graft.runtime.Tables
   */
 object HousingQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** stg_housing_inventory synthesized from orders. */
   private def stgHousing(s: SparkSession, dir: String): DataFrame =
-    T(s, dir).orders.select(
+    Tables(s, dir).orders.select(
       concat(lit("DT"), col("o_custkey") % 5).as("data_type_code"),
       when(col("o_orderkey") % 2 === 0, "yes").otherwise("no").as("seasonally_adj"),
       when(col("o_orderkey") % 7 === 0, "TTLHH")
@@ -209,11 +207,11 @@ object HousingQueries {
     QueryDef(
       "q_housing_mortgage_rates",
       (s, dir) => {
-        val li = T(s, dir).lineitem
+        val li = Tables(s, dir).lineitem
         val rate = li
           .groupBy(trunc(to_date(col("l_shipdate")), "month").as("date"))
           .agg((dsum(col("l_quantity")) / count(lit(1)) / 10.0).as("mortgage_rate"))
-        val price = T(s, dir).orders
+        val price = Tables(s, dir).orders
           .groupBy(trunc(to_date(col("o_orderdate")), "month").as("date"))
           .agg(QueryDef.rdiv(
             sum(col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 6))),

@@ -12,8 +12,6 @@ import graft.queries.QueryDef.r4
   */
 object InfraQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   val defs: Seq[QueryDef] = Seq(
     // Multimodal media table: binary content + typed metadata, frame
     // sampling, batch-shaped stub featurization (decode is a marked
@@ -21,7 +19,7 @@ object InfraQueries {
     QueryDef(
       "q_multimodal_features",
       (s, dir) => {
-        val media  = MultimodalOps.fromText(T(s, dir).documents, "doc_id", "text", "source")
+        val media  = MultimodalOps.fromText(Tables(s, dir).documents, "doc_id", "text", "source")
         val feats  = MultimodalOps.batchedFeaturize(media)
         val frames = MultimodalOps
           .sampleFrames(media, blockSize = 64, stride = 5)
@@ -72,7 +70,7 @@ object InfraQueries {
       "q_metrics_layer",
       (s, dir) =>
         MetricsLayer.query(
-          T(s, dir).lineitem,
+          Tables(s, dir).lineitem,
           Seq("gross_revenue", "net_revenue", "total_quantity", "order_count", "line_count", "avg_discount"),
           Seq(year(col("l_shipdate")).cast("long").as("ship_year"), col("l_returnflag"))
         ),
@@ -93,7 +91,7 @@ object InfraQueries {
     QueryDef(
       "q_sql_guarded_entry",
       (s, dir) => {
-        T(s, dir).orders.createOrReplaceTempView("orders_v")
+        Tables(s, dir).orders.createOrReplaceTempView("orders_v")
         SqlGuard.readOnly(
           s,
           """SELECT o_orderpriority,

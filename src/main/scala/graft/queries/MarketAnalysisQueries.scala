@@ -16,8 +16,6 @@ import graft.runtime.Tables
   */
 object MarketAnalysisQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   private val mdKey =
     "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|' || " +
       "CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
@@ -54,7 +52,7 @@ object MarketAnalysisQueries {
     * and aggregate it N times; single-universe queries use it
     * unpersisted (identical plan to the inlined form). */
   def universeBase(s: SparkSession, dir: String): DataFrame =
-    T(s, dir).lineitem.select(
+    Tables(s, dir).lineitem.select(
       // every column a caller's bucket expression may reference
       // (factor/taa/etf buckets key on l_orderkey/l_suppkey too);
       // unused ones are pruned by Catalyst below each groupBy

@@ -16,12 +16,10 @@ import graft.queries.QueryDef.{dsum, r4}
   */
 object MarketModelQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** Per-bucket daily series (breadth panels). Buckets of suppliers
     * stand in for the reference's per-symbol universe. */
   private def bucketSeries(s: SparkSession, dir: String, buckets: Int): DataFrame =
-    T(s, dir).lineitem
+    Tables(s, dir).lineitem
       .groupBy((col("l_suppkey") % buckets).cast("long").as("asset"), to_date(col("l_shipdate")).as("d"))
       .agg(r4(dsum(col("l_extendedprice"))).as("v"))
 
@@ -260,7 +258,7 @@ object MarketModelQueries {
     QueryDef(
       "q_regime_classification",
       (s, dir) => {
-        val li = T(s, dir).lineitem
+        val li = Tables(s, dir).lineitem
         val monthly = li
           .groupBy(date_trunc("month", col("l_shipdate")).cast("date").as("month"), col("l_returnflag").as("flag"))
           .agg(r4(dsum(col("l_extendedprice"))).as("v"))

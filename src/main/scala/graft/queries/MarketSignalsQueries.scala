@@ -55,8 +55,6 @@ import graft.runtime.Tables
   */
 object MarketSignalsQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   private val mdKeyCols = Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
   private def mdKey     = md5(concat_ws("|", mdKeyCols.map(col): _*))
   private val mdKeySql =
@@ -66,7 +64,7 @@ object MarketSignalsQueries {
   /** adj-close staging for one bucketed universe: (symbol, date,
     * adj_close [, volume]) — adj = raw/2 as in the market models. */
   private def adjStaging(s: SparkSession, dir: String, bucket: Column, withVolume: Boolean): DataFrame = {
-    val base = T(s, dir).lineitem
+    val base = Tables(s, dir).lineitem
       .groupBy(bucket.as("symbol"), to_date(col("l_shipdate")).as("date"))
     val agged =
       if (withVolume)
@@ -690,7 +688,7 @@ object MarketSignalsQueries {
 
   /** named commodity staging: (commodity_name, date, price). */
   private def namedCommodity(s: SparkSession, dir: String, nameCol: Column): DataFrame =
-    T(s, dir).lineitem
+    Tables(s, dir).lineitem
       .groupBy(nameCol.as("commodity_name"), to_date(col("l_shipdate")).as("date"))
       .agg(QueryDef.r4(max_by(col("l_extendedprice"), mdKey)).as("price"))
 

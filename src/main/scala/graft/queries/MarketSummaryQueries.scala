@@ -19,8 +19,6 @@ import graft.runtime.Tables
   */
 object MarketSummaryQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   private val mdKey =
     "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|' || " +
       "CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
@@ -51,7 +49,7 @@ object MarketSummaryQueries {
                assetType: String, exchange: String): DataFrame = {
     val key = md5(concat_ws("|",
       col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
-    T(s, dir).lineitem
+    Tables(s, dir).lineitem
       .groupBy(bucket.as("symbol"), to_date(col("l_shipdate")).as("trade_date"))
       .agg(
         r4(min_by(col("l_extendedprice"), key)).as("open"),

@@ -27,8 +27,6 @@ import graft.runtime.Tables
   */
 object MarketsQueries2 {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   // ------------------------------------------------------------------
   // factor_sector_correlation (ref, 285 LoC)
   // ------------------------------------------------------------------
@@ -342,7 +340,7 @@ object MarketsQueries2 {
     // one OHLCV staging per universe slice; adj_* columns NULL behind a
     // deterministic gate so the COALESCE fallbacks are exercised
     val uni = col("l_suppkey") % 7
-    val base = T(s, dir).lineitem
+    val base = Tables(s, dir).lineitem
       .groupBy(uni.as("u"),
         concat(lit("SYM"), col("l_partkey") % 13).as("symbol"),
         to_date(col("l_shipdate")).as("date"))

@@ -31,8 +31,6 @@ import graft.runtime.Tables
   */
 object MiscModelQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   // ------------------------------------------------------------------
   // factor_tilts (ref, 53 LoC)
   // ------------------------------------------------------------------
@@ -202,7 +200,7 @@ object MiscModelQueries {
   // ------------------------------------------------------------------
 
   def redditPosts(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir).events
+    val e = Tables(s, dir).events
     val sub = when(col("user_id") % 5 === 0, "Stocks")
       .when(col("user_id") % 5 === 1, "investing")
       .when(col("user_id") % 5 === 2, "WallStreetBets")

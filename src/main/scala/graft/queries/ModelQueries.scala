@@ -16,12 +16,10 @@ import graft.queries.QueryDef.{dsum, r4}
   */
 object ModelQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** Deterministic OHLCV synthesis: open/close picked by md5 of the
     * unique line key (engine-portable tie-free selection). */
   def bars(s: SparkSession, dir: String): DataFrame = {
-    val li = T(s, dir).lineitem
+    val li = Tables(s, dir).lineitem
     val key = md5(
       concat_ws("|", col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
     )

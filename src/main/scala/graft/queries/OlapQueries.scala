@@ -17,8 +17,6 @@ import graft.runtime.Tables
   */
 object OlapQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   val defs: Seq[QueryDef] = Seq(
     // Clickstream sessionization via the NATIVE session_window
     // operator (30-minute inactivity gap, per user). Semantics pinned
@@ -33,7 +31,7 @@ object OlapQueries {
     QueryDef(
       "q_sessionize_events",
       (s, dir) => {
-        val e = T(s, dir).events
+        val e = Tables(s, dir).events
           .select(col("user_id"), col("ts"), col("event_type"), col("value"))
         e.groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
           .agg(
@@ -89,7 +87,7 @@ object OlapQueries {
     QueryDef(
       "q_session_overlap_pairs",
       (s, dir) => {
-        val sess = T(s, dir).events
+        val sess = Tables(s, dir).events
           .select(col("user_id"), col("ts"))
           .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
           .agg(min(col("ts")).as("st"), max(col("ts")).as("en"))
@@ -141,7 +139,7 @@ object OlapQueries {
     QueryDef(
       "q_rollup_region_nation",
       (s, dir) => {
-        val t = T(s, dir)
+        val t = Tables(s, dir)
         val joined = t.orders
           .join(t.customer.select(col("c_custkey"), col("c_nationkey")),
             col("o_custkey") === col("c_custkey"))
@@ -178,7 +176,7 @@ object OlapQueries {
     QueryDef(
       "q_cube_flag_status",
       (s, dir) =>
-        T(s, dir).lineitem
+        Tables(s, dir).lineitem
           .cube(col("l_returnflag"), col("l_linestatus"))
           .agg(
             grouping_id().cast("long").as("gid"),
@@ -205,7 +203,7 @@ object OlapQueries {
     QueryDef(
       "q_grouping_sets_mixed",
       (s, dir) => {
-        val t = T(s, dir)
+        val t = Tables(s, dir)
         t.orders
           .join(t.customer.select(col("c_custkey"), col("c_nationkey")),
             col("o_custkey") === col("c_custkey"))
@@ -250,7 +248,7 @@ object OlapQueries {
     QueryDef(
       "q_unpivot_metrics",
       (s, dir) => {
-        val wide = T(s, dir).lineitem
+        val wide = Tables(s, dir).lineitem
           .groupBy(col("l_returnflag"), col("l_linestatus"))
           .agg(
             dsum(col("l_quantity")).as("sum_qty"),
@@ -286,7 +284,7 @@ object OlapQueries {
       "q_zorder_layout_audit",
       (s, dir) => {
         import graft.functions.GraftFunctions.epochDay
-        val base = T(s, dir).orders
+        val base = Tables(s, dir).orders
           .select(col("o_custkey"), epochDay(col("o_orderdate")).as("order_day"))
         graft.operators.LayoutOps.zorderAudit(base, "o_custkey", "order_day", 64)
       },

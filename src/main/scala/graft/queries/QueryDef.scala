@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.runtime.Tables
+
 /** One verifiable engine capability: a Spark query over the testdata
   * tables plus (when SQL-expressible) an equivalent DuckDB oracle.
   *
@@ -76,4 +78,26 @@ object QueryDef {
                 + $outDiv) // (2 * $outDiv) AS DOUBLE)
         / $tenN.0 + 0.0)"""
   }
+
+  /** SQL `NULLIF(c, 0)`: NULL where `c` is zero. */
+  def nullif(c: Column): Column = when(c =!= 0, c)
+
+  /** Corpus max ship date: the deterministic CURRENT_DATE stand-in. */
+  def maxDate(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir).lineitem.agg(max(to_date(col("l_shipdate"))).as("__maxd"))
+
+  /** Oracle-side mirror of [[maxDate]]. */
+  val maxDateSql = "(SELECT MAX(CAST(l_shipdate AS DATE)) FROM lineitem)"
+
+  /** Monthly MAX(literal) per series (the reference's workhorse CTE). */
+  def mMax(stg: DataFrame, code: String, alias: String, mcol: String): DataFrame =
+    stg.filter(col("series_code") === code && col("literal").isNotNull)
+      .groupBy(date_trunc("month", col("date")).cast("date").as(mcol))
+      .agg(max(col("literal")).as(alias))
+
+  /** Oracle-side mirror of [[mMax]] (month column `month_date`). */
+  def mMaxSql(code: String, alias: String): String =
+    s"""SELECT CAST(DATE_TRUNC('month', date) AS DATE) AS month_date,
+        MAX(literal) AS $alias
+        FROM stg WHERE series_code = '$code' AND literal IS NOT NULL GROUP BY 1"""
 }

@@ -26,12 +26,10 @@ import graft.runtime.Tables
   */
 object RedditQueries2 {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** stg_reddit_sentiment synthesized from events: compound scores are
     * exact 2-decimal values in [-1, 1]. */
   private def stgSentiment(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir).events
+    val e = Tables(s, dir).events
     val compound = ((col("event_id") % 201) - 100).cast("double") / 100.0
     val sub = when(col("user_id") % 5 === 0, "stocks")
       .when(col("user_id") % 5 === 1, "investing")

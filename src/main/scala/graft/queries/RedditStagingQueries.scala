@@ -21,8 +21,6 @@ import graft.runtime.Tables
   */
 object RedditStagingQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** ref social_tickers.py:18-59 — the curated false-positive list. */
   val TickerBlocklist: Seq[String] = Seq(
     "USD", "USA", "GDP", "CPI", "PPI", "PCE", "FED", "SEC", "FBI", "CIA",
@@ -78,7 +76,7 @@ object RedditStagingQueries {
           when(col("doc_id") % 4 === 0, lit(" $GDP")).otherwise(lit("")),
           when(col("doc_id") % 5 === 0, lit(" $YOLO")).otherwise(lit("")),
           lit(" $abc"))
-        T(s, dir).documents
+        Tables(s, dir).documents
           .select(col("doc_id"), explode(extractTickers(noisy)).as("ticker"))
       },
       Some(s"""
@@ -104,7 +102,7 @@ object RedditStagingQueries {
     QueryDef(
       "q_stg_reddit_comments",
       (s, dir) => {
-        val e = T(s, dir).events
+        val e = Tables(s, dir).events
         val raw = e.select(
           col("event_id").as("comment_id"),
           (col("event_id") % 2000).as("post_id"),
@@ -184,7 +182,7 @@ object RedditStagingQueries {
     QueryDef(
       "q_stg_reddit_post_content",
       (s, dir) => {
-        val e = T(s, dir).events
+        val e = Tables(s, dir).events
         val raw = e.select(
           col("event_id").as("post_id"),
           col("props").as("title"),
@@ -268,7 +266,7 @@ object RedditStagingQueries {
     QueryDef(
       "q_stg_reddit_ticker_mentions",
       (s, dir) => {
-        val e = T(s, dir).events
+        val e = Tables(s, dir).events
         val mentions = e.select(
           when(col("user_id") % 53 === 0, lit(null).cast("string"))
             .otherwise(concat(lit("T"), col("user_id") % 40)).as("ticker"),
@@ -279,7 +277,7 @@ object RedditStagingQueries {
           to_date(col("ts")).as("partition_date"),
           col("props").as("context_text"),
           lit("2026-01-01T00:00:00").as("extracted_at"))
-        val sp500 = T(s, dir).part
+        val sp500 = Tables(s, dir).part
           .select((col("p_partkey") % 40).as("n")).distinct()
           .filter(col("n") % 3 =!= 0)
           .select(
@@ -333,7 +331,7 @@ object RedditStagingQueries {
     QueryDef(
       "q_stg_reddit_sentiment",
       (s, dir) => {
-        val e = T(s, dir).events
+        val e = Tables(s, dir).events
         val compound = ((col("event_id") % 201) - 100).cast("double") / 100.0
         e.select(
             when(col("event_id") % 59 === 0, lit(null).cast("long"))

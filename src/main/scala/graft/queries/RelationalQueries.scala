@@ -12,8 +12,6 @@ import graft.queries.QueryDef.{davg, dsum, r4}
   */
 object RelationalQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   val defs: Seq[QueryDef] = Seq(
     // ------------------------------------------------------------------
     // §2.D group-by stats over the fact table (reference market summary
@@ -21,7 +19,7 @@ object RelationalQueries {
     QueryDef(
       "q_agg_pricing_summary",
       (s, dir) => {
-        val li = T(s, dir).lineitem
+        val li = Tables(s, dir).lineitem
         li.filter(col("l_shipdate") <= to_date(lit("2001-09-01")))
           .groupBy(col("l_returnflag"), col("l_linestatus"))
           .agg(
@@ -52,7 +50,7 @@ object RelationalQueries {
     QueryDef(
       "q_filter_project_revenue",
       (s, dir) => {
-        val li = T(s, dir).lineitem
+        val li = Tables(s, dir).lineitem
         li.filter(
           col("l_shipdate") >= to_date(lit("1996-01-01")) &&
             col("l_shipdate") < to_date(lit("1997-01-01")) &&
@@ -76,7 +74,7 @@ object RelationalQueries {
     QueryDef(
       "q_join_star_region_revenue",
       (s, dir) => {
-        val t = T(s, dir)
+        val t = Tables(s, dir)
         t.lineitem
           .join(t.supplier, col("l_suppkey") === col("s_suppkey"))
           .join(broadcast(t.nation), col("s_nationkey") === col("n_nationkey"))
@@ -102,7 +100,7 @@ object RelationalQueries {
     QueryDef(
       "q_join_segment_orders",
       (s, dir) => {
-        val t = T(s, dir)
+        val t = Tables(s, dir)
         t.orders
           .join(t.customer, col("o_custkey") === col("c_custkey"))
           .groupBy(col("c_mktsegment"))
@@ -127,7 +125,7 @@ object RelationalQueries {
     QueryDef(
       "q_anti_join_idle_customers",
       (s, dir) => {
-        val t = T(s, dir)
+        val t = Tables(s, dir)
         t.customer
           .join(
             t.orders.filter(col("o_orderdate") >= to_date(lit("2001-01-01"))),
@@ -153,7 +151,7 @@ object RelationalQueries {
     QueryDef(
       "q_semi_join_urgent_customers",
       (s, dir) => {
-        val t = T(s, dir)
+        val t = Tables(s, dir)
         t.customer
           .join(
             t.orders.filter(col("o_orderpriority") === "1-URGENT"),
@@ -175,7 +173,7 @@ object RelationalQueries {
     QueryDef(
       "q_conditional_pivot_status",
       (s, dir) => {
-        val o = T(s, dir).orders
+        val o = Tables(s, dir).orders
         o.groupBy(year(col("o_orderdate")).cast("long").as("order_year"))
           .agg(
             sum(when(col("o_orderstatus") === "F", 1).otherwise(0)).as("n_f"),
@@ -201,7 +199,7 @@ object RelationalQueries {
     QueryDef(
       "q_count_distinct_having",
       (s, dir) => {
-        val li = T(s, dir).lineitem
+        val li = Tables(s, dir).lineitem
         li.groupBy(col("l_partkey"))
           .agg(
             countDistinct(col("l_suppkey")).as("n_suppliers"),
@@ -226,7 +224,7 @@ object RelationalQueries {
     QueryDef(
       "q_latest_order_per_customer",
       (s, dir) => {
-        val o = T(s, dir).orders
+        val o = Tables(s, dir).orders
         o.groupBy(col("o_custkey"))
           .agg(
             max_by(col("o_totalprice"), col("o_orderkey")).as("latest_price"),
@@ -250,7 +248,7 @@ object RelationalQueries {
     QueryDef(
       "q_percentile_priority",
       (s, dir) => {
-        val o = T(s, dir).orders
+        val o = Tables(s, dir).orders
         o.groupBy(col("o_orderpriority"))
           .agg(
             r4(expr("percentile(o_totalprice, 0.5)")).as("median_price"),
@@ -273,7 +271,7 @@ object RelationalQueries {
     QueryDef(
       "q_corr_stats_by_flag",
       (s, dir) => {
-        val li = T(s, dir).lineitem
+        val li = Tables(s, dir).lineitem
         li.groupBy(col("l_returnflag"))
           .agg(
             r4(corr(col("l_quantity"), col("l_extendedprice"))).as("corr_qty_price"),
@@ -296,7 +294,7 @@ object RelationalQueries {
     QueryDef(
       "q_string_agg_nations",
       (s, dir) => {
-        val t = T(s, dir)
+        val t = Tables(s, dir)
         t.nation
           .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
           .groupBy(col("r_name"))
@@ -318,7 +316,7 @@ object RelationalQueries {
     QueryDef(
       "q_union_padded_activity",
       (s, dir) => {
-        val t = T(s, dir)
+        val t = Tables(s, dir)
         val ordersSide = t.orders.select(
           lit("order").as("activity_type"),
           to_date(col("o_orderdate")).as("activity_date"),
@@ -363,7 +361,7 @@ object RelationalQueries {
     QueryDef(
       "q_scalar_function_suite",
       (s, dir) => {
-        val o = T(s, dir).orders
+        val o = Tables(s, dir).orders
         val p    = col("o_totalprice")
         val rate = lit(3.0) + (col("o_orderkey") % 5).cast("double")
         val m    = rate / 12.0 / 100.0
@@ -414,7 +412,7 @@ object RelationalQueries {
     QueryDef(
       "q_period_bucket_summary",
       (s, dir) => {
-        val li = T(s, dir).lineitem
+        val li = Tables(s, dir).lineitem
         import s.implicits._
         val periods = Seq(("1m", 30), ("3m", 90), ("1y", 365)).toDF("period", "days")
         val anchor  = li.agg(max(to_date(col("l_shipdate"))).as("anchor"))

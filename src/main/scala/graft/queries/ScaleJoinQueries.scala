@@ -17,8 +17,6 @@ import graft.runtime.Tables
   */
 object ScaleJoinQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** ±2 h attribution tolerance, in microseconds. */
   private val TolUs = 2L * 3600 * 1000000
 
@@ -33,7 +31,7 @@ object ScaleJoinQueries {
     QueryDef(
       "q_asof_purchase_attribution",
       (s, dir) => {
-        val ev = T(s, dir).events
+        val ev = Tables(s, dir).events
         val purchases = ev.filter(col("event_type") === "purchase")
           .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
         val views = ev.filter(col("event_type") === "view")
@@ -95,7 +93,7 @@ object ScaleJoinQueries {
     QueryDef(
       "q_bloom_pruned_join",
       (s, dir) => {
-        val t   = T(s, dir)
+        val t   = Tables(s, dir)
         val dim = t.customer
           .filter(col("c_mktsegment") === "BUILDING")
           .select(col("c_custkey"))
@@ -135,7 +133,7 @@ object ScaleJoinQueries {
     QueryDef(
       "q_hll_distinct_rollup",
       (s, dir) => {
-        val orders = T(s, dir).orders
+        val orders = Tables(s, dir).orders
         val monthly = orders
           .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("m"))
           .agg(hll_sketch_agg(col("o_custkey"), 12).as("sk"))
@@ -173,7 +171,7 @@ object ScaleJoinQueries {
     QueryDef(
       "q_topk_aggregator",
       (s, dir) => {
-        val li = T(s, dir).lineitem.select(
+        val li = Tables(s, dir).lineitem.select(
           col("l_returnflag").as("grp"),
           (col("l_extendedprice").cast(org.apache.spark.sql.types.DecimalType(18, 6)) * 1000000)
             .cast("long").as("score"),

@@ -28,8 +28,6 @@ import graft.runtime.Tables
   */
 object SemanticLayerQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   // ---- the four analysis_return branches the layer consumes --------
 
   private def arOracle(bucketSql: String, ex: String): String =
@@ -269,7 +267,7 @@ object SemanticLayerQueries {
     // into the synthetic range; end = latest order date + 30).
     QueryDef(
       "q_time_spine_daily",
-      (s, dir) => T(s, dir).orders
+      (s, dir) => Tables(s, dir).orders
         .agg(max(to_date(col("o_orderdate"))).as("maxd"))
         .select(explode(sequence(
           to_date(lit("1992-01-01")),
@@ -292,7 +290,7 @@ object SemanticLayerQueries {
         val tags = array(CoverageSources.map { case (src, _, _, _, _, _, ent, _) =>
           struct(lit(src).as("source_name"), ent(s).cast("string").as("entity_id"))
         }: _*)
-        val obs = T(s, dir).lineitem
+        val obs = Tables(s, dir).lineitem
           .select(to_date(col("l_shipdate")).as("observation_date"), explode(tags).as("t"))
           .select(col("t.source_name"), col("t.entity_id"), col("observation_date"))
           .distinct()

@@ -15,8 +15,6 @@ import graft.runtime.Tables
   */
 object SentimentQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** Word → valence ×10 (VADER scale is [-4, 4]; these are [-2.7, 2.7]). */
   private val vaderLexicon10: Seq[(String, Int)] = Seq(
     "spark"  -> 27,
@@ -71,7 +69,7 @@ object SentimentQueries {
     "q_vader_full_heuristics",
     (s, dir) => {
       import org.apache.spark.sql.types.DecimalType
-      val d = T(s, dir).documents
+      val d = Tables(s, dir).documents
         .withColumn("txt", concat(col("text"),
           repeat(lit("!"), (col("doc_id") % 6).cast("int")),
           repeat(lit("?"), (col("doc_id") % 5).cast("int"))))
@@ -171,7 +169,7 @@ object SentimentQueries {
     QueryDef(
       "q_sentiment_scores",
       (s, dir) => {
-        val d = T(s, dir).documents
+        val d = Tables(s, dir).documents
         d.withColumn("sent", TextOps.vaderSentiment(col("text"), vaderLexicon10))
           .select(col("doc_id"), col("lang"), col("sent.compound"),
             col("sent.positive"), col("sent.negative"), col("sent.neutral"),
@@ -229,7 +227,7 @@ object SentimentQueries {
     QueryDef(
       "q_policy_sentiment",
       (s, dir) => {
-        val d = T(s, dir).documents
+        val d = Tables(s, dir).documents
         d.withColumn("pol", TextOps.policySentiment(col("text"), hawkish10, dovish10))
           .select(col("doc_id"), col("pol.hawkish_score"), col("pol.dovish_score"),
             col("pol.net_sentiment_score"),

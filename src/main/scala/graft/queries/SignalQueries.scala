@@ -25,8 +25,6 @@ import graft.queries.QueryDef.{dsum, oSnap, r4, rsnap}
   */
 object SignalQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** Rolling normalized order-3 permutation entropy as pure window
     * expressions over a (flag, d, ret) frame (ref
     * entropy_complexity.py:31-58). The ordinal pattern of
@@ -74,7 +72,7 @@ object SignalQueries {
     * construction), inner-aligned (rows with any missing asset drop —
     * reference FCI merge semantics). */
   private def panel(s: SparkSession, dir: String, buckets: Int): DataFrame = {
-    val li = T(s, dir).lineitem
+    val li = Tables(s, dir).lineitem
     val base = li
       .groupBy(to_date(col("l_shipdate")).as("d"), (col("l_suppkey") % buckets).as("asset"))
       .agg(r4(dsum(col("l_extendedprice"))).as("v"))
@@ -167,7 +165,7 @@ object SignalQueries {
     QueryDef(
       "q_permutation_entropy",
       (s, dir) => {
-        val li = T(s, dir).lineitem
+        val li = Tables(s, dir).lineitem
         val series = li
           .groupBy(col("l_returnflag").as("flag"), to_date(col("l_shipdate")).as("d"))
           .agg(r4(dsum(col("l_extendedprice"))).as("v"))
@@ -280,7 +278,7 @@ object SignalQueries {
     QueryDef(
       "q_fear_greed_composite",
       (s, dir) => {
-        val li = T(s, dir).lineitem
+        val li = Tables(s, dir).lineitem
         val series = li
           .filter(col("l_returnflag") === "A")
           .groupBy(to_date(col("l_shipdate")).as("d"))
@@ -366,7 +364,7 @@ object SignalQueries {
     QueryDef(
       "q_fci_weighted_window",
       (s, dir) => {
-        val li = T(s, dir).lineitem
+        val li = Tables(s, dir).lineitem
         val series = li
           .filter(col("l_returnflag") === "N")
           .groupBy(to_date(col("l_shipdate")).as("d"))

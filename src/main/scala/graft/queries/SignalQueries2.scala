@@ -17,10 +17,8 @@ import graft.queries.QueryDef.{dsum, r4}
   */
 object SignalQueries2 {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   private def series(s: SparkSession, dir: String): DataFrame =
-    T(s, dir).lineitem
+    Tables(s, dir).lineitem
       .groupBy(col("l_returnflag").as("flag"), to_date(col("l_shipdate")).as("d"))
       .agg(r4(dsum(col("l_extendedprice"))).as("v"))
 
@@ -152,7 +150,7 @@ object SignalQueries2 {
     QueryDef(
       "q_annualized_roc",
       (s, dir) => {
-        val monthly = T(s, dir).lineitem
+        val monthly = Tables(s, dir).lineitem
           .filter(col("l_returnflag") === "A")
           .groupBy(date_trunc("month", col("l_shipdate")).cast("date").as("month"))
           .agg(r4(dsum(col("l_extendedprice"))).as("v"))

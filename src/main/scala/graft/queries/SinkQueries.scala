@@ -14,8 +14,6 @@ import graft.runtime.Tables
   */
 object SinkQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   val defs: Seq[QueryDef] = Seq(
     // MERGE semantics (ref bigquery_warehouse.py:124-179): source rows
     // (one per key after precedence dedup) replace matched target rows;
@@ -26,11 +24,11 @@ object SinkQueries {
     QueryDef(
       "q_merge_upsert",
       (s, dir) => {
-        val target = T(s, dir).orders
+        val target = Tables(s, dir).orders
           .filter(col("o_orderkey") % 2 === 1)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("status"),
             col("o_totalprice").as("amount"))
-        val source = T(s, dir).lineitem
+        val source = Tables(s, dir).lineitem
           .select(col("l_orderkey").as("k"), lit("U").as("status"),
             col("l_extendedprice").as("amount"))
         SinkOps.mergeUpsert(target, source, Seq("k"), Seq(col("amount").desc))
@@ -62,7 +60,7 @@ object SinkQueries {
     QueryDef(
       "q_scd2_apply",
       (s, dir) => {
-        val c = T(s, dir).customer
+        val c = Tables(s, dir).customer
         val current = c
           .filter(col("c_custkey") % 13 =!= 0)
           .select(
@@ -132,7 +130,7 @@ object SinkQueries {
     QueryDef(
       "q_cdc_apply",
       (s, dir) => {
-        val ev = T(s, dir).events
+        val ev = Tables(s, dir).events
         val redelivered = ev.unionByName(ev.filter(col("event_id") % 97 === 0))
         val log = redelivered
           .dropDuplicates("event_id")

@@ -18,8 +18,6 @@ import graft.runtime.Tables
   */
 object SketchQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** DuckDB mirror of [[SketchOps.hash32]]: positional fold of 8 hex
     * digits of md5 (starting at `off`, 0-based) via ascii
     * arithmetic. Offset 8 is the second independent 32-bit value the
@@ -45,7 +43,7 @@ object SketchQueries {
     QueryDef(
       "q_kmv_distinct_rollup",
       (s, dir) => {
-        val orders = T(s, dir).orders
+        val orders = Tables(s, dir).orders
         val monthly = SketchOps.kmvSketch(
           orders.select(
             date_trunc("month", col("o_orderdate")).cast("date").as("month_start"),
@@ -119,7 +117,7 @@ object SketchQueries {
     QueryDef(
       "q_priority_sample_tokens",
       (s, dir) => {
-        val docs = T(s, dir).documents
+        val docs = Tables(s, dir).documents
           .select(col("source"), col("doc_id"),
             TextOps.tokenCount(col("text")).as("n_tokens"))
         val sampled = SketchOps.prioritySample(docs, "source", "doc_id", "n_tokens", k = 16)
@@ -201,7 +199,7 @@ object SketchQueries {
     QueryDef(
       "q_kmv_source_overlap",
       (s, dir) => {
-        val docs = T(s, dir).documents
+        val docs = Tables(s, dir).documents
         val fp = TextOps.normalizedFingerprint(col("text"))
         val sk = SketchOps.kmvSketch(
           docs.select(col("source"), fp.as("fp")), "source", "fp", K)
@@ -309,7 +307,7 @@ object SketchQueries {
       (s, dir) => {
         val ps  = Seq(0.25, 0.5, 0.75, 0.9)
         val acc = 1000
-        val li = T(s, dir).lineitem
+        val li = Tables(s, dir).lineitem
           .select(col("l_returnflag").as("grp"), col("l_extendedprice").as("v"))
         val pArr = array(ps.map(lit): _*)
         val approx = li.groupBy(col("grp"))
@@ -372,7 +370,7 @@ object SketchQueries {
       (s, dir) => {
         val d = 4
         val w = 1024
-        val li = T(s, dir).lineitem
+        val li = Tables(s, dir).lineitem
           .select(col("l_partkey"), to_date(col("l_shipdate")).as("sd"))
         val mid = lit("1995-07-01")
         val sk = SketchOps.cmsMerge(

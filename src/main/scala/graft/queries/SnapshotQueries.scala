@@ -53,8 +53,6 @@ import graft.runtime.Tables
   */
 object SnapshotQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   private val mdKey =
     "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|' || " +
       "CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
@@ -246,7 +244,7 @@ object SnapshotQueries {
   private def commodityStaging(s: SparkSession, dir: String, bucket: Column, unit: String): DataFrame = {
     val key = md5(concat_ws("|",
       col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
-    T(s, dir).lineitem
+    Tables(s, dir).lineitem
       .groupBy(bucket.as("commodity_name"), to_date(col("l_shipdate")).as("trade_date"))
       .agg(r4(max_by(col("l_extendedprice"), key)).as("price"))
       .withColumn("commodity_unit", lit(unit))
@@ -263,7 +261,7 @@ object SnapshotQueries {
     val fams = array(CommodityUniverses.map { case (_, bucket, _, unit, _) =>
       struct(bucket(s).as("commodity_name"), lit(unit).as("commodity_unit"))
     }: _*)
-    T(s, dir).lineitem
+    Tables(s, dir).lineitem
       .select(col("l_extendedprice"), to_date(col("l_shipdate")).as("trade_date"),
         key.as("__k"), explode(fams).as("fam"))
       .groupBy(col("fam.commodity_name").as("commodity_name"), col("trade_date"),

@@ -26,8 +26,6 @@ import graft.runtime.Tables
   */
 object StagingMarketQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   private val mdKeySql =
     "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|' || " +
       "CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
@@ -63,7 +61,7 @@ object StagingMarketQueries {
       col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
     val hx = md5(concat_ws("|", col("symbol"), col("date").cast("string")))
     val dx = md5(concat_ws("|", lit("div"), col("symbol"), col("date").cast("string")))
-    T(s, dir).lineitem
+    Tables(s, dir).lineitem
       .groupBy(bucket.as("symbol"), to_date(col("l_shipdate")).as("date"))
       .agg(
         QueryDef.r4(min_by(col("l_extendedprice"), key)).as("open"),
@@ -127,7 +125,7 @@ object StagingMarketQueries {
   /** realtor_*_raw: per (geo, month) listing stats from orders. */
   private def realtorStaging(s: SparkSession, dir: String, geo: Seq[Column]): DataFrame = {
     val month = trunc(to_date(col("o_orderdate")), "month")
-    T(s, dir).orders
+    Tables(s, dir).orders
       .groupBy((geo :+ date_format(month, "yyyyMM").cast("int").as("month_date_yyyymm")): _*)
       .agg(
         // int-ratio quotient → exact-decimal division (rdiv pattern)
@@ -212,7 +210,7 @@ object StagingMarketQueries {
       // the reddit ticker-mention validation dimension)
       QueryDef(
         "q_stg_sp500_companies_active",
-        (s, dir) => T(s, dir).part
+        (s, dir) => Tables(s, dir).part
           .select((col("p_partkey") % 40).as("n")).distinct()
           .filter(col("n") % 3 =!= 0)
           .select(
@@ -241,7 +239,7 @@ object StagingMarketQueries {
       // time_slot_id / us columns of the raw source)
       QueryDef(
         "q_stg_housing_inventory",
-        (s, dir) => T(s, dir).orders.select(
+        (s, dir) => Tables(s, dir).orders.select(
           concat(lit("DT"), col("o_custkey") % 5).as("data_type_code"),
           (col("o_orderkey") % 40).cast("long").as("time_slot_id"),
           when(col("o_orderkey") % 2 === 0, "yes").otherwise("no").as("seasonally_adj"),
@@ -286,7 +284,7 @@ object StagingMarketQueries {
       // stg_housing_pulse.sql: SELECT * of the pulse survey source
       QueryDef(
         "q_stg_housing_pulse",
-        (s, dir) => T(s, dir).orders
+        (s, dir) => Tables(s, dir).orders
           .filter(col("o_orderkey") % 7 === 0)
           .select(
             year(col("o_orderdate")).cast("long").as("survey_year"),

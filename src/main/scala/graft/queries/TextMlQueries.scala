@@ -17,8 +17,6 @@ import graft.queries.QueryDef.{oSnap, r4, rsnap}
   */
 object TextMlQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** DuckDB replay of the TF-IDF pipeline. The stopword list is
     * inlined from Spark ML's own english resource (tokens are >= 3
     * chars, so shorter stopwords can't match and are elided). */
@@ -60,7 +58,7 @@ object TextMlQueries {
     QueryDef(
       "q_document_chunks",
       (s, dir) =>
-        TextML.chunkDocumentsFlat(T(s, dir).documents, "doc_id", "text", chunkSize = 200, overlap = 50),
+        TextML.chunkDocumentsFlat(Tables(s, dir).documents, "doc_id", "text", chunkSize = 200, overlap = 50),
       Some("""
         WITH n AS (
           SELECT doc_id, text,
@@ -87,7 +85,7 @@ object TextMlQueries {
     QueryDef(
       "q_tfidf_top_terms",
       (s, dir) => {
-        val (withTfidf, vocab) = TextML.tfidf(T(s, dir).documents, "text", vocabSize = 1000)
+        val (withTfidf, vocab) = TextML.tfidf(Tables(s, dir).documents, "text", vocabSize = 1000)
         TextML
           .topTerms(withTfidf, "doc_id", vocab, k = 5)
           .select(col("doc_id"), col("term"), rsnap(col("score"), 4).as("score"))
@@ -106,7 +104,7 @@ object TextMlQueries {
     QueryDef(
       "q_doc_clusters",
       (s, dir) => {
-        val (withTfidf, _) = TextML.tfidf(T(s, dir).documents, "text", vocabSize = 1000)
+        val (withTfidf, _) = TextML.tfidf(Tables(s, dir).documents, "text", vocabSize = 1000)
         val byCluster = TextML
           .cluster(withTfidf, k = 8)
           .groupBy(col("cluster_id"))
@@ -128,7 +126,7 @@ object TextMlQueries {
     QueryDef(
       "q_doc_topics",
       (s, dir) => {
-        val (withTfidf, vocab) = TextML.tfidf(T(s, dir).documents, "text", vocabSize = 1000)
+        val (withTfidf, vocab) = TextML.tfidf(Tables(s, dir).documents, "text", vocabSize = 1000)
         TextML.nmfTopics(withTfidf, "doc_id", vocab, k = 8)
       },
       TextMlGolden.docTopics
@@ -138,8 +136,8 @@ object TextMlQueries {
     QueryDef(
       "q_hybrid_search",
       (s, dir) => {
-        val d = T(s, dir).documents
-        val e = T(s, dir).embeddings
+        val d = Tables(s, dir).documents
+        val e = Tables(s, dir).embeddings
         val queryTerms = Seq("spark", "join", "merge", "hash", "window")
         val toks       = split(lower(col("text")), "\\s+")
         val kwScore = queryTerms

@@ -21,8 +21,6 @@ import graft.queries.QueryDef.r4
   */
 object TextQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   private val tokSql =
     """toks AS (
       SELECT doc_id, lang, source,
@@ -111,7 +109,7 @@ object TextQueries {
           .when(awl < 3.0 || awl > 10.0, "word_length_out_of_band")
           .when(pr > 0.2, "symbol_ratio")
           .when(dr < 0.3, "repetitive")
-        T(s, dir).documents.select(
+        Tables(s, dir).documents.select(
           col("doc_id"),
           n.as("n_tokens"),
           QueryDef.r4(awl).as("avg_token_len"),
@@ -156,7 +154,7 @@ object TextQueries {
     QueryDef(
       "q_dedup_exact_hash",
       (s, dir) =>
-        DedupOps.exactDupGroups(T(s, dir).documents, "doc_id", "text"),
+        DedupOps.exactDupGroups(Tables(s, dir).documents, "doc_id", "text"),
       Some("""
         SELECT md5(text) AS content_hash, MIN(doc_id) AS keeper_id, COUNT(*) AS n_docs
         FROM documents GROUP BY 1
@@ -167,7 +165,7 @@ object TextQueries {
     QueryDef(
       "q_fingerprint_dedup_groups",
       (s, dir) => {
-        val d = T(s, dir).documents
+        val d = Tables(s, dir).documents
         d.groupBy(TextOps.normalizedFingerprint(col("text")).as("fingerprint"))
           .agg(
             min(col("doc_id")).as("keeper_id"),
@@ -193,7 +191,7 @@ object TextQueries {
     QueryDef(
       "q_substring_span_dedup",
       (s, dir) =>
-        DedupOps.exactSubstringSpans(T(s, dir).documents, "doc_id", "text", k = 8),
+        DedupOps.exactSubstringSpans(Tables(s, dir).documents, "doc_id", "text", k = 8),
       Some(s"""
         WITH $tokSql,
         w AS (
@@ -239,7 +237,7 @@ object TextQueries {
     QueryDef(
       "q_text_quality_stats",
       (s, dir) => {
-        val d = T(s, dir).documents
+        val d = Tables(s, dir).documents
         d.select(
           col("doc_id"),
           TextOps.tokenCount(col("text")).as("n_tokens"),
@@ -266,7 +264,7 @@ object TextQueries {
     QueryDef(
       "q_lang_id_heuristic",
       (s, dir) => {
-        val d = T(s, dir).documents
+        val d = Tables(s, dir).documents
         d.select(
           col("doc_id"),
           col("lang"),
@@ -301,7 +299,7 @@ object TextQueries {
     QueryDef(
       "q_token_stats_by_lang",
       (s, dir) => {
-        val d = T(s, dir).documents
+        val d = Tables(s, dir).documents
         d.select(
           col("lang"), col("source"),
           TextOps.tokenCount(col("text")).as("n_tokens"),
@@ -331,7 +329,7 @@ object TextQueries {
       "q_minhash_neardup_pairs",
       (s, dir) =>
         DedupOps
-          .nearDupPairs(T(s, dir).documents, "doc_id", "text",
+          .nearDupPairs(Tables(s, dir).documents, "doc_id", "text",
             shingleN = 3, numSigs = 4, rowsPerBand = 4, minJaccard = 0.2)
           .select(col("id_a"), col("id_b"), r4(col("jaccard")).as("jaccard")),
       Some(s"""
@@ -372,7 +370,7 @@ object TextQueries {
       "q_incremental_neardups",
       (s, dir) =>
         DedupOps
-          .incrementalNearDupPairs(T(s, dir).documents, "doc_id", "text",
+          .incrementalNearDupPairs(Tables(s, dir).documents, "doc_id", "text",
             isNew = col("source") === "src1",
             shingleN = 3, numSigs = 4, rowsPerBand = 4, minJaccard = 0.2)
           .select(col("new_id"), col("match_id"), col("match_is_new"),
@@ -415,7 +413,7 @@ object TextQueries {
       "q_ngram_jaccard_pairs",
       (s, dir) =>
         DedupOps
-          .ngramJaccardPairs(T(s, dir).documents, "doc_id", "text",
+          .ngramJaccardPairs(Tables(s, dir).documents, "doc_id", "text",
             shingleN = 3, maxDf = 50, minJaccard = 0.2)
           .select(col("id_a"), col("id_b"), r4(col("jaccard")).as("jaccard")),
       Some(s"""
@@ -458,7 +456,7 @@ object TextQueries {
       "q_neardup_clusters",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val docs = T(s, dir).documents
+        val docs = Tables(s, dir).documents
         val pairs = DedupOps
           .nearDupPairs(docs, "doc_id", "text",
             shingleN = 3, numSigs = 4, rowsPerBand = 4, minJaccard = 0.2)
@@ -489,7 +487,7 @@ object TextQueries {
     QueryDef(
       "q_pii_redaction",
       (s, dir) => {
-        val d = T(s, dir).documents
+        val d = Tables(s, dir).documents
         def pad(e: Column, n: Int) = lpad(e.cast("string"), n, "0")
         val seeded = concat(
           col("text"),
@@ -551,7 +549,7 @@ object TextQueries {
     QueryDef(
       "q_simhash_docs",
       (s, dir) => {
-        val d = T(s, dir).documents
+        val d = Tables(s, dir).documents
         d.select(col("doc_id"),
             DedupOps.simhashDigests(DedupOps.tokens(col("text"))).as("__d"))
           .select(
@@ -586,7 +584,7 @@ object TextQueries {
     QueryDef(
       "q_simhash_neardup_pairs",
       (s, dir) =>
-        DedupOps.simhashNearDupPairs(T(s, dir).documents, "doc_id", "text", maxHamming = 2),
+        DedupOps.simhashNearDupPairs(Tables(s, dir).documents, "doc_id", "text", maxHamming = 2),
       Some {
         val votes = (0 until 16)
           .map { j =>
@@ -627,7 +625,7 @@ object TextQueries {
     QueryDef(
       "q_simhash64_neardup_pairs",
       (s, dir) =>
-        DedupOps.simhash64NearDupPairs(T(s, dir).documents, "doc_id", "text", maxHamming = 3),
+        DedupOps.simhash64NearDupPairs(Tables(s, dir).documents, "doc_id", "text", maxHamming = 3),
       Some {
         // bit j of band b ← bit (j%4) of hex digit (4b + j/4 + 1);
         // a digit votes +1 for bit k iff (digit >> k) & 1 = 1.
@@ -688,7 +686,7 @@ object TextQueries {
     QueryDef(
       "q_thread_structure",
       (s, dir) => {
-        val li = T(s, dir).lineitem
+        val li = Tables(s, dir).lineitem
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("l_orderkey"))
           .orderBy(col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
@@ -735,7 +733,7 @@ object TextQueries {
     QueryDef(
       "q_ann_cosine_topk",
       (s, dir) => {
-        val e     = T(s, dir).embeddings
+        val e     = Tables(s, dir).embeddings
         val query = e.filter(col("vec_id") === 0).select(SimilarityOps.toDouble(col("embedding")).as("qvec"))
         val sim = SimilarityOps.cosine(e, col("embedding"), col("qvec"))
         e.filter(col("vec_id") =!= 0)
@@ -771,7 +769,7 @@ object TextQueries {
     QueryDef(
       "q_ann_int8_topk",
       (s, dir) => {
-        val e = T(s, dir).embeddings
+        val e = Tables(s, dir).embeddings
         val qz = e.select(col("vec_id"),
           SimilarityOps.int8Quantize(col("embedding")).getField("q").as("q"))
         val query = qz.filter(col("vec_id") === 0).select(col("q").as("qq"))
@@ -828,7 +826,7 @@ object TextQueries {
       (s, dir) => {
         val planes = SimilarityOps.hyperplanes(64, 3)
         SimilarityOps
-          .cosineNearDupPairs(T(s, dir).embeddings, "vec_id", "embedding", planes, 0.2)
+          .cosineNearDupPairs(Tables(s, dir).embeddings, "vec_id", "embedding", planes, 0.2)
           .select(col("id_a"), col("id_b"), r4(col("cosine_sim")).as("cosine_sim"))
       },
       Some {
@@ -876,7 +874,7 @@ object TextQueries {
       "q_repetition_signals",
       (s, dir) => {
         import org.apache.spark.sql.types.DecimalType
-        val base = T(s, dir).documents
+        val base = Tables(s, dir).documents
           .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
         def grams(n: Int) =
           when(size(col("t")) >= n, DedupOps.shinglesFromTokens(col("t"), n))
@@ -961,7 +959,7 @@ object TextQueries {
     QueryDef(
       "q_source_cap_sampling",
       (s, dir) =>
-        CurationOps.capPerKey(T(s, dir).documents, "doc_id", "source", cap = 15),
+        CurationOps.capPerKey(Tables(s, dir).documents, "doc_id", "source", cap = 15),
       Some("""
         SELECT doc_id, source, sample_rank, sample_rank <= 15 AS kept
         FROM (
@@ -982,7 +980,7 @@ object TextQueries {
     QueryDef(
       "q_embedding_quantization",
       (s, dir) => {
-        val e = T(s, dir).embeddings
+        val e = Tables(s, dir).embeddings
         e.select(col("vec_id"),
             SimilarityOps.toDouble(col("embedding")).as("xd"),
             SimilarityOps.int8Quantize(col("embedding")).as("qz"))
@@ -1037,7 +1035,7 @@ object TextQueries {
       "q_neardup_dedup_corpus",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val docs = T(s, dir).documents
+        val docs = Tables(s, dir).documents
         val pairs = DedupOps
           .nearDupPairs(docs, "doc_id", "text",
             shingleN = 3, numSigs = 4, rowsPerBand = 4, minJaccard = 0.2)

@@ -15,10 +15,8 @@ import graft.queries.QueryDef.{dsum, r4}
   */
 object TimeSeriesQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   private def series(s: SparkSession, dir: String): DataFrame =
-    T(s, dir).lineitem
+    Tables(s, dir).lineitem
       .groupBy(col("l_returnflag").as("flag"), to_date(col("l_shipdate")).as("d"))
       .agg(
         r4(dsum(col("l_extendedprice"))).as("v"),
@@ -108,7 +106,7 @@ object TimeSeriesQueries {
     QueryDef(
       "q_grain_classify",
       (s, dir) => {
-        val li     = T(s, dir).lineitem
+        val li     = Tables(s, dir).lineitem
         val anchor = li.agg(max(to_date(col("l_shipdate"))).as("anchor"))
         li.select(col("l_suppkey"), to_date(col("l_shipdate")).as("d"))
           .crossJoin(broadcast(anchor))
@@ -165,7 +163,7 @@ object TimeSeriesQueries {
     QueryDef(
       "q_banded_anti_dedup",
       (s, dir) => {
-        val ev = T(s, dir).events
+        val ev = Tables(s, dir).events
           .select(
             col("event_id"), col("user_id"), col("event_type"),
             to_date(col("ts")).as("d"), col("value")
@@ -199,7 +197,7 @@ object TimeSeriesQueries {
     QueryDef(
       "q_prior_order_lookup",
       (s, dir) => {
-        val o = T(s, dir).orders
+        val o = Tables(s, dir).orders
           .select(
             col("o_orderkey"), col("o_custkey"),
             to_date(col("o_orderdate")).as("d"), col("o_totalprice")

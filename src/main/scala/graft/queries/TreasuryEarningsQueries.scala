@@ -28,8 +28,6 @@ import graft.runtime.Tables
   */
 object TreasuryEarningsQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   // ------------------------------------------------------------------
   // agent_treasury_yield_curve_spreads (ref, :10-66)
   // ------------------------------------------------------------------
@@ -119,7 +117,7 @@ object TreasuryEarningsQueries {
   private def earningsCalendar(s: SparkSession, dir: String): DataFrame = {
     // raw earnings_calendar synthesized from orders: numeric fields as
     // STRINGS with the '.' sentinel, dates as strings
-    val o = T(s, dir).orders
+    val o = Tables(s, dir).orders
     val raw = o.select(
       col("o_orderkey").as("event_id"),
       concat(lit("T"), col("o_custkey") % 100).as("symbol"),
@@ -144,7 +142,7 @@ object TreasuryEarningsQueries {
       when(col("o_orderkey") % 97 === 0, lit(null).cast("string"))
         .otherwise(col("o_orderdate").cast("string")).as("report_date"))
 
-    val maxD = T(s, dir).lineitem.agg(max(to_date(col("l_shipdate"))).as("__maxd"))
+    val maxD = Tables(s, dir).lineitem.agg(max(to_date(col("l_shipdate"))).as("__maxd"))
     val typed = raw
       .filter(col("report_date").isNotNull)
       .withColumn("report_dt", try_cast(col("report_date"), "date"))

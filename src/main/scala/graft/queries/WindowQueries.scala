@@ -22,12 +22,10 @@ import graft.queries.QueryDef.{dsum, r4}
   */
 object WindowQueries {
 
-  private def T(s: SparkSession, dir: String) = Tables(s, dir)
-
   /** Daily per-flag series; values rounded so both engines window over
     * bit-identical inputs. */
   private def series(s: SparkSession, dir: String): DataFrame =
-    T(s, dir).lineitem
+    Tables(s, dir).lineitem
       .groupBy(col("l_returnflag").as("flag"), to_date(col("l_shipdate")).as("d"))
       .agg(
         r4(dsum(col("l_extendedprice"))).as("v"),
@@ -190,7 +188,7 @@ object WindowQueries {
     QueryDef(
       "q_qualify_dedup_max_qty",
       (s, dir) => {
-        val li = T(s, dir).lineitem
+        val li = Tables(s, dir).lineitem
         val w = Window
           .partitionBy(col("l_orderkey"))
           .orderBy(
@@ -222,7 +220,7 @@ object WindowQueries {
     QueryDef(
       "q_rank_ntile_orders",
       (s, dir) => {
-        val o     = T(s, dir).orders
+        val o     = Tables(s, dir).orders
         val byVal = Window.partitionBy(col("o_orderpriority")).orderBy(col("o_totalprice").desc)
         val det = Window
           .partitionBy(col("o_orderpriority"))

@@ -55,9 +55,9 @@ import graft.operators.SinkOps
   *    thread-locals as they were when its model was built (job group,
   *    active session, local properties), so its jobs are attributed
   *    to that model in listeners and the Spark UI.
-  *  - A build that scopes session conf (e.g. `LoopWidth.withWidth`)
-  *    may be seen by a concurrent materialization's planning; that can
-  *    change shuffle widths, never results.
+  *  - A build that runs an iterative operator scopes the session's
+  *    shuffle width ([[Loop]]); a concurrent materialization's planning
+  *    may see it.
   *
   * Scale: the topological pass is driver-side metadata only; every
   * materialization is a distributed write/read. At 100 TB the Table/

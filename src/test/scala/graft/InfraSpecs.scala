@@ -41,6 +41,18 @@ class InfraSpecs extends AnyFunSuite with BeforeAndAfterAll {
     assert(copies.isEmpty, s"sessions built outside GraftSession.get: ${copies.mkString(", ")}")
   }
 
+  test("under src/main only runtime/Loop.scala checkpoints, and nothing names LoopWidth") {
+    val walk = Files.walk(Paths.get("src/main"))
+    val sources = try walk.iterator().asScala.filter(p => Files.isRegularFile(p)).toList
+      finally walk.close()
+    val loop = Paths.get("graft", "runtime", "Loop.scala")
+    val checkpoints = sources.filter(p => !p.endsWith(loop) &&
+      Files.readString(p).contains(".localCheckpoint("))
+    assert(checkpoints.isEmpty, s"loop scaffolds outside Loop: ${checkpoints.mkString(", ")}")
+    val stale = sources.filter(p => Files.readString(p).contains("LoopWidth"))
+    assert(stale.isEmpty, s"references to LoopWidth: ${stale.mkString(", ")}")
+  }
+
   test("SqlGuard allows SELECT and CTE queries") {
     Seq((1, "a"), (2, "b")).toDF("id", "v").createOrReplaceTempView("guard_t")
     assert(SqlGuard.readOnly(spark, "SELECT count(*) AS n FROM guard_t").as[Long].head() == 2L)

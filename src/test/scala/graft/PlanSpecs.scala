@@ -304,6 +304,44 @@ class PlanSpecs extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("partial_min"), "hop minima must partial-aggregate before the exchange")
   }
 
+  test("CC round: the dst-keyed edge cache never re-exchanges") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.functions.col
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
+    // the edge cache and width connectedComponentsWithRounds runs with
+    val (edges, width) = graft.runtime.Loop.keyed(
+      pairs.select(col("a").as("src"), col("b").as("dst"))
+        .unionByName(pairs.select(col("b").as("src"), col("a").as("dst"))), "dst")
+    val labels = edges.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node")).localCheckpoint(true)
+    // at scale the joins shuffle; a toy graph would broadcast them
+    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
+    val bcPrior = spark.conf.get(bcKey)
+    spark.conf.set(bcKey, "-1")
+    val plan = try graft.runtime.Loop.withWidth(spark, width) {
+      graft.operators.DedupOps.ccRound(edges, labels).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    } finally spark.conf.set(bcKey, bcPrior)
+    edges.unpersist(blocking = false)
+    assert(plan.exists(_.isInstanceOf[InMemoryTableScanExec]), s"CC round must read the edge cache:\n$plan")
+    assert(plan.exists(_.isInstanceOf[ShuffleExchangeExec]), s"expected a shuffled join:\n$plan")
+    // an exchange fed by the cache scan through row-level operators only
+    def scansCache(p: SparkPlan): Boolean = p match {
+      case _: InMemoryTableScanExec => true
+      case _: ProjectExec | _: FilterExec | _: InputAdapter | _: WholeStageCodegenExec =>
+        scansCache(p.children.head)
+      case _ => false
+    }
+    val overCache = plan.collect { case x: Exchange if scansCache(x.child) => x }
+    assert(overCache.isEmpty, s"the |E| edge cache must line up with the neighbor-label join:\n$plan")
+  }
+
   test("embedding mean-pool is a single (group, dim)-keyed shuffle") {
     val plan = executedPlan("q_embedding_mean_pool")
     assert("Exchange ".r.findAllIn(plan).size == 1,
