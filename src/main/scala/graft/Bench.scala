@@ -1,15 +1,13 @@
 package graft
 
 import graft.queries.SharedMarts
-import graft.runtime.GraftSession
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 /** Benchmark main: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
-  * A warmup pass (flagship star join) is run first so the reported
-  * per-query numbers exclude JVM/codegen/parquet-footer warmup.
+  * The [[Fleet]] warm-up runs first so the reported per-query numbers
+  * exclude JVM/codegen/parquet-footer warmup.
   *
   * The driver captures only the tail of stdout (~2000 chars), so the
   * printed line must stay short: it carries the total plus the top
@@ -18,11 +16,7 @@ import org.json4s.jackson.JsonMethods
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default matches the stated execution model (local[32], 32
-    // shuffle partitions); SPARK_GRAFT_CPUS still overrides for
-    // constrained dev shells.
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Fleet.cpus
     // Shuffle width scales with DATA, not cores (SCALE.md §6 #1): at
     // the canonical sf0.1 the 32 default keeps partitions ≈ cores, but
     // the 100× (sf10) leg needs wider shuffles so the widest operator's
@@ -30,27 +24,9 @@ object Bench {
     // spill-friendly instead of GC-fatal inside one fixed-heap JVM —
     // on a real cluster this is the same knob tuned per job.
     val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = GraftSession.get(Some(s"local[$cpus]"), shufflePartitions.toInt)
-
-    // warmup: JVM + codegen + parquet footers (not reported). Three
-    // passes with different shapes — a star join, a window/lookback
-    // model, and an object-hash-aggregate snapshot (collect_list/
-    // sort_array + broadcast-nested-loop spine join) — so the first
-    // measured queries (alphabetically the agent models, which stack
-    // exactly these operators) don't absorb the codegen/JIT cost of a
-    // whole operator family on the clock. A missing name is a
-    // registry bug, not a condition to skip silently.
-    Seq("q_join_star_region_revenue", "q_window_lag_returns",
-        "q_fred_series_latest_aggregates_snapshot").foreach { q =>
-      SparkEntry.queries.get(q) match {
-        case Some(fn) =>
-          try fn(spark, sfDir).count()
-          catch { case scala.util.control.NonFatal(_) => () }
-        case None =>
-          System.err.println(s"[bench] WARNING: warmup query $q not in registry; JIT warmup skipped")
-      }
-      spark.catalog.clearCache()
-    }
+    val fleet = Fleet("bench", shufflePartitions = shufflePartitions.toInt)
+    val (spark, sfDir) = (fleet.spark, fleet.sfDir)
+    fleet.warmUp()
 
     // Local-dev subset filter (comma-separated names); driver never sets it.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -63,32 +39,16 @@ object Bench {
     // Full-record runs: everything except ad-hoc ONLY subsets.
     val record = only.isEmpty
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    def timed(name: String, fn: (SparkSession, String) => DataFrame): (Double, Boolean) = {
-      // Attributable per-query numbers: caches cleared and a full GC
-      // forced BEFORE the clock starts, so one query's garbage (or
-      // leaked cache) can't bleed into its alphabetical neighbor.
-      spark.catalog.clearCache()
-      System.gc()
-      val t0 = System.nanoTime()
-      // Failures surface on stderr (ADVICE r8: a swallowed exception
-      // must not masquerade as a normal timing) but keep the elapsed
-      // number — correctness has its own gate; the bench's job is time.
-      val ok =
-        try { fn(spark, sfDir).count(); true } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] query $name FAILED: ${e.getMessage}")
-            failed += name
-            // A dead context turns every later query into an instant
-            // no-op "timing" and would poison the record AND its min map
-            // (observed: an executor OOM at the sf10 leg shut the context
-            // down mid-suite and 17 queries "ran" in 30 ms). Nothing
-            // measured after this point means anything — abort loudly.
-            abortIfStopped(spark)
-            false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache() // per-query caches must not leak across measurements
-      (dt, ok)
+    // A failure surfaces on stderr (ADVICE r8: a swallowed exception
+    // must not masquerade as a normal timing) but keeps the elapsed
+    // number — correctness has its own gate; the bench's job is time.
+    // A dead context exits 2 with no record (observed: an executor OOM
+    // at the sf10 leg shut the context down mid-suite and 17 queries
+    // "ran" in 30 ms).
+    def timed(name: String, fn: Fleet.Query): (Double, Boolean) = {
+      val (dt, out) = fleet.run(name, gc = true)(fn(spark, sfDir).count())
+      if (out.isEmpty) failed += name
+      (dt, out.isDefined)
     }
     // Slow-list entries get median-of-3 (VERDICT r6 #7): a single
     // sample on a >4 s query conflates plan cost with residual JIT /
@@ -99,8 +59,7 @@ object Bench {
     // contention storms hit a different victim each run, so minima
     // are the comparable round-over-round number.
     val MedianFloorSec = 4.0
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => selected.forall(_.contains(name)) }
+    val results = fleet.select(selected)
       .map { case (name, fn) =>
         val (first, ok1) = timed(name, fn)
         if (first <= MedianFloorSec || !ok1) {
@@ -201,36 +160,22 @@ object Bench {
     // consumers (-1 sentinel) never enter the min merge.
     val dag: Option[DagLane] =
       if (!record) None
-      else try {
+      else {
         val wh = java.nio.file.Files.createTempDirectory("graft-dagbench-").toString
-        spark.catalog.clearCache(); System.gc()
-        val tb0 = System.nanoTime()
-        val frames = SharedMarts.registry(spark, sfDir).run(spark, wh).frames
-        val buildSec = (System.nanoTime() - tb0) / 1e9
-        val timings = SharedMarts.consumers(spark, sfDir).map { c =>
-          spark.catalog.clearCache(); System.gc()
-          val t0 = System.nanoTime()
+        val (buildSec, built) = fleet.run("dag build", gc = true)(SharedMarts.registry(spark, sfDir).run(spark, wh).frames)
+        built.map { frames =>
           // A broken consumer must NOT masquerade as a fast valid
-          // timing (ADVICE r8): record the sentinel -1, log the cause.
-          val ok = try { SharedMarts.read(c, frames).count(); true } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] dag consumer ${c.name} FAILED: ${e.getMessage}")
-              abortIfStopped(spark)
-              false
+          // timing (ADVICE r8): record the sentinel -1.
+          val timings = SharedMarts.consumers(spark, sfDir).map { c =>
+            val (dt, out) = fleet.run(s"dag consumer ${c.name}", gc = true)(SharedMarts.read(c, frames).count())
+            c.name -> (if (out.isDefined) dt else -1.0)
           }
-          c.name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+          DagLane(buildSec, math.min(buildSec, priorBuildMin.getOrElse(Double.MaxValue)),
+            timings, timings.map { case (n, v) =>
+              val prior = priorDagMin.get(n).filter(_ >= 0)
+              n -> (if (v >= 0) math.min(v, prior.getOrElse(Double.MaxValue)) else prior.getOrElse(-1.0))
+            })
         }
-        spark.catalog.clearCache()
-        Some(DagLane(buildSec, math.min(buildSec, priorBuildMin.getOrElse(Double.MaxValue)),
-          timings, timings.map { case (n, v) =>
-            val prior = priorDagMin.get(n).filter(_ >= 0)
-            n -> (if (v >= 0) math.min(v, prior.getOrElse(Double.MaxValue)) else prior.getOrElse(-1.0))
-          }))
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] dag lane failed: ${e.getMessage}")
-          abortIfStopped(spark)
-          None
       }
     val outcome = Outcome(codeFp, cpus, suite, failed.toSeq, results.map(r => (r._1, r._2)),
       minMap, results.filter(_._3 > 1).map(r => (r._1, r._3)), dag, sfDir)
@@ -248,14 +193,6 @@ object Bench {
     println(summaryLine(outcome, fullName, withMinTotal = record))
     spark.stop()
   }
-
-  /** A dead SparkContext turns every later measurement into a no-op:
-    * exit 2 and write no record. */
-  private def abortIfStopped(spark: SparkSession): Unit =
-    if (spark.sparkContext.isStopped) {
-      System.err.println("[bench] SparkContext is stopped — aborting; NO record written")
-      sys.exit(2)
-    }
 
   /** The DAG lane: mart build time and per-consumer read times, with
     * their cross-run minima (-1 marks a failed consumer). */

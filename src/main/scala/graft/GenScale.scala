@@ -1,6 +1,5 @@
 package graft
 
-import graft.runtime.GraftSession
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -89,8 +88,7 @@ object GenScale {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("testdata_gen/sf1")
     val k   = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.get(Some(s"local[$cpus]"), cpus.toInt)
+    val spark = Fleet.session()
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
 

@@ -1,6 +1,8 @@
 package graft
 
-import graft.runtime.GraftSession
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Decompose each query's wall time into driver-side cost (building
   * the DataFrame + analysis/optimization/physical planning, i.e.
@@ -10,39 +12,38 @@ import graft.runtime.GraftSession
   *
   *   PLANCOST <name> build=<s> plan=<s> exec=<s> total=<s>
   *
-  * Usage: runMain graft.PlanCost [q1,q2,...]   (default: all)
+  * With `--plans <dir>` it also writes each query's formatted initial
+  * (pre-execution, AQE) plan to `<dir>/<name>.txt`, outside the timed
+  * spans: the before/after plan evidence of an optimization and the
+  * input of bulk plan sweeps (exchanges, join strategies, pushed
+  * filters and read schema per scan).
+  *
+  * Usage: runMain graft.PlanCost [--plans <dir>] [q1,q2,...]   (default: all)
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1).
   */
 object PlanCost {
   def main(args: Array[String]): Unit = {
-    val only = args.headOption.map(_.split(",").toSet)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.get(Some(s"local[$cpus]"), cpus.toInt)
-    // same warmup as Bench so JIT noise doesn't land on the first rows
-    Seq("q_join_star_region_revenue", "q_window_lag_returns",
-        "q_fred_series_latest_aggregates_snapshot").foreach { q =>
-      try SparkEntry.queries(q)(spark, sfDir).count() catch { case _: Throwable => () }
-      spark.catalog.clearCache()
+    val (plans, rest) = args.toList match {
+      case "--plans" :: dir :: tail => (Some(dir), tail)
+      case other => (None, other)
     }
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    names.foreach { case (name, fn) =>
-      spark.catalog.clearCache(); System.gc()
-      try {
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)            // may itself run driver-side training
-        val t1 = System.nanoTime()
-        df.queryExecution.executedPlan       // analysis + optimization + physical planning
-        val t2 = System.nanoTime()
-        df.count()                           // execution (incl. AQE re-planning)
-        val t3 = System.nanoTime()
-        println(f"PLANCOST $name build=${(t1 - t0) / 1e9}%.3f plan=${(t2 - t1) / 1e9}%.3f exec=${(t3 - t2) / 1e9}%.3f total=${(t3 - t0) / 1e9}%.3f")
-      } catch {
-        case e: Throwable => println(s"PLANCOST $name FAILED: ${e.getMessage}")
-      }
-      spark.catalog.clearCache()
+    val only = rest.headOption.map(_.split(",").toSet)
+    plans.foreach(dir => Files.createDirectories(Paths.get(dir)))
+    val fleet = Fleet("plancost")
+    fleet.warmUp()
+    fleet.each(only, gc = true) { (name, fn) =>
+      val t0 = System.nanoTime()
+      val df = fn(fleet.spark, fleet.sfDir) // may itself run driver-side training
+      val t1 = System.nanoTime()
+      df.queryExecution.executedPlan        // analysis + optimization + physical planning
+      val t2 = System.nanoTime()
+      plans.foreach(dir => Files.writeString(Paths.get(dir, s"$name.txt"), df.queryExecution.explainString(FormattedMode)))
+      val t3 = System.nanoTime()
+      df.count()                            // execution (incl. AQE re-planning)
+      val t4 = System.nanoTime()
+      val (build, plan, exec) = ((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t4 - t3) / 1e9)
+      println(f"PLANCOST $name build=$build%.3f plan=$plan%.3f exec=$exec%.3f total=${build + plan + exec}%.3f")
     }
-    spark.stop()
+    fleet.spark.stop()
   }
 }

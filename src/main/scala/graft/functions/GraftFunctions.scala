@@ -44,34 +44,6 @@ object GraftFunctions {
     * Ref: stg_economic_calendar.sql:21-29. */
   def fingerprint(cols: Column*): Column = xxhash64(concat_ws("|", cols: _*))
 
-  /** Finite-window exponentially-weighted mean over a trailing array
-    * of (offset, value) structs, replicating the reference's
-    * weight-normalized, NULL-dropping EWM exactly:
-    *   ewm = SUM(v_i * (1-a)^(pos_max - pos_i)) / SUM((1-a)^(pos_max - pos_i))
-    * over non-null v_i in the trailing window.
-    * Ref: ta_primitives.sql:84-126 (ta_window_array + ta_ewm_from_array).
-    *
-    * `arr` must be `collect_list(struct(pos, v))` over a trailing rows
-    * window (collect_list drops NULL structs but we filter v explicitly),
-    * `curPos` the current row's position. alpha = 2/(span+1) for EMA,
-    * 1/n for Wilder.
-    */
-  def ewmFromArray(arr: Column, curPos: Column, alpha: Double): Column = {
-    val decay = 1.0 - alpha
-    val nonNull = filter(arr, s => s.getField("v").isNotNull)
-    val num = aggregate(
-      nonNull,
-      lit(0.0),
-      (acc, s) => acc + s.getField("v") * pow(lit(decay), curPos - s.getField("pos"))
-    )
-    val den = aggregate(
-      nonNull,
-      lit(0.0),
-      (acc, s) => acc + pow(lit(decay), curPos - s.getField("pos"))
-    )
-    when(size(nonNull) > 0, num / den)
-  }
-
   /** Cosine similarity of two float-array columns via higher-order
     * functions (codegen'd; no UDF).
     * Ref: macro_agents/.../sec/semantic_search.py:8-12 (ML.DISTANCE COSINE). */

@@ -59,11 +59,6 @@ object DedupOps {
         count(lit(1)).as("n_docs")
       )
 
-  /** Attach k MinHash signature columns sig_0..sig_{k-1}.
-    * Signatures are computed by explode + codegen'd min-aggregates
-    * (one pass over the shingles) rather than k interpreted
-    * higher-order-function scans — the shuffle is by id, which the
-    * caller needs anyway for the LSH band join. */
   /** (id, __sh) distinct-shingle table. Cache before fanning out —
     * the shingle arrays feed both the signature aggregation and the
     * verify-side joins; recomputing them multiplies the tokenize +
@@ -102,12 +97,6 @@ object DedupOps {
         min(xxhash64(lit(0), col("__s"))).as("sig_0"),
         (1 until k).map(j => min(xxhash64(lit(j), col("__s"))).as(s"sig_$j")): _*
       )
-
-  /** Attach k MinHash signature columns sig_0..sig_{k-1}. */
-  def withMinhash(df: DataFrame, idCol: String, textCol: String, shingleN: Int, k: Int): DataFrame = {
-    val base = shingleTable(df, idCol, textCol, shingleN).cache()
-    df.join(base, Seq(idCol)).join(minhashSigs(base, idCol, k), Seq(idCol))
-  }
 
   /** Exact Jaccard similarity of two distinct-shingle arrays. */
   def jaccard(a: Column, b: Column): Column = {
@@ -361,9 +350,6 @@ object DedupOps {
     }
     bits.reduce(_ + _)
   }
-
-  def simhash16(tokensArr: Column): Column =
-    simhash16FromDigests(simhashDigests(tokensArr))
 
   /** SimHash near-duplicate pairs by banded bucketing: split the
     * 16-bit simhash into 4 bands of 4 bits; docs sharing ANY band are

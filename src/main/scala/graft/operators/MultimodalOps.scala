@@ -25,19 +25,6 @@ import org.apache.spark.sql.types._
   */
 object MultimodalOps {
 
-  /** Media record schema: the shape a 100 TB multimodal lake table
-    * would carry (id, media_type, content, metadata struct). */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("media_type", StringType),
-    StructField("content", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("byte_len", LongType),
-      StructField("content_hash", StringType),
-      StructField("source", StringType)
-    )))
-  ))
-
   /** Build a media table from a text corpus (fixture path: content =
     * utf-8 bytes). Production replaces this with binary file reads
     * (spark.read.format("binaryFile")). */
@@ -203,9 +190,6 @@ object MultimodalOps {
       width: Int, height: Int, bitsPerPixel: Int,
       sumR: Long, sumG: Long, sumB: Long) {
     def nPixels: Long   = width.toLong * height
-    def meanLuma: Double =
-      if (nPixels == 0) 0.0
-      else (299L * sumR + 587L * sumG + 114L * sumB).toDouble / (1000.0 * nPixels)
   }
 
   /** Encode a width×height 24-bit uncompressed BMP from a pixel

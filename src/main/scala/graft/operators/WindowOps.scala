@@ -37,29 +37,9 @@ object WindowOps {
     * ref ta_primitives.sql:18-26). */
   def trailing(w: WindowSpec, n: Int): WindowSpec = w.rowsBetween(-(n - 1), 0)
 
-  /** Trailing frame EXCLUDING the current row (ta_rolling_prior — e.g.
-    * Donchian channels, no self-confirmation; ref ta_primitives.sql:29-39). */
-  def trailingPrior(w: WindowSpec, n: Int): WindowSpec = w.rowsBetween(-n, -1)
-
   /** Cumulative frame from the start of the partition. */
   def cumulative(w: WindowSpec): WindowSpec =
     w.rowsBetween(Window.unboundedPreceding, 0)
-
-  /** Strictly-future frame (cumulative future split factor; ref
-    * stg_split_adjusted_prices.sql:59-68). */
-  def future(w: WindowSpec): WindowSpec =
-    w.rowsBetween(1, Window.unboundedFollowing)
-
-  /** Calendar-day RANGE frame: order by day-ordinal so gaps in the
-    * trading calendar shrink the frame (ref
-    * calculate_market_analysis_return.sql:89-197). Caller must
-    * `orderBy(epochDay(dateCol))` — use [[rangeDays]].
-    */
-  def rangeDays(partCols: Seq[Column], dateCol: Column, days: Int): WindowSpec =
-    Window
-      .partitionBy(partCols: _*)
-      .orderBy(epochDay(dateCol))
-      .rangeBetween(-days, 0)
 
   /** Rolling z-score of `c` over a trailing n-row frame (ta_zscore,
     * ref ta_primitives.sql:60-66). */
@@ -104,21 +84,6 @@ object WindowOps {
     val num   = sum(value * wgt).over(f)
     val den   = sum(when(value.isNotNull, wgt)).over(f)
     num / den
-  }
-
-  /** Rolling OLS of y on x from windowed moments (ref
-    * int_cross_asset_commodity_signals.sql:14-80): returns
-    * (beta, alpha, residual). */
-  def rollingOls(y: Column, x: Column, w: WindowSpec, n: Int): (Column, Column, Column) = {
-    val f    = trailing(w, n)
-    val mx   = avg(x).over(f)
-    val my   = avg(y).over(f)
-    val mxy  = avg(x * y).over(f)
-    val mxx  = avg(x * x).over(f)
-    val beta = safeDivide(mxy - mx * my, mxx - mx * mx)
-    val a    = my - beta * mx
-    val res  = y - (a + beta * x)
-    (beta, a, res)
   }
 
   /** Exact global `row_number` over an UNBOUNDED frame, without the

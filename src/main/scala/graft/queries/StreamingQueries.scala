@@ -217,10 +217,8 @@ object StreamingQueries {
     QueryDef(
       "q_stream_sessionize",
       (s, dir) => {
-        // Mirror Tables.events for the stream read: nanos-as-long for
-        // the old corpus layout, NTZ cast for the new (the dispatch in
+        // Normalized like Tables.events (the dispatch in
         // normalizeEventTs sees whichever schema the batch read infers).
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val src = graft.runtime.Tables.normalizeEventTs(stream(s, dir, "events"))
         val sessions = StreamingIngest
           .statefulSessionize(src, "user_id", "ts", "value", gapSeconds = 1800)
@@ -329,7 +327,6 @@ object StreamingQueries {
     QueryDef(
       "q_stream_interval_join",
       (s, dir) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         // state partition count (8) is applied by runToTable for the
         // whole streaming family — see its scaladoc
         locally {

@@ -3,8 +3,7 @@ package graft.runtime
 import org.apache.spark.sql.SparkSession
 
 /** The one session factory of the graft engine: every entry point
-  * (`Verify`, `Bench`, `PlanCost`, `PlanDump`, `GenScale`) and every
-  * spec builds its session here.
+  * (through [[graft.Fleet]]) and every spec builds its session here.
   *
   * This is the configuration the DuckDB oracle checks: Spark's
   * defaults (ANSI mode and AQE included), UTC session time, the native
@@ -30,16 +29,23 @@ object GraftSession {
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse"
       )
       .config("spark.ui.enabled", "false")
+      // events.parquet has shipped as TIMESTAMP(NANOS), which Spark
+      // reads only as raw longs under this flag (Tables.normalizeEventTs
+      // converts them). Set here, never while a query runs: a conf set
+      // inside a builder races with concurrent planning.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     master.foreach(b.master)
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The fleet's bounded global-window sites (WindowOps.scala header;
     // boundedness spec-gated in GlobalWindowSpecs) each emit an
     // identical WindowExec single-partition WARN, thousands of lines
-    // that bury real warnings. Silence that one category only.
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    // that bury real warnings. Likewise `Loop.release` unpersists a
+    // loop round's local checkpoint on purpose, and Spark warns once
+    // per released round that its lineage is gone. Silence those two
+    // categories only.
+    try Seq("org.apache.spark.sql.execution.window.WindowExec", "org.apache.spark.rdd.MapPartitionsRDD")
+      .foreach(org.apache.logging.log4j.core.config.Configurator.setLevel(_, org.apache.logging.log4j.Level.ERROR))
     catch { case scala.util.control.NonFatal(_) => () }
     spark
   }

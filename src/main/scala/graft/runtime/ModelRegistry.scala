@@ -46,8 +46,7 @@ import graft.operators.SinkOps
   * materialize at the same time.
   *  - Builds are serial on the caller's thread: each `build` runs
   *    there, one at a time, so builders keep their thread confinement
-  *    (the [[Materialized]] memo, `Tables.events`' conf set, callers'
-  *    build hooks).
+  *    (the [[Materialized]] memo, callers' build hooks).
   *  - Materializations (View persist, Table write + re-read,
   *    Incremental merge + swap) run on a driver pool of
   *    `min(models, defaultParallelism)` threads, created and joined

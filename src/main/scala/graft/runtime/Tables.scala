@@ -65,10 +65,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     * consumer's result hash-matches a DuckDB oracle that reads the
     * ORIGINAL file in its own order, so results are already proven
     * row-order-independent. */
-  def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    Tables.normalizeEventTs(compacted("events"))
-  }
+  def events: DataFrame     = Tables.normalizeEventTs(compacted("events"))
   def documents: DataFrame  = t("documents")
   def embeddings: DataFrame = t("embeddings")
 }
@@ -117,8 +114,8 @@ object Tables {
   }
 
   /** events.parquet has carried TIMESTAMP(NANOS) — which Spark's
-    * reader rejects unless read as raw nanos longs under
-    * `spark.sql.legacy.parquet.nanosAsLong` — and, in newer corpus
+    * reader rejects unless read as raw nanos longs (the legacy flag
+    * [[GraftSession.get]] sets) — and, in newer corpus
     * drops, TIMESTAMP(MICROS, isAdjustedToUTC=false) which Spark
     * reads natively as TIMESTAMP_NTZ. Dispatch on the landed type and
     * normalize both to a session-TZ microsecond timestamp (identical

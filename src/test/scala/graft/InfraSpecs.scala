@@ -29,6 +29,9 @@ class InfraSpecs extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key) == "UTC")
     assert(spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key) == "4")
     assert(spark.sql("SELECT vec_cosine(array(1F, 0F), array(2F, 0F))").head().getDouble(0) == 1.0)
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(org.apache.logging.log4j.LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD").getLevel ==
+      org.apache.logging.log4j.Level.ERROR, "Loop.release's released-checkpoint WARN is not silenced")
   }
 
   test("no file under src/ but GraftSession.scala builds a session") {
@@ -41,16 +44,30 @@ class InfraSpecs extends AnyFunSuite with BeforeAndAfterAll {
     assert(copies.isEmpty, s"sessions built outside GraftSession.get: ${copies.mkString(", ")}")
   }
 
-  test("under src/main only runtime/Loop.scala checkpoints, and nothing names LoopWidth") {
+  private lazy val mainSources = {
     val walk = Files.walk(Paths.get("src/main"))
-    val sources = try walk.iterator().asScala.filter(p => Files.isRegularFile(p)).toList
-      finally walk.close()
+    try walk.iterator().asScala.filter(p => Files.isRegularFile(p)).toList
+    finally walk.close()
+  }
+
+  test("under src/main only runtime/Loop.scala checkpoints, and nothing names LoopWidth") {
+    val sources = mainSources
     val loop = Paths.get("graft", "runtime", "Loop.scala")
     val checkpoints = sources.filter(p => !p.endsWith(loop) &&
       Files.readString(p).contains(".localCheckpoint("))
     assert(checkpoints.isEmpty, s"loop scaffolds outside Loop: ${checkpoints.mkString(", ")}")
     val stale = sources.filter(p => Files.readString(p).contains("LoopWidth"))
     assert(stale.isEmpty, s"references to LoopWidth: ${stale.mkString(", ")}")
+  }
+
+  test("under src/main only Fleet exits or reads the fleet env, only GraftSession names nanosAsLong, no PlanDump") {
+    def outside(owner: String, pattern: String): List[java.nio.file.Path] =
+      mainSources.filter(p => p.getFileName.toString != owner &&
+        pattern.r.findFirstIn(Files.readString(p)).isDefined)
+    assert(outside("Fleet.scala", """sys\.exit\(""").isEmpty, "exits outside Fleet")
+    assert(outside("Fleet.scala", "\"SPARK_GRAFT_(CPUS|SF_DIR)\"").isEmpty, "fleet env read outside Fleet")
+    assert(outside("GraftSession.scala", "nanosAsLong").isEmpty, "nanosAsLong set outside the session factory")
+    assert(outside("", "PlanDump").isEmpty, "PlanDump is folded into PlanCost --plans")
   }
 
   test("SqlGuard allows SELECT and CTE queries") {
