@@ -1,11 +1,10 @@
 package graft.models
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.queries.QueryDef.{dsum, oDivRound, oSnap, rsnap}
+import graft.queries.QueryDef.{oDivRound, oSnap, rdiv, rsnap}
 
 /** 1:1 replication of the reference's `calculate_market_summary` macro
   * (dbt_project/macros/calculate_market_summary.sql) — the template
@@ -15,6 +14,14 @@ import graft.queries.QueryDef.{dsum, oDivRound, oSnap, rsnap}
   * adjusted price-change stats, pct-change stats annualized by
   * √252, win rate, and the band's boundary prices (first adj_open /
   * last adj_close).
+  *
+  * The macro is defined here once, as the period-summary kernel
+  * ([[band]], [[latest]], [[periodSummary]]), and has four callers
+  * that keep only what is their own: [[summarize]] (intraday changes,
+  * the `max_by` descriptors), `CommodityQueries.commoditySummary`
+  * (full-history LAG changes), and `SnapshotQueries.summarizeSnapshot`
+  * and `SnapshotQueries.commoditySnapshot` (the snapshot spine join,
+  * the LAG trimmed to each snapshot's window).
   *
   * Parity notes: CURRENT_DATE is replaced by max(trade_date)
   * (deterministic anchor, same band semantics); STDDEV is computed
@@ -28,100 +35,117 @@ import graft.queries.QueryDef.{dsum, oDivRound, oSnap, rsnap}
   */
 object MarketSummary {
 
-  /** Spark plan. `uni` columns: symbol, trade_date, open, close,
-    * adj_open, adj_close, asset_type, exchange, name. */
-  def summarize(uni: DataFrame): DataFrame = {
-    val base = uni
-      .filter(col("trade_date").isNotNull && col("open").isNotNull &&
-        col("close").isNotNull && col("open") > 0)
-      .withColumn("pca", col("adj_close") - col("adj_open"))
-      .withColumn("pcta",
-        when(col("adj_open") > 0, (col("adj_close") - col("adj_open")) / col("adj_open") * 100))
-    val bounds = base.agg(max(col("trade_date")).as("today")).select(
-      col("today"),
-      date_sub(col("today"), 84).as("w12"),
-      add_months(col("today"), -6).as("m6"),
-      add_months(col("today"), -12).as("y1"),
-      add_months(col("today"), -60).as("y5"))
-    val fd = base
-      .crossJoin(broadcast(bounds))
-      .filter(col("trade_date") >= col("y5"))
-      .withColumn("time_period",
-        when(col("trade_date") >= col("w12"), "12_weeks")
-          .when(col("trade_date") >= col("m6"), "6_months")
-          .when(col("trade_date") >= col("y1"), "1_year")
-          .otherwise("5_years"))
-    val wS = Window.partitionBy(col("symbol"), col("time_period"))
-      .orderBy(col("trade_date").asc, col("adj_open").asc)
-    val wE = Window.partitionBy(col("symbol"), col("time_period"))
-      .orderBy(col("trade_date").desc, col("adj_close").desc)
-    val priced = fd
-      .withColumn("rn_s", row_number().over(wS))
-      .withColumn("rn_e", row_number().over(wE))
-    val startP = priced.filter(col("rn_s") === 1)
-      .select(col("symbol").as("sp_symbol"), col("time_period").as("sp_period"),
-        col("adj_open").as("period_start_price"))
-    val endP = priced.filter(col("rn_e") === 1)
-      .select(col("symbol").as("ep_symbol"), col("time_period").as("ep_period"),
-        col("adj_close").as("period_end_price"))
+  /** Start of the 5-year window that ends at `anchor`. */
+  def fiveYearsBefore(anchor: Column): Column = add_months(anchor, -60)
 
-    // moments snap to DECIMAL(18,3): synthetic pct swings reach 1e3+,
-    // and an (18,6)-scaled square overflows DuckDB's width-18 multiply;
-    // at scale 3 the square stays exact in both engines ((37,6) Spark,
-    // width-18 int DuckDB). The mean keeps the finer (18,6) snap.
-    val pctDec  = col("pcta").cast(DecimalType(18, 6))
-    val pctDec3 = col("pcta").cast(DecimalType(18, 3))
-    val ar = fd.groupBy(col("symbol"), col("time_period")).agg(
-      max_by(col("asset_type"), col("trade_date")).as("asset_type"),
-      max_by(col("exchange"), col("trade_date")).as("exchange"),
-      max_by(col("name"), col("trade_date")).as("name"),
-      min(col("trade_date")).as("period_start_date"),
-      max(col("trade_date")).as("period_end_date"),
+  /** The macro's exclusive `time_period` band of `date` relative to
+    * `anchor` (the universe's max date, or a snapshot_date). */
+  def band(date: Column, anchor: Column): Column =
+    when(date >= date_sub(anchor, 84), "12_weeks")
+      .when(date >= add_months(anchor, -6), "6_months")
+      .when(date >= add_months(anchor, -12), "1_year")
+      .otherwise("5_years")
+
+  /** `base` banded against its own max `date`, the deterministic
+    * CURRENT_DATE stand-in, with rows older than 5 years dropped. */
+  def latest(base: DataFrame, date: String): DataFrame = {
+    val today = base.agg(max(col(date)).as("__today"))
+    base.crossJoin(broadcast(today))
+      .filter(col(date) >= fiveYearsBefore(col("__today")))
+      .withColumn("time_period", band(col(date), col("__today")))
+      .drop("__today")
+  }
+
+  /** The macro's aggregate and output over a banded frame `fd`: one
+    * row per `keys` group (`time_period` among them), led by the
+    * `lead` columns (keys and `extras` aliases, in output order) and
+    * followed by the shared summary columns. `change`/`pct` are the
+    * day's price change and pct change; the period's start price is
+    * `open` on its first row and its end price `close` on its last.
+    *
+    * Boundary prices are MIN/MAX over (date, price) structs inside the
+    * ONE aggregation pass: "first row by (date ASC, price ASC)" is
+    * exactly the lexicographic struct minimum and "first by (date
+    * DESC, price DESC)" the maximum (a NULL price ranks lowest, as in
+    * the default NULLS FIRST ascending / NULLS LAST descending orders;
+    * PeriodSummarySpecs), so no row_number window sorts the frame and
+    * no re-join brings the picks back — the rows flow into a map-side
+    * partial aggregation and never shuffle at full width.
+    *
+    * The moments snap to DECIMAL(18,3): synthetic pct swings reach
+    * 1e3+, and an (18,6)-scaled square overflows DuckDB's width-18
+    * multiply; at scale 3 the square stays exact in both engines
+    * ((37,6) Spark, width-18 int DuckDB). The mean keeps the finer
+    * (18,6) snap. */
+  def periodSummary(fd: DataFrame, keys: Seq[String], extras: Seq[Column], lead: Seq[String],
+      date: Column, open: Column, close: Column, change: Column, pct: Column): DataFrame = {
+    val pctDec  = pct.cast(DecimalType(18, 6))
+    val pctDec3 = pct.cast(DecimalType(18, 3))
+    val aggs = extras ++ Seq(
+      min(date).as("period_start_date"),
+      max(date).as("period_end_date"),
+      min(struct(date.as("d"), open.as("p"))).getField("p").as("start_price"),
+      max(struct(date.as("d"), close.as("p"))).getField("p").as("end_price"),
       count(lit(1)).as("trading_days"),
-      sum(col("pca").cast(DecimalType(18, 6))).as("sum_adj_dec"),
-      min(col("pca")).as("min_adj"),
-      max(col("pca")).as("max_adj"),
+      sum(change.cast(DecimalType(18, 6))).as("sum_chg_dec"),
+      min(change).as("min_chg"),
+      max(change).as("max_chg"),
       sum(pctDec).as("sx_dec"),
       sum(pctDec3).cast("double").as("sxv"),
       sum(pctDec3 * pctDec3).cast("double").as("sx2"),
-      count(col("pcta")).as("n_pct"),
-      sum(when(col("pca") > 0, 1).otherwise(0)).cast("long").as("positive_days"),
-      sum(when(col("pca") < 0, 1).otherwise(0)).cast("long").as("negative_days"),
-      sum(when(col("pca") === 0, 1).otherwise(0)).cast("long").as("neutral_days"))
-
+      count(pct).as("n_pct"),
+      sum(when(change > 0, 1).otherwise(0)).cast("long").as("positive_days"),
+      sum(when(change < 0, 1).otherwise(0)).cast("long").as("negative_days"),
+      sum(when(change === 0, 1).otherwise(0)).cast("long").as("neutral_days"))
     val vol = when(col("n_pct") > 1,
       sqrt(greatest(
         (col("sx2") - col("sxv") * col("sxv") / col("n_pct")) / (col("n_pct") - 1),
         lit(0.0))) * sqrt(lit(252.0)))
-    ar
-      .join(startP, col("symbol") === col("sp_symbol") && col("time_period") === col("sp_period"), "left")
-      .join(endP, col("symbol") === col("ep_symbol") && col("time_period") === col("ep_period"), "left")
-      .select(
-        col("symbol"), col("asset_type"), col("time_period"), col("exchange"), col("name"),
-        col("period_start_date"), col("period_end_date"),
-        col("trading_days"), col("positive_days"), col("negative_days"), col("neutral_days"),
-        // total_return divides near-arbitrary doubles: exact half
-        // boundaries are measure-zero, plain round agrees on both
-        // engines (a snap would CREATE 6-decimal boundary artifacts)
-        round(when(col("period_start_price") > 0,
-          (col("period_end_price") - col("period_start_price")) / col("period_start_price") * 100), 2)
-          .as("total_return_pct"),
-        // int-ratio quotients (decimal sum / count, wins / days) DO hit
-        // exact rational halves: divide in DECIMAL (exact half-up at
-        // scale 6) and round the decimal — mirrored in the oracle with
-        // HUGEINT floor-division, never a double in the rounding path
-        round(col("sx_dec").cast(DecimalType(38, 6)) / col("n_pct"), 4)
-          .cast("double").as("avg_daily_return_pct"),
-        rsnap(vol, 2).as("volatility_pct"),
-        round((col("positive_days") * 100).cast(DecimalType(38, 6)) / col("trading_days"), 1)
-          .cast("double").as("win_rate_pct"),
-        rsnap(col("sum_adj_dec").cast("double"), 2).as("total_price_change"),
-        round(col("sum_adj_dec").cast(DecimalType(38, 6)) / col("trading_days"), 4)
-          .cast("double").as("avg_daily_price_change"),
-        rsnap(col("min_adj"), 2).as("worst_day_change"),
-        rsnap(col("max_adj"), 2).as("best_day_change"),
-        rsnap(col("period_start_price"), 2).as("period_start_price"),
-        rsnap(col("period_end_price"), 2).as("period_end_price"))
+    val (start, end) = (col("start_price"), col("end_price"))
+    fd.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*).select(lead.map(col) ++ Seq(
+      col("period_start_date"), col("period_end_date"),
+      col("trading_days"), col("positive_days"), col("negative_days"), col("neutral_days"),
+      // total_return divides near-arbitrary doubles: exact half
+      // boundaries are measure-zero, plain round agrees on both
+      // engines (a snap would CREATE 6-decimal boundary artifacts)
+      round(when(start > 0, (end - start) / start * 100), 2).as("total_return_pct"),
+      // int-ratio quotients (decimal sum / count, wins / days) DO hit
+      // exact rational halves: divide in DECIMAL (exact half-up at
+      // scale 6) and round the decimal — mirrored in the oracle with
+      // HUGEINT floor-division, never a double in the rounding path
+      rdiv(col("sx_dec"), col("n_pct"), 4).as("avg_daily_return_pct"),
+      rsnap(vol, 2).as("volatility_pct"),
+      rdiv(col("positive_days") * 100, col("trading_days"), 1).as("win_rate_pct"),
+      rsnap(col("sum_chg_dec").cast("double"), 2).as("total_price_change"),
+      rdiv(col("sum_chg_dec"), col("trading_days"), 4).as("avg_daily_price_change"),
+      rsnap(col("min_chg"), 2).as("worst_day_change"),
+      rsnap(col("max_chg"), 2).as("best_day_change"),
+      rsnap(start, 2).as("period_start_price"),
+      rsnap(end, 2).as("period_end_price")): _*)
+  }
+
+  /** Filtered OHLC rows with their intraday adjusted change `pca` and
+    * pct change `pcta`. `uni` columns: symbol, trade_date, open, close,
+    * adj_open, adj_close, asset_type, exchange, name. */
+  def intraday(uni: DataFrame): DataFrame = uni
+    .filter(col("trade_date").isNotNull && col("open").isNotNull &&
+      col("close").isNotNull && col("open") > 0)
+    .withColumn("pca", col("adj_close") - col("adj_open"))
+    .withColumn("pcta",
+      when(col("adj_open") > 0, (col("adj_close") - col("adj_open")) / col("adj_open") * 100))
+
+  /** Spark plan. `uni` columns as in [[intraday]]. */
+  def summarize(uni: DataFrame): DataFrame = {
+    val d = col("trade_date")
+    periodSummary(latest(intraday(uni), "trade_date"),
+      keys = Seq("symbol", "time_period"),
+      extras = Seq(
+        max_by(col("asset_type"), d).as("asset_type"),
+        max_by(col("exchange"), d).as("exchange"),
+        max_by(col("name"), d).as("name")),
+      lead = Seq("symbol", "asset_type", "time_period", "exchange", "name"),
+      date = d, open = col("adj_open"), close = col("adj_close"),
+      change = col("pca"), pct = col("pcta"))
   }
 
   /** DuckDB oracle for the same template; `uniCte` must define `uni`

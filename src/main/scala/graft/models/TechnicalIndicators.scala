@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions._
 import graft.operators.WindowOps
+import graft.queries.QueryDef.davgOver
 
 /** The reference's wide per-instrument technical-indicator model
   * (SURVEY.md §2.J; ref dbt_project/models/markets/technical/
@@ -42,9 +43,6 @@ object TechnicalIndicators {
       .orderBy(epochDay(col(dateCol)))
       .rangeBetween(-365, 0)
 
-    def exactAvg(c: Column, n: Int): Column =
-      sum(c.cast(DecimalType(18, 4))).over(tw(n)).cast("double") / count(c).over(tw(n))
-
     val alphaEma12  = 2.0 / 13.0
     val alphaEma26  = 2.0 / 27.0
     val alphaWilder = 1.0 / 14.0
@@ -73,9 +71,9 @@ object TechnicalIndicators {
           .otherwise(when(col("prev_close").isNotNull, 0.0)))
 
     val s2 = s1
-      .withColumn("sma20", exactAvg(col("close"), 20))
-      .withColumn("sma50", exactAvg(col("close"), 50))
-      .withColumn("vol_sma20", exactAvg(col("volume"), 20))
+      .withColumn("sma20", davgOver(col("close"), tw(20), 4))
+      .withColumn("sma50", davgOver(col("close"), tw(50), 4))
+      .withColumn("vol_sma20", davgOver(col("volume"), tw(20), 4))
       .withColumn("std20", stddev_samp(col("close")).over(tw(20)))
       .withColumn("ema12", WindowOps.ewm(col("close"), col("pos"), w, EwmWindow, alphaEma12))
       .withColumn("ema26", WindowOps.ewm(col("close"), col("pos"), w, EwmWindow, alphaEma26))

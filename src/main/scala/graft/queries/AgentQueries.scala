@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.models.MarketSummary
 import org.apache.spark.sql.DataFrame
-import graft.queries.QueryDef.{oDivRound, rdiv}
+import graft.queries.QueryDef.{davgOver, oDivRound, rdiv}
 
 /** Agent-facing projections (refs dbt_project/models/agents_preprocess/
   * agent_market_performance.sql and agent_technical_signal_history
@@ -339,8 +339,7 @@ object AgentQueries {
       series.withColumn("rn", row_number().over(w).cast("long"))) {
       case (df, (c, _, weights)) =>
         val v = col(s"v_$c")
-        val m90 = sum(v.cast(DecimalType(18, 4))).over(w.rowsBetween(-89, 0)).cast("double") /
-          count(v).over(w.rowsBetween(-89, 0))
+        val m90 = davgOver(v, w.rowsBetween(-89, 0), 4)
         val df2 = df
           .withColumn(s"m90_$c", m90)
           .withColumn(s"diff3_$c", col(s"m90_$c") - lag(col(s"m90_$c"), 3).over(w))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.models.MarketAnalysisReturn
-import graft.queries.QueryDef.{nullif, oDivRound, oSnap, rdiv, rsnap}
+import graft.queries.QueryDef.{davgOver, nullif, oDivRound, oSnap, rdiv, rsnap}
 import graft.queries.FredSignalQueries.{idxOf, stgFred, stgFredSql}
 import graft.runtime.Tables
 
@@ -256,8 +256,7 @@ object AnalysisQueries2 {
         when(col("prev_v").isNotNull && col("prev_v") =!= 0,
           (col("value") - col("prev_v")) / abs(col("prev_v")) * 100))
       .withColumn("avg_12mo_change",
-        sum(col("mom_change").cast(DecimalType(18, 6))).over(fpr).cast("double") /
-          count(col("mom_change")).over(fpr))
+        davgOver(col("mom_change"), fpr))
       .withColumn("std_12mo_change", stddev_samp(col("mom_change")).over(fpr))
       .filter(col("mom_change").isNotNull)
 

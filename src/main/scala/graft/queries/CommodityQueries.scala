@@ -3,10 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
-import graft.models.MarketAnalysisReturn
-import graft.queries.QueryDef.{oDivRound, oSnap, rdiv, rsnap}
+import graft.models.{MarketAnalysisReturn, MarketSummary}
+import graft.queries.QueryDef.{oDivRound, oSnap}
 import graft.runtime.Tables
 
 /** The commodity model family 1:1 (SURVEY.md §2.M; ref dbt_project/
@@ -98,97 +97,33 @@ object CommodityQueries {
   // calculate_commodity_summary
   // ------------------------------------------------------------------
 
-  /** The summary macro: LAG changes over FULL history (the first bar
-    * inside the 5y window keeps its change from the bar before it —
-    * unlike the snapshot variant, whose LAG lives inside each
-    * window). */
-  def commoditySummary(stg: DataFrame): DataFrame = {
-    val wLag = Window.partitionBy(col("commodity_name")).orderBy(col("date"))
-    // Persisted: `base` feeds the bounds scalar AND the period frame,
-    // and `fd` below fans out to three more branches (start/end price
-    // picks + the aggregate) — without the cache each branch re-runs
-    // the staging aggregation of the fact table (VERDICT r2 §wrong-2
-    // shape). Daily-grain × #commodities rows: driver-memory small.
-    val base = stg
-      .filter(col("price").isNotNull && col("date").isNotNull && col("price") > 0)
-      .withColumn("prev_price", lag(col("price"), 1).over(wLag))
+  /** Filtered daily rows of a single-price staging with their
+    * day-over-day LAG changes over FULL history per commodity, and the
+    * previous bar's date (the snapshot variant trims the LAG to each
+    * snapshot's window with it). */
+  def dailyChanges(stg: DataFrame, date: String): DataFrame = {
+    val w = Window.partitionBy(col("commodity_name")).orderBy(col(date))
+    stg
+      .filter(col("price").isNotNull && col(date).isNotNull && col("price") > 0)
+      .withColumn("prev_price", lag(col("price"), 1).over(w))
+      .withColumn("prev_date", lag(col(date), 1).over(w))
       .withColumn("price_change", col("price") - col("prev_price"))
       .withColumn("pct_change",
         when(col("prev_price") > 0, (col("price") - col("prev_price")) / col("prev_price") * 100))
-      .persist()
-    val bounds = base.agg(max(col("date")).as("today")).select(
-      col("today"),
-      date_sub(col("today"), 84).as("w12"),
-      add_months(col("today"), -6).as("m6"),
-      add_months(col("today"), -12).as("y1"),
-      add_months(col("today"), -60).as("y5"))
-    val fd = base
-      .crossJoin(broadcast(bounds))
-      .filter(col("date") >= col("y5") && col("price_change").isNotNull)
-      .withColumn("time_period",
-        when(col("date") >= col("w12"), "12_weeks")
-          .when(col("date") >= col("m6"), "6_months")
-          .when(col("date") >= col("y1"), "1_year")
-          .otherwise("5_years"))
-      .persist()
-    val pk = Seq(col("commodity_name"), col("commodity_unit"), col("time_period"))
-    val wS = Window.partitionBy(pk: _*).orderBy(col("date").asc, col("price").asc)
-    val wE = Window.partitionBy(pk: _*).orderBy(col("date").desc, col("price").desc)
-    val priced = fd
-      .withColumn("rn_s", row_number().over(wS))
-      .withColumn("rn_e", row_number().over(wE))
-    val startP = priced.filter(col("rn_s") === 1)
-      .select(col("commodity_name").as("sp_name"), col("time_period").as("sp_period"),
-        col("price").as("period_start_price"))
-    val endP = priced.filter(col("rn_e") === 1)
-      .select(col("commodity_name").as("ep_name"), col("time_period").as("ep_period"),
-        col("price").as("period_end_price"))
-    val pctDec  = col("pct_change").cast(DecimalType(18, 6))
-    val pctDec3 = col("pct_change").cast(DecimalType(18, 3))
-    val ar = fd
-      .groupBy(pk: _*)
-      .agg(
-        min(col("date")).as("period_start_date"),
-        max(col("date")).as("period_end_date"),
-        count(lit(1)).as("trading_days"),
-        sum(col("price_change").cast(DecimalType(18, 6))).as("sum_chg_dec"),
-        min(col("price_change")).as("min_chg"),
-        max(col("price_change")).as("max_chg"),
-        sum(pctDec).as("sx_dec"),
-        sum(pctDec3).cast("double").as("sxv"),
-        sum(pctDec3 * pctDec3).cast("double").as("sx2"),
-        count(col("pct_change")).as("n_pct"),
-        sum(when(col("price_change") > 0, 1).otherwise(0)).cast("long").as("positive_days"),
-        sum(when(col("price_change") < 0, 1).otherwise(0)).cast("long").as("negative_days"),
-        sum(when(col("price_change") === 0, 1).otherwise(0)).cast("long").as("neutral_days"))
-    val vol = when(col("n_pct") > 1,
-      sqrt(greatest(
-        (col("sx2") - col("sxv") * col("sxv") / col("n_pct")) / (col("n_pct") - 1),
-        lit(0.0))) * sqrt(lit(252.0)))
-    ar
-      .join(startP, col("commodity_name") === col("sp_name") &&
-        col("time_period") === col("sp_period"), "left")
-      .join(endP, col("commodity_name") === col("ep_name") &&
-        col("time_period") === col("ep_period"), "left")
-      .select(
-        col("commodity_name"), col("commodity_unit"), col("time_period"),
-        col("period_start_date"), col("period_end_date"),
-        col("trading_days"), col("positive_days"), col("negative_days"), col("neutral_days"),
-        round(when(col("period_start_price") > 0,
-          (col("period_end_price") - col("period_start_price")) / col("period_start_price") * 100), 2)
-          .as("total_return_pct"),
-        round(col("sx_dec").cast(DecimalType(38, 6)) / col("n_pct"), 4)
-          .cast("double").as("avg_daily_return_pct"),
-        rsnap(vol, 2).as("volatility_pct"),
-        round((col("positive_days") * 100).cast(DecimalType(38, 6)) / col("trading_days"), 1)
-          .cast("double").as("win_rate_pct"),
-        rsnap(col("sum_chg_dec").cast("double"), 2).as("total_price_change"),
-        round(col("sum_chg_dec").cast(DecimalType(38, 6)) / col("trading_days"), 4)
-          .cast("double").as("avg_daily_price_change"),
-        rsnap(col("min_chg"), 2).as("worst_day_change"),
-        rsnap(col("max_chg"), 2).as("best_day_change"),
-        rsnap(col("period_start_price"), 2).as("period_start_price"),
-        rsnap(col("period_end_price"), 2).as("period_end_price"))
+  }
+
+  /** The summary macro over the period-summary kernel: LAG changes
+    * over FULL history (the first bar inside the 5y window keeps its
+    * change from the bar before it — unlike the snapshot variant, whose
+    * LAG lives inside each window); boundary prices from the one price
+    * column. */
+  def commoditySummary(stg: DataFrame): DataFrame = {
+    val fd = MarketSummary.latest(dailyChanges(stg, "date"), "date")
+      .filter(col("price_change").isNotNull)
+    val keys = Seq("commodity_name", "commodity_unit", "time_period")
+    MarketSummary.periodSummary(fd, keys, extras = Nil, lead = keys,
+      date = col("date"), open = col("price"), close = col("price"),
+      change = col("price_change"), pct = col("pct_change"))
   }
 
   def commoditySummaryOracleSql(cte: String): String = s"""

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.queries.QueryDef.r4
+import graft.queries.QueryDef.{davgOver, r4}
 import graft.runtime.{Materialized, Tables}
 
 /** The cross-asset signal family part 1 (SURVEY §2.M; refs
@@ -102,12 +102,7 @@ object CrossAssetQueries {
         WHERE symbol = '$symbol' AND adj_close IS NOT NULL
           AND date >= ${asOfSql(asOf)} - INTERVAL 36 MONTH"""
 
-  /** Decimal-exact SMA of a round-4 price over a trailing n-row frame. */
-  def exSma(c: Column, w: WindowSpec, n: Int): Column = {
-    val f = w.rowsBetween(-(n - 1), 0)
-    sum(c.cast(DecimalType(18, 6))).over(f).cast("double") / count(c).over(f)
-  }
-
+  /** Oracle mirror of a decimal-exact SMA (`davgOver` over the trailing n-row frame). */
   def exSmaSql(x: String, ord: String, n: Int): String =
     s"""CAST(SUM(CAST($x AS DECIMAL(18,6))) OVER
         (ORDER BY $ord ROWS BETWEEN ${n - 1} PRECEDING AND CURRENT ROW) AS DOUBLE)
@@ -349,7 +344,7 @@ object CrossAssetQueries {
   def riskConfirmationSignals(s: SparkSession, dir: String, asOf: Option[String]): DataFrame = {
     val wsp = Window.orderBy(col("spy_d"))
     val spy = symPrices(s, dir, asOf, "SPY", "spy_d", "spy_close")
-      .withColumn("spy_sma_50", exSma(col("spy_close"), wsp, 50))
+      .withColumn("spy_sma_50", davgOver(col("spy_close"), wsp.rowsBetween(-49, 0)))
 
     val xlp = symPrices(s, dir, asOf, "XLP", "xlp_d", "xlp_close")
     val xly = symPrices(s, dir, asOf, "XLY", "xly_d", "xly_close")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions._
-import graft.queries.QueryDef.r4
+import graft.queries.QueryDef.{davgOver, r4}
 import graft.runtime.{Materialized, Tables}
 import graft.queries.CrossAssetQueries._
 import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
@@ -82,14 +82,14 @@ object CrossAssetQueries2 {
     val wsp = Window.orderBy(col("spy_d"))
     val spy = symPrices(s, dir, asOf, "SPY", "spy_d", "spy_close")
       .select(col("spy_d"), col("spy_close"),
-        exSma(col("spy_close"), wsp, 50).as("spy_sma_50"),
-        exSma(col("spy_close"), wsp, 200).as("spy_sma_200"),
+        davgOver(col("spy_close"), wsp.rowsBetween(-49, 0)).as("spy_sma_50"),
+        davgOver(col("spy_close"), wsp.rowsBetween(-199, 0)).as("spy_sma_200"),
         max(col("spy_close")).over(wsp.rowsBetween(-251, 0)).as("spy_high_252d"))
 
     val whg = Window.orderBy(col("hyg_d"))
     val hyg = symPrices(s, dir, asOf, "HYG", "hyg_d", "hyg_close")
       .select(col("hyg_d"), col("hyg_close"),
-        exSma(col("hyg_close"), whg, 50).as("hyg_sma_50"))
+        davgOver(col("hyg_close"), whg.rowsBetween(-49, 0)).as("hyg_sma_50"))
 
     val whs = Window.orderBy(col("hs_d"))
     val hySpread = stgFred(s, dir, Seq("BAMLH0A0HYM2"))

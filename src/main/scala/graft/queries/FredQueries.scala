@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
-import graft.runtime.Tables
+import graft.runtime.{Materialized, Tables}
 import graft.queries.QueryDef.{dsum, r4}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.types.DecimalType
@@ -111,15 +111,14 @@ object FredQueries {
       .agg(QueryDef.rdiv(sum(col("l_extendedprice").cast(DecimalType(18, 6))), count(lit(1)), 4)
         .as("value"))
       .withColumn("series_name", concat(lit("Series "), col("series_code")))
-    if (!seriesKeyed) cells.persist()
+    if (!seriesKeyed) Materialized.persist(cells)
     else {
       // explicit width: a bare repartition(col) is AQE-coalescible and
       // collapses this small cache to ~1 partition, serializing every
       // exchange-free consumer chain downstream — pin the session width
-      val staged = cells
+      val staged = Materialized.persist(cells
         .repartition(s.conf.get("spark.sql.shuffle.partitions", "200").toInt,
-          col("series_code"))
-        .persist()
+          col("series_code")))
       staged.count()
       staged
     }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions._
 import graft.queries.QueryDef.{dsum, maxDate, maxDateSql, mMax, mMaxSql, nullif, oSnap, r4, rsnap}
-import graft.runtime.Tables
+import graft.runtime.{Materialized, Tables}
 
 /** The signals-schema named models driven by `stg_fred_series` (SURVEY
   * §2.M; refs dbt_project/models/signals/{liquidity,inflation,labor,
@@ -70,7 +70,8 @@ object FredSignalQueries {
   val MonthlyGrain: Set[String]   = Set("KCFSI")
   val QuarterlyGrain: Set[String] = Set("GDPC1")
 
-  /** stg_fred_series slice for `codes`: ONE lineitem scan, persisted.
+  /** stg_fred_series slice for `codes`: ONE lineitem scan, persisted
+    * unless an equal slice is cached already ([[Materialized.persist]]).
     * Columns: series_code, date, value, literal. */
   def stgFred(s: SparkSession, dir: String, codes: Seq[String]): DataFrame = {
     val idxs   = codes.map(idxOf)
@@ -87,7 +88,7 @@ object FredSignalQueries {
         .when(idxCol.isin(quarterlyIdxs.map(Int.box): _*),
           date_trunc("quarter", d0).cast("date"))
         .otherwise(d0)
-    Tables(s, dir).lineitem
+    Materialized.persist(Tables(s, dir).lineitem
       .filter(idxCol.isin(idxs.map(Int.box): _*))
       .groupBy(codeExpr.as("series_code"), (col("l_partkey") % 97).as("sidx"),
         dateExpr.as("date"))
@@ -95,8 +96,7 @@ object FredSignalQueries {
       .withColumn("literal",
         when((epochDay(col("date")) + col("sidx")) % 29 === 0, lit(null).cast("double"))
           .otherwise(col("value")))
-      .drop("sidx")
-      .persist()
+      .drop("sidx"))
   }
 
   /** Oracle-side staging CTE (`stg`) for `codes`. */

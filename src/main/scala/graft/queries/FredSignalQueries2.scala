@@ -3,10 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions._
-import graft.queries.QueryDef.{dsum, maxDate, maxDateSql, mMax, mMaxSql, nullif, oSnap, r4, rsnap}
+import graft.queries.QueryDef.{davgOver, dsum, maxDate, maxDateSql, mMax, mMaxSql, nullif, oSnap, r4, rsnap}
 import graft.runtime.Tables
 import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
 
@@ -299,12 +298,10 @@ object FredSignalQueries2 {
 
     val wd  = Window.orderBy(col("date"))
     val f24 = wd.rowsBetween(-23, 0)
-    def exAvg(c: Column): Column =
-      sum(c.cast(DecimalType(18, 6))).over(f24).cast("double") / count(c).over(f24)
     val ws = combined
-      .withColumn("umcsent_24m_avg", exAvg(col("umcsent")))
+      .withColumn("umcsent_24m_avg", davgOver(col("umcsent"), f24))
       .withColumn("umcsent_24m_std", stddev_samp(col("umcsent")).over(f24))
-      .withColumn("confidence_24m_avg", exAvg(col("confidence")))
+      .withColumn("confidence_24m_avg", davgOver(col("confidence"), f24))
       .withColumn("confidence_24m_std", stddev_samp(col("confidence")).over(f24))
       .withColumn("ipman_12m_ago", lag(col("ipman"), 12).over(wd))
       .withColumn("ipman_3m_ago", lag(col("ipman"), 3).over(wd))

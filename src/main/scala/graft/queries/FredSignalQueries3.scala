@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions._
-import graft.queries.QueryDef.{dsum, maxDate, maxDateSql, mMax, mMaxSql, nullif, oDivRound, oSnap, r4, rdiv, rsnap}
+import graft.queries.QueryDef.{davgOver, dsum, maxDate, maxDateSql, mMax, mMaxSql, nullif, oDivRound, oSnap, r4, rdiv, rsnap}
 import graft.runtime.Tables
 import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
 
@@ -65,8 +65,7 @@ object FredSignalQueries3 {
         col("anfci_value"), col("stl_fsi_value"), col("kc_fsi_value"),
         lag(col("nfci_value"), 4).over(wn).as("nfci_4w_ago"),
         lag(col("nfci_value"), 13).over(wn).as("nfci_13w_ago"),
-        (sum(col("nfci_value").cast(DecimalType(18, 6))).over(f13).cast("double") /
-          count(col("nfci_value")).over(f13)).as("nfci_13w_avg"))
+        davgOver(col("nfci_value"), f13).as("nfci_13w_avg"))
 
     val ll = mMax(stg, "DRTSCILM", "lending_standards_large", "ll_m")
     val ls = mMax(stg, "DRTSCIS", "lending_standards_small", "ls_m")
@@ -327,14 +326,12 @@ object FredSignalQueries3 {
 
     val wd  = Window.orderBy(col("date"))
     val fpr = wd.rowsBetween(-24, -1)
-    def exAvg(c: Column): Column =
-      sum(c.cast(DecimalType(18, 6))).over(fpr).cast("double") / count(c).over(fpr)
     val ws = combined
       .withColumn("payems_accel_zscore",
-        (col("payems_acceleration") - exAvg(col("payems_acceleration"))) /
+        (col("payems_acceleration") - davgOver(col("payems_acceleration"), fpr)) /
           nullif(stddev_samp(col("payems_acceleration")).over(fpr)))
       .withColumn("cpi_accel_zscore",
-        (col("cpi_acceleration") - exAvg(col("cpi_acceleration"))) /
+        (col("cpi_acceleration") - davgOver(col("cpi_acceleration"), fpr)) /
           nullif(stddev_samp(col("cpi_acceleration")).over(fpr)))
 
     val nz = when(col("payems_accel_zscore").isNotNull, 1).otherwise(0) +
@@ -515,8 +512,7 @@ object FredSignalQueries3 {
     val f252 = wd.rowsBetween(-251, 0)
     val wm = base
       .withColumn("chg_1y_avg",
-        sum(col("hy_oas_20d_change").cast(DecimalType(18, 6))).over(f252).cast("double") /
-          count(col("hy_oas_20d_change")).over(f252))
+        davgOver(col("hy_oas_20d_change"), f252))
       .withColumn("chg_1y_std", stddev_samp(col("hy_oas_20d_change")).over(f252))
       .withColumn("hy_oas_20d_avg_prev", lag(col("hy_oas_20d_avg"), 1).over(wd))
       .withColumn("hy_oas_60d_avg_prev", lag(col("hy_oas_60d_avg"), 1).over(wd))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.models.MarketAnalysisReturn
-import graft.queries.QueryDef.{dsum, maxDate, maxDateSql, nullif, oDivRound, oSnap, r4, rdiv, rsnap}
+import graft.queries.QueryDef.{davgOver, dsum, maxDate, maxDateSql, nullif, oDivRound, oSnap, r4, rdiv, rsnap}
 import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
 import graft.runtime.Tables
 
@@ -215,8 +215,7 @@ object FredSignalQueries4 {
       val w = Window.orderBy(col("date"))
       prices.filter(col("symbol") === sym && col("adj_close").isNotNull)
         .withColumn("__sma",
-          sum(col("adj_close").cast(DecimalType(18, 6))).over(w.rowsBetween(-199, 0))
-            .cast("double") / count(col("adj_close")).over(w.rowsBetween(-199, 0)))
+          davgOver(col("adj_close"), w.rowsBetween(-199, 0)))
         .select(col("date").as(dcol),
           when(col("adj_close") > col("__sma"), 1).otherwise(0).as(fcol))
     }
@@ -453,12 +452,10 @@ object FredSignalQueries4 {
       .withColumn("diffusion_prev_month", lag(col("diffusion_pct"), 1).over(wd))
       .withColumn("diffusion_3m_ago", lag(col("diffusion_pct"), 3).over(wd))
       .withColumn("diffusion_6m_avg",
-        sum(col("diffusion_pct").cast(DecimalType(18, 6))).over(f6).cast("double") /
-          count(col("diffusion_pct")).over(f6))
+        davgOver(col("diffusion_pct"), f6))
       .withColumn("diffusion_zscore",
         (col("diffusion_pct") -
-          (sum(col("diffusion_pct").cast(DecimalType(18, 6))).over(f24).cast("double") /
-            count(col("diffusion_pct")).over(f24))) /
+          davgOver(col("diffusion_pct"), f24)) /
           nullif(stddev_samp(col("diffusion_pct")).over(f24)))
 
     wt.crossJoin(broadcast(maxDate(s, dir)))
@@ -565,8 +562,7 @@ object FredSignalQueries4 {
       .filter(col("series_code") === "VIXCLS")
       .select(col("date").as("v_d"), col("value").as("vix_close"))
       .withColumn("vix_avg_20d",
-        sum(col("vix_close").cast(DecimalType(18, 6))).over(wv.rowsBetween(-19, 0))
-          .cast("double") / count(col("vix_close")).over(wv.rowsBetween(-19, 0)))
+        davgOver(col("vix_close"), wv.rowsBetween(-19, 0)))
       .withColumn("vix_min_20d", min(col("vix_close")).over(wv.rowsBetween(-19, 0)))
       .withColumn("vix_max_20d", max(col("vix_close")).over(wv.rowsBetween(-19, 0)))
       .withColumn("vix_prev_close", lag(col("vix_close"), 1).over(wv))

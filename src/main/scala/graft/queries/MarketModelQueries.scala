@@ -3,11 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions._
 import graft.runtime.Tables
-import graft.queries.QueryDef.{dsum, r4}
+import graft.queries.QueryDef.{davgOver, dsum, r4}
 
 /** Reference market-model families (SURVEY.md §2.M signals/analysis):
   * volatility estimators, signal-event state machine, market breadth,
@@ -94,13 +93,10 @@ object MarketModelQueries {
         val b   = ModelQueries.bars(s, dir)
         val w   = Window.partitionBy(col("symbol")).orderBy(col("d"))
         val cum = w.rowsBetween(Window.unboundedPreceding, 0)
-        def exactAvg(c: org.apache.spark.sql.Column, n: Int) =
-          sum(c.cast(DecimalType(18, 4))).over(w.rowsBetween(-(n - 1), 0)).cast("double") /
-            count(c).over(w.rowsBetween(-(n - 1), 0))
         val staged = b
           .withColumn("bars_available", row_number().over(w).cast("long"))
-          .withColumn("sma20", exactAvg(col("close"), 20))
-          .withColumn("sma50", exactAvg(col("close"), 50))
+          .withColumn("sma20", davgOver(col("close"), w.rowsBetween(-19, 0), 4))
+          .withColumn("sma50", davgOver(col("close"), w.rowsBetween(-49, 0), 4))
         val staged2 = staged
           .withColumn("above", col("sma20") > col("sma50"))
           .withColumn("prev_above", lag(col("above"), 1).over(w))
@@ -172,8 +168,7 @@ object MarketModelQueries {
         val f20    = wAsset.rowsBetween(-19, 0)
         val marked = series
           .withColumn("prev_v", lag(col("v"), 1).over(wAsset))
-          .withColumn("sma20", sum(col("v").cast(DecimalType(18, 4))).over(f20).cast("double") /
-            count(col("v")).over(f20))
+          .withColumn("sma20", davgOver(col("v"), f20, 4))
           .withColumn("advancing", col("v") > col("prev_v"))
           .withColumn("above_sma", col("v") > col("sma20"))
           .filter(col("prev_v").isNotNull)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.DecimalType
 import graft.functions.GraftFunctions.epochDay
 import graft.operators.TimeSeriesOps
 import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
-import graft.queries.QueryDef.{oDivRound, oSnap, rdiv, rsnap}
+import graft.queries.QueryDef.{davgOver, oDivRound, oSnap, rdiv, rsnap}
 import graft.runtime.Tables
 
 /** The remaining market-signals analysis models 1:1:
@@ -96,15 +96,13 @@ object MarketSignalsQueries {
 
     val wSym = Window.partitionBy(col("symbol")).orderBy(col("date"))
     def tw(n: Int) = wSym.rowsBetween(-(n - 1), 0)
-    def exAvg(c: Column, n: Int): Column =
-      sum(c.cast(DecimalType(18, 6))).over(tw(n)).cast("double") / count(c).over(tw(n))
 
     val sig = stocks
       .crossJoin(broadcast(anchor))
       .filter(col("adj_close").isNotNull && col("adj_close") > 0 &&
         col("date") >= add_months(col("today"), -36))
-      .withColumn("sma_50", exAvg(col("adj_close"), 50))
-      .withColumn("sma_200", exAvg(col("adj_close"), 200))
+      .withColumn("sma_50", davgOver(col("adj_close"), tw(50)))
+      .withColumn("sma_200", davgOver(col("adj_close"), tw(200)))
       .withColumn("prev_price", lag(col("adj_close"), 1).over(wSym))
       .withColumn("n200", count(lit(1)).over(tw(200)))
       .select(col("symbol"), col("date"), col("adj_close"), col("volume"),
@@ -195,7 +193,7 @@ object MarketSignalsQueries {
       .crossJoin(broadcast(anchor))
       .filter(col("adj_close").isNotNull && col("date") >= add_months(col("today"), -36))
     val sectSma = sect
-      .withColumn("sma_200", exAvg(col("adj_close"), 200))
+      .withColumn("sma_200", davgOver(col("adj_close"), tw(200)))
       .withColumn("n200", count(lit(1)).over(tw(200)))
     val participation = sectSma
       .groupBy(col("date").as("p_date"))
@@ -499,8 +497,6 @@ object MarketSignalsQueries {
   private def technicalSignals(s: SparkSession, dir: String): DataFrame = {
     val wd = Window.orderBy(col("date"))
     def dw(n: Int) = wd.rowsBetween(-(n - 1), 0)
-    def exAvg(c: Column, n: Int): Column =
-      sum(c.cast(DecimalType(18, 6))).over(dw(n)).cast("double") / count(c).over(dw(n))
     def nz(c: Column): Column = when(c =!= 0, c)
 
     val spyDaily = adjStaging(s, dir,
@@ -512,16 +508,16 @@ object MarketSignalsQueries {
       .filter(col("daily_change").isNotNull)
       .withColumn("gain", when(col("daily_change") > 0, col("daily_change")).otherwise(0.0))
       .withColumn("loss", when(col("daily_change") < 0, abs(col("daily_change"))).otherwise(0.0))
-      .withColumn("ag14", exAvg(col("gain"), 14))
-      .withColumn("al14", exAvg(col("loss"), 14))
-      .withColumn("ag2", exAvg(col("gain"), 2))
-      .withColumn("al2", exAvg(col("loss"), 2))
+      .withColumn("ag14", davgOver(col("gain"), dw(14)))
+      .withColumn("al14", davgOver(col("loss"), dw(14)))
+      .withColumn("ag2", davgOver(col("gain"), dw(2)))
+      .withColumn("al2", davgOver(col("loss"), dw(2)))
       .select(col("date"), col("adj_close"),
         round(lit(100) - lit(100.0) / (lit(1) + col("ag14") / nz(col("al14"))), 2).as("rsi_14"),
         round(lit(100) - lit(100.0) / (lit(1) + col("ag2") / nz(col("al2"))), 2).as("rsi_2"))
 
     val boll = spyDaily
-      .withColumn("bb_middle", exAvg(col("adj_close"), 20))
+      .withColumn("bb_middle", davgOver(col("adj_close"), dw(20)))
       .withColumn("bb_stddev", stddev_samp(col("adj_close")).over(dw(20)))
       .withColumn("bb_bandwidth_raw",
         round(lit(4) * col("bb_stddev") / nz(col("bb_middle")) * 100, 4))
@@ -537,7 +533,7 @@ object MarketSignalsQueries {
           nz(lit(4) * col("bb_stddev")), 4).as("bb_position"))
 
     val zscore = spyDaily
-      .withColumn("mean_60d", exAvg(col("adj_close"), 60))
+      .withColumn("mean_60d", davgOver(col("adj_close"), dw(60)))
       .withColumn("std_60d", stddev_samp(col("adj_close")).over(dw(60)))
       .select(col("date").as("z_date"),
         round((col("adj_close") - col("mean_60d")) / nz(col("std_60d")), 2).as("zscore_60d"))
@@ -731,8 +727,6 @@ object MarketSignalsQueries {
     def dw(n: Int) = wd.rowsBetween(-(n - 1), 0)
     def exAvgR(c: Column, n: Int, outScale: Int): Column =
       rdiv(sum(c.cast(DecimalType(18, 6))).over(dw(n)), count(c).over(dw(n)), outScale)
-    def exAvgRaw(c: Column, n: Int): Column =
-      sum(c.cast(DecimalType(18, 6))).over(dw(n)).cast("double") / count(c).over(dw(n))
 
     val cgRatio = when(col("gold_price") > 0 && col("copper_price").isNotNull,
       col("copper_price") / col("gold_price") * 1000)
@@ -741,13 +735,13 @@ object MarketSignalsQueries {
     val calc = combined
       .withColumn("copper_gold_ratio_raw", cgRatio)
       .withColumn("gold_spy_ratio_raw", gsRatio)
-      .withColumn("oil_sma_20_raw", exAvgRaw(col("oil_price"), 20))
-      .withColumn("oil_sma_50_raw", exAvgRaw(col("oil_price"), 50))
+      .withColumn("oil_sma_20_raw", davgOver(col("oil_price"), dw(20)))
+      .withColumn("oil_sma_50_raw", davgOver(col("oil_price"), dw(50)))
       .withColumn("oil_sma_20", exAvgR(col("oil_price"), 20, 2))
       .withColumn("oil_sma_50", exAvgR(col("oil_price"), 50, 2))
-      .withColumn("copper_gold_sma_20", round(exAvgRaw(cgRatio, 20), 4))
-      .withColumn("gold_spy_sma_20", round(exAvgRaw(gsRatio, 20), 4))
-      .withColumn("copper_gold_sma_20_raw", exAvgRaw(cgRatio, 20))
+      .withColumn("copper_gold_sma_20", round(davgOver(cgRatio, dw(20)), 4))
+      .withColumn("gold_spy_sma_20", round(davgOver(gsRatio, dw(20)), 4))
+      .withColumn("copper_gold_sma_20_raw", davgOver(cgRatio, dw(20)))
 
     val anchor = allDates.agg(max(col("date")).as("today"))
     calc

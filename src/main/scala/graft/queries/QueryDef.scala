@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -42,6 +43,11 @@ object QueryDef {
   /** Exact mean built on the decimal sum. */
   def davg(c: Column): Column =
     sum(c.cast(DecimalType(18, 6))).cast("double") / count(c)
+
+  /** [[davg]] over a window `frame`, with the decimal sum at `scale`
+    * (the oracle side casts to the same DECIMAL(18, scale)). */
+  def davgOver(c: Column, frame: WindowSpec, scale: Int = 6): Column =
+    sum(c.cast(DecimalType(18, scale))).over(frame).cast("double") / count(c).over(frame)
 
   def r4(c: Column): Column = round(c, 4)
 

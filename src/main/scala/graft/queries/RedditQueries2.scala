@@ -3,9 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
-import graft.queries.QueryDef.{oSnap, rsnap}
+import graft.queries.QueryDef.{davg, oSnap, rsnap}
 import graft.runtime.Tables
 
 /** reddit_sentiment_trends (ref dbt_project/models/analysis/
@@ -86,8 +85,6 @@ object RedditQueries2 {
     MiscModelQueries.redditPosts(s, dir)
 
   private def sentimentTrends(s: SparkSession, dir: String): DataFrame = {
-    def exAvg(c: Column): Column =
-      sum(c.cast(DecimalType(18, 6))).cast("double") / count(c)
     val eng = posts(s, dir)
       .groupBy(col("partition_date"), col("subreddit"))
       .agg(
@@ -112,16 +109,16 @@ object RedditQueries2 {
       .groupBy(col("pd"), col("subreddit").as("s_sub"))
       .agg(
         count(lit(1)).as("total_scored"),
-        exAvg(col("compound_score")).as("avg_compound"),
-        exAvg(when(col("content_type").like("post%"), col("compound_score")))
+        davg(col("compound_score")).as("avg_compound"),
+        davg(when(col("content_type").like("post%"), col("compound_score")))
           .as("avg_post_sentiment"),
-        exAvg(when(col("content_type") === "comment", col("compound_score")))
+        davg(when(col("content_type") === "comment", col("compound_score")))
           .as("avg_comment_sentiment"),
         (sum(when(col("sentiment_label") === "positive", 1).otherwise(0)).cast("double") /
           count(lit(1)) * 100).as("pct_positive"),
         (sum(when(col("sentiment_label") === "negative", 1).otherwise(0)).cast("double") /
           count(lit(1)) * 100).as("pct_negative"),
-        exAvg(col("sentiment_intensity")).as("avg_intensity"),
+        davg(col("sentiment_intensity")).as("avg_intensity"),
         sum(when(col("sentiment_strength") === "very_positive", 1).otherwise(0))
           .cast("long").as("very_positive_count"),
         sum(when(col("sentiment_strength") === "very_negative", 1).otherwise(0))

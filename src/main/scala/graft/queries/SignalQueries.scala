@@ -3,12 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions._
 import graft.signals.NumericSignals
 import graft.runtime.Tables
-import graft.queries.QueryDef.{dsum, oSnap, r4, rsnap}
+import graft.queries.QueryDef.{davgOver, dsum, oSnap, r4, rsnap}
 
 /** Numeric research-signal queries (SURVEY.md §2.K). The linear-
   * algebra signals (Mahalanobis turbulence, eigen absorption ratio,
@@ -371,8 +370,7 @@ object SignalQueries {
           .agg(r4(dsum(col("l_extendedprice"))).as("v"))
         val w       = Window.orderBy(col("d"))
         val weights = (0 until 12).map(i => (12.0 - i) / 78.0) // w(0)=newest
-        val m90 = sum(col("v").cast(DecimalType(18, 4))).over(w.rowsBetween(-89, 0)).cast("double") /
-          count(col("v")).over(w.rowsBetween(-89, 0))
+        val m90 = davgOver(col("v"), w.rowsBetween(-89, 0), 4)
         val base = series
           .withColumn("rn", row_number().over(w).cast("long"))
           .withColumn("m90", m90)

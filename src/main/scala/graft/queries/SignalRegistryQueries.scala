@@ -3,9 +3,8 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
-import graft.queries.QueryDef.r4
+import graft.queries.QueryDef.{davgOver, r4}
 
 /** Multi-signal event registry (SURVEY §2.J; ref
   * technical_signal_events.sql:30-143 — 14-entry registry of
@@ -22,14 +21,11 @@ object SignalRegistryQueries {
       (s, dir) => {
         val b = ModelQueries.bars(s, dir)
         val w = Window.partitionBy(col("symbol")).orderBy(col("d"))
-        def exactAvg(c: org.apache.spark.sql.Column, n: Int) =
-          sum(c.cast(DecimalType(18, 4))).over(w.rowsBetween(-(n - 1), 0)).cast("double") /
-            count(c).over(w.rowsBetween(-(n - 1), 0))
 
         val ind = b
           .withColumn("bars", row_number().over(w).cast("long"))
-          .withColumn("sma20", exactAvg(col("close"), 20))
-          .withColumn("sma50", exactAvg(col("close"), 50))
+          .withColumn("sma20", davgOver(col("close"), w.rowsBetween(-19, 0), 4))
+          .withColumn("sma50", davgOver(col("close"), w.rowsBetween(-49, 0), 4))
           .withColumn("std20", stddev_samp(col("close")).over(w.rowsBetween(-19, 0)))
           .withColumn("don_high20", max(col("high")).over(w.rowsBetween(-20, -1)))
           .withColumn("low14", min(col("low")).over(w.rowsBetween(-13, 0)))

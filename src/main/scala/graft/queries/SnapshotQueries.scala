@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions.qualifyRowNumber
 import graft.models.MarketSummary
-import graft.queries.QueryDef.{dsum, oDivRound, oSnap, r4, rdiv, rsnap}
+import graft.queries.QueryDef.{oDivRound, oSnap, r4, rdiv}
 import graft.runtime.Tables
 
 /** The backtesting snapshot family 1:1 (SURVEY.md §2.M backtesting
@@ -66,86 +66,34 @@ object SnapshotQueries {
   // OHLC summary snapshot template (us_sector_summary_snapshot.sql)
   // ------------------------------------------------------------------
 
-  /** Snapshot variant of [[MarketSummary.summarize]]: same bands,
-    * moments and boundary-price QUALIFY, re-anchored per month-start
-    * snapshot_date. `uni` columns as in summarize. */
-  def summarizeSnapshot(uni: DataFrame, cutoff: String): DataFrame = {
-    val spine = uni
-      .filter(col("trade_date") >= to_date(lit(cutoff)))
-      .select(trunc(col("trade_date"), "month").as("snapshot_date"))
-      .distinct()
-    val base = uni
-      .filter(col("trade_date").isNotNull && col("open").isNotNull &&
-        col("close").isNotNull && col("open") > 0)
-      .join(broadcast(spine),
-        col("trade_date") <= col("snapshot_date") &&
-          col("trade_date") >= add_months(col("snapshot_date"), -60))
-      .withColumn("pca", col("adj_close") - col("adj_open"))
-      .withColumn("pcta",
-        when(col("adj_open") > 0, (col("adj_close") - col("adj_open")) / col("adj_open") * 100))
-      .withColumn("time_period",
-        when(col("trade_date") >= date_sub(col("snapshot_date"), 84), "12_weeks")
-          .when(col("trade_date") >= add_months(col("snapshot_date"), -6), "6_months")
-          .when(col("trade_date") >= add_months(col("snapshot_date"), -12), "1_year")
-          .otherwise("5_years"))
+  /** Month-start snapshot_dates of `df`'s trade dates from `cutoff` on. */
+  private def spine(df: DataFrame, cutoff: String): DataFrame = df
+    .filter(col("trade_date") >= to_date(lit(cutoff)))
+    .select(trunc(col("trade_date"), "month").as("snapshot_date"))
+    .distinct()
 
-    // Boundary-price picks as MIN/MAX over (date, price) structs inside
-    // the ONE aggregation pass: "first row by (trade_date ASC, price
-    // ASC)" is exactly the lexicographic struct minimum, so the
-    // row_number windows + two re-joins (which forced a full shuffle
-    // and sort of the spine-amplified frame, plus a persist to share
-    // it across three consumers) collapse into ordinary aggregates —
-    // the amplified rows now flow broadcast-join → map-side partial
-    // aggregation in a single stage and never shuffle at full width.
-    val pctDec  = col("pcta").cast(DecimalType(18, 6))
-    val pctDec3 = col("pcta").cast(DecimalType(18, 3))
-    val ar = base.groupBy(col("snapshot_date"), col("symbol"), col("asset_type"), col("time_period"))
-      .agg(
-        max(col("exchange")).as("exchange"),
-        max(col("name")).as("name"),
-        min(col("trade_date")).as("period_start_date"),
-        max(col("trade_date")).as("period_end_date"),
-        min(struct(col("trade_date"), col("adj_open"))).getField("adj_open")
-          .as("period_start_price"),
-        max(struct(col("trade_date"), col("adj_close"))).getField("adj_close")
-          .as("period_end_price"),
-        count(lit(1)).as("trading_days"),
-        sum(col("pca").cast(DecimalType(18, 6))).as("sum_adj_dec"),
-        min(col("pca")).as("min_adj"),
-        max(col("pca")).as("max_adj"),
-        sum(pctDec).as("sx_dec"),
-        sum(pctDec3).cast("double").as("sxv"),
-        sum(pctDec3 * pctDec3).cast("double").as("sx2"),
-        count(col("pcta")).as("n_pct"),
-        sum(when(col("pca") > 0, 1).otherwise(0)).cast("long").as("positive_days"),
-        sum(when(col("pca") < 0, 1).otherwise(0)).cast("long").as("negative_days"),
-        sum(when(col("pca") === 0, 1).otherwise(0)).cast("long").as("neutral_days"))
-    val vol = when(col("n_pct") > 1,
-      sqrt(greatest(
-        (col("sx2") - col("sxv") * col("sxv") / col("n_pct")) / (col("n_pct") - 1),
-        lit(0.0))) * sqrt(lit(252.0)))
-    ar
-      .select(
-        col("snapshot_date"), col("symbol"), col("asset_type"), col("time_period"),
-        col("exchange"), col("name"),
-        col("period_start_date"), col("period_end_date"),
-        col("trading_days"), col("positive_days"), col("negative_days"), col("neutral_days"),
-        round(when(col("period_start_price") > 0,
-          (col("period_end_price") - col("period_start_price")) / col("period_start_price") * 100), 2)
-          .as("total_return_pct"),
-        round(col("sx_dec").cast(DecimalType(38, 6)) / col("n_pct"), 4)
-          .cast("double").as("avg_daily_return_pct"),
-        rsnap(vol, 2).as("volatility_pct"),
-        round((col("positive_days") * 100).cast(DecimalType(38, 6)) / col("trading_days"), 1)
-          .cast("double").as("win_rate_pct"),
-        rsnap(col("sum_adj_dec").cast("double"), 2).as("total_price_change"),
-        round(col("sum_adj_dec").cast(DecimalType(38, 6)) / col("trading_days"), 4)
-          .cast("double").as("avg_daily_price_change"),
-        rsnap(col("min_adj"), 2).as("worst_day_change"),
-        rsnap(col("max_adj"), 2).as("best_day_change"),
-        rsnap(col("period_start_price"), 2).as("period_start_price"),
-        rsnap(col("period_end_price"), 2).as("period_end_price"))
+  /** `rows` fanned out to every snapshot whose 5y window holds them
+    * (`trade_date` ∈ [snapshot − 5y, snapshot]) and banded against that
+    * snapshot. The spine is tiny and broadcast, so the amplified rows
+    * flow straight into the kernel's map-side partial aggregation and
+    * never pass a window or a full-width shuffle. */
+  private def onSpine(rows: DataFrame, spineOf: DataFrame, cutoff: String): DataFrame = {
+    val (d, sd) = (col("trade_date"), col("snapshot_date"))
+    rows
+      .join(broadcast(spine(spineOf, cutoff)), d <= sd && d >= MarketSummary.fiveYearsBefore(sd))
+      .withColumn("time_period", MarketSummary.band(d, sd))
   }
+
+  /** Snapshot variant of [[MarketSummary.summarize]]: same bands,
+    * moments and boundary prices, re-anchored per month-start
+    * snapshot_date. `uni` columns as in summarize. */
+  def summarizeSnapshot(uni: DataFrame, cutoff: String): DataFrame =
+    MarketSummary.periodSummary(onSpine(MarketSummary.intraday(uni), uni, cutoff),
+      keys = Seq("snapshot_date", "symbol", "asset_type", "time_period"),
+      extras = Seq(max(col("exchange")).as("exchange"), max(col("name")).as("name")),
+      lead = Seq("snapshot_date", "symbol", "asset_type", "time_period", "exchange", "name"),
+      date = col("trade_date"), open = col("adj_open"), close = col("adj_close"),
+      change = col("pca"), pct = col("pcta"))
 
   /** DuckDB oracle for [[summarizeSnapshot]]; `uniCte` defines `uni`. */
   def ohlcSnapshotOracleSql(uniCte: String, cutoff: String): String = s"""
@@ -281,88 +229,25 @@ object SnapshotQueries {
   /** Snapshot summary over a single-price commodity staging (ref
     * energy_commodities_summary_snapshot.sql): LAG price changes are
     * computed per (snapshot_date, commodity_name) inside the 5y
-    * window, so every snapshot's first bar drops. */
+    * window, so every snapshot's first bar drops.
+    *
+    * The per-(snapshot, commodity) LAG equals the GLOBAL per-commodity
+    * LAG for every row whose predecessor also falls inside the 60m
+    * window — and the only rows where they differ (predecessor before
+    * the window start) are exactly the ones the per-snapshot form
+    * DROPS as its null first bar. So: one lag over the raw staging
+    * (40k rows, one small shuffle), then spine-join and keep rows with
+    * prev_date >= window start — identical output, and the
+    * spine-amplified frame never passes through a window exec. */
   def commoditySnapshot(stg: DataFrame, cutoff: String): DataFrame = {
-    val spine = stg
-      .filter(col("trade_date") >= to_date(lit(cutoff)))
-      .select(trunc(col("trade_date"), "month").as("snapshot_date"))
-      .distinct()
-    // The per-(snapshot, commodity) LAG equals the GLOBAL per-commodity
-    // LAG for every row whose predecessor also falls inside the 60m
-    // window — and the only rows where they differ (predecessor before
-    // the window start) are exactly the ones the original per-snapshot
-    // form DROPS as its null first bar. So: one lag over the raw
-    // staging (40k rows, one small shuffle), then spine-join and keep
-    // rows with prev_date >= window start — identical output, and the
-    // spine-amplified frame never passes through a window exec.
-    val wG = Window.partitionBy(col("commodity_name")).orderBy(col("trade_date"))
-    val lagged = stg
-      .filter(col("price").isNotNull && col("trade_date").isNotNull && col("price") > 0)
-      .withColumn("prev_price", lag(col("price"), 1).over(wG))
-      .withColumn("prev_date", lag(col("trade_date"), 1).over(wG))
-      .withColumn("price_change", col("price") - col("prev_price"))
-      .withColumn("pct_change",
-        when(col("prev_price") > 0, (col("price") - col("prev_price")) / col("prev_price") * 100))
+    val lagged = CommodityQueries.dailyChanges(stg, "trade_date")
       .filter(col("price_change").isNotNull)
-    val base = lagged
-      .join(broadcast(spine),
-        col("trade_date") <= col("snapshot_date") &&
-          col("trade_date") >= add_months(col("snapshot_date"), -60) &&
-          col("prev_date") >= add_months(col("snapshot_date"), -60))
-      .withColumn("time_period",
-        when(col("trade_date") >= date_sub(col("snapshot_date"), 84), "12_weeks")
-          .when(col("trade_date") >= add_months(col("snapshot_date"), -6), "6_months")
-          .when(col("trade_date") >= add_months(col("snapshot_date"), -12), "1_year")
-          .otherwise("5_years"))
-
-    // Boundary picks as struct MIN/MAX in the single aggregation pass
-    // (see summarizeSnapshot) — no row_number windows, no persist.
-    val pctDec  = col("pct_change").cast(DecimalType(18, 6))
-    val pctDec3 = col("pct_change").cast(DecimalType(18, 3))
-    val ar = base
-      .groupBy(col("snapshot_date"), col("commodity_name"), col("commodity_unit"), col("time_period"))
-      .agg(
-        min(col("trade_date")).as("period_start_date"),
-        max(col("trade_date")).as("period_end_date"),
-        min(struct(col("trade_date"), col("price"))).getField("price")
-          .as("period_start_price"),
-        max(struct(col("trade_date"), col("price"))).getField("price")
-          .as("period_end_price"),
-        count(lit(1)).as("trading_days"),
-        sum(col("price_change").cast(DecimalType(18, 6))).as("sum_chg_dec"),
-        min(col("price_change")).as("min_chg"),
-        max(col("price_change")).as("max_chg"),
-        sum(pctDec).as("sx_dec"),
-        sum(pctDec3).cast("double").as("sxv"),
-        sum(pctDec3 * pctDec3).cast("double").as("sx2"),
-        count(col("pct_change")).as("n_pct"),
-        sum(when(col("price_change") > 0, 1).otherwise(0)).cast("long").as("positive_days"),
-        sum(when(col("price_change") < 0, 1).otherwise(0)).cast("long").as("negative_days"),
-        sum(when(col("price_change") === 0, 1).otherwise(0)).cast("long").as("neutral_days"))
-    val vol = when(col("n_pct") > 1,
-      sqrt(greatest(
-        (col("sx2") - col("sxv") * col("sxv") / col("n_pct")) / (col("n_pct") - 1),
-        lit(0.0))) * sqrt(lit(252.0)))
-    ar
-      .select(
-        col("snapshot_date"), col("commodity_name"), col("commodity_unit"), col("time_period"),
-        col("period_start_date"), col("period_end_date"),
-        col("trading_days"), col("positive_days"), col("negative_days"), col("neutral_days"),
-        round(when(col("period_start_price") > 0,
-          (col("period_end_price") - col("period_start_price")) / col("period_start_price") * 100), 2)
-          .as("total_return_pct"),
-        round(col("sx_dec").cast(DecimalType(38, 6)) / col("n_pct"), 4)
-          .cast("double").as("avg_daily_return_pct"),
-        rsnap(vol, 2).as("volatility_pct"),
-        round((col("positive_days") * 100).cast(DecimalType(38, 6)) / col("trading_days"), 1)
-          .cast("double").as("win_rate_pct"),
-        rsnap(col("sum_chg_dec").cast("double"), 2).as("total_price_change"),
-        round(col("sum_chg_dec").cast(DecimalType(38, 6)) / col("trading_days"), 4)
-          .cast("double").as("avg_daily_price_change"),
-        rsnap(col("min_chg"), 2).as("worst_day_change"),
-        rsnap(col("max_chg"), 2).as("best_day_change"),
-        rsnap(col("period_start_price"), 2).as("period_start_price"),
-        rsnap(col("period_end_price"), 2).as("period_end_price"))
+    val keys = Seq("snapshot_date", "commodity_name", "commodity_unit", "time_period")
+    val fd = onSpine(lagged, stg, cutoff)
+      .filter(col("prev_date") >= MarketSummary.fiveYearsBefore(col("snapshot_date")))
+    MarketSummary.periodSummary(fd, keys, extras = Nil, lead = keys,
+      date = col("trade_date"), open = col("price"), close = col("price"),
+      change = col("price_change"), pct = col("pct_change"))
   }
 
   def commoditySnapshotOracleSql(cte: String, cutoff: String): String = s"""

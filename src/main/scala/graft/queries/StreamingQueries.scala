@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 
+import graft.runtime.GraftSession
 import graft.streaming.StreamingIngest
 
 /** Oracle-checked Structured Streaming queries (SURVEY.md §2.N).
@@ -27,30 +28,18 @@ import graft.streaming.StreamingIngest
   */
 object StreamingQueries {
 
-  /** Run `out` to completion via AvailableNow into a memory sink and
+  /** Build a stream in `s`'s streaming session
+    * ([[graft.runtime.GraftSession.streaming]], 8 state partitions),
+    * run it to completion via AvailableNow into a memory sink and
     * return the result table. Fresh checkpoint per call → the stream
-    * re-reads from scratch, so repeated calls (Bench) re-execute.
-    *
-    * State partition count: every stateful query in this file keeps
-    * KEY-BOUNDED state (grouped totals by flag×status, 7-day windows,
-    * CMS d×w cells, interval-bounded join buffers), and the per-batch
-    * cost of an HDFS-backed state store is load/commit PER PARTITION
-    * PER STATEFUL OPERATOR (~80 ms each, measured for VERDICT r9 #5):
-    * at the session's 32 shuffle partitions the interval join paid
-    * 2.6-2.8 s per batch for 40 k state rows, and
-    * the same fixed cost applied to every sibling here. The count is
-    * set to 8 for the duration of the run (restored after) — sized to
-    * these streams' key cardinality, the same per-stream knob a real
-    * deployment tunes (SCALE.md §6 #1); state volume is bounded either
-    * way, and the partition count does not affect emitted rows. */
-  private def runToTable(name: String, out: DataFrame, mode: String): DataFrame = {
-    val spark = out.sparkSession
-    spark.catalog.dropTempView(name) // stale result from a prior call, if any
+    * re-reads from scratch, so repeated calls (Bench) re-execute. */
+  private def runToTable(s: SparkSession, name: String, mode: String)(
+      build: SparkSession => DataFrame): DataFrame = {
+    val ss = GraftSession.streaming(s)
+    ss.catalog.dropTempView(name) // stale result from a prior call, if any
     val ckpt = Files.createTempDirectory(s"graft_ckpt_$name")
-    val priorShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8") // state partitions, fixed at stream start
     try {
-      val q = out.writeStream
+      val q = build(ss).writeStream
         .format("memory")
         .queryName(name)
         .outputMode(mode)
@@ -58,9 +47,8 @@ object StreamingQueries {
         .option("checkpointLocation", ckpt.toString)
         .start()
       q.awaitTermination()
-      spark.table(name)
+      ss.table(name)
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", priorShuffle)
       // The memory-sink table is driver-resident after termination;
       // the checkpoint (offsets + state store) is dead weight. Delete
       // it so repeated Bench/Verify runs don't accumulate /tmp trees.
@@ -88,14 +76,13 @@ object StreamingQueries {
     // planner end-to-end.
     QueryDef(
       "q_stream_agg_totals",
-      (s, dir) => {
-        val agg = stream(s, dir, "lineitem")
+      (s, dir) => runToTable(s, "stream_agg_totals", "complete") { ss =>
+        stream(ss, dir, "lineitem")
           .groupBy(col("l_returnflag"), col("l_linestatus"))
           .agg(
             count(lit(1)).as("n_rows"),
             sum(col("l_quantity").cast(DecimalType(18, 0))).cast("long").as("sum_qty"),
             QueryDef.dsum(col("l_extendedprice")).as("sum_price"))
-        runToTable("stream_agg_totals", agg, "complete")
       },
       Some("""
         SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
@@ -110,18 +97,17 @@ object StreamingQueries {
     // sink; the watermark path is exercised by the planner regardless.
     QueryDef(
       "q_stream_weekly_orders",
-      (s, dir) => {
-        val src = stream(s, dir, "orders")
+      (s, dir) => runToTable(s, "stream_weekly_orders", "complete") { ss =>
+        val src = stream(ss, dir, "orders")
           .select(col("o_orderdate").cast("timestamp").as("ts"),
             col("o_orderpriority"), col("o_totalprice"))
           .withWatermark("ts", "30 days")
-        val agg = src
+        src
           .groupBy(window(col("ts"), "7 days"), col("o_orderpriority"))
           .agg(count(lit(1)).as("n_orders"),
             QueryDef.dsum(col("o_totalprice")).as("sum_price"))
           .select(col("window.start").cast("date").as("week_start"),
             col("o_orderpriority"), col("n_orders"), col("sum_price"))
-        runToTable("stream_weekly_orders", agg, "complete")
       },
       Some("""
         SELECT DATE '1970-01-01' + CAST(FLOOR(date_diff('day', DATE '1970-01-01', o_orderdate) / 7.0) * 7 AS INTEGER)
@@ -140,18 +126,17 @@ object StreamingQueries {
     // the slide within (ts − 14d, ts]).
     QueryDef(
       "q_stream_hopping_windows",
-      (s, dir) => {
-        val src = stream(s, dir, "orders")
+      (s, dir) => runToTable(s, "stream_hopping_windows", "complete") { ss =>
+        val src = stream(ss, dir, "orders")
           .select(col("o_orderdate").cast("timestamp").as("ts"),
             col("o_orderpriority"), col("o_totalprice"))
           .withWatermark("ts", "30 days")
-        val agg = src
+        src
           .groupBy(window(col("ts"), "14 days", "7 days"), col("o_orderpriority"))
           .agg(count(lit(1)).as("n_orders"),
             QueryDef.dsum(col("o_totalprice")).as("sum_price"))
           .select(col("window.start").cast("date").as("window_start"),
             col("o_orderpriority"), col("n_orders"), col("sum_price"))
-        runToTable("stream_hopping_windows", agg, "complete")
       },
       Some("""
         SELECT DATE '1970-01-01' + CAST((FLOOR(date_diff('day', DATE '1970-01-01', o_orderdate) / 7.0) - t.k) * 7 AS INTEGER)
@@ -170,11 +155,10 @@ object StreamingQueries {
     // quantities, so the double arithmetic is exact.
     QueryDef(
       "q_stream_stateful_totals",
-      (s, dir) => {
-        val totals = StreamingIngest
-          .statefulRunningTotals(stream(s, dir, "lineitem"), "l_returnflag", "l_quantity")
+      (s, dir) => runToTable(s, "stream_stateful_totals", "append") { ss =>
+        StreamingIngest
+          .statefulRunningTotals(stream(ss, dir, "lineitem"), "l_returnflag", "l_quantity")
           .toDF("k", "n", "total")
-        runToTable("stream_stateful_totals", totals, "append")
       },
       Some("""
         SELECT CAST(l_returnflag AS VARCHAR) AS k, COUNT(*) AS n,
@@ -193,12 +177,11 @@ object StreamingQueries {
     // order-independent and equal to batch DISTINCT.
     QueryDef(
       "q_stream_dedup_keys",
-      (s, dir) => {
-        val dedup = stream(s, dir, "orders")
+      (s, dir) => runToTable(s, "stream_dedup_keys", "append") { ss =>
+        stream(ss, dir, "orders")
           .select(col("o_orderpriority"), col("o_orderstatus"),
             year(col("o_orderdate")).cast("long").as("order_year"))
           .dropDuplicates("o_orderpriority", "o_orderstatus", "order_year")
-        runToTable("stream_dedup_keys", dedup, "append")
       },
       Some("""
         SELECT DISTINCT o_orderpriority, o_orderstatus,
@@ -216,22 +199,20 @@ object StreamingQueries {
     // exact scaled longs inside the state fold.
     QueryDef(
       "q_stream_sessionize",
-      (s, dir) => {
+      (s, dir) => runToTable(s, "stream_sessionize", "append") { ss =>
         // Normalized like Tables.events (the dispatch in
         // normalizeEventTs sees whichever schema the batch read infers).
-        val src = graft.runtime.Tables.normalizeEventTs(stream(s, dir, "events"))
-        val sessions = StreamingIngest
+        val src = graft.runtime.Tables.normalizeEventTs(stream(ss, dir, "events"))
+        StreamingIngest
           .statefulSessionize(src, "user_id", "ts", "value", gapSeconds = 1800)
           .toDF("user_id", "start_us", "end_us", "n_events", "v_u6", "is_open")
-        runToTable("stream_sessionize", sessions, "append")
-          .select(
-            col("user_id"),
-            timestamp_micros(col("start_us")).as("session_start"),
-            timestamp_micros(col("end_us")).as("session_end"),
-            col("n_events"),
-            (col("v_u6").cast(DecimalType(24, 6)) / 1000000).cast("double").as("total_value"),
-            col("is_open"))
-      },
+      }.select(
+        col("user_id"),
+        timestamp_micros(col("start_us")).as("session_start"),
+        timestamp_micros(col("end_us")).as("session_end"),
+        col("n_events"),
+        (col("v_u6").cast(DecimalType(24, 6)) / 1000000).cast("double").as("total_value"),
+        col("is_open")),
       Some("""
         WITH e AS (
           SELECT user_id, epoch_ns(ts) // 1000 AS us, value FROM events
@@ -272,11 +253,10 @@ object StreamingQueries {
     // exactly — same deterministic md5 buckets, same BIGINT adds.
     QueryDef(
       "q_stream_cms_cells",
-      (s, dir) => {
-        val cells = graft.operators.SketchOps.cmsSketch(
-          stream(s, dir, "lineitem").select(col("l_partkey")),
+      (s, dir) => runToTable(s, "stream_cms_cells", "complete") { ss =>
+        graft.operators.SketchOps.cmsSketch(
+          stream(ss, dir, "lineitem").select(col("l_partkey")),
           "l_partkey", d = 4, w = 1024)
-        runToTable("stream_cms_cells", cells, "complete")
       },
       Some {
         // Kirsch–Mitzenmacher mirror of SketchOps.cmsSketch: h1/h2
@@ -317,8 +297,8 @@ object StreamingQueries {
     // watermark advance that evicts state. At 32 shuffle partitions
     // the empty batch cost 2.6-2.8 s — ~80 ms per HDFS-backed state
     // store load/commit, ×32 partitions × join sides — for 40 k state
-    // rows, so the state partition count is 8 (runToTable, family-wide
-    // since r10) (1.2 s → empty batch; 9.0 → 6.0 s wall in the probe).
+    // rows, so the state partition count is 8 (GraftSession.streaming,
+    // family-wide) (1.2 s → empty batch; 9.0 → 6.0 s wall in the probe).
     // Fixed per-run runtime overhead,
     // not a plan defect: ~0.8 s queryPlanning × 2 batches + source
     // init remains. On a real cluster the same knob is sized to the
@@ -326,27 +306,22 @@ object StreamingQueries {
     // here is interval-bounded either way.
     QueryDef(
       "q_stream_interval_join",
-      (s, dir) => {
-        // state partition count (8) is applied by runToTable for the
-        // whole streaming family — see its scaladoc
-        locally {
-          def side(eventType: String, idAs: String, uAs: String, tsAs: String) =
-            graft.runtime.Tables.normalizeEventTs(stream(s, dir, "events"))
-              .filter(col("event_type") === eventType)
-              .select(col("event_id").as(idAs), col("user_id").as(uAs),
-                col("ts").as(tsAs))
-              .withWatermark(tsAs, "1 hour")
-          val purchases = side("purchase", "purchase_id", "pu", "pts")
-          val views     = side("view", "view_id", "vu", "vts")
-          val joined = purchases
-            .join(views,
-              col("pu") === col("vu") &&
-                col("vts") >= col("pts") - expr("INTERVAL 2 HOURS") &&
-                col("vts") <= col("pts"))
-            .select(col("purchase_id"), col("pu").as("user_id"), col("view_id"),
-              (unix_micros(col("pts")) - unix_micros(col("vts"))).as("delta_us"))
-          runToTable("stream_interval_join", joined, "append")
-        }
+      (s, dir) => runToTable(s, "stream_interval_join", "append") { ss =>
+        def side(eventType: String, idAs: String, uAs: String, tsAs: String) =
+          graft.runtime.Tables.normalizeEventTs(stream(ss, dir, "events"))
+            .filter(col("event_type") === eventType)
+            .select(col("event_id").as(idAs), col("user_id").as(uAs),
+              col("ts").as(tsAs))
+            .withWatermark(tsAs, "1 hour")
+        val purchases = side("purchase", "purchase_id", "pu", "pts")
+        val views     = side("view", "view_id", "vu", "vts")
+        purchases
+          .join(views,
+            col("pu") === col("vu") &&
+              col("vts") >= col("pts") - expr("INTERVAL 2 HOURS") &&
+              col("vts") <= col("pts"))
+          .select(col("purchase_id"), col("pu").as("user_id"), col("view_id"),
+            (unix_micros(col("pts")) - unix_micros(col("vts"))).as("delta_us"))
       },
       Some("""
         SELECT p.event_id AS purchase_id, p.user_id, v.event_id AS view_id,
@@ -365,15 +340,14 @@ object StreamingQueries {
     // grouped result equals the batch star join.
     QueryDef(
       "q_stream_static_enrich",
-      (s, dir) => {
-        val dim = s.read.parquet(s"$dir/customer.parquet")
+      (s, dir) => runToTable(s, "stream_static_enrich", "complete") { ss =>
+        val dim = ss.read.parquet(s"$dir/customer.parquet")
           .select(col("c_custkey"), col("c_mktsegment"))
-        val enriched = stream(s, dir, "orders")
+        stream(ss, dir, "orders")
           .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
           .groupBy(col("c_mktsegment"))
           .agg(count(lit(1)).as("n_orders"),
             QueryDef.dsum(col("o_totalprice")).as("sum_price"))
-        runToTable("stream_static_enrich", enriched, "complete")
       },
       Some("""
         SELECT c_mktsegment, COUNT(*) AS n_orders,

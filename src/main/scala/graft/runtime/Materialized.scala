@@ -48,7 +48,14 @@ object Materialized {
   def apply(s: SparkSession, dir: String, name: String)(build: => DataFrame): DataFrame = {
     memo.keySet.removeIf(_._1.sparkContext.isStopped)
     val df = memo.computeIfAbsent((s, dir, name), _ => build)
-    // Re-arm after an external clearCache (idempotent when cached).
+    persist(df) // re-arm after an external clearCache
+  }
+
+  /** Persist `df` unless an equal plan is cached already. Two builders
+    * that stage the same frame within one query or one DAG run (say,
+    * two marts over one FRED staging) then share its one cache entry,
+    * instead of asking the CacheManager to cache it a second time. */
+  def persist(df: DataFrame): DataFrame = {
     if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK)
     df
   }

@@ -214,7 +214,7 @@ final class ModelRegistry {
     val path = s"$warehouseDir/$name"
     m.materialization match {
       case Materialization.View =>
-        val df = built.persist()
+        val df = Materialized.persist(built)
         df.createOrReplaceTempView(name)
         df
       case Materialization.Table =>

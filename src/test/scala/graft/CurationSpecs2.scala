@@ -16,6 +16,12 @@ class CurationSpecs2 extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  // builders and operators cache their intermediates; clear them after
+  // each test, as Fleet does after each query, so a later test that
+  // builds the same frame does not ask to cache it again
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test) finally spark.catalog.clearCache()
+
   private val sf = "/root/testdata/sf0.001"
 
   test("repetition gram stats: known char-weighted counts") {
@@ -98,6 +104,7 @@ class CurationSpecs2 extends AnyFunSuite with BeforeAndAfterAll {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val full = DedupOps.nearDupPairs(docs, "doc_id", "text", 3, 4, 4, 0.2)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
+    spark.catalog.clearCache() // the incremental run re-caches the same shingle table
     val newIds = docs.filter(col("source") === "src1")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val expected = full.filter { case (a, b) => newIds(a) || newIds(b) }

@@ -70,6 +70,26 @@ class InfraSpecs extends AnyFunSuite with BeforeAndAfterAll {
     assert(outside("", "PlanDump").isEmpty, "PlanDump is folded into PlanCost --plans")
   }
 
+  test("under src/main only GraftSession and Loop set session conf") {
+    val owners = Seq("GraftSession.scala", "Loop.scala").map(Paths.get("graft", "runtime", _))
+    val setters = mainSources.filter(p => !owners.exists(p.endsWith) &&
+      Files.readString(p).contains(".conf.set("))
+    assert(setters.isEmpty, s"session conf set outside the factory and the loop scope: ${setters.mkString(", ")}")
+  }
+
+  test("streams run in their own width-8 session and leave the caller's conf alone") {
+    val ss = GraftSession.streaming(spark)
+    assert(ss ne spark)
+    assert(GraftSession.streaming(spark) eq ss, "one stream session per parent")
+    assert(ss.sparkContext eq spark.sparkContext)
+    assert(ss.sharedState eq spark.sharedState, "the stream session shares the cache")
+    assert(ss.conf.get(SQLConf.SHUFFLE_PARTITIONS.key) == "8")
+    assert(ss.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key) == "UTC")
+    val rows = SparkEntry.queries("q_stream_dedup_keys")(spark, "/root/testdata/sf0.001").count()
+    assert(rows > 0)
+    assert(spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key) == "4", "the caller's width must not change")
+  }
+
   test("SqlGuard allows SELECT and CTE queries") {
     Seq((1, "a"), (2, "b")).toDF("id", "v").createOrReplaceTempView("guard_t")
     assert(SqlGuard.readOnly(spark, "SELECT count(*) AS n FROM guard_t").as[Long].head() == 2L)

@@ -17,6 +17,12 @@ class PlanSpecs extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  // builders and operators cache their intermediates; clear them after
+  // each test, as Fleet does after each query, so a later test that
+  // builds the same frame does not ask to cache it again
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test) finally spark.catalog.clearCache()
+
   private def executedPlan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
@@ -136,6 +142,24 @@ class PlanSpecs extends AnyFunSuite with BeforeAndAfterAll {
         s"$q: the amplified frame must not be persisted")
       assert(plan.contains("partial"), s"$q: amplified rows must partial-aggregate map-side")
     }
+  }
+
+  test("summaries pick boundary prices in the aggregate: no row_number window, no re-join") {
+    // The period-summary kernel takes the start/end prices as struct
+    // MIN/MAX inside its one aggregation. A hash or sort-merge join
+    // here would be the aggregate re-joined to its own input (the
+    // pre-kernel start/end picks); the only join left is the 1-row
+    // max-date anchor, a BroadcastNestedLoopJoin.
+    val plans = Seq("q_us_sector_summary", "q_energy_commodities_summary").map(q => q -> executedPlan(q))
+    for ((q, plan) <- plans) {
+      assert(!plan.contains("row_number"), s"$q: boundary picks must not rank rows")
+      assert(Seq("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin").forall(!plan.contains(_)),
+        s"$q: the aggregate must not be joined back to its input")
+    }
+    assert(!plans(0)._2.contains("Window"), "q_us_sector_summary: no window at all")
+    // the commodity summary keeps exactly its full-history LAG
+    val windows = "Window ".r.findAllIn(plans(1)._2).size
+    assert(windows == 1, s"q_energy_commodities_summary: one LAG window expected, saw $windows")
   }
 
   test("commodity snapshot's LAG runs over the raw staging, not the amplified frame") {

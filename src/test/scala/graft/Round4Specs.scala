@@ -14,6 +14,12 @@ class Round4Specs extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  // builders and operators cache their intermediates; clear them after
+  // each test, as Fleet does after each query, so a later test that
+  // builds the same frame does not ask to cache it again
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test) finally spark.catalog.clearCache()
+
   private def fixture = {
     import spark.implicits._
     def doc(seed: Int, len: Int): Seq[String] =
