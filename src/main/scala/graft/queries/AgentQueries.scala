@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.models.MarketSummary
+import graft.models.{MarketSummary, PriceBars}
 import org.apache.spark.sql.DataFrame
 import graft.queries.QueryDef.{davgOver, oDivRound, rdiv}
 
@@ -30,8 +30,8 @@ object AgentQueries {
   // ------------------------------------------------------------------
 
   private def marketPerformance(s: SparkSession, dir: String): DataFrame = {
-    def branch(bucket: Column, at: String, ex: String, cat: String): DataFrame =
-      MarketSummary.summarize(MarketSummaryQueries.universe(s, dir, bucket, at, ex))
+    def branch(uni: PriceBars.Universe, at: String, ex: String, cat: String): DataFrame =
+      MarketSummary.summarize(MarketSummaryQueries.universe(s, dir, uni, at, ex))
         .select(
           col("symbol"), col("symbol").as("ticker"), col("asset_type"),
           col("time_period"), col("exchange"), col("name"),
@@ -45,14 +45,13 @@ object AgentQueries {
           col("period_start_price"), col("period_end_price"),
           lit(cat).as("market_category"),
           lit(null).cast("date").as("snapshot_date"))
-    branch(concat(lit("SECT_"), col("l_returnflag")), "sector_etf", "NYSEARCA", "sector")
-      .unionAll(branch(concat(lit("IDX_"), col("l_linestatus")), "index", "INDEX",
-        "major_index"))
+    branch(PriceBars.Sectors, "sector_etf", "NYSEARCA", "sector")
+      .unionAll(branch(PriceBars.Indices, "index", "INDEX", "major_index"))
   }
 
   private val marketPerformanceSql: String = {
-    def branchSql(bucketSql: String, at: String, ex: String, cat: String): String = {
-      val inner = MarketSummary.oracleSql(MarketSummaryQueries.uniCte(bucketSql, at, ex))
+    def branchSql(uni: PriceBars.Universe, at: String, ex: String, cat: String): String = {
+      val inner = MarketSummary.oracleSql(MarketSummaryQueries.uniCte(uni, at, ex))
       s"""SELECT symbol, symbol AS ticker, asset_type, time_period, exchange, name,
         period_start_date, period_end_date, trading_days,
         total_return_pct, avg_daily_return_pct,
@@ -67,9 +66,9 @@ object AgentQueries {
       FROM ($inner)"""
     }
     s"""
-    ${branchSql("'SECT_' || l_returnflag", "sector_etf", "NYSEARCA", "sector")}
+    ${branchSql(PriceBars.Sectors, "sector_etf", "NYSEARCA", "sector")}
     UNION ALL
-    ${branchSql("'IDX_' || l_linestatus", "index", "INDEX", "major_index")}
+    ${branchSql(PriceBars.Indices, "index", "INDEX", "major_index")}
   """
   }
 

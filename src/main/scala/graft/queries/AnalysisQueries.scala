@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.models.MarketAnalysisReturn
+import graft.models.{MarketAnalysisReturn, PriceBars}
 import graft.queries.QueryDef.{nullif, oDivRound, oSnap, rdiv, rsnap}
 import graft.queries.FredSignalQueries.{idxOf, stgFred, stgFredSql}
 import graft.runtime.Tables
@@ -315,8 +315,7 @@ object AnalysisQueries {
   private def correlationAnalysis(s: SparkSession, dir: String): DataFrame = {
     // sector monthly returns: last pct_change_1mo per (symbol, month)
     val ar = MarketAnalysisReturn.analysisReturn(
-      MarketAnalysisQueries.universe(s, dir,
-        concat(lit("SECT_"), col("l_returnflag")), "NYSEARCA"))
+      MarketAnalysisQueries.universe(s, dir, PriceBars.Sectors, "NYSEARCA"))
       .select(col("symbol"), col("date"), col("pct_change_1mo"))
     val wMon = Window.partitionBy(col("symbol"),
       date_trunc("month", col("date")).cast("date")).orderBy(col("date").desc)
@@ -459,7 +458,7 @@ object AnalysisQueries {
       "oc.correlation * SQRT(oc.n_observations - 2) / NULLIF(SQRT(1 - POWER(oc.correlation, 2)), 0)"
     s"""
     WITH ${stgFredSql((CorrCodes ++ RegimeCodes).distinct)},
-    ${MarketAnalysisQueries.uniCte("'SECT_' || l_returnflag", "NYSEARCA")},
+    ${MarketAnalysisQueries.uniCte(PriceBars.Sectors, "NYSEARCA")},
     daily AS (
       SELECT *, adj_close - LAG(adj_close, 1) OVER (
         PARTITION BY symbol, exchange ORDER BY date) AS daily_diff

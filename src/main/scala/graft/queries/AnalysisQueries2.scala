@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.models.MarketAnalysisReturn
+import graft.models.{MarketAnalysisReturn, PriceBars}
 import graft.queries.QueryDef.{davgOver, nullif, oDivRound, oSnap, rdiv, rsnap}
 import graft.queries.FredSignalQueries.{idxOf, stgFred, stgFredSql}
 import graft.runtime.Tables
@@ -42,17 +42,12 @@ object AnalysisQueries2 {
   // ------------------------------------------------------------------
 
   /** The five reference universes with their category tags. */
-  private val Universes: Seq[(String, Column, String, String, String)] = Seq(
-    ("currency", concat(lit("FX_"), col("l_partkey") % 9),
-      "'FX_' || CAST(l_partkey % 9 AS VARCHAR)", "FOREX", "currency"),
-    ("fixed_income", concat(lit("FI_"), col("l_partkey") % 11),
-      "'FI_' || CAST(l_partkey % 11 AS VARCHAR)", "BONDS", "fixed_income"),
-    ("global_markets", concat(lit("GM_"), col("l_suppkey") % 7),
-      "'GM_' || CAST(l_suppkey % 7 AS VARCHAR)", "GLOBAL", "global_markets"),
-    ("major_indices", concat(lit("IDX_"), col("l_linestatus")),
-      "'IDX_' || l_linestatus", "INDEX", "major_indices"),
-    ("us_sector", concat(lit("SECT_"), col("l_returnflag")),
-      "'SECT_' || l_returnflag", "NYSEARCA", "sector"))
+  private val Universes: Seq[(String, PriceBars.Universe, String, String)] = Seq(
+    ("currency", PriceBars.Currency, "FOREX", "currency"),
+    ("fixed_income", PriceBars.FixedIncome, "BONDS", "fixed_income"),
+    ("global_markets", PriceBars.GlobalMarkets, "GLOBAL", "global_markets"),
+    ("major_indices", PriceBars.Indices, "INDEX", "major_indices"),
+    ("us_sector", PriceBars.Sectors, "NYSEARCA", "sector"))
 
   private val ReturnCols = Seq("current_price", "current_volume", "pct_change_1mo",
     "pct_change_3mo", "pct_change_6mo", "pct_change_9mo", "pct_change_1yr",
@@ -99,19 +94,18 @@ object AnalysisQueries2 {
     // collapses each branch map-side before its exchange, while an
     // explode pushes every fact row × 5 tags through the shuffle
     // writer (same measurement as SemanticLayerQueries.layerAr).
-    // deliberately NOT persisted (measured A/B at sf0.1: persisting
-    // the shared base frame is ~1s SLOWER, 15.8 vs 14.7s on this
-    // pair) — materializing the 32-char md5 key column into storage
-    // costs more than five scans of compressed parquet with the hash
-    // recomputed in the codegen'd aggregation map. The recompute-vs-
+    // Each branch reads its own unpersisted PriceBars.lines (measured
+    // A/B at sf0.1: persisting one shared line frame is ~1s SLOWER,
+    // 15.8 vs 14.7s on this pair) — materializing the 32-char md5 key
+    // column into storage costs more than five scans of compressed
+    // parquet with the hash recomputed per branch. The recompute-vs-
     // cache default here mirrors the stgPrices measurement in
     // CrossAssetQueries.
-    val uniBase = MarketAnalysisQueries.universeBase(s, dir)
-    val uniExact = Universes.map { case (_, bucket, _, ex, _) =>
-      MarketAnalysisQueries.universeFrom(uniBase, bucket, ex)
+    val uniExact = Universes.map { case (_, uni, ex, _) =>
+      MarketAnalysisQueries.universe(s, dir, uni, ex)
     }.reduce(_ unionByName _)
     val catCol = Universes.foldLeft(lit(null).cast("string")) {
-      case (acc, (_, _, _, ex, cat)) => when(col("exchange") === ex, lit(cat)).otherwise(acc)
+      case (acc, (_, _, ex, cat)) => when(col("exchange") === ex, lit(cat)).otherwise(acc)
     }
     val rt = MarketAnalysisReturn.analysisReturn(uniExact)
       .select((Seq(col("symbol"), col("exchange"), col("date")) ++
@@ -124,8 +118,8 @@ object AnalysisQueries2 {
 
   /** Oracle CTE chain producing `bha` (needs `stg`). */
   val baseHistoricalCtesSql: String = {
-    val branches = Universes.map { case (name, _, bucketSql, ex, cat) =>
-      val uni = MarketAnalysisQueries.uniCte(bucketSql, ex)
+    val branches = Universes.map { case (name, u, ex, cat) =>
+      val uni = MarketAnalysisQueries.uniCte(u, ex)
         .replace("uni AS (", s"uni_$name AS (")
       s"""$uni,
       daily_$name AS (
@@ -141,7 +135,7 @@ object AnalysisQueries2 {
     $branches,
     $fredMonthlySql,
     return_data AS (
-      ${Universes.map { case (name, _, _, _, _) => s"SELECT * FROM ar_$name" }
+      ${Universes.map { case (name, _, _, _) => s"SELECT * FROM ar_$name" }
       .mkString("\n      UNION ALL\n      ")}
     ),
     bha AS (
@@ -203,8 +197,7 @@ object AnalysisQueries2 {
 
   private def sectorReturns(s: SparkSession, dir: String): DataFrame = {
     val ar = MarketAnalysisReturn.analysisReturn(
-      MarketAnalysisQueries.universe(s, dir,
-        concat(lit("SECT_"), col("l_returnflag")), "NYSEARCA"))
+      MarketAnalysisQueries.universe(s, dir, PriceBars.Sectors, "NYSEARCA"))
       .select(col("symbol"), col("date"), col("pct_change_1mo"))
     val wMon = Window.partitionBy(col("symbol"),
       date_trunc("month", col("date")).cast("date")).orderBy(col("date").desc)
@@ -216,7 +209,7 @@ object AnalysisQueries2 {
   }
 
   private val sectorReturnsSql: String = s"""
-    ${MarketAnalysisQueries.uniCte("'SECT_' || l_returnflag", "NYSEARCA")},
+    ${MarketAnalysisQueries.uniCte(PriceBars.Sectors, "NYSEARCA")},
     daily AS (
       SELECT *, adj_close - LAG(adj_close, 1) OVER (
         PARTITION BY symbol, exchange ORDER BY date) AS daily_diff

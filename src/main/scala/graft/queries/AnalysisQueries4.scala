@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.models.MarketAnalysisReturn
+import graft.models.{MarketAnalysisReturn, PriceBars}
 import graft.queries.QueryDef.{nullif, oDivRound, oSnap, rdiv, rsnap}
 import graft.queries.FredSignalQueries.{idxOf, stgFred, stgFredSql}
 import graft.runtime.Tables
@@ -55,16 +55,7 @@ object AnalysisQueries4 {
     ("XLE", "Energy", "Cyclical"),
     ("XLV", "Health Care", "Defensive"))
 
-  def etfBucket: Column = EtfSymbols.zipWithIndex
-    .foldLeft(lit(null).cast("string")) { case (acc, (sym, i)) =>
-      when(col("l_suppkey") % 11 === i, lit(sym)).otherwise(acc)
-    }
-
-  val etfBucketSql: String = {
-    val cases = EtfSymbols.zipWithIndex
-      .map { case (sym, i) => s"WHEN $i THEN '$sym'" }.mkString(" ")
-    s"CASE l_suppkey % 11 $cases END"
-  }
+  val etfs: PriceBars.Universe = PriceBars.named(col("l_suppkey") % 11, "l_suppkey % 11", EtfSymbols)
 
   private val FredCodes = Seq("INDPRO", "UNRATE", "PAYEMS", "CPIAUCSL",
     "T10Y2Y", "NFCI", "UMCSENT", "IPMAN")
@@ -74,7 +65,7 @@ object AnalysisQueries4 {
   /** Monthly last-of-month sector returns over the 11-ETF universe. */
   private def sectorReturns(s: SparkSession, dir: String): DataFrame = {
     val ar = MarketAnalysisReturn.analysisReturn(
-      MarketAnalysisQueries.universe(s, dir, etfBucket, "NYSEARCA"))
+      MarketAnalysisQueries.universe(s, dir, etfs, "NYSEARCA"))
       .select(col("symbol"), col("date"), col("pct_change_1mo"),
         col("pct_change_3mo"), col("pct_change_6mo"), col("pct_change_1yr"))
       .filter(col("symbol").isin(EtfSymbols: _*))
@@ -101,7 +92,7 @@ object AnalysisQueries4 {
         THEN (dc.adj_close - p$d.adj_close) / p$d.adj_close * 100 END, 2) + 0.0 AS $a"""
     }.mkString(",\n        ")
     s"""
-    ${MarketAnalysisQueries.uniCte(etfBucketSql, "NYSEARCA")},
+    ${MarketAnalysisQueries.uniCte(etfs, "NYSEARCA")},
     daily AS (
       SELECT * FROM uni WHERE adj_close IS NOT NULL
     ),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
+import graft.models.PriceBars
 import graft.runtime.Tables
 import graft.queries.QueryDef.{dsum, r4}
 
@@ -245,8 +246,7 @@ object BacktestQueries {
       "q_backtest_recommendation_eval",
       (s, dir) => {
         val BacktestMonth = "1998-01-01"
-        val uni = MarketAnalysisQueries.universe(
-          s, dir, concat(lit("SP_"), col("l_suppkey") % 100), "NYSE")
+        val uni = MarketAnalysisQueries.universe(s, dir, PriceBars.Sp500, "NYSE")
         val monthly = uni
           .groupBy(col("symbol"), trunc(col("date"), "month").as("m"))
           .agg(QueryDef.rdiv(
@@ -298,7 +298,7 @@ object BacktestQueries {
             .otherwise(0.0).as("accuracy_score"))
       },
       Some {
-        val uniSql = MarketAnalysisQueries.uniCte("'SP_' || CAST(l_suppkey % 100 AS VARCHAR)", "NYSE")
+        val uniSql = MarketAnalysisQueries.uniCte(PriceBars.Sp500, "NYSE")
         s"""
         WITH $uniSql,
         monthly AS (

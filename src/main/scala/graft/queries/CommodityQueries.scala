@@ -1,12 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.models.{MarketAnalysisReturn, MarketSummary}
+import graft.models.{MarketAnalysisReturn, MarketSummary, PriceBars}
 import graft.queries.QueryDef.{oDivRound, oSnap}
-import graft.runtime.Tables
 
 /** The commodity model family 1:1 (SURVEY.md §2.M; ref dbt_project/
   * macros/calculate_commodity_summary.sql and
@@ -35,63 +34,19 @@ import graft.runtime.Tables
   */
 object CommodityQueries {
 
-  private val mdKey =
-    "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|' || " +
-      "CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
+  /** stg_*_commodities staging over commodity bars ([[PriceBars.commodity]]
+    * or the fan-out [[PriceBars.commodities]]): (commodity_name, date,
+    * price, commodity_unit), the price the RAW close (2-decimal exact). */
+  def staging(bars: DataFrame): DataFrame =
+    bars.select(col("commodity_name"), col("date"), col("close").as("price"), col("commodity_unit"))
 
-  /** (name root, spark bucket, sql bucket, unit, agent category) —
-    * same symbol spaces as the snapshot variants. */
-  val Universes: Seq[(String, SparkSession => Column, String, String, String)] = Seq(
-    ("energy_commodities", _ => concat(lit("EN_"), col("l_suppkey") % 4),
-      "'EN_' || CAST(l_suppkey % 4 AS VARCHAR)", "barrel", "energy"),
-    ("agriculture_commodities", _ => concat(lit("AG_"), col("l_orderkey") % 5),
-      "'AG_' || CAST(l_orderkey % 5 AS VARCHAR)", "bushel", "agriculture"),
-    ("input_commodities", _ => concat(lit("IN_"), col("l_partkey") % 6),
-      "'IN_' || CAST(l_partkey % 6 AS VARCHAR)", "ton", "input"))
-
-  /** stg_*_commodities staging: (commodity_name, commodity_unit, date,
-    * price) — RAW md5-keyed price pick (2-decimal exact). */
-  def staging(s: SparkSession, dir: String, bucket: Column, unit: String): DataFrame = {
-    val key = md5(concat_ws("|",
-      col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
-    Tables(s, dir).lineitem
-      .groupBy(bucket.as("commodity_name"), to_date(col("l_shipdate")).as("date"))
-      .agg(max_by(col("l_extendedprice"), key).as("price"))
-      .withColumn("commodity_unit", lit(unit))
-  }
-
-  def stagingCte(bucketSql: String, unit: String): String = s"""
+  def stagingCte(c: PriceBars.Commodity): String = s"""
     cstg AS (
-      SELECT $bucketSql AS commodity_name, CAST(l_shipdate AS DATE) AS date,
-        MAX_BY(l_extendedprice, $mdKey) AS price,
-        '$unit' AS commodity_unit
+      SELECT ${c.universe.sql} AS commodity_name, CAST(l_shipdate AS DATE) AS date,
+        ${PriceBars.closeSql} AS price,
+        '${c.unit}' AS commodity_unit
       FROM lineitem GROUP BY 1, 2
     )"""
-
-  /** All three universes' stagings from ONE lineitem pass: the md5
-    * tie-break key is computed once per row and the row fans out to
-    * its three (bucket, unit) family keys via explode — one fact scan
-    * and one shuffle where the naive per-universe union pays three of
-    * each (VERDICT r6 §wrong-2). Row-identical to
-    * `Universes.map(staging).reduce(unionByName)`: the bucket
-    * functions are total (every lineitem row lands in each family)
-    * and the EN_/AG_/IN_ key spaces are disjoint, so the grouped
-    * cells coincide 1:1. At 100 TB the three-scan shape reads the
-    * fact table three times; this reads it once. */
-  def stagingAll(s: SparkSession, dir: String): DataFrame = {
-    val key = md5(concat_ws("|",
-      col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
-    val fams = array(Universes.map { case (_, bucket, _, unit, _) =>
-      struct(bucket(s).as("commodity_name"), lit(unit).as("commodity_unit"))
-    }: _*)
-    Tables(s, dir).lineitem
-      .select(col("l_extendedprice"), to_date(col("l_shipdate")).as("date"),
-        key.as("__k"), explode(fams).as("fam"))
-      .groupBy(col("fam.commodity_name").as("commodity_name"), col("date"),
-        col("fam.commodity_unit").as("commodity_unit"))
-      .agg(max_by(col("l_extendedprice"), col("__k")).as("price"))
-      .select(col("commodity_name"), col("date"), col("price"), col("commodity_unit"))
-  }
 
   // ------------------------------------------------------------------
   // calculate_commodity_summary
@@ -223,14 +178,14 @@ object CommodityQueries {
         }: _*)
   }
 
-  def commodityAnalysisReturnOracleSql(bucketSql: String, unit: String): String = {
+  def commodityAnalysisReturnOracleSql(c: PriceBars.Commodity): String = {
     val uniCte = s"""uni AS (
       SELECT commodity_name AS symbol, commodity_unit AS exchange, date,
         price AS close, price AS high, price AS low, price AS volume,
         price AS adj_close, price AS adj_high, price AS adj_low, price AS adj_volume
       FROM (
-        SELECT $bucketSql AS commodity_name, CAST(l_shipdate AS DATE) AS date,
-          MAX_BY(l_extendedprice, $mdKey) AS price, '$unit' AS commodity_unit
+        SELECT ${c.universe.sql} AS commodity_name, CAST(l_shipdate AS DATE) AS date,
+          ${PriceBars.closeSql} AS price, '${c.unit}' AS commodity_unit
         FROM lineitem GROUP BY 1, 2
       )
     )"""
@@ -269,17 +224,17 @@ object CommodityQueries {
        positive_days, negative_days, neutral_days, period_start_price, period_end_price"""
 
   val defs: Seq[QueryDef] =
-    Universes.map { case (root, bucket, bucketSql, unit, _) =>
+    PriceBars.Commodities.map { c =>
       QueryDef(
-        s"q_${root}_summary",
-        (s, dir) => commoditySummary(staging(s, dir, bucket(s), unit)),
-        Some(commoditySummaryOracleSql(stagingCte(bucketSql, unit)))
+        s"q_${c.root}_summary",
+        (s, dir) => commoditySummary(staging(PriceBars.commodity(PriceBars.lines(s, dir), c))),
+        Some(commoditySummaryOracleSql(stagingCte(c)))
       )
-    } ++ Universes.map { case (root, bucket, bucketSql, unit, _) =>
+    } ++ PriceBars.Commodities.map { c =>
       QueryDef(
-        s"q_${root}_analysis_return",
-        (s, dir) => commodityAnalysisReturn(staging(s, dir, bucket(s), unit)),
-        Some(commodityAnalysisReturnOracleSql(bucketSql, unit))
+        s"q_${c.root}_analysis_return",
+        (s, dir) => commodityAnalysisReturn(staging(PriceBars.commodity(PriceBars.lines(s, dir), c))),
+        Some(commodityAnalysisReturnOracleSql(c))
       )
     } ++ Seq(
       QueryDef(
@@ -289,21 +244,12 @@ object CommodityQueries {
         // independent per commodity prefix, so one shared pipeline
         // equals three (each universe's date domain is the full
         // ship-date range)
-        (s, dir) => {
-          val stg = stagingAll(s, dir)
-          val cat = Universes.foldLeft(lit(null).cast("string")) {
-            case (acc, (_, _, _, _, c)) =>
-              val pfx = c match {
-                case "energy" => "EN_"; case "agriculture" => "AG_"; case _ => "IN_"
-              }
-              when(col("commodity_name").startsWith(pfx), lit(c)).otherwise(acc)
-          }
-          commoditySummary(stg).select(agentPerfCols(cat): _*)
-        },
-        Some(Universes.map { case (_, _, bucketSql, unit, cat) =>
-          s"""SELECT $agentPerfColsSql, '$cat' AS commodity_category,
+        (s, dir) => commoditySummary(staging(PriceBars.commodities(PriceBars.lines(s, dir))))
+          .select(agentPerfCols(PriceBars.commodityCategory): _*),
+        Some(PriceBars.Commodities.map { c =>
+          s"""SELECT $agentPerfColsSql, '${c.category}' AS commodity_category,
                 CAST(NULL AS DATE) AS snapshot_date
-              FROM (${commoditySummaryOracleSql(stagingCte(bucketSql, unit))})"""
+              FROM (${commoditySummaryOracleSql(stagingCte(c))})"""
         }.mkString(" UNION ALL "))
       )
     )

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.models.PriceBars
 import graft.queries.QueryDef.{davgOver, r4}
 import graft.runtime.{Materialized, Tables}
 
@@ -36,6 +37,7 @@ object CrossAssetQueries {
 
   val Symbols: Seq[String] = Seq("SPY", "IWM", "RSP", "DIA", "IYT", "SOXX",
     "IWD", "IWF", "XLP", "XLY", "FXA", "HYG", "GOVT")
+  private val symbols = PriceBars.named(col("l_suppkey") % 13, "l_suppkey % 13", Symbols)
 
   /** Symbol-price staging: (symbol, date, adj_close). The round-4 daily
     * mean is an int-ratio quotient (decimal sum / count) that can land
@@ -47,22 +49,17 @@ object CrossAssetQueries {
       // materialized once per session: every symPrices slice (13+ per
       // divergences run) reads the one cached aggregate instead of
       // re-scanning the fact table per symbol
-      val idxCol = col("l_suppkey") % 13
-      val sym = Symbols.zipWithIndex.foldLeft(lit(null).cast("string")) {
-        case (acc, (c, i)) => when(idxCol === i, lit(c)).otherwise(acc)
-      }
       Tables(s, dir).lineitem
-        .groupBy(sym.as("symbol"), to_date(col("l_shipdate")).as("date"))
+        .groupBy(symbols.col.as("symbol"), to_date(col("l_shipdate")).as("date"))
         .agg(QueryDef.rdiv(
           sum(col("l_extendedprice").cast(DecimalType(18, 6))), count(lit(1)), 4)
           .as("adj_close"))
     }
 
   val stgPricesSql: String = {
-    val cases = Symbols.zipWithIndex.map { case (c, i) => s"WHEN $i THEN '$c'" }.mkString(" ")
     s"""
     prices AS (
-      SELECT CASE l_suppkey % 13 $cases END AS symbol,
+      SELECT ${symbols.sql} AS symbol,
              CAST(l_shipdate AS DATE) AS date,
              ${QueryDef.oDivRound(
       "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) * 1000000 AS HUGEINT)",

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions.nullIf
+import graft.models.PriceBars
 import graft.runtime.Tables
 
 /** The four named data-quality models 1:1 (SURVEY.md §2.M data_quality
@@ -39,46 +40,27 @@ import graft.runtime.Tables
   */
 object DataQualityQueries {
 
-  private val mdKey =
-    "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|' || " +
-      "CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
-
-  /** (source_table name, spark bucket, sql bucket) — the
-    * `ohlc_source_tables()` analog (ref macros; three universes keep
-    * the fan-in real without re-scanning the fact table ten times). */
-  private val ohlcSources: Seq[(String, SparkSession => Column, String)] = Seq(
-    ("stg_us_sectors", _ => concat(lit("SECT_"), col("l_returnflag")),
-      "'SECT_' || l_returnflag"),
-    ("stg_major_indices", _ => concat(lit("IDX_"), col("l_linestatus")),
-      "'IDX_' || l_linestatus"),
-    ("stg_global_markets", _ => concat(lit("GM_"), col("l_suppkey") % 7),
-      "'GM_' || CAST(l_suppkey % 7 AS VARCHAR)")
-  )
+  /** (source_table name, universe) — the `ohlc_source_tables()`
+    * analog (ref macros; three universes keep the fan-in real without
+    * re-scanning the fact table ten times). */
+  private val ohlcSources: Seq[(String, PriceBars.Universe)] = Seq(
+    ("stg_us_sectors", PriceBars.Sectors),
+    ("stg_major_indices", PriceBars.Indices),
+    ("stg_global_markets", PriceBars.GlobalMarkets))
 
   /** commodity_source_tables() analog (single price column). */
-  private val commoditySources: Seq[(String, SparkSession => Column, String)] = Seq(
-    ("stg_energy_commodities", _ => concat(lit("EN_"), col("l_suppkey") % 4),
-      "'EN_' || CAST(l_suppkey % 4 AS VARCHAR)"),
-    ("stg_agriculture_commodities", _ => concat(lit("AG_"), col("l_orderkey") % 5),
-      "'AG_' || CAST(l_orderkey % 5 AS VARCHAR)")
-  )
+  private val commoditySources: Seq[(String, PriceBars.Universe)] =
+    Seq(PriceBars.EnergyCommodities, PriceBars.AgricultureCommodities).map(c => (s"stg_${c.root}", c.universe))
 
   // ---- fixture staging (spark) ------------------------------------
 
   /** OHLC staging with the stale-feed fixture: ~1/8 of days repeat the
     * previous raw bar verbatim ("the feed returned yesterday's exact
     * data"). */
-  private def ohlcStaging(s: SparkSession, dir: String, src: String, bucket: Column): DataFrame = {
-    import QueryDef.r4
-    val key = md5(concat_ws("|",
-      col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
-    val raw = Tables(s, dir).lineitem
-      .groupBy(bucket.as("symbol"), to_date(col("l_shipdate")).as("date"))
-      .agg(
-        r4(min_by(col("l_extendedprice"), key)).as("open"),
-        r4(max(col("l_extendedprice"))).as("high"),
-        r4(min(col("l_extendedprice"))).as("low"),
-        r4(max_by(col("l_extendedprice"), key)).as("close"))
+  private def ohlcStaging(s: SparkSession, dir: String, src: String, uni: PriceBars.Universe): DataFrame = {
+    val raw = PriceBars.daily(PriceBars.lines(s, dir), Seq(uni.col.as("symbol")))
+      .select(col("symbol") +: col("date") +:
+        Seq("open", "high", "low", "close").map(c => QueryDef.r4(col(c)).as(c)): _*)
     val w = Window.partitionBy(col("symbol")).orderBy(col("date"))
     val staleFlag = substring(
       md5(concat_ws("|", lit("stale"), lit(src), col("symbol"), col("date").cast("string"))),
@@ -107,13 +89,13 @@ object DataQualityQueries {
 
   // ---- fixture staging (oracle SQL mirrors) -----------------------
 
-  private def ohlcStagingSql(src: String, bucketSql: String): String = s"""
+  private def ohlcStagingSql(src: String, uni: PriceBars.Universe): String = s"""
     raw_$src AS (
-      SELECT $bucketSql AS symbol, CAST(l_shipdate AS DATE) AS date,
-        ROUND(MIN_BY(l_extendedprice, $mdKey), 4) + 0.0 AS open,
+      SELECT ${uni.sql} AS symbol, CAST(l_shipdate AS DATE) AS date,
+        ROUND(${PriceBars.openSql}, 4) + 0.0 AS open,
         ROUND(MAX(l_extendedprice), 4) + 0.0 AS high,
         ROUND(MIN(l_extendedprice), 4) + 0.0 AS low,
-        ROUND(MAX_BY(l_extendedprice, $mdKey), 4) + 0.0 AS close
+        ROUND(${PriceBars.closeSql}, 4) + 0.0 AS close
       FROM lineitem GROUP BY 1, 2
     ),
     src_$src AS (
@@ -154,8 +136,8 @@ object DataQualityQueries {
   // ---- the four models --------------------------------------------
 
   private def unionOhlc(s: SparkSession, dir: String)(f: (String, DataFrame) => DataFrame): DataFrame =
-    ohlcSources.map { case (src, bucket, _) =>
-      f(src, ohlcStaging(s, dir, src, bucket(s)))
+    ohlcSources.map { case (src, uni) =>
+      f(src, ohlcStaging(s, dir, src, uni))
     }.reduce(_ unionByName _)
 
   val defs: Seq[QueryDef] = Seq(
@@ -191,7 +173,7 @@ object DataQualityQueries {
             nullD.as("adj_close"))
       },
       Some {
-        val branches = ohlcSources.map { case (src, _, _) =>
+        val branches = ohlcSources.map { case (src, _) =>
           s"""
           SELECT '$src' AS source_table, symbol, date, 'return_spike' AS check_type,
             COALESCE(
@@ -217,7 +199,7 @@ object DataQualityQueries {
               SELECT 1 FROM ca_$src ca
               WHERE ca.symbol = r.symbol AND ca.date = r.date)"""
         }
-        val ctes = ohlcSources.map { case (src, _, b) => ohlcStagingSql(src, b) + "," + caSql(src) }
+        val ctes = ohlcSources.map { case (src, uni) => ohlcStagingSql(src, uni) + "," + caSql(src) }
         s"WITH ${ctes.mkString(",")} ${branches.mkString(" UNION ALL ")}"
       }
     ),
@@ -255,7 +237,7 @@ object DataQualityQueries {
             nullD.as("adj_close"))
       },
       Some {
-        val branches = ohlcSources.map { case (src, _, _) =>
+        val branches = ohlcSources.map { case (src, _) =>
           val zc = "ABS(close - rac) / NULLIF(rsc, 0)"
           val zo = "ABS(open - rao) / NULLIF(rso, 0)"
           s"""
@@ -279,7 +261,7 @@ object DataQualityQueries {
               WHERE ca.symbol = r.symbol
                 AND r.date BETWEEN ca.date - 2 AND ca.date + 2)"""
         }
-        val ctes = ohlcSources.map { case (src, _, b) => ohlcStagingSql(src, b) + "," + caSql(src) }
+        val ctes = ohlcSources.map { case (src, uni) => ohlcStagingSql(src, uni) + "," + caSql(src) }
         s"WITH ${ctes.mkString(",")} ${branches.mkString(" UNION ALL ")}"
       }
     ),
@@ -305,7 +287,7 @@ object DataQualityQueries {
             nullD.as("adj_close"))
       },
       Some {
-        val branches = ohlcSources.map { case (src, _, _) =>
+        val branches = ohlcSources.map { case (src, _) =>
           s"""
           SELECT '$src' AS source_table, symbol, date, 'stale_price' AS check_type,
             'all OHLC identical to previous day' AS failure_reason,
@@ -318,7 +300,7 @@ object DataQualityQueries {
           )
           WHERE close = pc AND open = po AND high = ph AND low = pl AND pc IS NOT NULL"""
         }
-        val ctes = ohlcSources.map { case (src, _, b) => ohlcStagingSql(src, b) }
+        val ctes = ohlcSources.map { case (src, uni) => ohlcStagingSql(src, uni) }
         s"WITH ${ctes.mkString(",")} ${branches.mkString(" UNION ALL ")}"
       }
     ),
@@ -330,12 +312,9 @@ object DataQualityQueries {
       "q_dq_commodity_anomalies",
       (s, dir) => {
         import QueryDef.r4
-        commoditySources.map { case (src, bucket, _) =>
-          val key = md5(concat_ws("|",
-            col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
-          val raw = Tables(s, dir).lineitem
-            .groupBy(bucket(s).as("commodity_name"), to_date(col("l_shipdate")).as("date"))
-            .agg(r4(max_by(col("l_extendedprice"), key)).as("price0"))
+        commoditySources.map { case (src, uni) =>
+          val raw = PriceBars.daily(PriceBars.lines(s, dir), Seq(uni.col.as("commodity_name")))
+            .select(col("commodity_name"), col("date"), r4(col("close")).as("price0"))
           val w = Window.partitionBy(col("commodity_name")).orderBy(col("date"))
           val staleFlag = substring(md5(concat_ws("|",
             lit("stale"), lit(src), col("commodity_name"), col("date").cast("string"))), 1, 1)
@@ -381,13 +360,13 @@ object DataQualityQueries {
         }.reduce(_ unionByName _)
       },
       Some {
-        val branches = commoditySources.map { case (src, _, bucketSql) =>
+        val branches = commoditySources.map { case (src, uni) =>
           val z = "ABS(price - rolling_avg) / NULLIF(rolling_std, 0)"
           s"""
           SELECT * FROM (
             WITH raw_$src AS (
-              SELECT $bucketSql AS commodity_name, CAST(l_shipdate AS DATE) AS date,
-                ROUND(MAX_BY(l_extendedprice, $mdKey), 4) + 0.0 AS price0
+              SELECT ${uni.sql} AS commodity_name, CAST(l_shipdate AS DATE) AS date,
+                ROUND(${PriceBars.closeSql}, 4) + 0.0 AS price0
               FROM lineitem GROUP BY 1, 2
             ),
             priced_$src AS (

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.models.PriceBars
 import graft.queries.QueryDef.r4
 import graft.runtime.Tables
 
@@ -254,10 +255,8 @@ object DataTestQueries {
         // both tested models run through ONE analysisReturn (distinct
         // symbol prefixes keep the window partitions independent —
         // same shared-run trick as SemanticLayerQueries.layerAr)
-        val uni = MarketAnalysisQueries.universe(s, dir,
-            concat(lit("SP_"), col("l_suppkey") % 100), "NYSE")
-          .unionByName(MarketAnalysisQueries.universe(s, dir,
-            concat(lit("SECT_"), col("l_returnflag")), "NYSEARCA"))
+        val uni = MarketAnalysisQueries.universe(s, dir, PriceBars.Sp500, "NYSE")
+          .unionByName(MarketAnalysisQueries.universe(s, dir, PriceBars.Sectors, "NYSEARCA"))
         graft.models.MarketAnalysisReturn.analysisReturn(uni)
           .groupBy(col("symbol"), col("exchange"), col("date"))
           .agg(count(lit(1)).as("duplicate_count"))
@@ -272,11 +271,11 @@ object DataTestQueries {
       },
       Some(s"""
         WITH sp AS (
-          SELECT 'SP_' || CAST(l_suppkey % 100 AS VARCHAR) AS symbol,
+          SELECT ${PriceBars.Sp500.sql} AS symbol,
             'NYSE' AS exchange, CAST(l_shipdate AS DATE) AS date
           FROM lineitem GROUP BY 1, 2, 3 HAVING COUNT(*) < 0
         ), us AS (
-          SELECT 'SECT_' || l_returnflag AS symbol,
+          SELECT ${PriceBars.Sectors.sql} AS symbol,
             'NYSEARCA' AS exchange, CAST(l_shipdate AS DATE) AS date
           FROM lineitem GROUP BY 1, 2, 3 HAVING COUNT(*) < 0
         )

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.models.MarketAnalysisReturn
+import graft.models.{MarketAnalysisReturn, PriceBars}
 import graft.queries.QueryDef.{davgOver, dsum, maxDate, maxDateSql, nullif, oDivRound, oSnap, r4, rdiv, rsnap}
 import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
 import graft.runtime.Tables
@@ -159,23 +159,16 @@ object FredSignalQueries4 {
 
   private val TaaSymbols = Seq("SPY", "ACWI", "GOVT", "XLRE")
 
-  private def taaBucket: Column = TaaSymbols.zipWithIndex
-    .foldLeft(lit(null).cast("string")) { case (acc, (sym, i)) =>
-      when(col("l_suppkey") % 4 === i, lit(sym)).otherwise(acc)
-    }
-
-  private val taaBucketSql: String = {
-    val cases = TaaSymbols.zipWithIndex
-      .map { case (sym, i) => s"WHEN $i THEN '$sym'" }.mkString(" ")
-    s"CASE l_suppkey % 4 $cases END"
-  }
+  private val taa = PriceBars.named(col("l_suppkey") % 4, "l_suppkey % 4", TaaSymbols)
+  /** The same symbols over another key: the 200-day SMA prices. */
+  private val taaPrices = PriceBars.named(col("l_partkey") % 4, "l_partkey % 4", TaaSymbols)
 
   private def momentum(s: SparkSession, dir: String): DataFrame = {
     // the SPY/ACWI/GOVT slices each re-run the window family over the
     // persisted post-agg universe (tiny: symbols × dates) — one fact
     // scan total, matching the pre-round-5 internal-daily-persist plan
     val ar = MarketAnalysisReturn.analysisReturn(
-      MarketAnalysisQueries.universe(s, dir, taaBucket, "MIX").persist())
+      MarketAnalysisQueries.universe(s, dir, taa, "MIX").persist())
     val spy = ar.filter(col("symbol") === "SPY")
       .select(col("date").as("spy_d"), col("pct_change_1mo"), col("pct_change_3mo"),
         col("pct_change_6mo"), col("pct_change_1yr"))
@@ -185,7 +178,7 @@ object FredSignalQueries4 {
       .select(col("date").as("b_d"), col("pct_change_1yr").as("govt_12m_return"))
 
     val secAr = MarketAnalysisReturn.analysisReturn(
-      MarketAnalysisQueries.universe(s, dir, AnalysisQueries4.etfBucket, "NYSEARCA"))
+      MarketAnalysisQueries.universe(s, dir, AnalysisQueries4.etfs, "NYSEARCA"))
       .select(col("symbol"), col("date"),
         ((coalesce(col("pct_change_1mo"), lit(0.0)) +
           coalesce(col("pct_change_3mo"), lit(0.0))) / 2.0).as("avg_momentum"))
@@ -204,11 +197,7 @@ object FredSignalQueries4 {
 
     // 200-day SMA flags from a dedicated 4-symbol daily price staging
     val prices = Tables(s, dir).lineitem
-      .groupBy(
-        TaaSymbols.zipWithIndex.foldLeft(lit(null).cast("string")) {
-          case (acc, (sym, i)) => when(col("l_partkey") % 4 === i, lit(sym)).otherwise(acc)
-        }.as("symbol"),
-        to_date(col("l_shipdate")).as("date"))
+      .groupBy(taaPrices.col.as("symbol"), to_date(col("l_shipdate")).as("date"))
       .agg(rdiv(sum(col("l_extendedprice").cast(DecimalType(18, 6))), count(lit(1)), 4)
         .as("adj_close"))
     def smaFlag(sym: String, dcol: String, fcol: String): DataFrame = {
@@ -276,11 +265,6 @@ object FredSignalQueries4 {
   }
 
   private val momentumSql: String = {
-    val taaPriceBucket = {
-      val cases = TaaSymbols.zipWithIndex
-        .map { case (sym, i) => s"WHEN $i THEN '$sym'" }.mkString(" ")
-      s"CASE l_partkey % 4 $cases END"
-    }
     def smaFlagSql(sym: String, fcol: String) =
       s"""SELECT date,
           CASE WHEN adj_close >
@@ -304,10 +288,10 @@ object FredSignalQueries4 {
         $lookbackJoins"""
     }
     s"""
-    WITH ${MarketAnalysisQueries.uniCte(taaBucketSql, "MIX")},
+    WITH ${MarketAnalysisQueries.uniCte(taa, "MIX")},
     daily_m AS (SELECT * FROM uni WHERE adj_close IS NOT NULL),
     ar AS ($arBody),
-    ${MarketAnalysisQueries.uniCte(AnalysisQueries4.etfBucketSql, "NYSEARCA")
+    ${MarketAnalysisQueries.uniCte(AnalysisQueries4.etfs, "NYSEARCA")
       .replace("uni AS (", "uni_sec AS (")},
     daily_sec AS (SELECT * FROM uni_sec WHERE adj_close IS NOT NULL),
     ar_sec AS (
@@ -337,7 +321,7 @@ object FredSignalQueries4 {
       GROUP BY date
     ),
     taa_prices AS (
-      SELECT $taaPriceBucket AS symbol, CAST(l_shipdate AS DATE) AS date,
+      SELECT ${taaPrices.sql} AS symbol, CAST(l_shipdate AS DATE) AS date,
         ${oDivRound(
       "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) * 1000000 AS HUGEINT)",
       "COUNT(*)", 4)} AS adj_close
@@ -568,17 +552,10 @@ object FredSignalQueries4 {
       .withColumn("vix_prev_close", lag(col("vix_close"), 1).over(wv))
 
     // SPY/QQQ OHLC staging (bars-style; adj_* = the aggregates directly)
-    val key = md5(concat_ws("|",
-      col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
-    val px = Tables(s, dir).lineitem
-      .groupBy(
-        when(col("l_suppkey") % 2 === 0, "SPY").otherwise("QQQ").as("symbol"),
-        to_date(col("l_shipdate")).as("date"))
-      .agg(
-        r4(min_by(col("l_extendedprice"), key)).as("adj_open"),
-        r4(max(col("l_extendedprice"))).as("adj_high"),
-        r4(min(col("l_extendedprice"))).as("adj_low"),
-        r4(max_by(col("l_extendedprice"), key)).as("adj_close"))
+    val px = PriceBars.daily(PriceBars.lines(s, dir),
+        Seq(when(col("l_suppkey") % 2 === 0, "SPY").otherwise("QQQ").as("symbol")))
+      .select(col("symbol") +: col("date") +:
+        Seq("open", "high", "low", "close").map(c => r4(col(c)).as(s"adj_$c")): _*)
 
     val wp = Window.partitionBy(col("symbol")).orderBy(col("date"))
     val rets = px
@@ -656,8 +633,6 @@ object FredSignalQueries4 {
   }
 
   private val marketVolatilitySql: String = {
-    val mdKey = "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)" +
-      " || '|' || CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
     s"""
     WITH ${stgFredSql(Seq("VIXCLS"))},
     vix_stats AS (
@@ -673,10 +648,10 @@ object FredSignalQueries4 {
     px AS (
       SELECT CASE WHEN l_suppkey % 2 = 0 THEN 'SPY' ELSE 'QQQ' END AS symbol,
         CAST(l_shipdate AS DATE) AS date,
-        ROUND(MIN_BY(l_extendedprice, $mdKey), 4) + 0.0 AS adj_open,
+        ROUND(${PriceBars.openSql}, 4) + 0.0 AS adj_open,
         ROUND(MAX(l_extendedprice), 4) + 0.0 AS adj_high,
         ROUND(MIN(l_extendedprice), 4) + 0.0 AS adj_low,
-        ROUND(MAX_BY(l_extendedprice, $mdKey), 4) + 0.0 AS adj_close
+        ROUND(${PriceBars.closeSql}, 4) + 0.0 AS adj_close
       FROM lineitem GROUP BY 1, 2
     ),
     rets AS (

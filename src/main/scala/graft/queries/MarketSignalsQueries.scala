@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions.epochDay
+import graft.models.PriceBars
 import graft.operators.TimeSeriesOps
 import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
 import graft.queries.QueryDef.{davgOver, oDivRound, oSnap, rdiv, rsnap}
-import graft.runtime.Tables
 
 /** The remaining market-signals analysis models 1:1:
   *
@@ -55,32 +55,28 @@ import graft.runtime.Tables
   */
 object MarketSignalsQueries {
 
-  private val mdKeyCols = Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-  private def mdKey     = md5(concat_ws("|", mdKeyCols.map(col): _*))
-  private val mdKeySql =
-    "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|' || " +
-      "CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
+  /** The SPY/QQQ index universe of the signal models. */
+  private val spyQqq = PriceBars.Universe(when(col("l_linestatus") === "O", "SPY").otherwise("QQQ"),
+    "CASE WHEN l_linestatus = 'O' THEN 'SPY' ELSE 'QQQ' END")
 
-  /** adj-close staging for one bucketed universe: (symbol, date,
-    * adj_close [, volume]) — adj = raw/2 as in the market models. */
-  private def adjStaging(s: SparkSession, dir: String, bucket: Column, withVolume: Boolean): DataFrame = {
-    val base = Tables(s, dir).lineitem
-      .groupBy(bucket.as("symbol"), to_date(col("l_shipdate")).as("date"))
-    val agged =
-      if (withVolume)
-        base.agg(QueryDef.r4(max_by(col("l_extendedprice"), mdKey)).as("close"),
-          sum(col("l_quantity").cast(DecimalType(18, 0))).cast("long").as("volume"))
-      else base.agg(QueryDef.r4(max_by(col("l_extendedprice"), mdKey)).as("close"))
-    agged.withColumn("adj_close", col("close") * 0.5).drop("close")
+  /** adj-close staging for one universe: (symbol, date, adj_close
+    * [, volume]) — adj = the 4-decimal close / 2 as in the market
+    * models; the volume is the BIGINT sum of whole quantities. */
+  private def adjStaging(s: SparkSession, dir: String, uni: PriceBars.Universe, withVolume: Boolean): DataFrame = {
+    val volume = sum(col("l_quantity").cast(DecimalType(18, 0))).cast("long").as("bigint_volume")
+    val bars = PriceBars.daily(PriceBars.lines(s, dir), Seq(uni.col.as("symbol")), volume)
+    val adj = (QueryDef.r4(col("close")) * 0.5).as("adj_close")
+    if (withVolume) bars.select(col("symbol"), col("date"), col("bigint_volume").as("volume"), adj)
+    else bars.select(col("symbol"), col("date"), adj)
   }
 
-  private def adjStagingSql(bucketSql: String, withVolume: Boolean): String = {
+  private def adjStagingSql(uni: PriceBars.Universe, withVolume: Boolean): String = {
     val volAgg = if (withVolume) ", CAST(SUM(CAST(l_quantity AS DECIMAL(18,0))) AS BIGINT) AS volume" else ""
     val volSel = if (withVolume) ", volume" else ""
     s"""(
       SELECT symbol, date, close * 0.5 AS adj_close$volSel FROM (
-        SELECT $bucketSql AS symbol, CAST(l_shipdate AS DATE) AS date,
-          ROUND(MAX_BY(l_extendedprice, $mdKeySql), 4) + 0.0 AS close$volAgg
+        SELECT ${uni.sql} AS symbol, CAST(l_shipdate AS DATE) AS date,
+          ROUND(${PriceBars.closeSql}, 4) + 0.0 AS close$volAgg
         FROM lineitem GROUP BY 1, 2
       )
     )"""
@@ -91,7 +87,7 @@ object MarketSignalsQueries {
   // ------------------------------------------------------------------
 
   private def marketBreadthSignals(s: SparkSession, dir: String): DataFrame = {
-    val stocks = adjStaging(s, dir, concat(lit("SP_"), col("l_suppkey") % 100), withVolume = true)
+    val stocks = adjStaging(s, dir, PriceBars.Sp500, withVolume = true)
     val anchor = stocks.agg(max(col("date")).as("today"))
 
     val wSym = Window.partitionBy(col("symbol")).orderBy(col("date"))
@@ -179,8 +175,7 @@ object MarketSignalsQueries {
           .otherwise(0).cast("long"))
 
     // SPY branch (major indices with real index names)
-    val idx = adjStaging(s, dir,
-      when(col("l_linestatus") === "O", "SPY").otherwise("QQQ"), withVolume = false)
+    val idx = adjStaging(s, dir, spyQqq, withVolume = false)
     val wSpy = Window.orderBy(col("date"))
     val spy = idx.filter(col("symbol") === "SPY" && col("adj_close").isNotNull)
       .crossJoin(broadcast(anchor))
@@ -189,7 +184,7 @@ object MarketSignalsQueries {
       .select(col("date").as("s_date"), col("adj_close").as("spy_close"), col("spy_high_252d"))
 
     // sector participation (11-sector analog: the 3-symbol SECT universe)
-    val sect = adjStaging(s, dir, concat(lit("SECT_"), col("l_returnflag")), withVolume = false)
+    val sect = adjStaging(s, dir, PriceBars.Sectors, withVolume = false)
       .crossJoin(broadcast(anchor))
       .filter(col("adj_close").isNotNull && col("date") >= add_months(col("today"), -36))
     val sectSma = sect
@@ -281,9 +276,9 @@ object MarketSignalsQueries {
   }
 
   private val marketBreadthSignalsSql: String = {
-    val stocksCte  = adjStagingSql("'SP_' || CAST(l_suppkey % 100 AS VARCHAR)", withVolume = true)
-    val idxCte     = adjStagingSql("CASE WHEN l_linestatus = 'O' THEN 'SPY' ELSE 'QQQ' END", withVolume = false)
-    val sectCte    = adjStagingSql("'SECT_' || l_returnflag", withVolume = false)
+    val stocksCte  = adjStagingSql(PriceBars.Sp500, withVolume = true)
+    val idxCte     = adjStagingSql(spyQqq, withVolume = false)
+    val sectCte    = adjStagingSql(PriceBars.Sectors, withVolume = false)
     def oAvgW(c: String, win: String, outScale: Int) = oDivRound(
       s"CAST(SUM(CAST($c AS DECIMAL(18,6))) OVER $win * 1000000 AS HUGEINT)",
       s"COUNT($c) OVER $win", outScale)
@@ -499,8 +494,7 @@ object MarketSignalsQueries {
     def dw(n: Int) = wd.rowsBetween(-(n - 1), 0)
     def nz(c: Column): Column = when(c =!= 0, c)
 
-    val spyDaily = adjStaging(s, dir,
-      when(col("l_linestatus") === "O", "SPY").otherwise("QQQ"), withVolume = false)
+    val spyDaily = adjStaging(s, dir, spyQqq, withVolume = false)
       .filter(col("symbol") === "SPY" && col("adj_close").isNotNull)
       .withColumn("daily_change", col("adj_close") - lag(col("adj_close"), 1).over(wd))
 
@@ -581,7 +575,7 @@ object MarketSignalsQueries {
   }
 
   private val technicalSignalsSql: String = {
-    val idxCte = adjStagingSql("CASE WHEN l_linestatus = 'O' THEN 'SPY' ELSE 'QQQ' END", withVolume = false)
+    val idxCte = adjStagingSql(spyQqq, withVolume = false)
     def exAvg(c: String, win: String) =
       s"CAST(SUM(CAST($c AS DECIMAL(18,6))) OVER $win AS DOUBLE) / COUNT($c) OVER $win"
     s"""
@@ -682,28 +676,21 @@ object MarketSignalsQueries {
   // commodity_market_signals
   // ------------------------------------------------------------------
 
-  /** named commodity staging: (commodity_name, date, price). */
-  private def namedCommodity(s: SparkSession, dir: String, nameCol: Column): DataFrame =
-    Tables(s, dir).lineitem
-      .groupBy(nameCol.as("commodity_name"), to_date(col("l_shipdate")).as("date"))
-      .agg(QueryDef.r4(max_by(col("l_extendedprice"), mdKey)).as("price"))
+  /** named commodity staging: (commodity_name, date, price), the
+    * price the close rounded to 4 decimals. */
+  private def namedCommodity(s: SparkSession, dir: String, names: PriceBars.Universe): DataFrame =
+    PriceBars.daily(PriceBars.lines(s, dir), Seq(names.col.as("commodity_name")))
+      .select(col("commodity_name"), col("date"), QueryDef.r4(col("close")).as("price"))
 
-  private val inputNames = Seq("gold", "copper", "aluminum", "lumber", "steel", "cotton")
-  private val energyNames = Seq("crude_oil", "natural_gas", "gasoline", "heating_oil")
-
-  private def namesCase(names: Seq[String], keyCol: Column): Column =
-    names.zipWithIndex.foldLeft(lit(null).cast("string")) {
-      case (acc, (n, i)) => when(keyCol === i, lit(n)).otherwise(acc)
-    }
-
-  private def namesCaseSql(names: Seq[String], keySql: String): String =
-    s"CASE $keySql ${names.zipWithIndex.map { case (n, i) => s"WHEN $i THEN '$n'" }.mkString(" ")} END"
+  private val inputs = PriceBars.named(col("l_partkey") % 6, "l_partkey % 6",
+    Seq("gold", "copper", "aluminum", "lumber", "steel", "cotton"))
+  private val energies = PriceBars.named(col("l_suppkey") % 4, "l_suppkey % 4",
+    Seq("crude_oil", "natural_gas", "gasoline", "heating_oil"))
 
   private def commodityMarketSignals(s: SparkSession, dir: String): DataFrame = {
-    val input  = namedCommodity(s, dir, namesCase(inputNames, col("l_partkey") % 6))
-    val energy = namedCommodity(s, dir, namesCase(energyNames, col("l_suppkey") % 4))
-    val spy = adjStaging(s, dir,
-      when(col("l_linestatus") === "O", "SPY").otherwise("QQQ"), withVolume = false)
+    val input  = namedCommodity(s, dir, inputs)
+    val energy = namedCommodity(s, dir, energies)
+    val spy = adjStaging(s, dir, spyQqq, withVolume = false)
       .filter(col("symbol") === "SPY" && col("adj_close").isNotNull && col("adj_close") > 0)
       .select(col("date").as("s_date"), col("adj_close").as("spy_price"))
     def series(df: DataFrame, nm: String, out: String) = df
@@ -766,9 +753,7 @@ object MarketSignalsQueries {
   }
 
   private val commodityMarketSignalsSql: String = {
-    val inputCase  = namesCaseSql(inputNames, "l_partkey % 6")
-    val energyCase = namesCaseSql(energyNames, "l_suppkey % 4")
-    val idxCte = adjStagingSql("CASE WHEN l_linestatus = 'O' THEN 'SPY' ELSE 'QQQ' END", withVolume = false)
+    val idxCte = adjStagingSql(spyQqq, withVolume = false)
     def exAvgRaw(c: String, win: String) =
       s"CAST(SUM(CAST($c AS DECIMAL(18,6))) OVER $win AS DOUBLE) / COUNT($c) OVER $win"
     def exAvgR(c: String, win: String, n: Int) = oDivRound(
@@ -776,13 +761,13 @@ object MarketSignalsQueries {
       s"COUNT($c) OVER $win", n)
     s"""
     WITH inputc AS (
-      SELECT $inputCase AS commodity_name, CAST(l_shipdate AS DATE) AS date,
-        ROUND(MAX_BY(l_extendedprice, $mdKeySql), 4) + 0.0 AS price
+      SELECT ${inputs.sql} AS commodity_name, CAST(l_shipdate AS DATE) AS date,
+        ROUND(${PriceBars.closeSql}, 4) + 0.0 AS price
       FROM lineitem GROUP BY 1, 2
     ),
     energyc AS (
-      SELECT $energyCase AS commodity_name, CAST(l_shipdate AS DATE) AS date,
-        ROUND(MAX_BY(l_extendedprice, $mdKeySql), 4) + 0.0 AS price
+      SELECT ${energies.sql} AS commodity_name, CAST(l_shipdate AS DATE) AS date,
+        ROUND(${PriceBars.closeSql}, 4) + 0.0 AS price
       FROM lineitem GROUP BY 1, 2
     ),
     gold AS (SELECT date AS g_date, price AS gold_price FROM inputc

@@ -1,14 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions.epochDay
-import graft.models.MarketAnalysisReturn
+import graft.models.{MarketAnalysisReturn, PriceBars}
 import graft.queries.QueryDef.{oDivRound, oSnap, r4, rdiv, rsnap}
-import graft.runtime.Tables
 
 /** The two remaining markets-schema heavyweights (refs dbt_project/
   * models/markets/factor_sector_correlation.sql (285 LoC) and
@@ -60,25 +59,8 @@ object MarketsQueries2 {
 
   private val IndexSymbols = ComparisonMeta.filter(_._2 != "sector_etf").map(_._1)
 
-  private def factorBucket: Column = FactorMeta.map(_._1).zipWithIndex
-    .foldLeft(lit(null).cast("string")) { case (acc, (sym, i)) =>
-      when(col("l_orderkey") % 5 === i, lit(sym)).otherwise(acc)
-    }
-  private val factorBucketSql: String = {
-    val cases = FactorMeta.map(_._1).zipWithIndex
-      .map { case (sym, i) => s"WHEN $i THEN '$sym'" }.mkString(" ")
-    s"CASE l_orderkey % 5 $cases END"
-  }
-
-  private def idxBucket: Column = IndexSymbols.zipWithIndex
-    .foldLeft(lit(null).cast("string")) { case (acc, (sym, i)) =>
-      when(col("l_partkey") % 9 === i, lit(sym)).otherwise(acc)
-    }
-  private val idxBucketSql: String = {
-    val cases = IndexSymbols.zipWithIndex
-      .map { case (sym, i) => s"WHEN $i THEN '$sym'" }.mkString(" ")
-    s"CASE l_partkey % 9 $cases END"
-  }
+  private val factors = PriceBars.named(col("l_orderkey") % 5, "l_orderkey % 5", FactorMeta.map(_._1))
+  private val indices = PriceBars.named(col("l_partkey") % 9, "l_partkey % 9", IndexSymbols)
 
   private def factorSectorCorrelation(s: SparkSession, dir: String): DataFrame = {
     val fm = { import s.implicits._; FactorMeta.toDF("fm_sym", "factor_name") }
@@ -94,9 +76,9 @@ object MarketsQueries2 {
     // tiny) is persisted so the fact-table scan+agg runs once however
     // many consumers slice the result (analysisReturn itself is a pure
     // single-pass window family since the round-5 lookback rewrite).
-    val uniAll = Seq(MarketAnalysisQueries.universe(s, dir, factorBucket, "FACT"),
-        MarketAnalysisQueries.universe(s, dir, AnalysisQueries4.etfBucket, "NYSEARCA"),
-        MarketAnalysisQueries.universe(s, dir, idxBucket, "INDEX"))
+    val uniAll = Seq(MarketAnalysisQueries.universe(s, dir, factors, "FACT"),
+        MarketAnalysisQueries.universe(s, dir, AnalysisQueries4.etfs, "NYSEARCA"),
+        MarketAnalysisQueries.universe(s, dir, indices, "INDEX"))
       .reduce(_ unionByName _)
       .persist()
     // NOT persisted (measured A/B at sf0.1: ~7.4s unpersisted vs
@@ -205,9 +187,9 @@ object MarketsQueries2 {
         RANGE BETWEEN 365 PRECEDING AND CURRENT ROW)"""
     }
     s"""
-    WITH ${MarketAnalysisQueries.uniCte(factorBucketSql, "FACT").replace("uni AS (", "uni_f AS (")},
-    ${MarketAnalysisQueries.uniCte(AnalysisQueries4.etfBucketSql, "NYSEARCA").replace("uni AS (", "uni_s AS (")},
-    ${MarketAnalysisQueries.uniCte(idxBucketSql, "INDEX").replace("uni AS (", "uni_i AS (")},
+    WITH ${MarketAnalysisQueries.uniCte(factors, "FACT").replace("uni AS (", "uni_f AS (")},
+    ${MarketAnalysisQueries.uniCte(AnalysisQueries4.etfs, "NYSEARCA").replace("uni AS (", "uni_s AS (")},
+    ${MarketAnalysisQueries.uniCte(indices, "INDEX").replace("uni AS (", "uni_i AS (")},
     d_f AS (
       SELECT *, adj_close - LAG(adj_close, 1) OVER (
         PARTITION BY symbol, exchange ORDER BY date) AS daily_diff
@@ -335,21 +317,12 @@ object MarketsQueries2 {
     ("global_market", "stg_global_markets", 6))
 
   private def priceUniverse(s: SparkSession, dir: String): DataFrame = {
-    val key = md5(concat_ws("|",
-      col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
     // one OHLCV staging per universe slice; adj_* columns NULL behind a
     // deterministic gate so the COALESCE fallbacks are exercised
-    val uni = col("l_suppkey") % 7
-    val base = Tables(s, dir).lineitem
-      .groupBy(uni.as("u"),
-        concat(lit("SYM"), col("l_partkey") % 13).as("symbol"),
-        to_date(col("l_shipdate")).as("date"))
-      .agg(
-        r4(min_by(col("l_extendedprice"), key)).as("open"),
-        r4(max(col("l_extendedprice"))).as("high"),
-        r4(min(col("l_extendedprice"))).as("low"),
-        r4(max_by(col("l_extendedprice"), key)).as("close"),
-        r4(QueryDef.dsum(col("l_quantity"))).as("volume"))
+    val base = PriceBars.daily(PriceBars.lines(s, dir),
+        Seq((col("l_suppkey") % 7).as("u"), concat(lit("SYM"), col("l_partkey") % 13).as("symbol")))
+      .select(col("u") +: col("symbol") +: col("date") +:
+        Seq("open", "high", "low", "close", "volume").map(c => r4(col(c)).as(c)): _*)
     val adjGate = (epochDay(col("date")) + col("u")) % 11 === 0
     val exGate  = (epochDay(col("date")) + col("u")) % 13 === 0
     val universeCol = Universes.foldLeft(lit(null).cast("string")) {
@@ -393,8 +366,6 @@ object MarketsQueries2 {
   }
 
   private val priceUniverseSql: String = {
-    val mdKey = "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)" +
-      " || '|' || CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
     val uCase = Universes.map { case (u, _, i) => s"WHEN $i THEN '$u'" }.mkString(" ")
     val sCase = Universes.map { case (_, m, i) => s"WHEN $i THEN '$m'" }.mkString(" ")
     s"""
@@ -402,10 +373,10 @@ object MarketsQueries2 {
       SELECT l_suppkey % 7 AS u,
         'SYM' || CAST(l_partkey % 13 AS VARCHAR) AS symbol,
         CAST(l_shipdate AS DATE) AS date,
-        ROUND(MIN_BY(l_extendedprice, $mdKey), 4) + 0.0 AS open,
+        ROUND(${PriceBars.openSql}, 4) + 0.0 AS open,
         ROUND(MAX(l_extendedprice), 4) + 0.0 AS high,
         ROUND(MIN(l_extendedprice), 4) + 0.0 AS low,
-        ROUND(MAX_BY(l_extendedprice, $mdKey), 4) + 0.0 AS close,
+        ROUND(${PriceBars.closeSql}, 4) + 0.0 AS close,
         ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE), 4) + 0.0 AS volume
       FROM lineitem
       GROUP BY 1, 2, 3

@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.expressions.Window
 
-import graft.models.TechnicalIndicators
+import graft.models.{PriceBars, TechnicalIndicators}
 import graft.operators.CorporateActions
-import graft.runtime.Tables
-import graft.queries.QueryDef.{dsum, r4}
+import graft.queries.QueryDef.r4
 
 /** Model-level queries: the reference's flagship wide models re-run
   * over OHLCV bars synthesized deterministically from lineitem
@@ -16,31 +15,21 @@ import graft.queries.QueryDef.{dsum, r4}
   */
 object ModelQueries {
 
-  /** Deterministic OHLCV synthesis: open/close picked by md5 of the
-    * unique line key (engine-portable tie-free selection). */
-  def bars(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables(s, dir).lineitem
-    val key = md5(
-      concat_ws("|", col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-    )
-    li.groupBy(col("l_returnflag").as("symbol"), to_date(col("l_shipdate")).as("d"))
-      .agg(
-        r4(min_by(col("l_extendedprice"), key)).as("open"),
-        r4(max(col("l_extendedprice"))).as("high"),
-        r4(min(col("l_extendedprice"))).as("low"),
-        r4(max_by(col("l_extendedprice"), key)).as("close"),
-        r4(dsum(col("l_quantity"))).as("volume")
-      )
-  }
+  /** The model family's OHLCV bars: per-(flag, day) [[PriceBars.daily]],
+    * rounded to 4 decimals, day column `d`. */
+  def bars(s: SparkSession, dir: String): DataFrame =
+    PriceBars.daily(PriceBars.lines(s, dir), Seq(PriceBars.Flags.col.as("symbol")))
+      .select(col("symbol") +: col("date").as("d") +:
+        Seq("open", "high", "low", "close", "volume").map(c => r4(col(c)).as(c)): _*)
 
   /** Shared bars CTE for oracle SQL (also used by MarketModelQueries). */
-  val barsSqlPublic: String = """
+  val barsSqlPublic: String = s"""
     bars AS (
-      SELECT l_returnflag AS symbol, CAST(l_shipdate AS DATE) AS d,
-        ROUND(MIN_BY(l_extendedprice, md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|' || CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))), 4) + 0.0 AS open,
+      SELECT ${PriceBars.Flags.sql} AS symbol, CAST(l_shipdate AS DATE) AS d,
+        ROUND(${PriceBars.openSql}, 4) + 0.0 AS open,
         ROUND(MAX(l_extendedprice), 4) + 0.0 AS high,
         ROUND(MIN(l_extendedprice), 4) + 0.0 AS low,
-        ROUND(MAX_BY(l_extendedprice, md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|' || CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))), 4) + 0.0 AS close,
+        ROUND(${PriceBars.closeSql}, 4) + 0.0 AS close,
         ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE), 4) + 0.0 AS volume
       FROM lineitem GROUP BY 1, 2
     )"""

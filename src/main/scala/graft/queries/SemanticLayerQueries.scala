@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.qualifyRowNumber
-import graft.models.MarketAnalysisReturn
+import graft.models.{MarketAnalysisReturn, PriceBars}
 import graft.runtime.Tables
 
 /** The semantic-layer models 1:1 (SURVEY.md §2.M metrics/semantic
@@ -30,17 +30,17 @@ object SemanticLayerQueries {
 
   // ---- the four analysis_return branches the layer consumes --------
 
-  private def arOracle(bucketSql: String, ex: String): String =
-    MarketAnalysisReturn.oracleSql(MarketAnalysisQueries.uniCte(bucketSql, ex))
+  private def arOracle(uni: PriceBars.Universe, ex: String): String =
+    MarketAnalysisReturn.oracleSql(MarketAnalysisQueries.uniCte(uni, ex))
 
-  private val sp500Sql = arOracle("'SP_' || CAST(l_suppkey % 100 AS VARCHAR)", "NYSE")
+  private val sp500Sql = arOracle(PriceBars.Sp500, "NYSE")
 
-  private val usSectorSql = arOracle("'SECT_' || l_returnflag", "NYSEARCA")
+  private val usSectorSql = arOracle(PriceBars.Sectors, "NYSEARCA")
 
-  private val factorSql = arOracle("'FAC_' || CAST(l_suppkey % 12 AS VARCHAR)", "NYSEARCA")
+  private val factorSql = arOracle(PriceBars.Factors, "NYSEARCA")
 
   private val inputCommoditiesSql =
-    CommodityQueries.commodityAnalysisReturnOracleSql("'IN_' || CAST(l_partkey % 6 AS VARCHAR)", "ton")
+    CommodityQueries.commodityAnalysisReturnOracleSql(PriceBars.InputCommodities)
 
   /** ONE analysisReturn run for all four asset classes the layer
     * consumes: the per-class universe aggregations union BEFORE the
@@ -77,14 +77,11 @@ object SemanticLayerQueries {
     * production read pattern is the DAG lane (flat 0.7–1.1 s reads,
     * BENCH_FULL.json `dag`). */
   private[queries] def layerAr(s: SparkSession, dir: String): DataFrame = {
-    val equity = Seq(
-      (concat(lit("SP_"), col("l_suppkey") % 100), "NYSE"),
-      (concat(lit("SECT_"), col("l_returnflag")), "NYSEARCA"),
-      (concat(lit("FAC_"), col("l_suppkey") % 12), "NYSEARCA"))
-      .map { case (b, ex) => MarketAnalysisQueries.universe(s, dir, b, ex) }
+    val equity = Seq((PriceBars.Sp500, "NYSE"), (PriceBars.Sectors, "NYSEARCA"), (PriceBars.Factors, "NYSEARCA"))
+      .map { case (u, ex) => MarketAnalysisQueries.universe(s, dir, u, ex) }
     val p = col("price")
     val cmdty = CommodityQueries
-      .staging(s, dir, concat(lit("IN_"), col("l_partkey") % 6), "ton")
+      .staging(PriceBars.commodity(PriceBars.lines(s, dir), PriceBars.InputCommodities))
       .select(col("commodity_name").as("symbol"),
         col("commodity_unit").as("exchange"), col("date"),
         p.as("close"), p.as("high"), p.as("low"), p.as("volume"),
@@ -131,35 +128,24 @@ object SemanticLayerQueries {
   /** (source_name, domain, grain, lookback, warn, error, spark entity,
     * sql entity) — the reference's source_specs STRUCT array mapped to
     * synthetic entity spaces. */
-  private val CoverageSources: Seq[(String, String, String, Int, Int, Int, SparkSession => Column, String)] = {
-    def mk(src: String, dom: String, grain: String, lb: Int, warn: Int, err: Int,
-           c: => Column, sql: String) =
-      (src, dom, grain, lb, warn, err, (_: SparkSession) => c, sql)
+  private val CoverageSources: Seq[(String, String, String, Int, Int, Int, Column, String)] = {
+    def market(src: String, u: PriceBars.Universe) =
+      (src, "markets", "daily_market_prices", 31, 5, 10, u.col, u.sql)
+    def commodity(src: String, c: PriceBars.Commodity) =
+      (src, "commodities", "daily_commodity_prices", 31, 5, 10,
+        concat(c.universe.col, lit(s":${c.unit}")), s"${c.universe.sql} || ':${c.unit}'")
     Seq(
-      mk("sp500_companies_prices_raw", "markets", "daily_market_prices", 31, 5, 10,
-        concat(lit("SP_"), col("l_suppkey") % 100), "'SP_' || CAST(l_suppkey % 100 AS VARCHAR)"),
-      mk("us_sector_etfs_raw", "markets", "daily_market_prices", 31, 5, 10,
-        concat(lit("SECT_"), col("l_returnflag")), "'SECT_' || l_returnflag"),
-      mk("currency_etfs_raw", "markets", "daily_market_prices", 31, 5, 10,
-        concat(lit("FX_"), col("l_partkey") % 9), "'FX_' || CAST(l_partkey % 9 AS VARCHAR)"),
-      mk("commodity_etfs_raw", "markets", "daily_market_prices", 31, 5, 10,
-        concat(lit("CE_"), col("l_partkey") % 8), "'CE_' || CAST(l_partkey % 8 AS VARCHAR)"),
-      mk("major_indices_raw", "markets", "daily_market_prices", 31, 5, 10,
-        concat(lit("IDX_"), col("l_linestatus")), "'IDX_' || l_linestatus"),
-      mk("fixed_income_etfs_raw", "markets", "daily_market_prices", 31, 5, 10,
-        concat(lit("FI_"), col("l_partkey") % 11), "'FI_' || CAST(l_partkey % 11 AS VARCHAR)"),
-      mk("global_markets_raw", "markets", "daily_market_prices", 31, 5, 10,
-        concat(lit("GM_"), col("l_suppkey") % 7), "'GM_' || CAST(l_suppkey % 7 AS VARCHAR)"),
-      mk("energy_commodities_raw", "commodities", "daily_commodity_prices", 31, 5, 10,
-        concat(lit("EN_"), col("l_suppkey") % 4, lit(":barrel")),
-        "'EN_' || CAST(l_suppkey % 4 AS VARCHAR) || ':barrel'"),
-      mk("input_commodities_raw", "commodities", "daily_commodity_prices", 31, 5, 10,
-        concat(lit("IN_"), col("l_partkey") % 6, lit(":ton")),
-        "'IN_' || CAST(l_partkey % 6 AS VARCHAR) || ':ton'"),
-      mk("agriculture_commodities_raw", "commodities", "daily_commodity_prices", 31, 5, 10,
-        concat(lit("AG_"), col("l_orderkey") % 5, lit(":bushel")),
-        "'AG_' || CAST(l_orderkey % 5 AS VARCHAR) || ':bushel'"),
-      mk("fred_raw", "government", "economic_series", 93, 45, 75,
+      market("sp500_companies_prices_raw", PriceBars.Sp500),
+      market("us_sector_etfs_raw", PriceBars.Sectors),
+      market("currency_etfs_raw", PriceBars.Currency),
+      market("commodity_etfs_raw", PriceBars.CommodityEtfs),
+      market("major_indices_raw", PriceBars.Indices),
+      market("fixed_income_etfs_raw", PriceBars.FixedIncome),
+      market("global_markets_raw", PriceBars.GlobalMarkets),
+      commodity("energy_commodities_raw", PriceBars.EnergyCommodities),
+      commodity("input_commodities_raw", PriceBars.InputCommodities),
+      commodity("agriculture_commodities_raw", PriceBars.AgricultureCommodities),
+      ("fred_raw", "government", "economic_series", 93, 45, 75,
         concat(lit("supp_"), col("l_suppkey") % 23), "'supp_' || CAST(l_suppkey % 23 AS VARCHAR)"))
   }
 
@@ -288,7 +274,7 @@ object SemanticLayerQueries {
       (s, dir) => {
         import s.implicits._
         val tags = array(CoverageSources.map { case (src, _, _, _, _, _, ent, _) =>
-          struct(lit(src).as("source_name"), ent(s).cast("string").as("entity_id"))
+          struct(lit(src).as("source_name"), ent.cast("string").as("entity_id"))
         }: _*)
         val obs = Tables(s, dir).lineitem
           .select(to_date(col("l_shipdate")).as("observation_date"), explode(tags).as("t"))

@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions.qualifyRowNumber
-import graft.models.MarketSummary
+import graft.models.{MarketSummary, PriceBars}
 import graft.queries.QueryDef.{oDivRound, oSnap, r4, rdiv}
-import graft.runtime.Tables
 
 /** The backtesting snapshot family 1:1 (SURVEY.md §2.M backtesting
   * schema; ref dbt_project/models/backtesting and the agents_preprocess
@@ -52,10 +51,6 @@ import graft.runtime.Tables
   * scanned once per model, pre-aggregated before the fan.
   */
 object SnapshotQueries {
-
-  private val mdKey =
-    "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|' || " +
-      "CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
 
   /** Month-start snapshot spine cutoffs (the reference's
     * data-availability knob, mapped into the synthetic date range). */
@@ -167,62 +162,25 @@ object SnapshotQueries {
       AND ar.symbol = ep2.symbol AND ar.time_period = ep2.time_period"""
 
   private def usSectorUni(s: SparkSession, dir: String): DataFrame =
-    MarketSummaryQueries.universe(s, dir,
-      concat(lit("SECT_"), col("l_returnflag")), "sector_etf", "NYSEARCA")
+    MarketSummaryQueries.universe(s, dir, PriceBars.Sectors, "sector_etf", "NYSEARCA")
 
-  private val usSectorUniCte =
-    MarketSummaryQueries.uniCte("'SECT_' || l_returnflag", "sector_etf", "NYSEARCA")
+  private val usSectorUniCte = MarketSummaryQueries.uniCte(PriceBars.Sectors, "sector_etf", "NYSEARCA")
 
   // ------------------------------------------------------------------
   // Commodity summary snapshot template
   // ------------------------------------------------------------------
 
-  /** (model, spark bucket, sql bucket, commodity_unit, category) —
-    * same symbol spaces as the non-snapshot commodity summaries. */
-  private val CommodityUniverses: Seq[(String, SparkSession => Column, String, String, String)] = Seq(
-    ("energy_commodities_summary_snapshot", _ => concat(lit("EN_"), col("l_suppkey") % 4),
-      "'EN_' || CAST(l_suppkey % 4 AS VARCHAR)", "barrel", "energy"),
-    ("agriculture_commodities_summary_snapshot", _ => concat(lit("AG_"), col("l_orderkey") % 5),
-      "'AG_' || CAST(l_orderkey % 5 AS VARCHAR)", "bushel", "agriculture"),
-    ("input_commodities_summary_snapshot", _ => concat(lit("IN_"), col("l_partkey") % 6),
-      "'IN_' || CAST(l_partkey % 6 AS VARCHAR)", "ton", "input"))
+  /** Single-price commodity staging over commodity bars: commodity_name,
+    * trade_date, price (the close, rounded to 4 decimals), commodity_unit. */
+  private def commodityStaging(bars: DataFrame): DataFrame =
+    bars.select(col("commodity_name"), col("date").as("trade_date"),
+      r4(col("close")).as("price"), col("commodity_unit"))
 
-  /** Single-price commodity staging: commodity_name, commodity_unit,
-    * trade_date, price (md5-keyed close pick, as everywhere). */
-  private def commodityStaging(s: SparkSession, dir: String, bucket: Column, unit: String): DataFrame = {
-    val key = md5(concat_ws("|",
-      col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
-    Tables(s, dir).lineitem
-      .groupBy(bucket.as("commodity_name"), to_date(col("l_shipdate")).as("trade_date"))
-      .agg(r4(max_by(col("l_extendedprice"), key)).as("price"))
-      .withColumn("commodity_unit", lit(unit))
-  }
-
-  /** All three snapshot stagings from ONE lineitem pass (md5 key once
-    * per row, explode to the three family keys) — same single-scan
-    * rewrite as [[CommodityQueries.stagingAll]]; row-identical to the
-    * per-universe union because the bucket functions are total and
-    * the EN_/AG_/IN_ key spaces are disjoint. */
-  private def commodityStagingAll(s: SparkSession, dir: String): DataFrame = {
-    val key = md5(concat_ws("|",
-      col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
-    val fams = array(CommodityUniverses.map { case (_, bucket, _, unit, _) =>
-      struct(bucket(s).as("commodity_name"), lit(unit).as("commodity_unit"))
-    }: _*)
-    Tables(s, dir).lineitem
-      .select(col("l_extendedprice"), to_date(col("l_shipdate")).as("trade_date"),
-        key.as("__k"), explode(fams).as("fam"))
-      .groupBy(col("fam.commodity_name").as("commodity_name"), col("trade_date"),
-        col("fam.commodity_unit").as("commodity_unit"))
-      .agg(r4(max_by(col("l_extendedprice"), col("__k"))).as("price"))
-      .select(col("commodity_name"), col("trade_date"), col("price"), col("commodity_unit"))
-  }
-
-  private def commodityCte(bucketSql: String, unit: String): String = s"""
+  private def commodityCte(c: PriceBars.Commodity): String = s"""
     cstg AS (
-      SELECT $bucketSql AS commodity_name, CAST(l_shipdate AS DATE) AS trade_date,
-        ROUND(MAX_BY(l_extendedprice, $mdKey), 4) + 0.0 AS price,
-        '$unit' AS commodity_unit
+      SELECT ${c.universe.sql} AS commodity_name, CAST(l_shipdate AS DATE) AS trade_date,
+        ROUND(${PriceBars.closeSql}, 4) + 0.0 AS price,
+        '${c.unit}' AS commodity_unit
       FROM lineitem GROUP BY 1, 2
     )"""
 
@@ -517,7 +475,7 @@ object SnapshotQueries {
     val sector = summarizeSnapshot(usSectorUni(s, dir), SummaryCutoff)
       .select(perfCols("sector", col("snapshot_date")): _*)
     val major = MarketSummary.summarize(
-        MarketSummaryQueries.universe(s, dir, concat(lit("IDX_"), col("l_linestatus")), "index", "INDEX"))
+        MarketSummaryQueries.universe(s, dir, PriceBars.Indices, "index", "INDEX"))
       .select(perfCols("major_index", trunc(col("period_end_date"), "month")): _*)
     val w = Window
       .partitionBy(col("snapshot_date"), col("market_category"), col("symbol"),
@@ -528,7 +486,7 @@ object SnapshotQueries {
 
   private val agentMarketPerfSnapshotSql: String = {
     val majorOracle = MarketSummary.oracleSql(
-      MarketSummaryQueries.uniCte("'IDX_' || l_linestatus", "index", "INDEX"))
+      MarketSummaryQueries.uniCte(PriceBars.Indices, "index", "INDEX"))
     s"""
     WITH sector AS (SELECT * FROM (${ohlcSnapshotOracleSql(usSectorUniCte, SummaryCutoff)})),
     major AS (SELECT * FROM ($majorOracle)),
@@ -570,12 +528,9 @@ object SnapshotQueries {
   private def agentCommodityPerfSnapshot(s: SparkSession, dir: String): DataFrame = {
     // ONE snapshot run over the single-scan staging (prefix-independent
     // spine/windows — same shared-run trick as the non-snapshot agent)
-    val stg = commodityStagingAll(s, dir)
-    val cat = when(col("commodity_name").startsWith("EN_"), "energy")
-      .when(col("commodity_name").startsWith("AG_"), "agriculture")
-      .otherwise("input")
+    val stg = commodityStaging(PriceBars.commodities(PriceBars.lines(s, dir)))
     val merged = commoditySnapshot(stg, SummaryCutoff)
-      .select(commodityPerfCols(cat): _*)
+      .select(commodityPerfCols(PriceBars.commodityCategory): _*)
     val w = Window
       .partitionBy(col("snapshot_date"), col("commodity_category"), col("commodity_name"),
         col("commodity_unit"), col("time_period"))
@@ -584,9 +539,9 @@ object SnapshotQueries {
   }
 
   private val agentCommodityPerfSnapshotSql: String = {
-    val branches = CommodityUniverses.map { case (_, _, bucketSql, unit, cat) =>
-      s"""SELECT $commodityPerfColsSql, '$cat' AS commodity_category, snapshot_date
-          FROM (${commoditySnapshotOracleSql(commodityCte(bucketSql, unit), SummaryCutoff)})"""
+    val branches = PriceBars.Commodities.map { c =>
+      s"""SELECT $commodityPerfColsSql, '${c.category}' AS commodity_category, snapshot_date
+          FROM (${commoditySnapshotOracleSql(commodityCte(c), SummaryCutoff)})"""
     }
     s"""
     SELECT * FROM (${branches.mkString(" UNION ALL ")})
@@ -603,11 +558,11 @@ object SnapshotQueries {
       (s, dir) => summarizeSnapshot(usSectorUni(s, dir), SummaryCutoff),
       Some(ohlcSnapshotOracleSql(usSectorUniCte, SummaryCutoff))
     )
-  ) ++ CommodityUniverses.map { case (name, bucket, bucketSql, unit, _) =>
+  ) ++ PriceBars.Commodities.map { c =>
     QueryDef(
-      s"q_$name",
-      (s, dir) => commoditySnapshot(commodityStaging(s, dir, bucket(s), unit), SummaryCutoff),
-      Some(commoditySnapshotOracleSql(commodityCte(bucketSql, unit), SummaryCutoff))
+      s"q_${c.root}_summary_snapshot",
+      (s, dir) => commoditySnapshot(commodityStaging(PriceBars.commodity(PriceBars.lines(s, dir), c)), SummaryCutoff),
+      Some(commoditySnapshotOracleSql(commodityCte(c), SummaryCutoff))
     )
   } ++ Seq(
     QueryDef(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.epochDay
+import graft.models.PriceBars
 import graft.queries.FredSignalQueries.{idxOf, stgFred, stgFredSql}
 import graft.runtime.Tables
 
@@ -26,49 +27,29 @@ import graft.runtime.Tables
   */
 object StagingMarketQueries {
 
-  private val mdKeySql =
-    "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|' || " +
-      "CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
-
-  /** (model suffix, spark bucket, sql bucket, asset_type, exchange) —
-    * same universes as the summary/analysis models. */
-  private val PriceStagings: Seq[(String, SparkSession => Column, String, String, String)] = Seq(
-    ("sp500_companies_prices", _ => concat(lit("SP_"), col("l_suppkey") % 100),
-      "'SP_' || CAST(l_suppkey % 100 AS VARCHAR)", "stock", "NYSE"),
-    ("nasdaq_companies_prices", _ => concat(lit("ND_"), col("l_partkey") % 200),
-      "'ND_' || CAST(l_partkey % 200 AS VARCHAR)", "stock", "NASDAQ"),
-    ("us_sectors", _ => concat(lit("SECT_"), col("l_returnflag")),
-      "'SECT_' || l_returnflag", "sector_etf", "NYSEARCA"),
-    ("major_indices", _ => concat(lit("IDX_"), col("l_linestatus")),
-      "'IDX_' || l_linestatus", "index", "INDEX"),
-    ("global_markets", _ => concat(lit("GM_"), col("l_suppkey") % 7),
-      "'GM_' || CAST(l_suppkey % 7 AS VARCHAR)", "index", "GLOBAL"),
-    ("currency", _ => concat(lit("FX_"), col("l_partkey") % 9),
-      "'FX_' || CAST(l_partkey % 9 AS VARCHAR)", "currency", "FOREX"),
-    ("fixed_income", _ => concat(lit("FI_"), col("l_partkey") % 11),
-      "'FI_' || CAST(l_partkey % 11 AS VARCHAR)", "bond_etf", "BONDS"),
-    ("factor_etfs", _ => concat(lit("FAC_"), col("l_suppkey") % 12),
-      "'FAC_' || CAST(l_suppkey % 12 AS VARCHAR)", "factor_etf", "NYSEARCA"),
-    ("commodity_etfs", _ => concat(lit("CE_"), col("l_partkey") % 8),
-      "'CE_' || CAST(l_partkey % 8 AS VARCHAR)", "commodity_etf", "NYSEARCA"))
+  /** (model suffix, universe, asset_type, exchange) — same universes as
+    * the summary/analysis models. */
+  private val PriceStagings: Seq[(String, PriceBars.Universe, String, String)] = Seq(
+    ("sp500_companies_prices", PriceBars.Sp500, "stock", "NYSE"),
+    ("nasdaq_companies_prices", PriceBars.Nasdaq, "stock", "NASDAQ"),
+    ("us_sectors", PriceBars.Sectors, "sector_etf", "NYSEARCA"),
+    ("major_indices", PriceBars.Indices, "index", "INDEX"),
+    ("global_markets", PriceBars.GlobalMarkets, "index", "GLOBAL"),
+    ("currency", PriceBars.Currency, "currency", "FOREX"),
+    ("fixed_income", PriceBars.FixedIncome, "bond_etf", "BONDS"),
+    ("factor_etfs", PriceBars.Factors, "factor_etf", "NYSEARCA"),
+    ("commodity_etfs", PriceBars.CommodityEtfs, "commodity_etf", "NYSEARCA"))
 
   /** Full raw-schema OHLC staging (ref stg_us_sectors.sql column set):
-    * md5-keyed open/close picks, adj = raw/2, split/dividend fixture
-    * columns as in CorporateActionQueries. */
-  private def priceStaging(s: SparkSession, dir: String, bucket: Column,
+    * the universe's bars rounded to 4 decimals, adj = raw/2,
+    * split/dividend fixture columns as in CorporateActionQueries. */
+  private def priceStaging(s: SparkSession, dir: String, uni: PriceBars.Universe,
                            assetType: String, exchange: String): DataFrame = {
-    val key = md5(concat_ws("|",
-      col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
     val hx = md5(concat_ws("|", col("symbol"), col("date").cast("string")))
     val dx = md5(concat_ws("|", lit("div"), col("symbol"), col("date").cast("string")))
-    Tables(s, dir).lineitem
-      .groupBy(bucket.as("symbol"), to_date(col("l_shipdate")).as("date"))
-      .agg(
-        QueryDef.r4(min_by(col("l_extendedprice"), key)).as("open"),
-        QueryDef.r4(max(col("l_extendedprice"))).as("high"),
-        QueryDef.r4(min(col("l_extendedprice"))).as("low"),
-        QueryDef.r4(max_by(col("l_extendedprice"), key)).as("close"),
-        QueryDef.r4(QueryDef.dsum(col("l_quantity"))).as("volume"))
+    PriceBars.daily(PriceBars.lines(s, dir), Seq(uni.col.as("symbol")))
+      .select(col("symbol") +: col("date") +:
+        Seq("open", "high", "low", "close", "volume").map(c => QueryDef.r4(col(c)).as(c)): _*)
       .select(
         col("open"), col("high"), col("low"), col("close"), col("volume"),
         (col("high") * 0.5).as("adj_high"),
@@ -99,10 +80,10 @@ object StagingMarketQueries {
       symbol, '$exchange' AS exchange, date
     FROM (
       SELECT $bucketSql AS symbol, CAST(l_shipdate AS DATE) AS date,
-        ROUND(MIN_BY(l_extendedprice, $mdKeySql), 4) + 0.0 AS open,
+        ROUND(${PriceBars.openSql}, 4) + 0.0 AS open,
         ROUND(MAX(l_extendedprice), 4) + 0.0 AS high,
         ROUND(MIN(l_extendedprice), 4) + 0.0 AS low,
-        ROUND(MAX_BY(l_extendedprice, $mdKeySql), 4) + 0.0 AS close,
+        ROUND(${PriceBars.closeSql}, 4) + 0.0 AS close,
         ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE), 4) + 0.0 AS volume
       FROM lineitem GROUP BY 1, 2
     )"""
@@ -163,19 +144,19 @@ object StagingMarketQueries {
     "T10Y2Y", "NFCI", "UMCSENT", "IPMAN")
 
   val defs: Seq[QueryDef] =
-    PriceStagings.map { case (suffix, bucket, bucketSql, at, ex) =>
+    PriceStagings.map { case (suffix, uni, at, ex) =>
       QueryDef(
         s"q_stg_$suffix",
-        (s, dir) => priceStaging(s, dir, bucket(s), at, ex),
-        Some(priceStagingSql(bucketSql, at, ex))
+        (s, dir) => priceStaging(s, dir, uni, at, ex),
+        Some(priceStagingSql(uni.sql, at, ex))
       )
-    } ++ CommodityQueries.Universes.map { case (root, bucket, bucketSql, unit, _) =>
+    } ++ PriceBars.Commodities.map { c =>
       // stg_energy_commodities.sql etc.: commodity_name/_unit/date/price
       QueryDef(
-        s"q_stg_$root",
-        (s, dir) => CommodityQueries.staging(s, dir, bucket(s), unit)
+        s"q_stg_${c.root}",
+        (s, dir) => CommodityQueries.staging(PriceBars.commodity(PriceBars.lines(s, dir), c))
           .select("commodity_name", "commodity_unit", "date", "price"),
-        Some(s"SELECT commodity_name, commodity_unit, date, price FROM ${CommodityQueries.stagingCte(bucketSql, unit).replaceFirst("cstg AS ", "")}")
+        Some(s"SELECT commodity_name, commodity_unit, date, price FROM ${CommodityQueries.stagingCte(c).replaceFirst("cstg AS ", "")}")
       )
     } ++ Seq(
       // stg_fred_series.sql: sentinel-"." cleaned values + mapping join

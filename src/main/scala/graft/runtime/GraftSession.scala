@@ -1,6 +1,7 @@
 package graft.runtime
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.state.StateStore
 
 /** The one session factory of the graft engine: every entry point
   * (through [[graft.Fleet]]) and every spec builds its session here.
@@ -35,6 +36,11 @@ object GraftSession {
       // inside a builder races with concurrent planning.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     master.foreach(b.master)
+    // A fresh SparkContext: the JVM-global state-store registry still
+    // holds the providers of streams that ran under a stopped one, and
+    // its maintenance task would fail (and log a stack trace) unloading
+    // each against the new context's coordinator. Unload them first.
+    if (SparkSession.getDefaultSession.forall(_.sparkContext.isStopped)) StateStore.stop()
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The fleet's bounded global-window sites (WindowOps.scala header;

@@ -228,8 +228,10 @@ final class ModelRegistry {
           else built
         // write via a scratch dir: the merge READS the live table,
         // and parquet overwrite deletes the target before the plan
-        // runs (self-referential overwrite would read nothing)
-        val tmp = s"$warehouseDir/.${name}__staging"
+        // runs (self-referential overwrite would read nothing). Not a
+        // hidden (dot) path: Spark's file index ignores hidden paths, so
+        // reading one back would warn that all its paths were ignored.
+        val tmp = s"$warehouseDir/${name}__staging"
         val hPath = new org.apache.hadoop.fs.Path(tmp)
         val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         try merged.write.mode("overwrite").parquet(tmp)

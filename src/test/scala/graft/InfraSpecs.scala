@@ -70,6 +70,20 @@ class InfraSpecs extends AnyFunSuite with BeforeAndAfterAll {
     assert(outside("", "PlanDump").isEmpty, "PlanDump is folded into PlanCost --plans")
   }
 
+  test("under src/main only models/PriceBars.scala knows how a price series is made") {
+    val owner = Paths.get("graft", "models", "PriceBars.scala")
+    val patterns = Seq(
+      "the Spark line key" -> java.util.regex.Pattern.quote(
+        """col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")"""),
+      "the SQL line key" -> java.util.regex.Pattern.quote("md5(CAST(l_orderkey AS VARCHAR)"),
+      "an open/close pick" -> """(?i)\b(min|max)_by\(\s*(col\(")?l_extendedprice""")
+    for ((what, pattern) <- patterns) {
+      val copies = mainSources.filter(p => !p.endsWith(owner) &&
+        pattern.r.findFirstIn(Files.readString(p)).isDefined)
+      assert(copies.isEmpty, s"$what outside PriceBars: ${copies.mkString(", ")}")
+    }
+  }
+
   test("under src/main only GraftSession and Loop set session conf") {
     val owners = Seq("GraftSession.scala", "Loop.scala").map(Paths.get("graft", "runtime", _))
     val setters = mainSources.filter(p => !owners.exists(p.endsWith) &&

@@ -112,7 +112,7 @@ class ModelRegistrySpecs extends AnyFunSuite with BeforeAndAfterAll with Eventua
     val out = spark.read.parquet(s"$dir/mr_inc")
       .orderBy("id").as[(Int, String, Int)].collect().toSeq
     assert(out == Seq((1, "a", 1), (2, "b2", 2), (3, "c3", 3)))
-    assert(!new java.io.File(s"$dir/.mr_inc__staging").exists(), "scratch dir must be cleaned")
+    assert(!new java.io.File(s"$dir/mr_inc__staging").exists(), "scratch dir must be cleaned")
   }
 
   test("real model DAG: cross-asset branches through the registry match the direct fan-in") {
@@ -314,7 +314,8 @@ class ModelRegistrySpecs extends AnyFunSuite with BeforeAndAfterAll with Eventua
       assert(!depBuilt.get(), s"$tier: a dependent of the failed model was built")
       // the in-flight sibling's write completed before run returned
       assert(new java.io.File(s"$dir/mr_ok/_SUCCESS").isFile, s"$tier: sibling write not awaited")
-      assert(new java.io.File(dir).list().forall(!_.startsWith(".")), s"$tier: staging debris left")
+      assert(new java.io.File(dir).list().forall(n => !n.startsWith(".") && !n.endsWith("__staging")),
+        s"$tier: staging debris left")
       val live = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("model-registry-"))
       assert(live.isEmpty, s"$tier: pool threads outlived run: $live")
     }
