@@ -17,8 +17,7 @@ import graft.runtime.Loop
   * eviction.
   *
   * All hashing is md5-hex so an external SQL oracle (DuckDB) computes
-  * byte-identical values; at production scale the same shapes run with
-  * xxhash64 for speed (flip [[hashCol]]).
+  * byte-identical values.
   *
   * Scale posture: exact dedup is a single hash-shuffle on the digest;
   * MinHash/LSH turns the O(n²) pair space into per-bucket candidate
@@ -83,21 +82,6 @@ object DedupOps {
       )
   }
 
-  /** Production signature table: signature j = min over shingles of
-    * xxhash64(j, shingle) — the seed column makes the k hashes
-    * independent, so k is unbounded (64 typical → 16 bands of 4).
-    * xxhash64 is NOT portable to the DuckDB oracle (different
-    * algorithm), so this path is recall-spec'd against the md5 variant
-    * instead of oracle-checked; the shapes and plans are identical. */
-  def minhashSigsXx(shingled: DataFrame, idCol: String, k: Int): DataFrame =
-    shingled
-      .select(col(idCol), explode(col("__sh")).as("__s"))
-      .groupBy(col(idCol))
-      .agg(
-        min(xxhash64(lit(0), col("__s"))).as("sig_0"),
-        (1 until k).map(j => min(xxhash64(lit(j), col("__s"))).as(s"sig_$j")): _*
-      )
-
   /** Exact Jaccard similarity of two distinct-shingle arrays. */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")
@@ -124,24 +108,6 @@ object DedupOps {
     // the tokenize + n-gram + md5 work runs exactly once per doc.
     val shingled = shingleTable(df, idCol, textCol, shingleN).cache()
     val signed   = minhashSigs(shingled, idCol, numSigs)
-    bandedPairsVerified(shingled, signed, idCol, numSigs, rowsPerBand, minJaccard)
-  }
-
-  /** Production-scale variant of [[nearDupPairs]]: identical plan
-    * shape, xxhash64 signatures (k=64, 16 bands by default) for real
-    * recall — P(candidate) = 1-(1-j^r)^b, e.g. j=0.8 → ~99.99% at
-    * 16×4 vs ~41% for the single md5 band. */
-  def nearDupPairsProduction(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int,
-      numSigs: Int = 64,
-      rowsPerBand: Int = 4,
-      minJaccard: Double = 0.5
-  ): DataFrame = {
-    val shingled = shingleTable(df, idCol, textCol, shingleN).cache()
-    val signed   = minhashSigsXx(shingled, idCol, numSigs)
     bandedPairsVerified(shingled, signed, idCol, numSigs, rowsPerBand, minJaccard)
   }
 

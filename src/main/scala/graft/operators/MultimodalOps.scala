@@ -188,9 +188,7 @@ object MultimodalOps {
   /** Decoded BMP features (exact integer sums over pixels). */
   final case class BmpFeatures(
       width: Int, height: Int, bitsPerPixel: Int,
-      sumR: Long, sumG: Long, sumB: Long) {
-    def nPixels: Long   = width.toLong * height
-  }
+      sumR: Long, sumG: Long, sumB: Long)
 
   /** Encode a width×height 24-bit uncompressed BMP from a pixel
     * function (r,g,b in 0..255): BITMAPINFOHEADER, bottom-up row

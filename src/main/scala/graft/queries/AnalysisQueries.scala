@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.models.{MarketAnalysisReturn, PriceBars}
 import graft.queries.QueryDef.{nullif, oDivRound, oSnap, rdiv, rsnap}
-import graft.queries.FredSignalQueries.{idxOf, stgFred, stgFredSql}
+import graft.queries.FredSignalQueries.{idxOf, panel, stgFred, stgFredSql}
 import graft.runtime.Tables
 
 /** Analysis-schema heavyweights part 1 (SURVEY §2.M; refs
@@ -41,36 +41,25 @@ object AnalysisQueries {
   // economic_regime_classification (ref, 239 LoC)
   // ------------------------------------------------------------------
 
-  val RegimeCodes: Seq[String] = Seq("INDPRO", "UNRATE", "PAYEMS", "CPIAUCSL", "PCEPILFE",
-    "T10Y2Y", "T10Y3M", "CFNAIMA3", "USSLIND", "ICSA", "UMCSENT", "IPMAN", "NFCI")
+  /** The 13 regime indicators: (series code, pivot column). */
+  private val RegimeIndicators: Seq[(String, String)] = Seq(
+    "INDPRO" -> "industrial_production", "UNRATE" -> "unemployment_rate",
+    "PAYEMS" -> "nonfarm_payrolls", "CPIAUCSL" -> "cpi", "PCEPILFE" -> "core_pce",
+    "T10Y2Y" -> "yield_curve_10y2y", "T10Y3M" -> "yield_curve_10y3m",
+    "CFNAIMA3" -> "cfnai", "USSLIND" -> "leading_index", "ICSA" -> "initial_claims",
+    "UMCSENT" -> "consumer_sentiment", "IPMAN" -> "mfg_production",
+    "NFCI" -> "financial_conditions")
+
+  val RegimeCodes: Seq[String] = RegimeIndicators.map(_._1)
 
   /** (month_date, <13 pivot cols>) from the monthly MAX pivot. */
-  private def monthlyIndicators(s: SparkSession, dir: String): DataFrame = {
-    val stg = stgFred(s, dir, RegimeCodes)
-    val aliases = Seq(
-      "INDPRO" -> "industrial_production", "UNRATE" -> "unemployment_rate",
-      "PAYEMS" -> "nonfarm_payrolls", "CPIAUCSL" -> "cpi", "PCEPILFE" -> "core_pce",
-      "T10Y2Y" -> "yield_curve_10y2y", "T10Y3M" -> "yield_curve_10y3m",
-      "CFNAIMA3" -> "cfnai", "USSLIND" -> "leading_index", "ICSA" -> "initial_claims",
-      "UMCSENT" -> "consumer_sentiment", "IPMAN" -> "mfg_production",
-      "NFCI" -> "financial_conditions")
-    stg.groupBy(date_trunc("month", col("date")).cast("date").as("month_date"))
-      .agg(
-        max(when(col("series_code") === aliases.head._1, col("value"))).as(aliases.head._2),
-        aliases.tail.map { case (c, a) =>
-          max(when(col("series_code") === c, col("value"))).as(a)
-        }: _*)
-  }
+  private def monthlyIndicators(s: SparkSession, dir: String): DataFrame =
+    panel(stgFred(s, dir, RegimeCodes), "month", "value")(
+      RegimeIndicators.map { case (c, a) => (c, "max", a) }: _*)
+      .withColumnRenamed("date", "month_date")
 
   private val monthlyIndicatorsSql: String = {
-    val aliases = Seq(
-      "INDPRO" -> "industrial_production", "UNRATE" -> "unemployment_rate",
-      "PAYEMS" -> "nonfarm_payrolls", "CPIAUCSL" -> "cpi", "PCEPILFE" -> "core_pce",
-      "T10Y2Y" -> "yield_curve_10y2y", "T10Y3M" -> "yield_curve_10y3m",
-      "CFNAIMA3" -> "cfnai", "USSLIND" -> "leading_index", "ICSA" -> "initial_claims",
-      "UMCSENT" -> "consumer_sentiment", "IPMAN" -> "mfg_production",
-      "NFCI" -> "financial_conditions")
-    val cols = aliases.map { case (c, a) =>
+    val cols = RegimeIndicators.map { case (c, a) =>
       s"MAX(CASE WHEN series_code = '$c' THEN value END) AS $a"
     }.mkString(",\n        ")
     s"""

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions._
-import graft.queries.QueryDef.{dsum, maxDate, maxDateSql, mMax, mMaxSql, nullif, oSnap, r4, rsnap}
+import graft.queries.QueryDef.{davg, dsum, maxDate, maxDateSql, mMaxSql, nullif, oSnap, r4, rsnap}
 import graft.runtime.{Materialized, Tables}
 
 /** The signals-schema named models driven by `stg_fred_series` (SURVEY
@@ -16,7 +16,9 @@ import graft.runtime.{Materialized, Tables}
   * keyed on COALESCE'd month dates, LAG-based growth/momentum columns,
   * threshold CASE status columns, and the trailing CURRENT_DATE cutoff
   * (replaced, as in the FRED family, by the corpus max ship date as a
-  * deterministic anchor).
+  * deterministic anchor). The oracles keep the reference's chains; the
+  * Spark side builds each model's per-period row in one grouped pivot,
+  * [[panel]].
   *
   * Staging: the fred-like series table maps `l_partkey % 97` onto the
   * reference's FRED series codes (one synthetic series per code), with
@@ -72,7 +74,10 @@ object FredSignalQueries {
 
   /** stg_fred_series slice for `codes`: ONE lineitem scan, persisted
     * unless an equal slice is cached already ([[Materialized.persist]]).
-    * Columns: series_code, date, value, literal. */
+    * Columns: series_code, date, value, literal; one row per (series,
+    * date). Builders read it through [[panel]] when they aggregate series
+    * to a period, and through a one-code filter when a series lags over
+    * its own rows. */
   def stgFred(s: SparkSession, dir: String, codes: Seq[String]): DataFrame = {
     val idxs   = codes.map(idxOf)
     val idxCol = col("l_partkey") % 97
@@ -135,11 +140,37 @@ object FredSignalQueries {
     )"""
   }
 
-  /** Monthly AVG(literal) per series — decimal-exact mean. */
-  private def mAvg(stg: DataFrame, code: String, alias: String, mcol: String): DataFrame =
-    stg.filter(col("series_code") === code && col("literal").isNotNull)
-      .groupBy(date_trunc("month", col("date")).cast("date").as(mcol))
-      .agg((dsum(col("literal")) / count(lit(1))).as(alias))
+  /** The period panel of a [[stgFred]] slice: one row per period start
+    * (column `date`) with one column per `(code, agg, alias)`, each
+    * `agg(v)` over that code's rows in the period — the reference's
+    * per-series aggregate CTEs and their FULL OUTER fan-in in ONE grouped
+    * aggregate. `period` is "day", "week" or "month"; `v` is "literal"
+    * or "value"; `agg` is "max", "min" or "mean" (the decimal-exact
+    * [[davg]]). Only rows of the listed codes with a non-NULL `v` count,
+    * so a period is present exactly when some listed code has a row in
+    * it — the period set of the coalesce-keyed full-outer chain, whose
+    * left-join and partial-coalesce variants the callers recover by
+    * filtering on, or gating `date` by, their anchor columns. */
+  def panel(stg: DataFrame, period: String, v: String)(cols: (String, String, String)*): DataFrame = {
+    require(Set("day", "week", "month")(period), s"unknown period $period")
+    val key = if (period == "day") col("date") else date_trunc(period, col("date")).cast("date")
+    val aggs = cols.map { case (code, agg, alias) =>
+      val x = when(col("series_code") === code, col(v))
+      (agg match {
+        case "max"  => max(x)
+        case "min"  => min(x)
+        case "mean" => davg(x)
+      }).as(alias)
+    }
+    stg.filter(col("series_code").isin(cols.map(_._1).distinct: _*) && col(v).isNotNull)
+      .groupBy(key.as("date"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** A [[panel]]'s `date` where any of `aliases` is non-NULL, else NULL:
+    * the chain's COALESCE over just those series' period keys. */
+  def dateOf(aliases: String*): Column =
+    when(aliases.map(col(_).isNotNull).reduce(_ || _), col("date"))
 
   private def mAvgSql(code: String, alias: String): String =
     s"""SELECT CAST(DATE_TRUNC('month', date) AS DATE) AS month_date,
@@ -154,11 +185,6 @@ object FredSignalQueries {
     val stg = stgFred(s, dir,
       Seq("M2SL", "M1SL", "BUSLOANS", "TOTALSL", "M2V", "WALCL", "RRPONTSYD"))
 
-    val m2 = mMax(stg, "M2SL", "m2_level", "m2_m")
-    val m1 = mMax(stg, "M1SL", "m1_level", "m1_m")
-    val bl = mMax(stg, "BUSLOANS", "busloans", "bl_m")
-    val tc = mMax(stg, "TOTALSL", "total_consumer_credit", "tc_m")
-
     // velocity: latest quarterly row + its 4-obs YoY change (ref :62-86)
     val wv = Window.orderBy(col("date"))
     val vel = stg.filter(col("series_code") === "M2V" && col("literal").isNotNull)
@@ -171,29 +197,25 @@ object FredSignalQueries {
           (col("money_velocity") - col("velocity_1y_ago")) / col("velocity_1y_ago") * 100)
           .as("velocity_yoy_change"))
 
-    val wm = Window.orderBy(col("w_m"))
-    val wal = mAvg(stg, "WALCL", "walcl_avg", "w_m")
-      .select(col("w_m"), col("walcl_avg"),
-        lag(col("walcl_avg"), 3).over(wm).as("walcl_3m_ago"),
-        lag(col("walcl_avg"), 12).over(wm).as("walcl_12m_ago"))
-    val wr = Window.orderBy(col("r_m"))
-    val rrp = mAvg(stg, "RRPONTSYD", "rrp_avg", "r_m")
-      .select(col("r_m"), col("rrp_avg"),
-        lag(col("rrp_avg"), 3).over(wr).as("rrp_3m_ago"))
+    val wd = Window.orderBy(col("date"))
+    val wal = panel(stg, "month", "literal")(("WALCL", "mean", "walcl_avg"))
+      .select(col("date").as("w_m"), col("walcl_avg"),
+        lag(col("walcl_avg"), 3).over(wd).as("walcl_3m_ago"),
+        lag(col("walcl_avg"), 12).over(wd).as("walcl_12m_ago"))
+    val rrp = panel(stg, "month", "literal")(("RRPONTSYD", "mean", "rrp_avg"))
+      .select(col("date").as("r_m"), col("rrp_avg"),
+        lag(col("rrp_avg"), 3).over(wd).as("rrp_3m_ago"))
 
-    val combined = m2
-      .join(m1, col("m2_m") === col("m1_m"), "full_outer")
-      .join(bl, coalesce(col("m2_m"), col("m1_m")) === col("bl_m"), "full_outer")
-      .join(tc, coalesce(col("m2_m"), col("m1_m"), col("bl_m")) === col("tc_m"), "full_outer")
-      .join(broadcast(wal), coalesce(col("m2_m"), col("m1_m")) === col("w_m"), "left")
-      .join(broadcast(rrp), coalesce(col("m2_m"), col("m1_m")) === col("r_m"), "left")
+    val combined = panel(stg, "month", "literal")(
+        ("M2SL", "max", "m2_level"), ("M1SL", "max", "m1_level"),
+        ("BUSLOANS", "max", "busloans"), ("TOTALSL", "max", "total_consumer_credit"))
+      .join(broadcast(wal), dateOf("m2_level", "m1_level") === col("w_m"), "left")
+      .join(broadcast(rrp), dateOf("m2_level", "m1_level") === col("r_m"), "left")
       .select(
-        coalesce(col("m2_m"), col("m1_m"), col("bl_m"), col("tc_m")).as("date"),
-        col("m2_level"), col("m1_level"), col("busloans"), col("total_consumer_credit"),
+        col("date"), col("m2_level"), col("m1_level"), col("busloans"), col("total_consumer_credit"),
         col("walcl_avg"), col("walcl_3m_ago"), col("walcl_12m_ago"),
         col("rrp_avg"), col("rrp_3m_ago"))
 
-    val wd = Window.orderBy(col("date"))
     val wg = combined
       .withColumn("m2_12m_ago", lag(col("m2_level"), 12).over(wd))
       .withColumn("m2_3m_ago", lag(col("m2_level"), 3).over(wd))
@@ -377,12 +399,9 @@ object FredSignalQueries {
       .select(col("p_d"), col("pce_level"),
         rsnap((col("pce_level") / nullif(col("pce_12m_ago")) - 1) * 100, 2).as("core_pce_yoy"))
 
-    val b5 = stg.filter(col("series_code") === "T5YIE" && col("literal").isNotNull)
-      .select(col("date").as("b5_d"), col("literal").as("be_5y"))
-    val b10 = stg.filter(col("series_code") === "T10YIE" && col("literal").isNotNull)
-      .select(col("date").as("b10_d"), col("literal").as("be_10y"))
-    val bs = b5.join(b10, col("b5_d") === col("b10_d"))
-      .select(col("b5_d").as("bs_d"), col("be_5y"), col("be_10y"),
+    val bs = panel(stg, "day", "literal")(("T5YIE", "max", "be_5y"), ("T10YIE", "max", "be_10y"))
+      .filter(col("be_5y").isNotNull && col("be_10y").isNotNull)
+      .select(col("date").as("bs_d"), col("be_5y"), col("be_10y"),
         rsnap(col("be_5y") - col("be_10y"), 3).as("breakeven_5y_10y_spread"))
 
     cpi
@@ -486,33 +505,13 @@ object FredSignalQueries {
     val stg = stgFred(s, dir,
       Seq("JTSJOL", "UNEMPLOY", "UNRATE", "SAHMCURRENT", "ICSA", "EMRATIO", "JTSQUR"))
 
-    val jo = mMax(stg, "JTSJOL", "job_openings", "jo_m")
-    val ue = mMax(stg, "UNEMPLOY", "unemployed_count", "ue_m")
-    val ur = mMax(stg, "UNRATE", "unrate", "ur_m")
-    val sr = mMax(stg, "SAHMCURRENT", "sahm_rule", "sr_m")
-    val cm = stg.filter(col("series_code") === "ICSA" && col("literal").isNotNull)
-      .groupBy(date_trunc("month", col("date")).cast("date").as("cm_m"))
-      .agg((dsum(col("literal")) / count(lit(1))).as("avg_monthly_claims"),
-        max(col("literal")).as("max_monthly_claims"),
-        min(col("literal")).as("min_monthly_claims"))
-    val ep = mMax(stg, "EMRATIO", "emratio", "ep_m")
-    val qr = mMax(stg, "JTSQUR", "quits_rate", "qr_m")
-
-    val combined = jo
-      .join(ue, col("jo_m") === col("ue_m"), "full_outer")
-      .join(ur, coalesce(col("jo_m"), col("ue_m")) === col("ur_m"), "full_outer")
-      .join(cm, coalesce(col("jo_m"), col("ue_m"), col("ur_m")) === col("cm_m"), "full_outer")
-      .join(ep, coalesce(col("jo_m"), col("ue_m"), col("ur_m"), col("cm_m")) === col("ep_m"),
-        "full_outer")
-      .join(qr,
-        coalesce(col("jo_m"), col("ue_m"), col("ur_m"), col("cm_m"), col("ep_m")) === col("qr_m"),
-        "full_outer")
-      .join(sr,
-        coalesce(col("jo_m"), col("ue_m"), col("ur_m"), col("cm_m"), col("ep_m"), col("qr_m"))
-          === col("sr_m"),
-        "full_outer")
+    val combined = panel(stg, "month", "literal")(
+        ("JTSJOL", "max", "job_openings"), ("UNEMPLOY", "max", "unemployed_count"),
+        ("UNRATE", "max", "unrate"), ("ICSA", "mean", "avg_monthly_claims"),
+        ("EMRATIO", "max", "emratio"), ("JTSQUR", "max", "quits_rate"),
+        ("SAHMCURRENT", "max", "sahm_rule"))
       .select(
-        coalesce(col("jo_m"), col("ue_m"), col("ur_m"), col("cm_m")).as("date"),
+        dateOf("job_openings", "unemployed_count", "unrate", "avg_monthly_claims").as("date"),
         col("job_openings"), col("unemployed_count"),
         rsnap(col("job_openings") / nullif(col("unemployed_count")), 3).as("jo_unemployed_ratio"),
         col("unrate"), col("avg_monthly_claims"), col("emratio"), col("quits_rate"),

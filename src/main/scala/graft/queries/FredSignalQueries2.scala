@@ -5,9 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
-import graft.queries.QueryDef.{davgOver, dsum, maxDate, maxDateSql, mMax, mMaxSql, nullif, oSnap, r4, rsnap}
+import graft.queries.QueryDef.{davgOver, maxDate, maxDateSql, mMaxSql, nullif, oSnap, r4, rsnap}
 import graft.runtime.Tables
-import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
+import graft.queries.FredSignalQueries.{dateOf, panel, stgFred, stgFredSql}
 
 /** Second batch of FRED-staged signals-schema named models (refs
   * dbt_project/models/signals/{housing,trade,sentiment,
@@ -30,21 +30,9 @@ object FredSignalQueries2 {
   private def housingSignals(s: SparkSession, dir: String): DataFrame = {
     val stg = stgFred(s, dir, Seq("HOUST", "PERMIT", "MORTGAGE30US", "MSACSR"))
 
-    val hs = mMax(stg, "HOUST", "starts", "hs_m")
-    val bp = mMax(stg, "PERMIT", "permits", "bp_m")
-    val mm = stg.filter(col("series_code") === "MORTGAGE30US" && col("literal").isNotNull)
-      .groupBy(date_trunc("month", col("date")).cast("date").as("mm_m"))
-      .agg((dsum(col("literal")) / count(lit(1))).as("avg_mortgage_rate"),
-        max(col("literal")).as("max_mortgage_rate"))
-    val ms = mMax(stg, "MSACSR", "months_of_supply", "ms_m")
-
-    val combined = hs
-      .join(bp, col("hs_m") === col("bp_m"), "full_outer")
-      .join(mm, coalesce(col("hs_m"), col("bp_m")) === col("mm_m"), "full_outer")
-      .join(ms, coalesce(col("hs_m"), col("bp_m"), col("mm_m")) === col("ms_m"), "full_outer")
-      .select(
-        coalesce(col("hs_m"), col("bp_m"), col("mm_m"), col("ms_m")).as("date"),
-        col("starts"), col("permits"), col("avg_mortgage_rate"), col("months_of_supply"))
+    val combined = panel(stg, "month", "literal")(
+      ("HOUST", "max", "starts"), ("PERMIT", "max", "permits"),
+      ("MORTGAGE30US", "mean", "avg_mortgage_rate"), ("MSACSR", "max", "months_of_supply"))
 
     val wd = Window.orderBy(col("date"))
     val f3 = wd.rowsBetween(-2, 0)
@@ -148,28 +136,21 @@ object FredSignalQueries2 {
   private def tradeSignals(s: SparkSession, dir: String): DataFrame = {
     val stg = stgFred(s, dir, Seq("DTWEXBGS", "DTWEXEMEGS", "BOPGSTB"))
 
-    def mAvgV(code: String, alias: String, mcol: String): DataFrame =
-      stg.filter(col("series_code") === code && col("value").isNotNull)
-        .groupBy(date_trunc("month", col("date")).cast("date").as(mcol))
-        .agg((dsum(col("value")) / count(lit(1))).as(alias))
-
-    val db = mAvgV("DTWEXBGS", "dollar_broad_avg", "db_m")
-    val de = mAvgV("DTWEXEMEGS", "em_dollar_avg", "de_m")
     val tb = stg.filter(col("series_code") === "BOPGSTB" && col("value").isNotNull)
       .select(col("date").as("tb_m"), col("value").as("trade_balance"))
 
-    val wdb = Window.orderBy(col("db_m"))
-    val combined = db
-      .join(de, col("db_m") === col("de_m"), "left")
-      .join(tb, col("db_m") === col("tb_m"), "left")
-      .select(col("db_m").as("date"), col("dollar_broad_avg"), col("em_dollar_avg"),
-        col("trade_balance"),
-        lag(col("dollar_broad_avg"), 3).over(wdb).as("dollar_3m_ago"),
-        lag(col("dollar_broad_avg"), 6).over(wdb).as("dollar_6m_ago"),
-        lag(col("dollar_broad_avg"), 12).over(wdb).as("dollar_12m_ago"),
-        lag(col("trade_balance"), 12).over(wdb).as("trade_12m_ago"))
-
     val wd = Window.orderBy(col("date"))
+    val combined = panel(stg, "month", "value")(
+        ("DTWEXBGS", "mean", "dollar_broad_avg"), ("DTWEXEMEGS", "mean", "em_dollar_avg"))
+      .filter(col("dollar_broad_avg").isNotNull)
+      .join(tb, col("date") === col("tb_m"), "left")
+      .select(col("date"), col("dollar_broad_avg"), col("em_dollar_avg"),
+        col("trade_balance"),
+        lag(col("dollar_broad_avg"), 3).over(wd).as("dollar_3m_ago"),
+        lag(col("dollar_broad_avg"), 6).over(wd).as("dollar_6m_ago"),
+        lag(col("dollar_broad_avg"), 12).over(wd).as("dollar_12m_ago"),
+        lag(col("trade_balance"), 12).over(wd).as("trade_12m_ago"))
+
     def pc(c: Column, ago: Column): Column =
       when(ago > 0, (c - ago) / ago * 100)
     val wc = combined.select(
@@ -270,29 +251,13 @@ object FredSignalQueries2 {
     val stg = stgFred(s, dir, Seq("UMCSENT", "CSCICP03USM665S", "IPMAN", "NEWORDER",
       "PCUOMFG", "MANEMP", "MNFCTRMPCIMSA"))
 
-    val cs  = mMax(stg, "UMCSENT", "umcsent", "cs_m")
-    val cc  = mMax(stg, "CSCICP03USM665S", "confidence", "cc_m")
-    val mp  = mMax(stg, "IPMAN", "ipman", "mp_m")
-    val mo  = mMax(stg, "NEWORDER", "new_orders", "mo_m")
-    val mpr = mMax(stg, "PCUOMFG", "prices", "mpr_m")
-    val me  = mMax(stg, "MANEMP", "employment", "me_m")
-    val mi  = mMax(stg, "MNFCTRMPCIMSA", "inventories", "mi_m")
-
-    val combined = cs
-      .join(cc, col("cs_m") === col("cc_m"), "full_outer")
-      .join(mp, coalesce(col("cs_m"), col("cc_m")) === col("mp_m"), "full_outer")
-      .join(mo, coalesce(col("cs_m"), col("cc_m"), col("mp_m")) === col("mo_m"), "full_outer")
-      .join(mpr, coalesce(col("cs_m"), col("cc_m"), col("mp_m"), col("mo_m")) === col("mpr_m"),
-        "full_outer")
-      .join(me,
-        coalesce(col("cs_m"), col("cc_m"), col("mp_m"), col("mo_m"), col("mpr_m")) === col("me_m"),
-        "full_outer")
-      .join(mi,
-        coalesce(col("cs_m"), col("cc_m"), col("mp_m"), col("mo_m"), col("mpr_m"), col("me_m"))
-          === col("mi_m"),
-        "full_outer")
+    val combined = panel(stg, "month", "literal")(
+        ("UMCSENT", "max", "umcsent"), ("CSCICP03USM665S", "max", "confidence"),
+        ("IPMAN", "max", "ipman"), ("NEWORDER", "max", "new_orders"),
+        ("PCUOMFG", "max", "prices"), ("MANEMP", "max", "employment"),
+        ("MNFCTRMPCIMSA", "max", "inventories"))
       .select(
-        coalesce(col("cs_m"), col("cc_m"), col("mp_m")).as("date"),
+        dateOf("umcsent", "confidence", "ipman").as("date"),
         col("umcsent"), col("confidence"), col("ipman"), col("new_orders"),
         col("prices"), col("employment"), col("inventories"))
 

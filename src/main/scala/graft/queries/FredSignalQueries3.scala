@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions._
-import graft.queries.QueryDef.{davgOver, dsum, maxDate, maxDateSql, mMax, mMaxSql, nullif, oDivRound, oSnap, r4, rdiv, rsnap}
+import graft.queries.QueryDef.{davgOver, maxDate, maxDateSql, mMaxSql, nullif, oDivRound, oSnap, r4, rdiv, rsnap}
 import graft.runtime.Tables
-import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
+import graft.queries.FredSignalQueries.{panel, stgFred, stgFredSql}
 
 /** Third batch of FRED-staged signals-schema named models (refs
   * dbt_project/models/signals/{financial_conditions,
@@ -34,54 +34,42 @@ object FredSignalQueries3 {
       "NFCICREDIT", "NFCILEVERAGE", "NFCINONFINLEVERAGE", "DRCCLACBS",
       "DRTSCILM", "DRTSCIS"))
 
-    def daily(code: String, dcol: String, vcol: String): DataFrame =
-      stg.filter(col("series_code") === code && col("literal").isNotNull)
-        .select(col("date").as(dcol), col("literal").as(vcol))
+    // monthly-grain series, joined by month onto the daily NFCI rows
+    val kf = stg.filter(col("series_code") === "KCFSI" && col("literal").isNotNull)
+      .select(col("date").as("kf_d"), col("literal").as("kc_fsi_value"))
 
-    val n   = daily("NFCI", "n_d", "nfci_value")
-    val nr  = daily("NFCIRISK", "nr_d", "nfci_risk")
-    val nc  = daily("NFCICREDIT", "nc_d", "nfci_credit")
-    val nl  = daily("NFCILEVERAGE", "nl_d", "nfci_leverage")
-    val nnl = daily("NFCINONFINLEVERAGE", "nnl_d", "nfci_nonfinancial_leverage")
-    val an  = daily("ANFCI", "an_d", "anfci_value")
-    val sf  = daily("STLFSI4", "sf_d", "stl_fsi_value")
-    val kf  = daily("KCFSI", "kf_d", "kc_fsi_value") // monthly-grain series
-
-    val wn  = Window.orderBy(col("n_d"))
-    val f13 = wn.rowsBetween(-12, 0)
-    val nfciCombined = n
-      .join(nr, col("n_d") === col("nr_d"), "left")
-      .join(nc, col("n_d") === col("nc_d"), "left")
-      .join(nl, col("n_d") === col("nl_d"), "left")
-      .join(nnl, col("n_d") === col("nnl_d"), "left")
-      .join(an, col("n_d") === col("an_d"), "left")
-      .join(sf, col("n_d") === col("sf_d"), "left")
+    val wd  = Window.orderBy(col("date"))
+    val f13 = wd.rowsBetween(-12, 0)
+    val nfciCombined = panel(stg, "day", "literal")(
+        ("NFCI", "max", "nfci_value"), ("NFCIRISK", "max", "nfci_risk"),
+        ("NFCICREDIT", "max", "nfci_credit"), ("NFCILEVERAGE", "max", "nfci_leverage"),
+        ("NFCINONFINLEVERAGE", "max", "nfci_nonfinancial_leverage"),
+        ("ANFCI", "max", "anfci_value"), ("STLFSI4", "max", "stl_fsi_value"))
+      .filter(col("nfci_value").isNotNull)
       .join(kf,
-        date_trunc("month", col("n_d")).cast("date")
+        date_trunc("month", col("date")).cast("date")
           === date_trunc("month", col("kf_d")).cast("date"),
         "left")
-      .select(col("n_d").as("nfc_d"), col("nfci_value"), col("nfci_risk"),
+      .select(col("date").as("nfc_d"), col("nfci_value"), col("nfci_risk"),
         col("nfci_credit"), col("nfci_leverage"), col("nfci_nonfinancial_leverage"),
         col("anfci_value"), col("stl_fsi_value"), col("kc_fsi_value"),
-        lag(col("nfci_value"), 4).over(wn).as("nfci_4w_ago"),
-        lag(col("nfci_value"), 13).over(wn).as("nfci_13w_ago"),
+        lag(col("nfci_value"), 4).over(wd).as("nfci_4w_ago"),
+        lag(col("nfci_value"), 13).over(wd).as("nfci_13w_ago"),
         davgOver(col("nfci_value"), f13).as("nfci_13w_avg"))
 
-    val ll = mMax(stg, "DRTSCILM", "lending_standards_large", "ll_m")
-    val ls = mMax(stg, "DRTSCIS", "lending_standards_small", "ls_m")
-    val wl = Window.orderBy(coalesce(col("ll_m"), col("ls_m")))
-    val lendingCombined = ll
-      .join(ls, col("ll_m") === col("ls_m"), "full_outer")
+    val lendingCombined = panel(stg, "month", "literal")(
+        ("DRTSCILM", "max", "lending_standards_large"), ("DRTSCIS", "max", "lending_standards_small"))
       .select(
-        coalesce(col("ll_m"), col("ls_m")).as("lc_d"),
+        col("date").as("lc_d"),
         col("lending_standards_large"), col("lending_standards_small"),
         rsnap((coalesce(col("lending_standards_large"), lit(0)) +
           coalesce(col("lending_standards_small"), lit(0))) / 2.0, 2)
           .as("lending_standards_avg"),
-        lag(col("lending_standards_large"), 1).over(wl).as("lending_large_prev"),
-        lag(col("lending_standards_small"), 1).over(wl).as("lending_small_prev"))
+        lag(col("lending_standards_large"), 1).over(wd).as("lending_large_prev"),
+        lag(col("lending_standards_small"), 1).over(wd).as("lending_small_prev"))
 
-    val cd = mMax(stg, "DRCCLACBS", "cc_delinquency_rate", "cd_m")
+    val cd = panel(stg, "month", "literal")(("DRCCLACBS", "max", "cc_delinquency_rate"))
+      .select(col("date").as("cd_m"), col("cc_delinquency_rate"))
 
     val fin = nfciCombined
       .join(lendingCombined, col("nfc_d") === col("lc_d"), "full_outer")

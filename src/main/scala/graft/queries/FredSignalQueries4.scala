@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.models.{MarketAnalysisReturn, PriceBars}
-import graft.queries.QueryDef.{davgOver, dsum, maxDate, maxDateSql, nullif, oDivRound, oSnap, r4, rdiv, rsnap}
-import graft.queries.FredSignalQueries.{stgFred, stgFredSql}
+import graft.queries.QueryDef.{davgOver, maxDate, maxDateSql, nullif, oDivRound, oSnap, r4, rdiv, rsnap}
+import graft.queries.FredSignalQueries.{panel, stgFred, stgFredSql}
 import graft.runtime.Tables
 
 /** Fourth batch — the remaining signals-schema named models 1:1 (refs
@@ -39,15 +39,10 @@ object FredSignalQueries4 {
 
   private def netLiquidity(s: SparkSession, dir: String): DataFrame = {
     val stg = stgFred(s, dir, Seq("WALCL", "WTREGEN", "RRPONTSYD"))
-    def weekly(code: String, wcol: String, vcol: String): DataFrame =
-      stg.filter(col("series_code") === code && col("literal").isNotNull)
-        .groupBy(date_trunc("week", col("date")).cast("date").as(wcol))
-        .agg((dsum(col("literal")) / count(lit(1))).as(vcol))
-
-    val combined = weekly("WALCL", "w_w", "walcl")
-      .join(weekly("WTREGEN", "wt_w", "wtregen"), col("w_w") === col("wt_w"), "left")
-      .join(weekly("RRPONTSYD", "r_w", "rrpontsyd"), col("w_w") === col("r_w"), "left")
-      .select(col("w_w").as("date"), col("walcl"), col("wtregen"), col("rrpontsyd"),
+    val combined = panel(stg, "week", "literal")(
+        ("WALCL", "mean", "walcl"), ("WTREGEN", "mean", "wtregen"), ("RRPONTSYD", "mean", "rrpontsyd"))
+      .filter(col("walcl").isNotNull)
+      .select(col("date"), col("walcl"), col("wtregen"), col("rrpontsyd"),
         (col("walcl") - coalesce(col("wtregen"), lit(0.0)) -
           coalesce(col("rrpontsyd"), lit(0.0))).as("net_liquidity"),
         when(col("wtregen").isNotNull, 3).otherwise(2).cast("long").as("component_count"))

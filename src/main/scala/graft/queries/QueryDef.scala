@@ -95,13 +95,10 @@ object QueryDef {
   /** Oracle-side mirror of [[maxDate]]. */
   val maxDateSql = "(SELECT MAX(CAST(l_shipdate AS DATE)) FROM lineitem)"
 
-  /** Monthly MAX(literal) per series (the reference's workhorse CTE). */
-  def mMax(stg: DataFrame, code: String, alias: String, mcol: String): DataFrame =
-    stg.filter(col("series_code") === code && col("literal").isNotNull)
-      .groupBy(date_trunc("month", col("date")).cast("date").as(mcol))
-      .agg(max(col("literal")).as(alias))
-
-  /** Oracle-side mirror of [[mMax]] (month column `month_date`). */
+  /** Oracle side of the reference's workhorse CTE: monthly MAX(literal)
+    * of one series (month column `month_date`). The oracles keep the
+    * reference's one-CTE-per-series join chains; the Spark side reads
+    * all of a model's series in one pivot, `FredSignalQueries.panel`. */
   def mMaxSql(code: String, alias: String): String =
     s"""SELECT CAST(DATE_TRUNC('month', date) AS DATE) AS month_date,
         MAX(literal) AS $alias

@@ -297,7 +297,7 @@ object SemanticLayerQueries {
             countDistinct(col("entity_id")).as("observed_entity_count"))
         val pct = coalesce(col("observed_entity_count"), lit(0L)).cast("double") /
           when(col("expected_entity_count") =!= 0, col("expected_entity_count").cast("double"))
-        broadcast(specs)
+        specs
           .join(expected, Seq("source_name"), "left")
           .join(windowed, col("source_name") === col("c_source"), "left")
           .crossJoin(broadcast(today))

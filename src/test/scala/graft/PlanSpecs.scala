@@ -189,6 +189,13 @@ class PlanSpecs extends AnyFunSuite with BeforeAndAfterAll {
       "per-document frames must not be broadcast-hinted")
   }
 
+  test("FRED signal models pivot their series in one aggregate: no full-outer join chain") {
+    for (q <- Seq("q_sentiment_signals", "q_labor_signals")) {
+      val plan = executedPlan(q)
+      assert(!plan.contains("FullOuter"), s"$q fans in per-series aggregates:\n${plan.take(3000)}")
+    }
+  }
+
   test("fred snapshot runs without any window over the spine-amplified frame") {
     // the round-5 single-pass rewrite replaced grain groupBy + lag
     // window + latest self-join with one sorted-cell-array

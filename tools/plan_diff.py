@@ -24,9 +24,10 @@ import re
 import sys
 
 NORMALIZE = [
+    # before the expression ids, which would eat the `#` of `[id=#245]`
+    (re.compile(r"\[id=#?\d+\]"), "[id=N]"),
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
-    (re.compile(r"\[id=#?\d+\]"), "[id=N]"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"\$Lambda(\$\d+)?/0x[0-9a-f]+"), "$Lambda"),
     # identity hashes (lambdas, aggregator objects), call-site lines of
