@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 
-import graft.runtime.GraftSession
+import graft.runtime.{GraftSession, Tables}
 import graft.streaming.StreamingIngest
 
 /** Oracle-checked Structured Streaming queries (SURVEY.md §2.N).
@@ -59,16 +59,15 @@ object StreamingQueries {
     }
   }
 
-  /** File-source stream over ONE parquet file. A literal non-glob
-    * path must be a directory for the file stream source, so select
-    * the single file with a one-alternative brace glob — glob paths
-    * are matched against files directly. */
-  private def stream(s: SparkSession, dir: String, table: String): DataFrame = {
-    val path = s"$dir/$table.parquet"
+  /** File-source stream over ONE parquet file, with the file's schema
+    * as [[Tables]] reads it. A literal non-glob path must be a
+    * directory for the file stream source, so select the single file
+    * with a one-alternative brace glob — glob paths are matched against
+    * files directly. */
+  private def stream(s: SparkSession, dir: String, table: String): DataFrame =
     s.readStream
-      .schema(s.read.parquet(path).schema)
+      .schema(Tables(s, dir).schema(table))
       .parquet(s"$dir/{$table}.parquet")
-  }
 
   val defs: Seq[QueryDef] = Seq(
     // Streaming grouped totals (complete mode): the unbounded-agg
@@ -202,7 +201,7 @@ object StreamingQueries {
       (s, dir) => runToTable(s, "stream_sessionize", "append") { ss =>
         // Normalized like Tables.events (the dispatch in
         // normalizeEventTs sees whichever schema the batch read infers).
-        val src = graft.runtime.Tables.normalizeEventTs(stream(ss, dir, "events"))
+        val src = Tables.normalizeEventTs(stream(ss, dir, "events"))
         StreamingIngest
           .statefulSessionize(src, "user_id", "ts", "value", gapSeconds = 1800)
           .toDF("user_id", "start_us", "end_us", "n_events", "v_u6", "is_open")
@@ -308,7 +307,7 @@ object StreamingQueries {
       "q_stream_interval_join",
       (s, dir) => runToTable(s, "stream_interval_join", "append") { ss =>
         def side(eventType: String, idAs: String, uAs: String, tsAs: String) =
-          graft.runtime.Tables.normalizeEventTs(stream(ss, dir, "events"))
+          Tables.normalizeEventTs(stream(ss, dir, "events"))
             .filter(col("event_type") === eventType)
             .select(col("event_id").as(idAs), col("user_id").as(uAs),
               col("ts").as(tsAs))
@@ -341,7 +340,7 @@ object StreamingQueries {
     QueryDef(
       "q_stream_static_enrich",
       (s, dir) => runToTable(s, "stream_static_enrich", "complete") { ss =>
-        val dim = ss.read.parquet(s"$dir/customer.parquet")
+        val dim = Tables(ss, dir).customer
           .select(col("c_custkey"), col("c_mktsegment"))
         stream(ss, dir, "orders")
           .join(broadcast(dim), col("o_custkey") === col("c_custkey"))

@@ -1,14 +1,11 @@
 package graft.runtime
 
-import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentLinkedQueue,
-  Executors, LinkedBlockingQueue}
+import java.util.concurrent.{CompletableFuture, CompletionException, LinkedBlockingQueue}
 
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.classic.ClassicConversions
-import org.apache.spark.sql.execution.SQLExecution
 
 import graft.operators.SinkOps
 
@@ -48,7 +45,7 @@ import graft.operators.SinkOps
   *    there, one at a time, so builders keep their thread confinement
   *    (the [[Materialized]] memo, callers' build hooks).
   *  - Materializations (View persist, Table write + re-read,
-  *    Incremental merge + swap) run on a driver pool of
+  *    Incremental merge + swap) run on a [[DriverPool]] of
   *    `min(models, defaultParallelism)` threads, created and joined
   *    inside [[ModelRegistry.run]]. Each carries the caller's
   *    thread-locals as they were when its model was built (job group,
@@ -156,16 +153,6 @@ final class ModelRegistry {
     * [[ModelRegistry.ModelFailure]] that names the model. */
   def run(spark: SparkSession, warehouseDir: String): RunResult = {
     val order = topoOrder
-    val session = ClassicConversions.castToImpl(spark)
-    val workers = new ConcurrentLinkedQueue[Thread]()
-    val pool = Executors.newFixedThreadPool(
-      math.max(1, math.min(order.size, spark.sparkContext.defaultParallelism)),
-      (r: Runnable) => {
-        val t = new Thread(r, s"model-registry-${workers.size}")
-        t.setDaemon(true)
-        workers.add(t)
-        t
-      })
     val done = mutable.Map.empty[String, DataFrame]
     val built = mutable.ArrayBuffer.empty[String]
     val inFlight = mutable.Map.empty[String, CompletableFuture[DataFrame]]
@@ -182,7 +169,8 @@ final class ModelRegistry {
       try done(name) = inFlight.remove(name).get.join()
       catch { case e: CompletionException => fail(name, "materialization", e.getCause) }
 
-    try {
+    DriverPool(spark, math.max(1, math.min(order.size, spark.sparkContext.defaultParallelism)),
+        "model-registry") { pool =>
       while (failure.isEmpty && (inFlight.nonEmpty || built.size < order.size)) {
         order.find(n => !built.contains(n) && models(n).deps.forall(done.contains)) match {
           case Some(name) =>
@@ -190,8 +178,7 @@ final class ModelRegistry {
             built += name
             try {
               val df = m.build(m.deps.map(d => d -> done(d)).toMap)
-              val f = SQLExecution.withThreadLocalCaptured(session, pool)(
-                materialize(spark, m, df, warehouseDir))
+              val f = pool.submit(materialize(spark, m, df, warehouseDir))
               inFlight(name) = f
               f.whenComplete((_, _) => finished.put(name))
             } catch { case NonFatal(e) => fail(name, "build", e) }
@@ -199,9 +186,6 @@ final class ModelRegistry {
         }
         Iterator.continually(finished.poll()).takeWhile(_ != null).foreach(harvest)
       }
-    } finally {
-      pool.shutdown()
-      workers.forEach(_.join())
     }
     failure.foreach(e => throw e)
     RunResult(done.toMap, built.toSeq)
@@ -219,7 +203,7 @@ final class ModelRegistry {
         df
       case Materialization.Table =>
         built.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
+        readBack(spark, built, path)
       case Materialization.Incremental(keys, precedence) =>
         val tgt = new java.io.File(path)
         val merged =
@@ -238,9 +222,15 @@ final class ModelRegistry {
         catch { case e: Throwable => fs.delete(hPath, true); throw e }
         // once the swap starts, the scratch dir may hold the only
         // complete copy, so a failed swap leaves it in place
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
+        readBack(spark, merged, tmp).write.mode("overwrite").parquet(path)
         fs.delete(hPath, true)
-        spark.read.parquet(path)
+        readBack(spark, merged, path)
     }
   }
+
+  /** `df` as just written to `path`, read with `df`'s own schema: Spark
+    * infers the same one from the files (all fields nullable), but
+    * inferring launches a footer-reading job per read. */
+  private def readBack(spark: SparkSession, df: DataFrame, path: String): DataFrame =
+    spark.read.schema(df.schema).parquet(path)
 }

@@ -91,6 +91,17 @@ class InfraSpecs extends AnyFunSuite with BeforeAndAfterAll {
     assert(setters.isEmpty, s"session conf set outside the factory and the loop scope: ${setters.mkString(", ")}")
   }
 
+  test("under src/main only runtime/Tables.scala reads the corpus with read.parquet") {
+    // registry targets, the streaming sink and GenScale's scale-up source stay allowed
+    val allowed = Seq(Paths.get("graft", "runtime", "Tables.scala"), Paths.get("graft", "runtime", "ModelRegistry.scala"),
+      Paths.get("graft", "streaming", "StreamingIngest.scala"), Paths.get("graft", "GenScale.scala"))
+    val chain = """(\s*\.\s*\w+\((?:[^()]|\([^()]*\))*\))*"""
+    val reader = s"""\\.read$chain\\s*\\.\\s*parquet\\(|format\\(\\s*"parquet"\\s*\\)""".r
+    val readers = mainSources.filter(p => !allowed.exists(p.endsWith) &&
+      reader.findFirstIn(Files.readString(p)).isDefined)
+    assert(readers.isEmpty, s"parquet reads outside Tables: ${readers.mkString(", ")}")
+  }
+
   test("streams run in their own width-8 session and leave the caller's conf alone") {
     val ss = GraftSession.streaming(spark)
     assert(ss ne spark)

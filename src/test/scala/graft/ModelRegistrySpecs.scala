@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{SparkThrowable, TaskContext}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
@@ -29,18 +27,6 @@ object ModelRegistrySpecs {
   val jobGroup: UserDefinedFunction =
     udf(() => TaskContext.get().getLocalProperty("spark.jobGroup.id")).asNondeterministic()
 
-  /** Start/end time and job group of every job, from the listener bus. */
-  final class JobLog extends SparkListener {
-    val starts = new ConcurrentHashMap[Int, (String, Long)]()
-    val ends = new ConcurrentHashMap[Int, Long]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      starts.put(e.jobId, (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull, e.time))
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.put(e.jobId, e.time)
-    /** group -> (start, end) of each of its jobs. */
-    def byGroup: Map[String, Seq[(Long, Long)]] =
-      starts.asScala.toSeq.map { case (id, (g, s)) => g -> (s, ends.get(id)) }
-        .groupBy(_._1).map { case (g, js) => g -> js.map(_._2) }
-  }
 }
 
 /** Specs for the dbt-style model DAG executor (SURVEY §3.1): one
@@ -113,6 +99,22 @@ class ModelRegistrySpecs extends AnyFunSuite with BeforeAndAfterAll with Eventua
       .orderBy("id").as[(Int, String, Int)].collect().toSeq
     assert(out == Seq((1, "a", 1), (2, "b2", 2), (3, "c3", 3)))
     assert(!new java.io.File(s"$dir/mr_inc__staging").exists(), "scratch dir must be cleaned")
+  }
+
+  test("Table and Incremental tiers read their output back with its schema: no inference job") {
+    val input = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "s", "x")
+      .withColumn("d", col("x").cast("decimal(18,4)"))
+    val (_, _, direct) = JobCount(spark)(input.write.parquet(s"${wh()}/direct"))
+    for (tier <- Seq(Materialization.Table, Materialization.Incremental(Seq("id"), Seq(col("x"))))) {
+      val dir = wh()
+      val reg = new ModelRegistry().register(ModelDef("mr_rb", Nil, tier, _ => input))
+      val (res, _, jobs) = JobCount(spark)(reg.run(spark, dir))
+      // the Incremental tier's first run writes twice: the staging copy, then the swap
+      val writes = if (tier == Materialization.Table) 1 else 2
+      assert(jobs.size == writes * direct.size, s"$tier: ${jobs.size} jobs, a direct write takes ${direct.size}")
+      assert(res.frames("mr_rb").schema == spark.read.parquet(s"$dir/mr_rb").schema, tier)
+      assert(rows(res.frames("mr_rb")) == rows(input), tier)
+    }
   }
 
   test("real model DAG: cross-asset branches through the registry match the direct fan-in") {
@@ -238,8 +240,8 @@ class ModelRegistrySpecs extends AnyFunSuite with BeforeAndAfterAll with Eventua
 
   /** Runs `body` with a job log attached; returns both once every job
     * the body started has been reported ended. */
-  private def logged[T](body: => T): (T, JobLog) = {
-    val log = new JobLog
+  private def logged[T](body: => T): (T, JobCount.Log) = {
+    val log = new JobCount.Log
     spark.sparkContext.addSparkListener(log)
     try {
       val out = body

@@ -12,8 +12,13 @@ Exchange, FileScan, aggregate, Window and join operators on each side and,
 unless --brief, a unified diff of the two plans. Before comparing, it blanks
 what differs between any two runs of one plan: expression ids (`#123`),
 `plan_id=`/`[id=N]` numbers, RDD numbers, lambda and other identity hashes,
-call-site line numbers and numbered temp directories; it also blanks operator
-numbers, so one added node does not renumber the rest.
+call-site line numbers, numbered temp directories, whole-stage codegen ids
+(`*(3)`, `[codegen id : 3]`) and AQE query-stage ids; it also blanks operator
+numbers, so one added node does not renumber the rest. Where an Expand
+rewrites distinct aggregates, which distinct group gets which gid, and the
+order of the distinct columns, vary between runs: the tool blanks the gid
+literals, lists the distinct columns in name order, and writes each Expand
+projection as its sorted set of non-null columns.
 
 Exit status: 0 when every compared query has the same operator counts on both
 sides, 1 when some query's counts differ, 2 on bad usage.
@@ -39,7 +44,14 @@ NORMALIZE = [
     (re.compile(r"^\(\d+\) ", re.M), "(N) "),
     (re.compile(r"\(\d+\)$", re.M), "(N)"),
     (re.compile(r"(operator id[:=] ?)\d+"), r"\1N"),
+    (re.compile(r"\*\(\d+\)"), "*(N)"),
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
+    # a query stage's detail block ends in its stage id
+    (re.compile(r"^(\(N\) \w*QueryStage\n(?:(?:Input|Output) .*\n)*Arguments: )\d+", re.M), r"\1N"),
+    (re.compile(r"\b(gid#L? = )\d+"), r"\1G"),
 ]
+
+EXPAND_ARGS = re.compile(r"^(\(N\) Expand\n(?:Input .*\n)?Arguments: )(.*)$", re.M)
 
 # Operator classes counted per plan, matched against the name in each
 # operator's detail header, e.g. "(5) HashAggregate [codegen id : 1]".
@@ -53,9 +65,64 @@ CLASSES = [
 HEADER = re.compile(r"^\((\d+)\) (.+?)(?: \[codegen id : \d+\])?\s*$")
 
 
+def split_top(s):
+    """Split `s` at the commas outside any (), [] or {} nesting."""
+    out, depth, start = [], 0, 0
+    for i, c in enumerate(s):
+        if c in "([{":
+            depth += 1
+        elif c in ")]}":
+            depth -= 1
+        elif c == "," and depth == 0:
+            out.append(s[start:i].strip())
+            start = i + 1
+    out.append(s[start:].strip())
+    return out
+
+
+def unbracket(s):
+    s = s.strip()
+    return s[1:-1] if s.startswith("[") and s.endswith("]") else s
+
+
+def canonical_expand(args):
+    """(canonical Arguments text, the distinct columns in plan order) of an
+    Expand with a gid column, or None for any other Expand."""
+    parts = split_top(args)
+    if len(parts) != 2:
+        return None
+    rows = [split_top(unbracket(r)) for r in split_top(unbracket(parts[0]))]
+    out = split_top(unbracket(parts[1]))
+    gid = [i for i, c in enumerate(out) if c.startswith("gid#")]
+    if len(gid) != 1 or any(len(r) != len(out) for r in rows):
+        return None
+    keep = [i for i in range(len(out)) if i != gid[0]]
+    # a distinct group's columns are set in its own projection (gid > 0)
+    # and null in the others; gid 0 carries the regular aggregates' inputs
+    distinct = [out[i] for i in keep if any(r[i] == "null" for r in rows)
+                and any(r[i] != "null" and r[gid[0]] != "0" for r in rows)]
+    sets = sorted("{" + ", ".join(sorted(f"{out[i]}={r[i]}" for i in keep if r[i] != "null")) + "}"
+                  for r in rows)
+    return "[" + ", ".join(sets) + "], [" + ", ".join(sorted(out)) + "]", distinct
+
+
 def normalize(text):
     for pattern, repl in NORMALIZE:
         text = pattern.sub(repl, text)
+    runs = []
+
+    def expand(m):
+        canon = canonical_expand(m.group(2))
+        if canon is None:
+            return m.group(0)
+        runs.append(canon[1])
+        return m.group(1) + canon[0]
+
+    text = EXPAND_ARGS.sub(expand, text)
+    # the distinct columns appear in Expand output order in every list above it
+    for distinct in runs:
+        if len(distinct) > 1:
+            text = text.replace(", ".join(distinct), ", ".join(sorted(distinct)))
     return text
 
 

@@ -120,6 +120,56 @@ Output [1]: [m#101]
 """
 
 
+# Two runs of one distinct-aggregate plan: the Expand swaps which distinct
+# column gets gid 1 and 2, and the distinct columns' order with it.
+EXPAND_A = """(2) Expand
+Input [4]: [l_orderkey#83L, l_partkey#84L, l_suppkey#85L, l_quantity#87]
+Arguments: [[l_partkey#84L, null, null, 0, cast(l_quantity#87 as decimal(18,6))], \
+[l_partkey#84L, l_suppkey#85L, null, 1, null], [l_partkey#84L, null, l_orderkey#83L, 2, null]], \
+[l_partkey#84L, l_suppkey#113L, l_orderkey#114L, gid#112, CAST(l_quantity AS DECIMAL(18,6))#115]
+
+(3) HashAggregate [codegen id : 1]
+Input [5]: [l_partkey#84L, l_suppkey#113L, l_orderkey#114L, gid#112, CAST(l_quantity AS DECIMAL(18,6))#115]
+Keys [4]: [l_partkey#84L, l_suppkey#113L, l_orderkey#114L, gid#112]
+Functions [2]: [partial_count(l_suppkey#113L) FILTER (WHERE (gid#112 = 1)), \
+partial_count(l_orderkey#114L) FILTER (WHERE (gid#112 = 2))]
+"""
+EXPAND_B = """(2) Expand
+Input [4]: [l_orderkey#3083L, l_partkey#3084L, l_suppkey#3085L, l_quantity#3087]
+Arguments: [[l_partkey#3084L, null, null, 0, cast(l_quantity#3087 as decimal(18,6))], \
+[l_partkey#3084L, l_orderkey#3083L, null, 1, null], [l_partkey#3084L, null, l_suppkey#3085L, 2, null]], \
+[l_partkey#3084L, l_orderkey#3114L, l_suppkey#3113L, gid#3112, CAST(l_quantity AS DECIMAL(18,6))#3115]
+
+(3) HashAggregate [codegen id : 1]
+Input [5]: [l_partkey#3084L, l_orderkey#3114L, l_suppkey#3113L, gid#3112, CAST(l_quantity AS DECIMAL(18,6))#3115]
+Keys [4]: [l_partkey#3084L, l_orderkey#3114L, l_suppkey#3113L, gid#3112]
+Functions [2]: [partial_count(l_suppkey#3113L) FILTER (WHERE (gid#3112 = 2)), \
+partial_count(l_orderkey#3114L) FILTER (WHERE (gid#3112 = 1))]
+"""
+
+# Two runs of one AQE plan: codegen ids and query-stage ids come out swapped.
+STAGES_A = """+- * HashAggregate (12)
+   +- ShuffleQueryStage (10), Statistics(sizeInBytes=76.5 KiB, rowCount=1.96E+3)
+*(8) HashAggregate
+
+(10) ShuffleQueryStage
+Output [2]: [term#67, doc_id#60L]
+Arguments: 4
+
+(12) HashAggregate [codegen id : 8]
+Input [2]: [term#67, doc_id#60L]
+
+(13) BroadcastQueryStage
+Output [1]: [n#61L]
+Arguments: 5
+
+(14) HashAggregate [codegen id : 9]
+"""
+STAGES_B = (STAGES_A.replace("Arguments: 4", "Arguments: 9").replace("Arguments: 5", "Arguments: 4")
+            .replace("codegen id : 8", "codegen id : 1").replace("codegen id : 9", "codegen id : 8")
+            .replace("*(8)", "*(9)"))
+
+
 class PlanDiffTest(unittest.TestCase):
     def setUp(self):
         self.tmp = tempfile.TemporaryDirectory()
@@ -145,6 +195,30 @@ class PlanDiffTest(unittest.TestCase):
         self.assertIn("plan_id=N", n)
         self.assertIn("[id=N]", n)
         self.assertIn("(N) Window", n)
+
+    def test_normalize_blanks_codegen_and_query_stage_ids(self):
+        self.assertNotEqual(STAGES_A, STAGES_B)
+        self.assertEqual(plan_diff.normalize(STAGES_A), plan_diff.normalize(STAGES_B))
+        n = plan_diff.normalize(STAGES_A)
+        self.assertIn("[codegen id : N]", n)
+        self.assertIn("*(N) HashAggregate", n)
+        self.assertIn("QueryStage\nOutput [1]: [n#L]\nArguments: N", n)
+        # an operator's own arguments are kept
+        self.assertIn("Statistics(sizeInBytes=76.5 KiB", n)
+        self.assertEqual(plan_diff.counts(STAGES_A)["aggregate"], 2)
+
+    def test_normalize_orders_expand_distinct_groups(self):
+        self.assertEqual(plan_diff.normalize(EXPAND_A), plan_diff.normalize(EXPAND_B))
+        n = plan_diff.normalize(EXPAND_A)
+        self.assertIn("Keys [4]: [l_partkey#L, l_orderkey#L, l_suppkey#L, gid#]", n)
+        self.assertIn("{l_partkey#L=l_partkey#L, l_suppkey#L=l_suppkey#L}", n)
+        self.assertIn("FILTER (WHERE (gid# = G))", n)
+        # counting a different distinct column is still a difference
+        other = EXPAND_B.replace("partial_count(l_suppkey#3113L)", "partial_count(l_partkey#3084L)")
+        self.assertNotEqual(plan_diff.normalize(EXPAND_A), plan_diff.normalize(other))
+        # a distinct group with other columns is still a difference
+        other = EXPAND_B.replace("null, l_suppkey#3085L, 2", "null, l_partkey#3084L, 2")
+        self.assertNotEqual(plan_diff.normalize(EXPAND_A), plan_diff.normalize(other))
 
     def test_counts_each_operator_header_once(self):
         self.assertEqual(plan_diff.counts(PLAN),
